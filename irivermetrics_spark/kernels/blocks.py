@@ -68,18 +68,19 @@ def summarize_clip(water: np.ndarray, min_pool_size: int, pixel_size: float) -> 
     skel_labels = np.unique(labeled_skel)
     skel_labels = skel_labels[skel_labels > 0]
 
-    dist = edt.edt(labeled != 0)
+    paths = [graphpath.longest_path(*np.nonzero(labeled_skel == lab)) for lab in skel_labels]
+    # the width reads the EDT only at path pixels: evaluate it there alone
+    pts = np.concatenate([p for _, p in paths] + [np.empty((0, 2), dtype=np.int64)])
+    h, w = labeled.shape
+    widths = np.split(
+        edt.edt(labeled != 0, at=(np.clip(pts[:, 0], 0, h - 1), np.clip(pts[:, 1], 0, w - 1))),
+        np.cumsum([p.shape[0] for _, p in paths])[:-1],
+    )
 
     rows = []
-    for lab in skel_labels:
-        ys, xs = np.nonzero(labeled_skel == lab)  # row-major scan order
-        length_m, path = graphpath.longest_path(ys, xs)
+    for lab, (length_m, path), width in zip(skel_labels, paths, widths):
         if path.shape[0] > 0:
-            widths = dist[
-                np.clip(path[:, 0], 0, dist.shape[0] - 1),
-                np.clip(path[:, 1], 0, dist.shape[1] - 1),
-            ]
-            width_km = float(widths.mean()) * pixel_size * 2.0 / 1e3
+            width_km = float(width.mean()) * pixel_size * 2.0 / 1e3
         else:
             width_km = float("nan")
         area_km2, perim_km, cy, cx = area_rows.get(

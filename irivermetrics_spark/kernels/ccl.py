@@ -9,7 +9,12 @@ original numbers after removal (gaps allowed), exactly like the
 reference — the positional re-labeling happens later in the
 area/perimeter step.
 
-Implementation: two-pass union-find with vectorized row scanning. This
+Implementation: whole-array numpy over horizontal runs. The clip is cut
+into row runs, runs in adjacent rows that touch under 8-connectivity
+become edges (two ``searchsorted`` calls over all runs), and the run
+graph is resolved by parallel hooking + pointer jumping. Every root is
+the smallest run index of its component, i.e. its first run in scan
+order, so ranking the roots gives the scan-order labels directly. This
 runs per (section, time) group inside applyInPandas on arrays a few
 hundred pixels across — the per-group grain the reference itself uses.
 """
@@ -19,74 +24,52 @@ from __future__ import annotations
 import numpy as np
 
 
+def _run_components(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Root (smallest member) of every node of the graph with edges a-b."""
+    parent = np.arange(n)
+    while True:
+        pa, pb = parent[a], parent[b]
+        split = pa != pb
+        if not split.any():
+            return parent
+        # hook the larger root of every split edge under the smaller one;
+        # parent[x] <= x always holds, so no cycle can form
+        parent[np.maximum(pa, pb)[split]] = np.minimum(pa, pb)[split]
+        while True:  # pointer jumping back to a forest of stars
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+
+
 def label8(img: np.ndarray) -> tuple[np.ndarray, int]:
     """Label 8-connected nonzero regions; returns (labels int32, n)."""
-    img = np.asarray(img) != 0
-    h, w = img.shape
+    fg = np.asarray(img) != 0
+    h, w = fg.shape
     labels = np.zeros((h, w), dtype=np.int32)
-    parent = [0]  # union-find; parent[0] unused
-
-    def find(a: int) -> int:
-        root = a
-        while parent[root] != root:
-            root = parent[root]
-        while parent[a] != root:
-            parent[a], a = root, parent[a]
-        return root
-
-    def union(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-
-    next_label = 1
-    for y in range(h):
-        row = img[y]
-        xs = np.nonzero(row)[0]
-        for x in xs:
-            # neighbors already scanned: W, NW, N, NE
-            cand = []
-            if x > 0 and labels[y, x - 1]:
-                cand.append(labels[y, x - 1])
-            if y > 0:
-                if x > 0 and labels[y - 1, x - 1]:
-                    cand.append(labels[y - 1, x - 1])
-                if labels[y - 1, x]:
-                    cand.append(labels[y - 1, x])
-                if x + 1 < w and labels[y - 1, x + 1]:
-                    cand.append(labels[y - 1, x + 1])
-            if not cand:
-                labels[y, x] = next_label
-                parent.append(next_label)
-                next_label += 1
-            else:
-                m = min(find(c) for c in cand)
-                labels[y, x] = m
-                for c in cand:
-                    union(m, c)
-
-    if next_label == 1:
+    pad = np.zeros((h, w + 2), dtype=np.int8)
+    pad[:, 1:-1] = fg
+    edge = np.diff(pad, axis=1)
+    # runs [rs, re) per row, in row-major order of their first pixel
+    ry, rs = np.nonzero(edge == 1)
+    re = np.nonzero(edge == -1)[1]
+    n_runs = rs.size
+    if n_runs == 0:
         return labels, 0
-    # resolve + renumber roots in scan order of first appearance
-    roots = np.asarray([find(i) for i in range(next_label)], dtype=np.int32)
-    flat = labels.ravel()
-    nz = flat != 0
-    resolved = roots[flat[nz]]
-    # order roots by first appearance in scan order
-    first_seen = {}
-    order = []
-    for r in resolved:
-        if r not in first_seen:
-            first_seen[r] = len(order) + 1
-            order.append(r)
-    remap = np.zeros(next_label, dtype=np.int32)
-    for r, newl in first_seen.items():
-        remap[r] = newl
-    flat[nz] = remap[resolved]
-    return labels, len(order)
+    # run a (row y) touches run b (row y+1) iff s_b <= e_a and s_a <= e_b;
+    # keys are row * stride + column, so one sorted search covers all rows
+    stride = w + 2
+    below = (ry + 1) * stride
+    lo = np.searchsorted(ry * stride + re, below + rs, side="left")
+    hi = np.searchsorted(ry * stride + rs, below + re, side="right")
+    cnt = np.maximum(hi - lo, 0)
+    a = np.repeat(np.arange(n_runs), cnt)
+    b = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt) + np.arange(a.size)
+    root = _run_components(n_runs, a, b)
+    is_root = root == np.arange(n_runs)
+    run_label = np.cumsum(is_root, dtype=np.int32)[root]
+    labels.ravel()[np.flatnonzero(fg)] = np.repeat(run_label, re - rs)
+    return labels, int(is_root.sum())
 
 
 def remove_small(labels: np.ndarray, min_size: int) -> np.ndarray:

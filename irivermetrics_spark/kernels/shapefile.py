@@ -85,14 +85,16 @@ def write_shapefile(shape_type: int, shapes: list, fields: list[tuple[str, str, 
         recs.append(struct.pack(">ii", i + 1, words) + content)
         index.append(struct.pack(">ii", cursor_words, words))
         cursor_words += 4 + words
-    if shape_type == POINT:
+    if not shapes:
+        xs = ys = np.zeros(1)  # an empty layer keeps a zero bbox
+    elif shape_type == POINT:
         xs = np.asarray([s[0] for s in shapes], dtype=np.float64)
         ys = np.asarray([s[1] for s in shapes], dtype=np.float64)
     else:
         xs = np.concatenate([np.concatenate([np.asarray(p[0], dtype=np.float64) for p in s])
-                             for s in shapes]) if shapes else np.zeros(1)
+                             for s in shapes])
         ys = np.concatenate([np.concatenate([np.asarray(p[1], dtype=np.float64) for p in s])
-                             for s in shapes]) if shapes else np.zeros(1)
+                             for s in shapes])
     bbox = (float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max()))
     shp = _main_header(shape_type, cursor_words, bbox) + b"".join(recs)
     shx = _main_header(shape_type, 50 + 4 * len(shapes), bbox) + b"".join(index)

@@ -6,8 +6,8 @@ The reference sidesteps cross-tile CCL by clipping per feature
 operator labels 8-connected water components of arbitrary spatial
 extent:
 
-1. tile the points (floor(px/T), floor(py/T)); local union-find CCL
-   per tile via ``applyInPandas`` (the shared kernel), labels made
+1. tile the points (floor(px/T), floor(py/T)); local CCL per tile
+   via ``applyInPandas`` (the shared kernel), labels made
    globally unique by bit-packing (tx, ty, local_label) into disjoint
    ranges of the int64 label — no multiplicative hashing, so distinct
    tiles can never collide anywhere in the int32 pixel-coordinate

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels import ccl, polygonize
+from .morphology import clip_offsets, empty_rows
 
 POLY_SCHEMA = (
     "scene string, Date string, Section string, Type string, "
@@ -46,8 +47,10 @@ def write_metrics_csv(metrics: DataFrame, path: str) -> None:
     """K3: the reference's irm_metrics.csv sink (src/irm_main.py:207) —
     a single ordered CSV with an index column, written driver-side
     (the metrics table is one row per (scene, date, section))."""
-    pdf = metrics.toPandas()
-    pdf.to_csv(path)
+    import os
+
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    metrics.toPandas().to_csv(path)
 
 
 def write_pixel_persistence(pp: DataFrame, path: str) -> None:
@@ -157,7 +160,7 @@ def write_date_mask_geotiffs(mask_points: DataFrame, grid: dict, outdir: str,
                      for lx, ly in aoi[0]]
         aoi_buffer = float(aoi[1])
 
-    def emit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def emit(key, pdf):
         scene, date = key
         ds = pd.Timestamp(date).strftime("%Y-%m-%d")
         dense = np.zeros((h, w), dtype=np.int16)
@@ -239,7 +242,7 @@ def write_persistence_geotiffs(pp: DataFrame, grid: dict, outdir: str,
         if flat is None:
             flat = n_scenes == 1
 
-    def emit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def emit(key, pdf):
         (scene,) = key
         # section overlap -> one value per pixel (max), like
         # persistence_raster's groupBy(px, py).max(pp)
@@ -303,16 +306,14 @@ def write_vector_shapefiles(polygons: DataFrame, lines: DataFrame, points: DataF
 def pool_polygons(water_joined: DataFrame, reaches: list[dict], grid: dict,
                   min_pool_size: int = 2) -> DataFrame:
     """M8: polygonized pools per (scene, section, date)."""
-    from .morphology import clip_offsets
-
     offsets = clip_offsets(reaches, grid)
     ps, gx0, gy0 = grid["ps"], grid["gx0"], grid["gy0"]
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         scene, section, ds = key
         c0, r0, ncols, nrows = offsets[section]
         if ncols == 0 or nrows == 0:
-            return pd.DataFrame({c.split()[0]: [] for c in POLY_SCHEMA.split(", ")})
+            return empty_rows(POLY_SCHEMA)
         clip = np.zeros((nrows, ncols), dtype=np.int8)
         clip[pdf["py"].to_numpy() - r0, pdf["px"].to_numpy() - c0] = 1
         labeled = ccl.remove_small(ccl.label8(clip)[0], min_pool_size)
@@ -330,9 +331,7 @@ def pool_polygons(water_joined: DataFrame, reaches: list[dict], grid: dict,
                 area_m2=area_m2, area_km2=area_m2 / 1e6,
                 ring_x=rx.tolist(), ring_y=ry.tolist(),
             ))
-        return pd.DataFrame(out) if out else pd.DataFrame(
-            {c.split()[0]: [] for c in POLY_SCHEMA.split(", ")}
-        )
+        return pd.DataFrame(out) if out else empty_rows(POLY_SCHEMA)
 
     return water_joined.groupBy("scene", "section", "ds").applyInPandas(kernel, POLY_SCHEMA)
 

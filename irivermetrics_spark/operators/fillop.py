@@ -299,7 +299,7 @@ def filled_water(points: DataFrame, kept_idx: DataFrame, reaches: list[dict],
     rings = [(np.asarray(r["ring_x"]), np.asarray(r["ring_y"])) for r in reaches]
     ps, gx0, gy0 = grid["ps"], grid["gx0"], grid["gy0"]
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         scene, cell = key[0], int(key[1])
         empty_cols = {"scene": pd.Series(dtype="str"),
                       "t_idx": pd.Series(dtype="int32"),

@@ -5,8 +5,12 @@ tasks (src/utils/calc_metrics.py:669-722, 725-806); the engine's
 equivalent grain is an ``applyInPandas`` group keyed (scene, section,
 date): each group rebuilds its dense bbox clip from the joined water
 points (bbox offsets are broadcast per-section metadata) and runs the
-shared summarize_clip kernel. Pools are tens-to-hundreds of pixels, so
-groups are small and uniform; AQE handles count skew across dates.
+shared summarize_clip kernel. The input is hash-partitioned on the
+group key at an explicit ``spark.sql.shuffle.partitions`` width: the
+groups are small (a few hundred KB of shuffle in all), so AQE would
+otherwise coalesce them into one partition and run the whole Python
+stage as a single task. AQE leaves an explicit-width repartition alone,
+and the grouped map reuses its partitioning without a second exchange.
 
 Output pool rows keep the path as global pixel coordinate arrays for
 the line/point exports. (scene, section, date) pairs with zero water
@@ -28,6 +32,14 @@ POOLS_SCHEMA = (
     "centroid_x double, centroid_y double, "
     "path_py array<int>, path_px array<int>"
 )
+
+
+def empty_rows(schema: str) -> pd.DataFrame:
+    """Zero-row frame whose column dtypes Arrow can cast to ``schema``
+    (an untyped empty column is float64, which has no cast to array)."""
+    dtypes = {"int": "int32", "long": "int64", "double": "float64"}
+    return pd.DataFrame({name: pd.Series(dtype=dtypes.get(t, "object"))
+                         for name, t in (c.split(" ", 1) for c in schema.split(", "))})
 
 
 def clip_offsets(reaches: list[dict], grid: dict) -> dict[str, tuple[int, int, int, int]]:
@@ -58,11 +70,11 @@ def pool_rows(water_joined: DataFrame, reaches: list[dict], grid: dict,
 
     gx0, gy0, ps = grid["gx0"], grid["gy0"], grid["ps"]
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         scene, section, ds = key
         c0, r0, ncols, nrows = offsets[section]
         if ncols == 0 or nrows == 0:
-            return pd.DataFrame({c.split()[0]: [] for c in POOLS_SCHEMA.split(", ")})
+            return empty_rows(POOLS_SCHEMA)
         clip = np.zeros((nrows, ncols), dtype=np.int8)
         clip[pdf["py"].to_numpy() - r0, pdf["px"].to_numpy() - c0] = 1
         rows = blocks.summarize_clip(clip, min_pool_size, pixel_size)
@@ -81,4 +93,8 @@ def pool_rows(water_joined: DataFrame, reaches: list[dict], grid: dict,
             out.append(dict(scene=scene, ds=ds, section=section, path_py=ppy, path_px=ppx, **row))
         return pd.DataFrame(out)
 
-    return water_joined.groupBy("scene", "section", "ds").applyInPandas(kernel, POOLS_SCHEMA)
+    keys = ("scene", "section", "ds")
+    width = int(water_joined.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # only the kernel's columns cross the exchange and the Python boundary
+    return (water_joined.select(*keys, "px", "py").repartition(width, *keys)
+            .groupBy(*keys).applyInPandas(kernel, POOLS_SCHEMA))

@@ -6,7 +6,9 @@ count, order-insensitive checksum, wall time) is appended next to it.
 Re-running the pipeline with the same checkpoint dir SKIPS completed
 stages idempotently (the `_SUCCESS` marker written atomically by the
 parquet committer is the completion contract — a mid-stage kill leaves
-no marker, so the stage re-runs from its inputs).
+no marker, so the stage re-runs from its inputs). A complete stage whose
+columns or types differ from the plan's (a checkpoint written by an
+older schema) is rebuilt, never returned as is.
 
 The reference's analog is the <=3-retry as_completed loop
 (src/irm_main.py:67-99); Spark's native task retry subsumes per-task
@@ -36,6 +38,29 @@ def stage_complete(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+def _same_schema(stored: DataFrame, planned: DataFrame, partition_by: list[str]) -> bool:
+    """Same column names and types; nullability is not compared (a
+    parquet read makes every field nullable) and neither are the types
+    of partition columns (the reader infers them from directory names)."""
+    got = {f.name: f.dataType.simpleString() for f in stored.schema.fields}
+    want = {f.name: f.dataType.simpleString() for f in planned.schema.fields}
+    return got.keys() == want.keys() and all(
+        got[name] == kind for name, kind in want.items() if name not in partition_by)
+
+
+def _drop_lineage(spark: SparkSession, base_path: str, stage: str) -> None:
+    """Remove a stage's records from the lineage table before the stage
+    is rebuilt, so ``verify_stage`` compares against the new output only.
+    The table holds one row per partition per stage, so it is collected
+    and rewritten whole."""
+    path = f"{base_path}/_lineage"
+    if not stage_complete(spark, path):
+        return
+    table = spark.read.parquet(path)
+    rest = table.where(F.col("stage") != stage).toPandas()
+    spark.createDataFrame(rest, table.schema).write.mode("overwrite").parquet(path)
+
+
 def lineage_record(df: DataFrame, stage: str) -> DataFrame:
     """(stage, partition_id, rows, checksum) for every partition."""
     cols = [F.col(c).cast("string") for c in df.columns]
@@ -59,11 +84,14 @@ def run_stage(spark: SparkSession, df: DataFrame, base_path: str, stage: str,
 
     Returns a DataFrame reading the materialized stage — downstream
     lineage cuts over to the checkpoint, so a resume never recomputes
-    upstream work.
+    upstream work. A complete stage with a different schema is rebuilt.
     """
     path = f"{base_path}/{stage}"
     if stage_complete(spark, path):
-        return spark.read.parquet(path)
+        done = spark.read.parquet(path)
+        if _same_schema(done, df, partition_by or []):
+            return done
+        _drop_lineage(spark, base_path, stage)
     t0 = time.time()
     writer = df.write.mode("overwrite")
     if partition_by:

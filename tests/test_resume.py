@@ -7,7 +7,7 @@ import tempfile
 import numpy as np
 
 from irivermetrics_spark import synth
-from irivermetrics_spark.plans import pipeline
+from irivermetrics_spark.plans import lineage, pipeline
 
 
 def test_checkpointed_rerun_identical_and_skips(spark):
@@ -45,3 +45,29 @@ def test_checkpointed_rerun_identical_and_skips(spark):
         m1["wet_area_km2"].to_numpy(dtype=float), m3["wet_area_km2"].to_numpy(dtype=float)
     )
     assert os.path.exists(succ)
+
+
+def test_resume_rebuilds_a_checkpoint_with_an_older_schema(spark):
+    fx = synth.make_fixture(w=50, h=25, n_dates=6, n_sections=2, seed=5)
+    grid = dict(gx0=fx.gx0, gy0=fx.gy0, ps=fx.pixel_size, w=fx.w, h=fx.h)
+    images = pipeline.images_df(spark, fx.images)
+    ckpt = tempfile.mkdtemp(prefix="resume_schema_")
+    keys = ["section", "date"]
+    m1 = (pipeline.run(spark, images, fx.reaches, grid, checkpoint_dir=ckpt)["metrics"]
+          .toPandas().sort_values(keys).reset_index(drop=True))
+
+    # a complete water_filled stage as written before the fill kernel
+    # attached the zonal cell key: (scene, ds, px, py) only
+    stage = os.path.join(ckpt, "water_filled")
+    old = spark.read.parquet(stage).drop("cell").toPandas()
+    spark.createDataFrame(old).write.mode("overwrite").parquet(stage)
+    assert sorted(spark.read.parquet(stage).columns) == ["ds", "px", "py", "scene"]
+
+    m2 = (pipeline.run(spark, images, fx.reaches, grid, checkpoint_dir=ckpt)["metrics"]
+          .toPandas().sort_values(keys).reset_index(drop=True))
+    assert "cell" in spark.read.parquet(stage).columns
+    # the rebuilt stage's lineage record replaced the old one
+    assert lineage.verify_stage(spark, spark.read.parquet(stage), ckpt, "water_filled")
+    assert m1["date"].tolist() == m2["date"].tolist()
+    for col in ["npools", "wet_area_km2", "AWMSI", "pp_mean_%"]:
+        np.testing.assert_array_equal(m1[col].to_numpy(dtype=float), m2[col].to_numpy(dtype=float))
