@@ -32,9 +32,11 @@ def _run_components(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
         split = pa != pb
         if not split.any():
             return parent
-        # hook the larger root of every split edge under the smaller one;
-        # parent[x] <= x always holds, so no cycle can form
-        parent[np.maximum(pa, pb)[split]] = np.minimum(pa, pb)[split]
+        # hook every root under the smallest root it shares an edge with
+        # (a plain assignment keeps one arbitrary write per root, which
+        # lets a comb take one round per tooth); parent[x] <= x always
+        # holds, so no cycle can form
+        np.minimum.at(parent, np.maximum(pa, pb)[split], np.minimum(pa, pb)[split])
         while True:  # pointer jumping back to a forest of stars
             grand = parent[parent]
             if np.array_equal(grand, parent):

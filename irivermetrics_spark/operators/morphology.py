@@ -5,12 +5,8 @@ tasks (src/utils/calc_metrics.py:669-722, 725-806); the engine's
 equivalent grain is an ``applyInPandas`` group keyed (scene, section,
 date): each group rebuilds its dense bbox clip from the joined water
 points (bbox offsets are broadcast per-section metadata) and runs the
-shared summarize_clip kernel. The input is hash-partitioned on the
-group key at an explicit ``spark.sql.shuffle.partitions`` width: the
-groups are small (a few hundred KB of shuffle in all), so AQE would
-otherwise coalesce them into one partition and run the whole Python
-stage as a single task. AQE leaves an explicit-width repartition alone,
-and the grouped map reuses its partitioning without a second exchange.
+shared summarize_clip kernel. Pools are tens-to-hundreds of pixels, so
+groups are small and uniform; AQE handles count skew across dates.
 
 Output pool rows keep the path as global pixel coordinate arrays for
 the line/point exports. (scene, section, date) pairs with zero water
@@ -93,8 +89,4 @@ def pool_rows(water_joined: DataFrame, reaches: list[dict], grid: dict,
             out.append(dict(scene=scene, ds=ds, section=section, path_py=ppy, path_px=ppx, **row))
         return pd.DataFrame(out)
 
-    keys = ("scene", "section", "ds")
-    width = int(water_joined.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # only the kernel's columns cross the exchange and the Python boundary
-    return (water_joined.select(*keys, "px", "py").repartition(width, *keys)
-            .groupBy(*keys).applyInPandas(kernel, POOLS_SCHEMA))
+    return water_joined.groupBy("scene", "section", "ds").applyInPandas(kernel, POOLS_SCHEMA)

@@ -10,6 +10,12 @@ no marker, so the stage re-runs from its inputs). A complete stage whose
 columns or types differ from the plan's (a checkpoint written by an
 older schema) is rebuilt, never returned as is.
 
+The lineage table is append-only: every record carries the time its
+stage write started (``written_at``), and a rebuilt stage's new records
+supersede its older ones. A kill at any point therefore cannot lose
+another stage's records. Records from before ``written_at`` existed read
+it as null and count as the oldest generation.
+
 The reference's analog is the <=3-retry as_completed loop
 (src/irm_main.py:67-99); Spark's native task retry subsumes per-task
 failures, and this layer adds whole-stage restartability on top.
@@ -48,19 +54,6 @@ def _same_schema(stored: DataFrame, planned: DataFrame, partition_by: list[str])
         got[name] == kind for name, kind in want.items() if name not in partition_by)
 
 
-def _drop_lineage(spark: SparkSession, base_path: str, stage: str) -> None:
-    """Remove a stage's records from the lineage table before the stage
-    is rebuilt, so ``verify_stage`` compares against the new output only.
-    The table holds one row per partition per stage, so it is collected
-    and rewritten whole."""
-    path = f"{base_path}/_lineage"
-    if not stage_complete(spark, path):
-        return
-    table = spark.read.parquet(path)
-    rest = table.where(F.col("stage") != stage).toPandas()
-    spark.createDataFrame(rest, table.schema).write.mode("overwrite").parquet(path)
-
-
 def lineage_record(df: DataFrame, stage: str) -> DataFrame:
     """(stage, partition_id, rows, checksum) for every partition."""
     cols = [F.col(c).cast("string") for c in df.columns]
@@ -84,31 +77,40 @@ def run_stage(spark: SparkSession, df: DataFrame, base_path: str, stage: str,
 
     Returns a DataFrame reading the materialized stage — downstream
     lineage cuts over to the checkpoint, so a resume never recomputes
-    upstream work. A complete stage with a different schema is rebuilt.
+    upstream work. A complete stage with a different schema is rebuilt;
+    its new lineage records supersede the old ones.
     """
     path = f"{base_path}/{stage}"
     if stage_complete(spark, path):
         done = spark.read.parquet(path)
         if _same_schema(done, df, partition_by or []):
             return done
-        _drop_lineage(spark, base_path, stage)
     t0 = time.time()
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     out = spark.read.parquet(path)
-    rec = lineage_record(out, stage).withColumn("wall_sec", F.lit(round(time.time() - t0, 3)))
+    rec = (lineage_record(out, stage)
+           .withColumn("wall_sec", F.lit(round(time.time() - t0, 3)))
+           .withColumn("written_at", F.lit(t0)))
     rec.write.mode("append").parquet(f"{base_path}/_lineage")
     return out
 
 
 def verify_stage(spark: SparkSession, df: DataFrame, base_path: str, stage: str) -> bool:
     """Recompute the stage checksum and compare with the lineage table
-    (detects silent corruption / nondeterministic stages)."""
+    (detects silent corruption / nondeterministic stages). Only the
+    stage's latest generation of records counts."""
+    # merged: a table appended to across the written_at change mixes
+    # files with and without the column
+    records = (spark.read.option("mergeSchema", "true").parquet(f"{base_path}/_lineage")
+               .where(F.col("stage") == stage))
+    if "written_at" in records.columns:
+        latest = records.agg(F.max("written_at")).first()[0]
+        records = records.where(F.col("written_at").eqNullSafe(F.lit(latest)))
     want = (
-        spark.read.parquet(f"{base_path}/_lineage")
-        .where(F.col("stage") == stage)
+        records
         .agg(F.sum(F.col("checksum").cast("decimal(38,0)")).alias("c"),
              F.sum("rows").alias("r"))
         .collect()[0]

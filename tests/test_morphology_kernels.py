@@ -69,3 +69,25 @@ def test_kernels_bit_identical_on_a_large_clip():
 
 def test_edt_of_all_water_keeps_the_sentinel_distance():
     np.testing.assert_array_equal(edt.edt(np.ones((7, 3))), np.full((7, 3), 1e9, np.float32))
+
+
+def test_ccl_resolves_a_comb_in_a_bounded_number_of_passes(monkeypatch):
+    # 1-px teeth on every other column above a full-width bar: the bar
+    # (the last run) touches all 201 teeth, so it must hook under the
+    # smallest of them at once, not one tooth per round
+    img = np.zeros((2, 401), dtype=np.int8)
+    img[0, ::2] = 1
+    img[1] = 1
+    passes = []
+    array_equal = np.array_equal
+    # every round of _run_components ends in pointer-jumping passes,
+    # each checked with one np.array_equal call
+    monkeypatch.setattr(np, "array_equal", lambda *a: passes.append(1) or array_equal(*a))
+    for clip in (img, img[::-1].copy()):  # teeth up, then teeth down
+        passes.clear()
+        labels, n = ccl.label8(clip)
+        assert n == 1 and (labels == clip).all()
+        assert len(passes) <= 8
+    monkeypatch.undo()
+    _assert_same(img)
+    _assert_same(img[::-1].copy())

@@ -1,6 +1,6 @@
 """The module-2 morphology stage on Spark: typed empty group frames, the
-metrics CSV sink's directory, no type-hint warnings on the grouped-map
-kernels, and a Python stage that runs at the full shuffle width."""
+metrics CSV sink's directory and no type-hint warnings on the grouped-map
+kernels."""
 
 import os
 import warnings
@@ -74,26 +74,3 @@ def test_module2_plan_emits_no_type_hint_warning(spark, mask_table, tmp_path):
     hinted = [w for w in caught if "Cannot infer the eval type" in str(w.message)]
     assert hinted == []
 
-
-def test_morphology_stage_runs_at_shuffle_width(spark, mask_table):
-    fx, grid, path = mask_table
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    res = pipeline.run(spark, None, fx.reaches, grid, points=spark.read.parquet(path))
-    pools = morphology.pool_rows(res["water_joined"], fx.reaches, grid)
-    sc = spark.sparkContext
-    sc.setJobGroup("morphology-width", "morphology stage width")
-    try:
-        assert len(pools.collect()) > 0
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    last_job = max(tracker.getJobIdsForGroup("morphology-width"))
-    # the final job runs the grouped-map stage right after the exchange
-    stage = max(tracker.getJobInfo(last_job).stageIds)
-    assert tracker.getStageInfo(stage).numTasks == width
-    plan = pools._jdf.queryExecution().executedPlan().toString()
-    # above the cached input, one exchange at the explicit width feeds the
-    # grouped map: the groupBy reuses the repartition's partitioning
-    above_cache = plan[plan.index("== Final Plan =="):plan.index("InMemoryTableScan")]
-    assert above_cache.count("Exchange") == 1
-    assert f", {width}), REPARTITION_BY_NUM" in above_cache
