@@ -33,9 +33,14 @@ from . import cellindex
 
 
 def polygon_area_m2(ring_x: np.ndarray, ring_y: np.ndarray) -> float:
-    """Shoelace area (absolute) of a closed or open ring."""
+    """Shoelace area (absolute) of a closed or open ring.
+
+    Coordinates are taken relative to the first vertex: on absolute UTM
+    coordinates (~6e5 x 8e6 m) the cross terms are ~1e12 and cancel down
+    to a ~1e4 m^2 area, which quantizes the result to ~1/64 m^2."""
     x = np.asarray(ring_x, dtype=np.float64)
     y = np.asarray(ring_y, dtype=np.float64)
+    x, y = x - x[:1], y - y[:1]
     return float(0.5 * np.abs(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1))))
 
 

@@ -156,7 +156,7 @@ def lsh_candidates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     # independent of the index build, so the two jobs pipeline instead
     # of serializing — interleaved A/B of the full bench shape at
     # sf0.1: 2.17/2.10/2.08/1.86 s serial -> 1.99/2.00/1.92/1.59 s
-    # overlapped (tools/exp_overlap_banded.py). The count() only runs
+    # overlapped (OPTIMIZATION_r08.md, dedup_minhash). The count() only runs
     # the materialization the first consumer would pay anyway (cache is
     # consistent under the race); errors are swallowed here so the
     # consumer's own action surfaces them synchronously.

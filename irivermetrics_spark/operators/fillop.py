@@ -336,7 +336,7 @@ def filled_water(points: DataFrame, kept_idx: DataFrame, reaches: list[dict],
             # compact representation in the kernel, not a
             # dictionary-encoded wire format. An applyInArrow port
             # measured SLOWER (warm 1.76-1.83 s -> 1.91-1.98 s,
-            # tools/exp_fill_arrow.py) — groups are large enough
+            # OPTIMIZATION_r08.md) — groups are large enough
             # that per-group pandas overhead is not the cost.
             "scene": pd.Categorical([scene]).repeat(ti.shape[0]),
             "t_idx": ti.astype(np.int32),

@@ -5,13 +5,34 @@ real cluster the same confs apply per executor. AQE is always on: it
 replaces the reference's hand-tuned date-batching heuristic
 (reference: src/irm_main.py:146-151) with runtime partition coalescing
 and handles skew joins on dense river-corridor cells.
+
+Python workers run under ``irivermetrics_spark._pydaemon`` (set as
+``spark.python.daemon.module``). Spark puts its own ``pyspark.zip``, the
+py4j zip and the ``spark-core`` jar first on every worker's path, and
+each Python task's ``importlib.invalidate_caches()`` re-reads those
+archives' directories: a 0.1-0.3 s floor per task on a 4-vCPU VM, which
+dominated the short Arrow stages of module 2 (fill, zonal, morphology,
+fold). The daemon module drops those entries and runs ``pyspark.daemon``
+on the pip-installed pyspark instead. The package's parent directory goes
+on ``spark.executorEnv.PYTHONPATH`` so workers import the module whatever
+their working directory (the ``--py-files`` zip, under ``spark-submit``).
+
+``get_spark`` falls back to plain ``pyspark.daemon`` (Spark's default)
+when site-packages has no pyspark of the driver's version, and on a
+non-local master, where the driver cannot vouch for the executors'
+interpreter or file system.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyspark
 from pyspark.sql import SparkSession
+
+from irivermetrics_spark import _pydaemon
+
+_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 
 
 def _driver_mem() -> str:
@@ -24,6 +45,15 @@ def _driver_mem() -> str:
     (sf >= 1.0 image tables) can raise it via the env var; a cluster
     deployment sizes executor memory per node instead (guide §5)."""
     return os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+
+
+def _worker_conf(master: str) -> dict[str, str]:
+    """Confs that run Python workers under ``_pydaemon``, or none when the
+    plain ``pyspark.daemon`` must stay (see the module docstring)."""
+    if not master.startswith("local") or _pydaemon.site_pyspark_version() != pyspark.__version__:
+        return {}
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return {"spark.python.daemon.module": _pydaemon.__name__, _PYTHONPATH: pkg_parent}
 
 
 def get_spark(
@@ -60,7 +90,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    conf = _worker_conf(master)
     for k, v in (extra_conf or {}).items():
+        # a caller's PYTHONPATH must not hide the daemon module
+        conf[k] = os.pathsep.join([v, conf[k]]) if k == _PYTHONPATH and k in conf else v
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
