@@ -13,8 +13,10 @@ tayerthiaggo/irivermetrics calls, re-expressed over Spark DataFrames.
 Differences from the reference, by engine design:
 - inputs are DataFrames (the Iceberg/parquet image+caption table of
   the engine contract) and reach/line tables, not file paths;
-- outputs are DataFrames (parquet-friendly), not GeoTIFF/shapefiles —
-  ``exports`` has the CSV / parquet / dense-raster sinks;
+- outputs are DataFrames; with ``outdir`` the file sinks also write
+  the reference's artifacts (irm_metrics.csv, irm_*.shp vector layers,
+  Pixel_Persistence.tif, module-1 per-date mask GeoTIFFs) next to
+  their parquet forms;
 - the water rule defaults to the engine's deterministic NDWI/MNDWI
   threshold (kernels/water.py); ``water_rule="cluster"`` switches to
   the from-scratch deterministic k-means analog of the reference's
@@ -77,11 +79,9 @@ def waterdetect_batch(
     r_lines=None,
     grid: dict | None = None,
     buffer: float = 1000.0,
-    res: int = 9,
     reaches: list[dict] | None = None,
     mask_path: str | None = None,
     threshold: float = water.NDWI_THRESHOLD,
-    eager_grid_check: bool = False,
     water_rule: str = "threshold",
     export_tif: bool = False,
     outdir: str | None = None,
@@ -111,12 +111,6 @@ def waterdetect_batch(
     if grid is None:
         raise ValueError("grid=dict(gx0, gy0, ps, w, h) is required (uniform-grid contract)")
     _validate_images(input_img)
-    if eager_grid_check:
-        # opt-in driver-side pre-flight: one extra Spark action. The
-        # decode kernel already asserts every raster against the target
-        # grid map-side (S1), so the default public path has NO action
-        # barrier before decode (r2 VERDICT minor #5).
-        decode.validate_uniform_grid(input_img)
 
     aoi = None
     if r_lines is not None:
@@ -125,7 +119,7 @@ def waterdetect_batch(
     if reaches is not None:
         rings = [(np.asarray(r["ring_x"]), np.asarray(r["ring_y"])) for r in reaches]
 
-    pts = decode.decode_points(input_img, grid, res=res, threshold=threshold,
+    pts = decode.decode_points(input_img, grid, threshold=threshold,
                                corridor_rings=rings, aoi=aoi, water_rule=water_rule)
     if mask_path:
         pts.write.mode("overwrite").parquet(mask_path)
@@ -194,8 +188,6 @@ def calculate_metrics(
     export_shp: bool = False,
     export_PP: bool = False,
     fill_nodata: bool = True,
-    res: int = 9,
-    fill_res: int | None = None,
     outdir: str | None = None,
     checkpoint_dir: str | None = None,
     r_lines=None,
@@ -262,10 +254,10 @@ def calculate_metrics(
         if _path_is_tif_masks(da_wmask):
             # K1 interop: a directory/glob of per-date YYYY-MM-DD.tif
             # masks, the reference module-1 export re-entering module 2
-            da_wmask, file_grid = ncingest.read_wmask_tifs(spark, da_wmask, res=res,
+            da_wmask, file_grid = ncingest.read_wmask_tifs(spark, da_wmask,
                                                            corridor_rings=rings, aoi=aoi)
         else:
-            da_wmask, file_grid = ncingest.read_wmask_nc(spark, da_wmask, res=res,
+            da_wmask, file_grid = ncingest.read_wmask_nc(spark, da_wmask,
                                                          corridor_rings=rings, aoi=aoi)
         if grid is None:
             grid = file_grid
@@ -273,10 +265,8 @@ def calculate_metrics(
         raise ValueError("grid=dict(gx0, gy0, ps, w, h) is required (uniform-grid contract)")
 
     sl = float("nan") if section_length is None else float(section_length)
-    kwargs = dict(res=res, min_pool_size=min_pool_size, section_length=sl,
+    kwargs = dict(min_pool_size=min_pool_size, section_length=sl,
                   checkpoint_dir=checkpoint_dir, fill_nodata=fill_nodata, aoi=aoi)
-    if fill_res is not None:
-        kwargs["fill_res"] = fill_res
     if "bytes" in da_wmask.columns:
         result = pipeline.run(spark, da_wmask, reaches, grid, **kwargs)
     else:

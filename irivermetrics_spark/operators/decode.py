@@ -44,6 +44,11 @@ POINTS_SCHEMA = "image_id string, px int, py int, value tinyint, cell long"
 POINTS_DATED_SCHEMA = POINTS_SCHEMA + ", date date, scene string"
 
 
+# hex resolution of the mask table's ``cell`` column. Cell ids pack the
+# resolution (cellindex._pack), so module 1's sink and module 2's
+# corridor covers must use the same one: the flagship path uses this.
+CELL_RES = 9
+
 SUMMARY_MARKER = -9  # value of fused per-image summary rows (px=py=-1)
 QUARANTINE_MARKER = -10  # value of per-image quarantine rows (px=py=-1)
 
@@ -232,7 +237,7 @@ def emit_mask_rows(image_id: str, mask: np.ndarray, gx0: float, gy0: float,
     return out
 
 
-def decode_points(images: DataFrame, grid: dict, res: int = 9,
+def decode_points(images: DataFrame, grid: dict, res: int = CELL_RES,
                   threshold: float = water.NDWI_THRESHOLD,
                   corridor_rings: list | None = None,
                   aoi: tuple[list, float] | None = None,
@@ -247,8 +252,8 @@ def decode_points(images: DataFrame, grid: dict, res: int = 9,
                   on_undecodable: str = "raise") -> DataFrame:
     """images -> sparse mask points with hex cell keys + scene/date cols.
 
-    ``grid``: dict(gx0, gy0, ps) — uniform georeferencing (validated by
-    `validate_uniform_grid`).
+    ``grid``: dict(gx0, gy0, ps) — uniform georeferencing (the kernel
+    asserts every image against it, map-side).
 
     The kernel emits one fused summary row per image (px=py=-1,
     value=SUMMARY_MARKER). With ``corridor_rings`` (list of (ring_x,
@@ -483,12 +488,11 @@ def decode_points(images: DataFrame, grid: dict, res: int = 9,
     if reproject and "crs" in images.columns:
         cols.append("crs")
     # scene/date ride out of the kernel (see POINTS_DATED_SCHEMA) —
-    # batch and streaming take the identical path, no dim join, no
-    # per-point-row regex. mapInArrow, not mapInPandas: the output
-    # columns are assembled zero-copy from the kernel's numpy arrays
-    # (the pandas serializer re-expands Categoricals and converts
-    # object columns per-element; measured ~0.3 s/decode-job slower
-    # at bench scale, r8).
+    # no dim join, no per-point-row regex. mapInArrow, not
+    # mapInPandas: the output columns are assembled zero-copy from the
+    # kernel's numpy arrays (the pandas serializer re-expands
+    # Categoricals and converts object columns per-element; measured
+    # ~0.3 s/decode-job slower at bench scale, r8).
     return images.select(*cols).mapInArrow(kernel, schema=POINTS_DATED_SCHEMA)
 
 
@@ -510,10 +514,3 @@ def with_scene_date(df: DataFrame, col: str = "image_id") -> DataFrame:
         "date",
         F.to_date(F.regexp_replace(F.regexp_extract(F.col(col), r"(\d{4}[-_]\d{2}[-_]\d{2})", 1), "_", "-")),
     ).withColumn("scene", F.regexp_extract(F.col(col), r"^([A-Za-z0-9]+)_", 1))
-
-
-def validate_uniform_grid(images: DataFrame) -> None:
-    """S1 uniformity assert: all images share one (w, h) raster grid."""
-    distinct = images.select("w", "h").distinct().count()
-    if distinct != 1:
-        raise ValueError(f"non-uniform raster grid: {distinct} distinct (w, h) shapes")

@@ -540,9 +540,7 @@ def hamming_band_keys(hash_col: str, max_hamming: int = 3,
                       n_blocks: int | None = None) -> list:
     """The pigeonhole candidate keys of a 64-bit hash column, as one
     xxhash64 Column per (n_blocks - max_hamming)-combination of blocks
-    — shared by the batch join (hamming_candidates) and the streaming
-    stateful near-dup (streaming/stateful.stream_phash_neardup), so
-    both surfaces bucket identically."""
+    (the buckets of the hamming_candidates join)."""
     from itertools import combinations
 
     k = n_blocks or (max_hamming + 1)
@@ -559,17 +557,6 @@ def hamming_band_keys(hash_col: str, max_hamming: int = 3,
     return [
         F.xxhash64(F.lit(ci), *[block_cols[b] for b in combo]) for ci, combo in enumerate(combos)
     ]
-
-
-def popcount64(x: np.ndarray) -> np.ndarray:
-    """Vectorized 64-bit population count (SWAR) — numpy 1.x has no
-    bitwise_count. Plain-int shift/mask operands throughout (np-scalar
-    operands are ~75x slower on this numpy, see r5 notes)."""
-    x = np.asarray(x).astype(np.uint64, copy=True)
-    x -= (x >> 1) & 0x5555555555555555
-    x = (x & 0x3333333333333333) + ((x >> 2) & 0x3333333333333333)
-    x = (x + (x >> 4)) & 0x0F0F0F0F0F0F0F0F
-    return ((x * 0x0101010101010101) >> 56).astype(np.int64)
 
 
 def hamming_candidates(hashed: DataFrame, hash_col: str, id_col: str = "id",

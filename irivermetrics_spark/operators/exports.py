@@ -16,10 +16,11 @@ src/utils/calc_metrics.py:1023-1187):
 Geometry is emitted as array<struct<x,y>> columns (parquet-friendly) —
 the scale path. The reference's FILE formats are also real now:
 ``write_vector_shapefiles`` emits irm_Polygons/Lines/Points
-.shp/.shx/.dbf via the from-scratch writer (kernels/shapefile.py) and
-``write_persistence_geotiff`` emits Pixel_Persistence.tif via the
-from-scratch GeoTIFF codec (kernels/geotiff.py); both are driver-side
-single-file sinks for the FINAL small outputs, as in the reference.
+.shp/.shx/.dbf via the from-scratch writer (kernels/shapefile.py), a
+driver-side single-file sink for the FINAL small outputs as in the
+reference; ``write_persistence_geotiffs`` emits Pixel_Persistence.tif
+via the from-scratch GeoTIFF codec (kernels/geotiff.py), densified and
+written executor-side, one file per scene.
 """
 
 from __future__ import annotations
@@ -186,27 +187,6 @@ def write_date_mask_geotiffs(mask_points: DataFrame, grid: dict, outdir: str,
         emit, "scene string, date string, path string, n_bytes long")
 
 
-def write_persistence_geotiff(pp: DataFrame, grid: dict, scene: str, path: str) -> None:
-    """K2 file sink: the reference's Pixel_Persistence.tif
-    (src/irm_main.py:228-233, rio.to_raster) — dense per-scene raster
-    through the from-scratch GeoTIFF writer. Never-wet pixels are 0.0
-    (below both persistence thresholds), matching persistence_raster.
-
-    Single-scene convenience; the multi-scene path is
-    :func:`write_persistence_geotiffs` (one executor-side write per
-    scene instead of one driver job per scene)."""
-    from ..kernels import geotiff
-
-    raster = persistence_raster(pp, grid, scene)
-    # compress='lzw' mirrors the reference's export exactly
-    # (src/utils/wd_batch.py:584-588)
-    buf = geotiff.write_geotiff(raster.astype(np.float32)[None, :, :],
-                                dict(gx0=grid["gx0"], gy0=grid["gy0"], ps=grid["ps"]),
-                                nodata=0.0, compress="lzw")
-    with open(path, "wb") as f:
-        f.write(buf)
-
-
 def write_persistence_geotiffs(pp: DataFrame, grid: dict, outdir: str,
                                flat: bool | None = None) -> DataFrame:
     """Distributed K2 sink: ``Pixel_Persistence[_scene].tif`` for EVERY
@@ -217,9 +197,8 @@ def write_persistence_geotiffs(pp: DataFrame, grid: dict, outdir: str,
 
     Per-pixel value = max(pp) over overlapping sections, densified
     executor-side into the (h, w) float32 raster with 0.0 never-wet
-    fill — the exact expression ``persistence_raster`` uses, so the
-    single-scene file is byte-identical to ``write_persistence_geotiff``
-    (pinned by tests/test_file_sinks.py). ``flat=True`` names the file
+    fill — the exact expression ``persistence_raster`` uses (pinned by
+    tests/test_file_sinks.py). ``flat=True`` names the file
     ``Pixel_Persistence.tif`` (the reference's single-scene layout);
     default None auto-selects flat iff one scene. On a cluster
     ``outdir`` must be shared storage. Returns the (scene, path,

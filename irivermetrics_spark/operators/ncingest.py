@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..kernels import netcdf
-from .decode import POINTS_SCHEMA, with_scene_date
+from .decode import CELL_RES, POINTS_SCHEMA, with_scene_date
 
 
 def _scene_name(path: str) -> str:
@@ -47,7 +47,7 @@ def _scene_name(path: str) -> str:
     return (clean or "nc") + format(zlib.crc32(base.encode()), "08x")
 
 
-def nc_mask_points(files: DataFrame, grid: dict, res: int = 9,
+def nc_mask_points(files: DataFrame, grid: dict, res: int = CELL_RES,
                    corridor_rings: list | None = None,
                    var: str = "water",
                    aoi: tuple[list, float] | None = None) -> DataFrame:
@@ -99,7 +99,7 @@ def nc_mask_points(files: DataFrame, grid: dict, res: int = 9,
     return with_scene_date(pts)
 
 
-def tif_mask_points(files: DataFrame, grid: dict, res: int = 9,
+def tif_mask_points(files: DataFrame, grid: dict, res: int = CELL_RES,
                     corridor_rings: list | None = None,
                     aoi: tuple[list, float] | None = None) -> DataFrame:
     """binaryFile frame of per-date mask GeoTIFFs -> mask-point rows.
@@ -151,7 +151,7 @@ def tif_mask_points(files: DataFrame, grid: dict, res: int = 9,
     return with_scene_date(pts)
 
 
-def read_wmask_tifs(spark: SparkSession, path: str, res: int = 9,
+def read_wmask_tifs(spark: SparkSession, path: str, res: int = CELL_RES,
                     corridor_rings: list | None = None,
                     aoi: tuple[list, float] | None = None) -> tuple[DataFrame, dict]:
     """Path (directory or glob of per-date mask .tifs) ->
@@ -177,7 +177,7 @@ def read_wmask_tifs(spark: SparkSession, path: str, res: int = 9,
                            corridor_rings=corridor_rings, aoi=aoi), grid
 
 
-def read_wmask_nc(spark: SparkSession, path: str, res: int = 9,
+def read_wmask_nc(spark: SparkSession, path: str, res: int = CELL_RES,
                   corridor_rings: list | None = None,
                   var: str = "water",
                   aoi: tuple[list, float] | None = None) -> tuple[DataFrame, dict]:

@@ -50,9 +50,7 @@ def langid_argmax(text: Column, markers: dict[str, list[str]] | None = None) -> 
 
     ROLE (r7): this is the oracle-checkable DEMO of the argmax shape —
     text without any marker ties at 0 and returns the alphabetically
-    first language, so it is NOT a curation signal. Use the trained
-    model (operators/langid_model.py: hashed char-trigram softmax
-    regression, held-out-accuracy-tested) for real language ID."""
+    first language, so it is NOT a curation signal."""
     markers = markers or LANG_MARKERS
     langs = sorted(markers)
     scores = [marker_score(text, markers[lg]) for lg in langs]

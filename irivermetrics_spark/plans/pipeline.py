@@ -90,86 +90,11 @@ class _LazyFrames(dict):
         return dict.__len__(self)
 
 
-class LazyKeptMap(dict):
-    """scene -> sorted ISO kept-date list, materialized on first read.
-
-    The flagship plan no longer needs this map driver-side (the fill
-    time axis is a distributed (t_idx, n_t) join against the kept
-    dimension); tests and notebook callers reading
-    ``result['kept_map']`` trigger a one-off collect of the small kept
-    dimension, and callers that never read it pay nothing."""
-
-    def __init__(self, kept_df: DataFrame):
-        super().__init__()
-        self._df = kept_df
-        self._loaded = False
-
-    def _load(self):
-        if self._loaded:
-            return
-        self._loaded = True
-        for r in self._df.collect():
-            self.setdefault(r["scene"], []).append(r["date"].isoformat())
-        for v in super().values():
-            v.sort()
-
-    def __getitem__(self, k):
-        self._load()
-        return super().__getitem__(k)
-
-    def get(self, k, default=None):
-        self._load()
-        return super().get(k, default)
-
-    def __contains__(self, k):
-        self._load()
-        return super().__contains__(k)
-
-    def __len__(self):
-        self._load()
-        return super().__len__()
-
-    def __iter__(self):
-        self._load()
-        return super().__iter__()
-
-    def keys(self):
-        self._load()
-        return super().keys()
-
-    def values(self):
-        self._load()
-        return super().values()
-
-    def items(self):
-        self._load()
-        return super().items()
-
-    def __eq__(self, other):
-        self._load()
-        return dict(self) == other
-
-    def __ne__(self, other):
-        return not self.__eq__(other)
-
-    def __bool__(self):
-        self._load()
-        return super().__len__() > 0
-
-    def __repr__(self):
-        self._load()
-        return dict.__repr__(self)
-
-    __hash__ = None
-
-
 def run(
     spark: SparkSession,
     images: DataFrame | None,
     reaches: list[dict],
     grid: dict,
-    res: int = 9,
-    fill_res: int = fillop.FILL_RES_DEFAULT,
     min_pool_size: int = 2,
     section_length: float = float("nan"),
     mask_path: str | None = None,
@@ -206,6 +131,7 @@ def run(
     import numpy as np
 
     rings = [(np.asarray(r["ring_x"]), np.asarray(r["ring_y"])) for r in reaches]
+    res = decode.CELL_RES  # the resolution every mask table's cell column carries
 
     # corridor constants first: they are O(polygons) jobs memoized per
     # (reaches, grid, res[, aoi]) content and the decode-path stats
@@ -414,7 +340,7 @@ def run(
     # (out_cell_res): the fill stage grouped on the finer fill_res key,
     # and re-keying via a separate hex_cell_udf stage paid a second
     # ArrowEvalPython round-trip of the whole water table (r8)
-    water = fillop.filled_water(points_kept, kept_idx, reaches, grid, fill_res=fill_res,
+    water = fillop.filled_water(points_kept, kept_idx, reaches, grid,
                                 fill_nodata=fill_nodata,
                                 broadcast_kept=n_kept_rows <= 2_000_000,
                                 out_cell_res=res)
@@ -450,7 +376,6 @@ def run(
         persistence=pers,
         pools=pools,
         metrics=final,
-        kept_map=LazyKeptMap(kept),
         corridor_total=corridor_total,
     )
     out.add_factory("polygons", lambda: exports_op.pool_polygons(

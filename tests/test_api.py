@@ -11,8 +11,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from irivermetrics_spark import api, codecs, synth
-from irivermetrics_spark.functions import geometry
+from irivermetrics_spark.functions import cellindex, geometry
+from irivermetrics_spark.operators import decode
 from irivermetrics_spark.plans import pipeline
+from tests.conftest import kept_map
 
 
 def _fx():
@@ -45,8 +47,12 @@ def test_api_two_module_flow_matches_pipeline(spark):
     via_api = _metrics_pdf(api.calculate_metrics(spark, masks, fx.reaches, grid=grid))
     pd.testing.assert_frame_equal(via_api, direct)
 
-    # module 1 WITHOUT summaries -> calculate_metrics validity fallback
+    # module 1 WITHOUT summaries -> calculate_metrics validity fallback,
+    # which equi-joins the mask `cell` against module 2's corridor cover:
+    # cell ids pack the resolution, so both sides must use CELL_RES
     masks2 = api.waterdetect_batch(spark, images, r_lines=lines, grid=grid, buffer=buffer_m)
+    cells = [r.cell for r in masks2.where("px >= 0").select("cell").distinct().collect()]
+    assert set(cellindex._unpack(np.array(cells))[1].tolist()) == {decode.CELL_RES}
     via_fallback = _metrics_pdf(api.calculate_metrics(spark, masks2, fx.reaches, grid=grid))
     pd.testing.assert_frame_equal(via_fallback, direct)
 
@@ -143,7 +149,7 @@ def test_pixel_persistence_export(spark, tmp_path):
     images = pipeline.images_df(spark, fx.images)
     res = pipeline.run(spark, images, fx.reaches, grid)
     wj = res["water_joined"].toPandas()
-    n_dates = len(res["kept_map"]["scene0"])
+    n_dates = len(kept_map(res)["scene0"])
 
     pp = res["persistence_px"].toPandas()
     # numpy oracle: wet-count / n_dates per (section, pixel)
@@ -212,7 +218,7 @@ def test_aoi_clip_f6_counts_clipped_corridor_as_invalid(spark):
                                   buffer=buffer_m, reaches=fx.reaches)
     res = api.calculate_metrics(spark, masks, fx.reaches, grid=grid,
                                 r_lines=lines, buffer=buffer_m)
-    got_kept = set(res["kept_map"].get("scene0", []))
+    got_kept = set(kept_map(res).get("scene0", []))
 
     # numpy oracle over the fixture truth masks
     xs = fx.px_x(np.arange(fx.w))
@@ -237,7 +243,7 @@ def test_aoi_clip_f6_counts_clipped_corridor_as_invalid(spark):
     assert got_kept == expect_kept
     # and the un-clipped run keeps at least as many dates
     res_unclipped = api.calculate_metrics(spark, masks, fx.reaches, grid=grid)
-    assert set(res_unclipped["kept_map"].get("scene0", [])) >= got_kept
+    assert set(kept_map(res_unclipped).get("scene0", [])) >= got_kept
 
 
 def test_minimal_reach_dicts_normalized(spark):

@@ -5,6 +5,7 @@ import numpy as np
 
 from irivermetrics_spark import codecs, synth
 from irivermetrics_spark.plans import pipeline
+from tests.conftest import kept_map
 
 
 def _encode_all(fx, masks):
@@ -25,7 +26,7 @@ def test_all_dates_fail_validity(spark):
     masks = np.full((len(fx.dates), fx.h, fx.w), -1, dtype=np.int8)  # all nodata
     images = pipeline.images_df(spark, _encode_all(fx, masks))
     res = pipeline.run(spark, images, fx.reaches, grid)
-    assert res["kept_map"] == {}
+    assert kept_map(res) == {}
     m = res["metrics"].toPandas()
     assert len(m) == 0
     assert "npools" in m.columns  # schema survives empty input
@@ -41,7 +42,7 @@ def test_all_dry_scene_produces_zero_branch(spark):
     masks = np.zeros((len(fx.dates), fx.h, fx.w), dtype=np.int8)  # all dry, all valid
     images = pipeline.images_df(spark, _encode_all(fx, masks))
     res = pipeline.run(spark, images, fx.reaches, grid)
-    assert len(res["kept_map"]["scene0"]) == len(fx.dates)
+    assert len(kept_map(res)["scene0"]) == len(fx.dates)
     m = res["metrics"].toPandas()
     assert len(m) == len(fx.dates) * len(fx.reaches)
     assert (m.npools == 0).all() and (m.wet_area_km2 == 0).all()

@@ -14,6 +14,7 @@ import pytest
 from irivermetrics_spark import synth
 from irivermetrics_spark.oracle import numpy_oracle
 from irivermetrics_spark.plans import pipeline
+from tests.conftest import kept_map
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("RUN_SLOW"), reason="full-fixture e2e is opt-in (RUN_SLOW=1)"
@@ -26,7 +27,7 @@ def test_full_fixture_parity(spark):
     grid = dict(gx0=fx.gx0, gy0=fx.gy0, ps=fx.pixel_size, w=fx.w, h=fx.h)
     res = pipeline.run(spark, pipeline.images_df(spark, fx.images), fx.reaches, grid)
 
-    assert res["kept_map"]["scene0"] == oracle["kept_dates"]
+    assert kept_map(res)["scene0"] == oracle["kept_dates"]
 
     got_rows = {
         (r["ds"], r["section"], r["px"], r["py"])

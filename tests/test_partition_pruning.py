@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from irivermetrics_spark import synth
 from irivermetrics_spark.plans import pipeline
+from tests.conftest import kept_map
 
 
 def test_kept_date_filter_prunes_partitions(spark):
@@ -16,7 +17,7 @@ def test_kept_date_filter_prunes_partitions(spark):
     images = pipeline.images_df(spark, fx.images)
     ckpt = tempfile.mkdtemp(prefix="prune_ckpt_")
     res = pipeline.run(spark, images, fx.reaches, grid, checkpoint_dir=ckpt)
-    kept = res["kept_map"]["scene0"]
+    kept = kept_map(res)["scene0"]
     assert kept  # fixture keeps at least one date
 
     # the checkpointed mask table is date-partitioned; an isin on the

@@ -13,6 +13,7 @@ from irivermetrics_spark import synth
 from irivermetrics_spark.functions import cellindex
 from irivermetrics_spark.oracle import numpy_oracle
 from irivermetrics_spark.plans import pipeline
+from tests.conftest import kept_map
 
 W, H, NDATES, NSECTIONS = 80, 40, 12, 3
 
@@ -35,7 +36,7 @@ def result(spark, fx):
 
 
 def test_kept_dates_match(result, oracle):
-    assert result["kept_map"].get("scene0", []) == oracle["kept_dates"]
+    assert kept_map(result).get("scene0", []) == oracle["kept_dates"]
 
 
 def test_join_rows_exact(result, oracle):

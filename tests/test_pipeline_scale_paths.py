@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from irivermetrics_spark import api, synth
 from irivermetrics_spark.plans import pipeline
+from tests.conftest import kept_map
 
 
 def _fx():
@@ -35,7 +36,7 @@ def test_aoi_image_path_equals_two_module_path(spark):
     res_one = api.calculate_metrics(spark, images, fx.reaches, grid=grid,
                                     r_lines=lines, buffer=buffer_m)
 
-    assert dict(res_one["kept_map"]) == dict(res_two["kept_map"])
+    assert kept_map(res_one) == kept_map(res_two)
     cols = ["scene", "date", "section", "npools", "wet_area_km2", "AWMSI"]
     a = res_one["metrics"].toPandas()[cols].sort_values(["date", "section"]).reset_index(drop=True)
     b = res_two["metrics"].toPandas()[cols].sort_values(["date", "section"]).reset_index(drop=True)
@@ -67,20 +68,3 @@ def test_mixed_summary_table_rejected(spark):
     mixed = with_counts.unionByName(shifted)
     with pytest.raises(ValueError, match="mixed mask table"):
         api.calculate_metrics(spark, mixed, fx.reaches, grid=grid)
-
-
-def test_kept_map_is_lazy_and_correct(spark):
-    """result['kept_map'] materializes only on access and matches the
-    kept dimension frame."""
-    fx, grid = _fx()
-    images = pipeline.images_df(spark, fx.images)
-    res = pipeline.run(spark, images, fx.reaches, grid)
-    km = res["kept_map"]
-    assert isinstance(km, pipeline.LazyKeptMap)
-    assert not km._loaded  # nothing collected it during run()
-    kept_rows = {(r["scene"], r["date"].isoformat()) for r in res["kept"].collect()}
-    got = {(s, d) for s, ds in km.items() for d in ds}
-    assert km._loaded
-    assert got == kept_rows
-    for ds in km.values():
-        assert ds == sorted(ds)

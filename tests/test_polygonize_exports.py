@@ -56,15 +56,3 @@ def test_area_always_equals_pixel_count():
         m = (rng.uniform(size=(15, 18)) > 0.6).astype(int)
         polys = polygonize.polygons_from_mask(m)
         assert sum(p["n_pixels"] for p in polys) == pytest.approx(float(m.sum()))
-
-
-def test_binary_dilate():
-    from irivermetrics_spark.kernels import morpho_extra
-
-    img = np.zeros((5, 5), dtype=int)
-    img[2, 2] = 1
-    out = morpho_extra.binary_dilate(img, size=3)
-    assert out.sum() == 9
-    assert out[1:4, 1:4].all()
-    out2 = morpho_extra.binary_dilate(img, size=3, iterations=2)
-    assert out2.sum() == 25
