@@ -26,13 +26,55 @@ Differences from the reference, by engine design:
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 
 from .functions import geometry
 from .kernels import water
 from .operators import decode, exports
 from .plans import pipeline
+
+
+@contextlib.contextmanager
+def _job_description(spark: SparkSession, text: str):
+    """Label the calling thread's Spark jobs, then restore its label."""
+    sc = spark.sparkContext
+    old = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", old)
+
+
+class _SinkThread(InheritableThread):
+    """Runs one sink action beside the caller's own actions.
+
+    An InheritableThread inherits the caller's job group and local
+    properties, so its jobs count under the caller's group and can be
+    cancelled with it. Started on construction; ``join`` waits for the
+    action and re-raises its exception in the caller."""
+
+    def __init__(self, spark: SparkSession, description: str, action, *args):
+        self._error: BaseException | None = None
+
+        def target() -> None:
+            spark.sparkContext.setJobDescription(description)
+            try:
+                action(*args)
+            except BaseException as e:  # re-raised by join()
+                self._error = e
+
+        super().__init__(target=target, name="calculate_metrics-sink", daemon=False)
+        self.start()
+
+    def join(self, timeout: float | None = None) -> None:
+        super().join(timeout)
+        if self._error is not None:
+            raise self._error
 
 
 def validate_band_names(n_bands: int) -> list[str]:
@@ -123,7 +165,7 @@ def waterdetect_batch(
                                corridor_rings=rings, aoi=aoi, water_rule=water_rule)
     if mask_path:
         pts.write.mode("overwrite").parquet(mask_path)
-        pts = spark.read.parquet(mask_path)
+        pts = decode.read_mask_sink(spark, mask_path, pts)
     if export_tif:
         # K1 file sink: one YYYY-MM-DD.tif LZW per (scene, date), the
         # reference's export_tif branch (src/utils/wd_batch.py:584-588);
@@ -220,7 +262,10 @@ def calculate_metrics(
     export_shp the polygons/lines/points frames are included (they are
     always computed lazily — the flag controls the eager write when
     ``outdir`` is given), with export_PP the per-pixel persistence
-    table ("persistence_px") is written/kept.
+    table ("persistence_px") is written/kept. With ``outdir`` the
+    persistence sinks (parquet + GeoTIFFs, one action) run on a second
+    thread beside the metrics CSV; the call returns after both, and
+    raises if either failed.
 
     ``r_lines``/``buffer``: pass the SAME river lines + buffer used in
     module 1 when ``da_wmask`` was AOI-clipped — the reference clips
@@ -273,23 +318,33 @@ def calculate_metrics(
         result = pipeline.run(spark, None, reaches, grid, points=da_wmask, **kwargs)
 
     if outdir:
-        exports.write_metrics_csv(result["metrics"], f"{outdir}/irm_metrics.csv")
-        if export_shp:
-            result["polygons"].write.mode("overwrite").parquet(f"{outdir}/irm_Polygons.parquet")
-            result["lines"].write.mode("overwrite").parquet(f"{outdir}/irm_Lines.parquet")
-            result["points"].write.mode("overwrite").parquet(f"{outdir}/irm_Points.parquet")
-            # the reference's actual file format (irm_*.shp, irm_main.py:
-            # 217-226) via the from-scratch shapefile writer
-            exports.write_vector_shapefiles(result["polygons"], result["lines"],
-                                            result["points"], outdir)
+        sink = None
         if export_PP:
-            exports.write_pixel_persistence(result["persistence_px"], f"{outdir}/pixel_persistence.parquet")
             # the reference's Pixel_Persistence.tif (irm_main.py:228-233)
-            # via the from-scratch GeoTIFF writer — ALL scenes densify
-            # and write executor-side in one distributed pass (the r5
-            # driver for-loop was one Spark job per scene)
-            exports.write_persistence_geotiffs(
-                result["persistence_px"], grid, outdir).collect()
+            # and the parquet table in ONE action: the per-scene GeoTIFF
+            # writer re-emits its rows into the parquet sink. It runs
+            # beside the metrics CSV; its plan is built here, on the
+            # calling thread, so the sink thread only runs the action.
+            pp_rows = exports.persistence_geotiff_rows(
+                result["persistence_px"], grid, outdir, flat=result["single_scene"])
+            sink = _SinkThread(spark, "calculate_metrics: persistence parquet + GeoTIFFs",
+                               exports.write_pixel_persistence, pp_rows,
+                               f"{outdir}/pixel_persistence.parquet")
+        try:
+            with _job_description(spark, "calculate_metrics: metrics CSV"):
+                exports.write_metrics_csv(result["metrics"], f"{outdir}/irm_metrics.csv")
+            if export_shp:
+                with _job_description(spark, "calculate_metrics: vector exports"):
+                    result["polygons"].write.mode("overwrite").parquet(f"{outdir}/irm_Polygons.parquet")
+                    result["lines"].write.mode("overwrite").parquet(f"{outdir}/irm_Lines.parquet")
+                    result["points"].write.mode("overwrite").parquet(f"{outdir}/irm_Points.parquet")
+                    # the reference's actual file format (irm_*.shp,
+                    # irm_main.py:217-226) via the from-scratch writer
+                    exports.write_vector_shapefiles(result["polygons"], result["lines"],
+                                                    result["points"], outdir)
+        finally:
+            if sink is not None:
+                sink.join()
     return result
 
 

@@ -140,12 +140,6 @@ def hex_distance(cell_a: np.ndarray, cell_b: np.ndarray) -> np.ndarray:
     return (np.abs(dq) + np.abs(dr) + np.abs(dq + dr)) // 2
 
 
-def hex_parent(cell: np.ndarray, parent_res: int) -> np.ndarray:
-    """Coarser-resolution cell containing this cell's center."""
-    cx, cy = hex_center(cell)
-    return hex_cell(cx, cy, parent_res)
-
-
 def quad_cell(x: np.ndarray, y: np.ndarray, level: int,
               x0: float = -2.0e7, y0: float = -2.0e7, extent: float = 4.0e7) -> np.ndarray:
     """S2-style Morton quadtree cell over a fixed world box (vectorized)."""

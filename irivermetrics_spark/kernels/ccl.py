@@ -89,8 +89,3 @@ def remove_small(labels: np.ndarray, min_size: int) -> np.ndarray:
     out = labels.copy()
     out[kill[labels]] = 0
     return out
-
-
-def label_sizes(labels: np.ndarray) -> dict[int, int]:
-    counts = np.bincount(labels.ravel())
-    return {i: int(c) for i, c in enumerate(counts) if i > 0 and c > 0}

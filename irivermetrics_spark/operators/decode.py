@@ -26,6 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import codecs
 from ..functions import cellindex
@@ -494,6 +495,15 @@ def decode_points(images: DataFrame, grid: dict, res: int = CELL_RES,
     # Categoricals and converts object columns per-element; measured
     # ~0.3 s/decode-job slower at bench scale, r8).
     return images.select(*cols).mapInArrow(kernel, schema=POINTS_DATED_SCHEMA)
+
+
+def read_mask_sink(spark, path: str, written: DataFrame) -> DataFrame:
+    """Read back the mask table just written from ``written``, with its
+    schema made all-nullable: exactly what parquet footer inference
+    returns for it, without the inference job (measured 70-82 ms
+    inferred vs 17-26 ms explicit on the critical path)."""
+    schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in written.schema])
+    return spark.read.schema(schema).parquet(path)
 
 
 def quarantined(points: DataFrame) -> DataFrame:

@@ -37,10 +37,6 @@ POLY_SCHEMA = (
     "scene string, Date string, Section string, Type string, "
     "area_m2 double, area_km2 double, ring_x array<double>, ring_y array<double>"
 )
-LINE_SCHEMA = (
-    "scene string, date string, section string, label int, length_km double, "
-    "line_x array<double>, line_y array<double>"
-)
 POINT_SCHEMA = "scene string, Date string, section string, line int, Type string, x double, y double"
 
 
@@ -200,15 +196,13 @@ def write_persistence_geotiffs(pp: DataFrame, grid: dict, outdir: str,
     fill — the exact expression ``persistence_raster`` uses (pinned by
     tests/test_file_sinks.py). ``flat=True`` names the file
     ``Pixel_Persistence.tif`` (the reference's single-scene layout);
-    default None auto-selects flat iff one scene. On a cluster
-    ``outdir`` must be shared storage. Returns the (scene, path,
-    n_bytes) manifest — call an action on it to execute."""
-    import os
+    default None auto-selects flat iff one scene (one distinct-count
+    job, also run to refuse flat=True over several scenes). On a
+    cluster ``outdir`` must be shared storage.
 
-    from ..kernels import geotiff
-
-    gx0, gy0, ps = float(grid["gx0"]), float(grid["gy0"]), float(grid["ps"])
-    h, w = int(grid["h"]), int(grid["w"])
+    Returns ``pp``'s rows as each scene's writer saw them: an action on
+    the result writes the GeoTIFFs, and ``write_pixel_persistence`` of
+    the result writes the parquet table in the same pass."""
     if flat is not False:
         # count also when the CALLER forced flat=True: multiple scene
         # groups would then race concurrent writes of the same path
@@ -220,6 +214,18 @@ def write_persistence_geotiffs(pp: DataFrame, grid: dict, outdir: str,
                 "executor group would overwrite the same Pixel_Persistence.tif")
         if flat is None:
             flat = n_scenes == 1
+    return persistence_geotiff_rows(pp, grid, outdir, flat)
+
+
+def persistence_geotiff_rows(pp: DataFrame, grid: dict, outdir: str, flat: bool) -> DataFrame:
+    """``write_persistence_geotiffs`` for a caller that already knows
+    whether ``pp`` holds one scene: no counting job, no guard."""
+    import os
+
+    from ..kernels import geotiff
+
+    gx0, gy0, ps = float(grid["gx0"]), float(grid["gy0"]), float(grid["ps"])
+    h, w = int(grid["h"]), int(grid["w"])
 
     def emit(key, pdf):
         (scene,) = key
@@ -234,14 +240,11 @@ def write_persistence_geotiffs(pp: DataFrame, grid: dict, outdir: str,
                                     nodata=0.0, compress="lzw")
         name = "Pixel_Persistence.tif" if flat else f"Pixel_Persistence_{scene}.tif"
         os.makedirs(outdir, exist_ok=True)
-        path = os.path.join(outdir, name)
-        with open(path, "wb") as f:
+        with open(os.path.join(outdir, name), "wb") as f:
             f.write(buf)
-        return pd.DataFrame({"scene": [str(scene)], "path": [path],
-                             "n_bytes": [len(buf)]})
+        return pdf
 
-    return pp.groupBy("scene").applyInPandas(
-        emit, "scene string, path string, n_bytes long")
+    return pp.groupBy("scene").applyInPandas(emit, pp.schema)
 
 
 def write_vector_shapefiles(polygons: DataFrame, lines: DataFrame, points: DataFrame,

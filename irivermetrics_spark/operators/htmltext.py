@@ -68,9 +68,6 @@ _ENTITIES = {
     "zwnj": "‌", "zwj": "‍",
 }
 
-_WS = " \t\r\n\f\v"
-
-
 def _decode_entities(s: str) -> str:
     if "&" not in s:
         return s

@@ -25,21 +25,6 @@ from pyspark.sql import Window
 from ..functions import cellindex, geometry
 
 
-def pool_centroids(pools: DataFrame) -> DataFrame:
-    """Per-(scene, ds, section, label) pool centroid in planar meters.
-
-    The centroid is the TRUE mean of the pool's water pixels, computed
-    inside the morphology kernel (blocks.summarize_clip) where pixel
-    membership is materialized anyway — no extra pass, no path-midpoint
-    approximation (round-1 used centerline-path centroids; VERDICT
-    flagged the approximation, and the old water_joined/grid parameters
-    are gone with it)."""
-    return pools.where(F.col("label") > 0).select(
-        "scene", "ds", "section", "label",
-        F.col("centroid_x").alias("x"), F.col("centroid_y").alias("y"),
-    )
-
-
 def knn_pools(centroids: DataFrame, k: int = 3, res: int = 9, ring_k: int = 3,
               round_to: int | None = None) -> DataFrame:
     """k nearest pools per pool within the same (scene, ds):

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -87,30 +87,25 @@ def persistence(water_joined: DataFrame, n_dates: dict[str, int] | DataFrame,
     )
 
 
-def dimension_grid(spark: SparkSession, kept_dates: dict[str, list[str]] | DataFrame,
-                   reaches: list[dict]) -> DataFrame:
+def dimension_grid(kept_dates: DataFrame, reaches: list[dict]) -> DataFrame:
     """(scene, ds, section, section_area_km2) — the fold's full keyspace.
 
-    Preferred input is the kept-dates DataFrame (stays distributed: the
-    grid is dates x sections via a broadcast cross join, never a
-    driver-side row list); the dict form remains for small/test use.
-    """
-    sections = spark.createDataFrame(
-        [(r["section"], r["area_m2"] / 1e6) for r in reaches],
-        T.StructType([
-            T.StructField("section", T.StringType(), False),
-            T.StructField("section_area_km2", T.DoubleType(), False),
-        ]),
-    )
-    if isinstance(kept_dates, DataFrame):
-        dates = kept_dates.select("scene", F.date_format("date", "yyyy-MM-dd").alias("ds"))
-        return dates.crossJoin(F.broadcast(sections))
-    rows = [(scene, ds) for scene, ds_list in kept_dates.items() for ds in ds_list]
-    schema = T.StructType([
-        T.StructField("scene", T.StringType(), False),
-        T.StructField("ds", T.StringType(), False),
-    ])
-    return spark.createDataFrame(rows, schema).crossJoin(F.broadcast(sections))
+    Each kept (scene, date) row expands into one row per section by an
+    ``inline`` generator over a literal array of sections: no second
+    relation, so no broadcast job for a dimension of a few rows, and
+    the grid stays distributed with the kept dates. The literals are
+    exact: Python's float repr round-trips."""
+    sections = ", ".join(
+        f"named_struct('section', {_sql_str(r['section'])}, "
+        f"'section_area_km2', {float(r['area_m2']) / 1e6!r}D)"
+        for r in reaches)
+    return kept_dates.selectExpr(
+        "scene", "date_format(date, 'yyyy-MM-dd') AS ds", f"inline(array({sections}))")
+
+
+def _sql_str(value) -> str:
+    """A SQL string literal of ``str(value)``."""
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def fold(pools: DataFrame, grid_df: DataFrame, persistence_df: DataFrame,

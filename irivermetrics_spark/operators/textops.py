@@ -661,9 +661,6 @@ def chunk_documents(docs: DataFrame, max_tokens: int, overlap: int = 0,
         .drop("__nw"))
 
 
-DECOMPRESS_SCHEMA_TAIL = ", text string, compression string, decomp_error string"
-
-
 def decompress_payloads(docs: DataFrame, bytes_col: str = "payload",
                         max_ratio: int = 1000,
                         max_bytes: int = 64 * 1024 * 1024,

@@ -116,12 +116,6 @@ def url_valid(url: Column) -> Column:
     )
 
 
-def normalized_query(url: Column) -> Column:
-    """Tracking-stripped, bytewise-sorted query ('' when nothing
-    survives). Higher-order JVM array functions — no Python."""
-    return _normalized_query_col(url_query(url))
-
-
 def _normalized_query_col(q: Column) -> Column:
     params = F.split(q, "&", -1)
     kept = F.filter(

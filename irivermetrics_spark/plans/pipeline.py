@@ -3,9 +3,10 @@
 Spark-first restatement of the reference's calculate_metrics lifecycle
 (src/irm_main.py:117-236):
 
-  images --mapInPandas--> mask points (decode + NDWI + hex tiling)
-         --broadcast cell join + refine--> corridor membership
-         --groupBy(scene,date) + semi-join--> >= 70 % validity filter (F6)
+  images --mapInArrow--> mask points + per-image summary rows
+           (decode + NDWI + hex tiling + in-corridor invalid counts)
+         --groupBy(scene,date)--> >= 70 % validity filter (F6): the
+           kept (scene, date) dimension
          --applyInPandas(scene, fill_cell)--> temporal fill + binarize
          --broadcast cell join + refine--> per-section assignment (J1)
          --groupBy(scene,section,px,py)/(scene,section)--> persistence
@@ -14,9 +15,15 @@ Spark-first restatement of the reference's calculate_metrics lifecycle
          --orderBy--> final table
 
 Shuffle inventory (by design, data shrinks monotonically):
- 1. nodata counts groupBy (tiny), 2. fill groupBy (scene, fill_cell),
- 3. persistence groupBy, 4. morphology groupBy, 5. fold aggregate,
- 6. final orderBy. Both spatial joins are broadcast — the point side
+ 1. per-(scene, date) aggregate of the mask rows (kept dimension,
+ date-pruning list and validity probe: one scan, one small collect),
+ 2. fill groupBy (scene, fill_cell), 3. persistence groupBy,
+ 4. morphology groupBy, 5. fold aggregate, 6. final orderBy. With
+ export_PP, ``api.calculate_metrics`` adds 7. groupBy(scene) of the
+ per-pixel persistence: the GeoTIFF writer re-emits its rows into the
+ parquet sink, so both persistence sinks are one action, run beside
+ the metrics CSV. The spatial joins (zonal, and the corridor join of
+ the presence-only validity fallback) are broadcast — the point side
  never shuffles for them. At 10^12-image scale the same plan holds:
  the polygon/cover side stays O(polygons), fill cells partition the
  corridor uniformly, and AQE's skew-join/coalesce handles dense cells.
@@ -90,6 +97,83 @@ class _LazyFrames(dict):
         return dict.__len__(self)
 
 
+def _kept_stats(kept: DataFrame):
+    """The driver's decisions from a kept (scene, date) frame, in one
+    collect: kept-date list, kept row count, lowest and highest kept
+    scene."""
+    return kept.agg(
+        F.collect_set("date").alias("d_kept"),
+        F.count("*").alias("n_kept"),
+        F.min("scene").alias("s_lo"),
+        F.max("scene").alias("s_hi"),
+    ).collect()[0]
+
+
+def _kept_from_mask_table(mask_rows: DataFrame, points: DataFrame, corridor_cover: DataFrame,
+                          reaches: list[dict], grid: dict, corridor_total: int,
+                          invalid_offset: int):
+    """F6 on a points-only input: (persisted kept frame, driver stats).
+
+    One persisted per-(scene, date) aggregate of the mask rows serves
+    the date dimension, the >= 70 % kept flag, the counted/presence
+    probe and the stats, in one scan of the mask table and one collect.
+    Every mask row, not only the summaries, feeds the aggregate, so a
+    (scene, date) whose points have no summary row shows up in the same
+    collect. In a counted table that is an error: kept-ness would be
+    silently guessed (0 invalid) or the date silently dropped.
+    """
+    ct, off = int(corridor_total), int(invalid_offset)
+    # the exact float expression of fillop.keep_dates_fused, as SQL
+    kept_sql = f"({ct} - (coalesce(n_invalid, 0) + {off})) / {ct} >= 0.7D"
+    summary = f"value = {decode.SUMMARY_MARKER}"
+    by_date = (
+        mask_rows.filter(F.col("value") != decode.QUARANTINE_MARKER)
+        .groupBy("scene", "date").agg(
+            F.expr(f"sum(CASE WHEN {summary} AND cell >= 0 THEN cell END) AS n_invalid"),
+            F.expr(f"count(CASE WHEN {summary} AND cell >= 0 THEN 1 END) AS n_counted"),
+            F.expr(f"count(CASE WHEN {summary} AND cell < 0 THEN 1 END) AS n_presence"),
+        )
+        .selectExpr("scene", "date", "n_counted", "n_presence", f"{kept_sql} AS kept")
+        .persist()
+    )
+    stats = by_date.agg(
+        F.expr("collect_set(CASE WHEN kept THEN date END) AS d_kept"),
+        F.expr("count(CASE WHEN kept THEN 1 END) AS n_kept"),
+        F.expr("min(CASE WHEN kept THEN scene END) AS s_lo"),
+        F.expr("max(CASE WHEN kept THEN scene END) AS s_hi"),
+        F.expr("sum(n_counted) AS n_counted"),
+        F.expr("sum(n_presence) AS n_presence"),
+        F.expr("count(CASE WHEN n_counted + n_presence = 0 THEN 1 END) AS n_unsummarized"),
+    ).collect()[0]
+    n_counted = int(stats["n_counted"] or 0)
+    # Mixed tables (counted AND presence-only summaries unioned from
+    # different module-1 runs) are rejected: the fused path would
+    # silently treat presence-only dates as zero-invalid (ADVICE r2)
+    if n_counted and int(stats["n_presence"] or 0):
+        by_date.unpersist()
+        raise ValueError(
+            "mixed mask table: both counted (cell >= 0) and presence-only "
+            "(cell == -1) summary rows present — re-run module 1 uniformly "
+            "(with or without reaches) or split the table per run"
+        )
+    if n_counted:
+        if stats["n_unsummarized"]:
+            by_date.unpersist()
+            raise ValueError(
+                f"mask table: {stats['n_unsummarized']} (scene, date) group(s) have mask "
+                "points but no summary row — their in-corridor invalid count is unknown; "
+                "re-run module 1 for those images")
+        return by_date.filter("kept").select("scene", "date"), stats
+    # presence-only masks (module 1 ran without reaches), or no summary
+    # rows at all (an external hand-built table): re-derive kept via
+    # the corridor join over the same date dimension
+    kept = fillop.keep_dates(points, by_date.select("scene", "date"), corridor_cover, reaches,
+                             grid, corridor_total, invalid_offset=invalid_offset).persist()
+    stats = _kept_stats(kept)
+    by_date.unpersist()
+    return kept, stats
+
+
 def run(
     spark: SparkSession,
     images: DataFrame | None,
@@ -104,7 +188,9 @@ def run(
     aoi: tuple[list, float] | None = None,
 ) -> dict[str, DataFrame]:
     """Returns the named intermediate + final DataFrames (all lazy except
-    the small date-dimension collects).
+    the small date-dimension collects), plus two scalars:
+    ``corridor_total`` and ``single_scene`` (exactly one scene has a
+    kept date; it picks the flat persistence file name).
 
     checkpoint_dir: enable per-stage lineage checkpointing (P8) — a
     rerun with the same dir resumes after the last completed stage.
@@ -118,7 +204,8 @@ def run(
     all-dry images; when those rows lack in-corridor invalid COUNTS
     (module 1 ran without reaches) the >= 70 % validity filter falls
     back to the corridor-join formulation (one extra pass over nodata
-    points only).
+    points only). In a counted table, a (scene, date) with mask points
+    but no summary row raises ValueError, like a mixed table.
 
     aoi: (lines, buffer_m) — REQUIRED when ``points`` came from an
     AOI-clipped module-1 run and reference clip semantics matter:
@@ -154,8 +241,9 @@ def run(
     # it yields a SUPERSET of kept dates (sum-kept => every row kept)
     # and an OVERESTIMATE of the kept row count — both safe directions
     # (prune list must not drop kept data; broadcast gate must not
-    # broadcast an unbounded dim). The same float expression as
-    # keep_dates_fused so no FP-edge divergence.
+    # broadcast an unbounded dim; a superset of kept scenes can only
+    # turn a one-scene export into a per-scene file name). The same
+    # float expression as keep_dates_fused so no FP-edge divergence.
     # one SQL string (r6 py4j-floor sweep): integer literals keep the
     # bigint arithmetic + double division identical to the old Column
     # tree (Spark `/` is always double in both forms)
@@ -193,16 +281,11 @@ def run(
                 obs,
                 F.expr(f"collect_set(CASE WHEN {_row_kept_sql} THEN date END) AS d_kept"),
                 F.expr(f"sum(CASE WHEN {_row_kept_sql} THEN 1 ELSE 0 END) AS n_kept"),
+                F.expr(f"min(CASE WHEN {_row_kept_sql} THEN scene END) AS s_lo"),
+                F.expr(f"max(CASE WHEN {_row_kept_sql} THEN scene END) AS s_hi"),
             )
             observed.write.mode("overwrite").parquet(mask_path)
-            # read back with the schema we just wrote (all-nullable,
-            # exactly what footer inference returns for this table):
-            # skips the driver-side footer read on the critical path
-            # between the write job and the metrics plan build
-            # (measured 70-82 ms inferred vs 17-26 ms explicit)
-            read_schema = T.StructType(
-                [T.StructField(f.name, f.dataType, True) for f in points.schema])
-            points = spark.read.schema(read_schema).parquet(mask_path)
+            points = decode.read_mask_sink(spark, mask_path, points)
         else:
             points = points.persist()
 
@@ -210,100 +293,49 @@ def run(
     # real mask points are everything else (quarantine rows from a
     # decode_points(on_undecodable='quarantine') table are dropped —
     # an undecodable image contributes nothing to the metrics)
-    summaries = points.filter(F.col("value") == decode.SUMMARY_MARKER)
+    mask_rows = points
     points = points.filter(~F.col("value").isin(decode.SUMMARY_MARKER,
                                                 decode.QUARANTINE_MARKER))
 
-    if images is not None:
-        dates = decode.with_scene_date(images.select("image_id")).select("scene", "date").distinct()
-    else:
-        # points-only input: the date dimension comes from the mask table
-        # (an all-nodata image has a summary row, so no date is lost)
-        dates = points.select("scene", "date").unionByName(
-            summaries.select("scene", "date")).distinct()
-
-    # the decode path always fuses in-corridor invalid counts — only
-    # probe when the caller handed us a points table, whose summary rows
-    # may be presence-only (cell == -1). Mixed tables (counted AND
-    # presence-only summaries unioned from different module-1 runs) are
-    # rejected: the fused path would silently treat presence-only dates
-    # as zero-invalid (ADVICE r2). The probe rides the same single
-    # action as the kept stats (crossJoin of two tiny aggregates).
-    has_counts = True
-    probe_cols: list = []
-    if images is None:
-        probe_cols = [summaries.agg(
-            F.sum(F.when(F.col("cell") >= 0, 1).otherwise(0)).alias("_n_counted"),
-            F.sum(F.when(F.col("cell") < 0, 1).otherwise(0)).alias("_n_presence"),
-        )]
-
-    def _kept_of(counted: bool) -> DataFrame:
-        if counted:
-            return fillop.keep_dates_fused(summaries, dates, corridor_total,
-                                           invalid_offset=invalid_offset)
-        return fillop.keep_dates(points, dates, corridor_cover, reaches, grid, corridor_total,
-                                 invalid_offset=invalid_offset)
-
     # the kept (scene, date) dimension stays DISTRIBUTED: the driver
-    # needs only the distinct-date pruning list + a row-count bound
-    # (r2 VERDICT: the old kept.collect() scene->dates map is GBs at
-    # 10^6 scenes x years of dates). On the mask-write path those came
-    # from the write job's Observation — zero extra actions; otherwise
-    # one fused agg action (stats + counted-probe together).
-    kept = _kept_of(True).persist()
-    if obs is not None:
-        ostats = obs.get
-        kept_dates_all = sorted(d for d in (ostats["d_kept"] or []) if d is not None)
-        n_kept_rows = int(ostats["n_kept"] or 0)
-        # overlap (guide §2.6): the downstream fill/zonal/fold plan
-        # build is ~0.4 s of driver-only py4j with the cluster idle;
-        # materialize the persisted kept dimension on a daemon thread
-        # meanwhile (a small scan of the just-written mask parquet +
-        # one agg — exactly the job the metrics action would run
-        # first). Only on this branch: without a mask sink, kept's
-        # lineage still contains the full decode and a background
-        # materialization would burn a decode for plan-only callers.
-        # Errors are swallowed; the caller's action surfaces them.
-        from pyspark import InheritableThread
-
-        def _materialize_kept() -> None:
-            try:
-                kept.count()
-            except Exception:
-                pass
-
-        InheritableThread(target=_materialize_kept, daemon=True).start()
+    # needs only the distinct-date pruning list, a row-count bound and
+    # whether one scene is kept (r2 VERDICT: the old kept.collect()
+    # scene->dates map is GBs at 10^6 scenes x years of dates). On the
+    # mask-write path those come from the write job's Observation —
+    # zero extra actions; otherwise from one small collect.
+    if images is None:
+        kept, stats = _kept_from_mask_table(mask_rows, points, corridor_cover, reaches, grid,
+                                            corridor_total, invalid_offset)
     else:
-        stats_df = kept.agg(
-            F.collect_set("date").alias("d_all"),
-            F.count("*").alias("n_rows"),
-        )
-        for p in probe_cols:
-            stats_df = stats_df.crossJoin(p)
-        stats = stats_df.collect()[0]
-        if images is None:
-            n_counted = int(stats["_n_counted"] or 0)
-            n_presence = int(stats["_n_presence"] or 0)
-            if n_counted and n_presence:
-                raise ValueError(
-                    "mixed mask table: both counted (cell >= 0) and presence-only "
-                    "(cell == -1) summary rows present — re-run module 1 uniformly "
-                    "(with or without reaches) or split the table per run"
-                )
-            # no summary rows at all (external hand-built table) also
-            # falls back to the corridor-join formulation, like r4
-            has_counts = n_counted > 0
-            if not has_counts:
-                # presence-only masks: re-derive kept via the corridor
-                # join and rerun the (tiny) stats agg on the real kept
-                kept.unpersist()
-                kept = _kept_of(False).persist()
-                stats = kept.agg(
-                    F.collect_set("date").alias("d_all"),
-                    F.count("*").alias("n_rows"),
-                ).collect()[0]
-        kept_dates_all = sorted(stats["d_all"])
-        n_kept_rows = int(stats["n_rows"])
+        dates = decode.with_scene_date(images.select("image_id")).select("scene", "date").distinct()
+        summaries = mask_rows.filter(F.col("value") == decode.SUMMARY_MARKER)
+        kept = fillop.keep_dates_fused(summaries, dates, corridor_total,
+                                       invalid_offset=invalid_offset).persist()
+        if obs is not None:
+            stats = obs.get
+            # overlap (guide §2.6): the downstream fill/zonal/fold plan
+            # build is ~0.4 s of driver-only py4j with the cluster idle;
+            # materialize the persisted kept dimension on a daemon thread
+            # meanwhile (a small scan of the just-written mask parquet +
+            # one agg — exactly the job the metrics action would run
+            # first). Only on this branch: without a mask sink, kept's
+            # lineage still contains the full decode and a background
+            # materialization would burn a decode for plan-only callers.
+            # Errors are swallowed; the caller's action surfaces them.
+            from pyspark import InheritableThread
+
+            def _materialize_kept() -> None:
+                try:
+                    kept.count()
+                except Exception:
+                    pass
+
+            InheritableThread(target=_materialize_kept, daemon=True).start()
+        else:
+            stats = _kept_stats(kept)
+    kept_dates_all = sorted(d for d in (stats["d_kept"] or []) if d is not None)
+    n_kept_rows = int(stats["n_kept"] or 0)
+    single_scene = stats["s_lo"] is not None and stats["s_lo"] == stats["s_hi"]
 
     # date-pruning prefilter ahead of the exact (scene, date) join: an
     # isin on the (small) distinct kept-date list pushes into the
@@ -357,7 +389,7 @@ def run(
     nd_df = kept.groupBy("scene").agg(F.count("*").alias("n_kept"))
     pers = metrics.persistence(water_joined, nd_df, grid["ps"])
     pools = morphology.pool_rows(water_joined, reaches, grid, min_pool_size=min_pool_size)
-    grid_df = metrics.dimension_grid(spark, kept, reaches)
+    grid_df = metrics.dimension_grid(kept, reaches)
     # broadcast the fold's dim sides only while the keyspace is bounded
     n_groups = n_kept_rows * max(len(reaches), 1)
     final = metrics.fold(pools, grid_df, pers, section_length=section_length,
@@ -377,6 +409,7 @@ def run(
         pools=pools,
         metrics=final,
         corridor_total=corridor_total,
+        single_scene=single_scene,
     )
     out.add_factory("polygons", lambda: exports_op.pool_polygons(
         water_joined, reaches, grid, min_pool_size))
@@ -398,8 +431,6 @@ def images_df(spark: SparkSession, images_pdf) -> DataFrame:
     at the 384-scene scaling input (r8). Pin a byte-safe row count for
     this one wide-binary conversion; the session default stays 10000
     for narrow-row stages."""
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
             T.StructField("image_id", T.StringType(), False),

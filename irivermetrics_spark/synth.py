@@ -33,7 +33,7 @@ import numpy as np
 import pandas as pd
 
 from . import codecs
-from .functions import cellindex, geometry
+from .functions import geometry
 
 PIXEL_SIZE = 9.999401981612094
 GX0 = 627279.486
@@ -260,13 +260,3 @@ def river_lines(fx: Fixture, seed: int = 42, n_pts: int = 60) -> list[dict]:
     xs = np.linspace(0.0, float(fx.w), n_pts)
     ycs = fx.h / 2.0 + amp * np.sin(2 * np.pi * xs / lam + phase)
     return [dict(name="river", x=fx.gx0 + xs * fx.pixel_size, y=fx.gy0 - ycs * fx.pixel_size)]
-
-
-def reach_cover_df(fx: Fixture, res: int = 9) -> pd.DataFrame:
-    """Per-section hex cover (cell9, section, full) — broadcast join side."""
-    rows = []
-    for r in fx.reaches:
-        cells, is_full = geometry.polygon_cover_hex(r["ring_x"], r["ring_y"], res)
-        for c, f in zip(cells.tolist(), is_full.tolist()):
-            rows.append(dict(cell=int(c), section=r["section"], full=bool(f)))
-    return pd.DataFrame(rows)

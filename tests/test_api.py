@@ -270,3 +270,16 @@ def test_fill_nodata_false_skips_fill(spark):
     assert b <= a
     m = _metrics_pdf(unfilled)
     assert len(m) == len(_metrics_pdf(filled))  # same dimension grid
+
+
+def test_mask_sink_read_back_schema_matches_footer_inference(spark, tmp_path):
+    """waterdetect_batch reads its mask sink back with the written
+    schema made all-nullable, not by footer inference: the two must be
+    the same schema, or module 2 would see a different table."""
+    fx, grid = _fx()
+    images = pipeline.images_df(spark, fx.images)
+    path = str(tmp_path / "masks")
+    masks = api.waterdetect_batch(spark, images, grid=grid, reaches=fx.reaches, mask_path=path)
+    inferred = spark.read.parquet(path)
+    assert masks.schema == inferred.schema
+    assert masks.count() == inferred.count()
