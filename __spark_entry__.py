@@ -1271,14 +1271,13 @@ def _q_pathlen_oracle(spark, sf):
 def _q_pixel_persistence_px(spark, sf):
     """K2 per-pixel persistence (the reference's Pixel_Persistence.tif,
     src/irm_main.py:228-233), DuckDB-value-pinned on a deterministic
-    generated wet-point set: pp = wet-date-count / n_kept_dates through
-    the REAL operator (metrics.pixel_persistence_px — groupBy + n_dates
-    broadcast dim join). The full image-pipeline variant stays parity-
-    pytested (tests/test_pipeline_parity.py); n_kept=7 keeps every
+    generated wet-point set: pp = wet-date-count / n_kept_dates, the
+    same SQL forms the flagship's persistence table used before the
+    section kernel (morphology.section_rows) took it over; the full
+    image-pipeline variant stays parity-pytested
+    (tests/test_pipeline_parity.py); n_kept=7 keeps every
     rounded 6-dp value away from cross-engine rounding boundaries
     (k/7 repeats 142857 — never ...5 exactly at the 6th place)."""
-    from irivermetrics_spark.operators import metrics
-
     e = _t(spark, sf, "events")
     wet = e.select(
         F.lit("s").alias("scene"),
@@ -1287,7 +1286,8 @@ def _q_pixel_persistence_px(spark, sf):
         (F.col("event_id") % 19).cast("int").alias("py"),
         F.concat(F.lit("d"), (F.col("event_id") % 7).cast("string")).alias("ds"),
     ).distinct()
-    pp = metrics.pixel_persistence_px(wet, {"s": 7})
+    pp = (wet.groupBy("scene", "section", "px", "py").agg(F.expr("count(*) AS wet"))
+          .withColumn("pp", F.expr("wet / 7")))
     return pp.select(
         "scene", "section",
         F.col("px").cast("bigint").alias("px"),

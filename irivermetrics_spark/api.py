@@ -265,7 +265,10 @@ def calculate_metrics(
     table ("persistence_px") is written/kept. With ``outdir`` the
     persistence sinks (parquet + GeoTIFFs, one action) run on a second
     thread beside the metrics CSV; the call returns after both, and
-    raises if either failed.
+    raises if either failed; then it unpersists what ``pipeline.run``
+    persisted. Without ``outdir`` those frames stay cached, and until
+    the caller unpersists them, a later call on the same mask path
+    rewritten by another writer is served the old table's results.
 
     ``r_lines``/``buffer``: pass the SAME river lines + buffer used in
     module 1 when ``da_wmask`` was AOI-clipped — the reference clips
@@ -343,8 +346,13 @@ def calculate_metrics(
                     exports.write_vector_shapefiles(result["polygons"], result["lines"],
                                                     result["points"], outdir)
         finally:
-            if sink is not None:
-                sink.join()
+            try:
+                if sink is not None:
+                    sink.join()
+            finally:
+                # caches match by plan, not file contents (see above)
+                for df in result.persisted:
+                    df.unpersist()
     return result
 
 

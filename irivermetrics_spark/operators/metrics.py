@@ -23,7 +23,8 @@ pp = wet-count/n_dates per pixel (only ever-wet pixels materialize —
 zeros are implicit and fall below both thresholds);
 pp_mean = avg(pp | pp > 0.1) (NaN when empty), ra_area =
 sum(pp | pp > 0.9) * pixel_area_km2 (0 when empty) — per section over
-the all_touched-masked clip, i.e. over the zonal-join rows.
+the all_touched-masked clip. The per-pixel table is the section
+kernel's output (``morphology.section_rows``); ``persistence`` folds it.
 """
 
 from __future__ import annotations
@@ -32,56 +33,18 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 NAN = float("nan")
 
 
-def pixel_persistence_px(water_joined: DataFrame, n_dates: dict[str, int] | DataFrame) -> DataFrame:
-    """K2: the per-pixel persistence table (scene, section, px, py, pp).
-
-    pp = wet-date-count / n_kept_dates per pixel; only ever-wet pixels
-    materialize (never-wet corridor pixels are implicit zeros). This is
-    the distributed form of the reference's Pixel_Persistence.tif
-    raster (src/irm_main.py:228-233, src/utils/calc_metrics.py:295-304)
-    — ``exports.persistence_raster`` reassembles the dense raster.
-
-    The scene -> kept-date-count dimension joins as a broadcast table,
-    not a literal create_map expression — a map literal grows the plan
-    linearly with scene count (10^6 scenes = 10^6-entry expression in
-    every task). Pass it as a DataFrame with (scene, n_kept) columns to
-    keep it fully distributed (the flagship plan derives it from the
-    kept dimension without any driver collect); the dict form remains
-    for small/test use.
-    """
-    if isinstance(n_dates, DataFrame):
-        nd = n_dates.select("scene", F.col("n_kept").cast("int").alias("n_kept"))
-    else:
-        nd = water_joined.sparkSession.createDataFrame(
-            [(k, int(v)) for k, v in n_dates.items()],
-            T.StructType([
-                T.StructField("scene", T.StringType(), False),
-                T.StructField("n_kept", T.IntegerType(), False),
-            ]),
-        )
-    return (
-        water_joined.groupBy("scene", "section", "px", "py")
-        .agg(F.expr("count(*) AS wet"))
-        .join(F.broadcast(nd), "scene")
-        .withColumn("pp", F.expr("wet / n_kept"))
-        .drop("n_kept")
-    )
-
-
-def persistence(water_joined: DataFrame, n_dates: dict[str, int] | DataFrame,
-                pixel_size: float) -> DataFrame:
-    """(scene, section, pp_mean, ra_area) from zonal-joined water points.
+def persistence(persistence_px: DataFrame, pixel_size: float) -> DataFrame:
+    """(scene, section, pp_mean, ra_area) from the per-pixel persistence
+    table (scene, section, px, py, wet, pp).
 
     SQL-string expressions (same exact forms as the r1-r5 Column trees)
     — part of the r6 py4j plan-floor sweep; see metrics.fold."""
     px_area_km2 = pixel_size**2 / 1e6
-    pp = pixel_persistence_px(water_joined, n_dates)
-    return pp.groupBy("scene", "section").agg(
+    return persistence_px.groupBy("scene", "section").agg(
         F.expr("avg(CASE WHEN pp > 0.1D THEN pp END) AS pp_mean"),
         F.expr(f"COALESCE(sum(CASE WHEN pp > 0.9D THEN pp END), 0.0D) * {px_area_km2!r}D AS ra_area"),
     )

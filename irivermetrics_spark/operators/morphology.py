@@ -1,17 +1,20 @@
-"""Per-(scene, section, date) morphology: pools -> rows (M1-M6, J3).
+"""Per-(scene, section) kernel: zonal membership, pool morphology
+(M1-M6, J3) and pixel persistence (A1) in one grouped map.
 
-The reference runs CCL/skeleton/EDT per feature-clip layer inside dask
-tasks (src/utils/calc_metrics.py:669-722, 725-806); the engine's
-equivalent grain is an ``applyInPandas`` group keyed (scene, section,
-date): each group rebuilds its dense bbox clip from the joined water
-points (bbox offsets are broadcast per-section metadata) and runs the
-shared summarize_clip kernel. Pools are tens-to-hundreds of pixels, so
-groups are small and uniform; AQE handles count skew across dates.
+The reference clips each feature into a dense block and runs
+CCL/skeleton/EDT per clip layer (src/utils/calc_metrics.py:669-722,
+725-806). Here one ``applyInPandas`` group per (scene, section) gets
+the filled water rows of the section's cover cells, builds the exact
+membership mask over its bbox clip once, runs ``summarize_clip`` date
+by date through one reused clip, and counts each pixel's wet dates.
+One group holds the section's water rows for every kept date of one
+scene, one int8 clip and one wet count per clip pixel — never a
+(date, y, x) cube.
 
 Output pool rows keep the path as global pixel coordinate arrays for
-the line/point exports. (scene, section, date) pairs with zero water
-never form a group — the metrics fold right-joins the full dimension
-grid and applies the reference's zero-pool branch there.
+the line/point exports. Dates on which a section has no member water
+emit no pool row — the metrics fold right-joins the full dimension grid
+and applies the reference's zero-pool branch there.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..kernels import blocks
+from . import zonal
 
 POOLS_SCHEMA = (
     "scene string, ds string, section string, label int, length_km double, "
@@ -28,6 +32,10 @@ POOLS_SCHEMA = (
     "centroid_x double, centroid_y double, "
     "path_py array<int>, path_px array<int>"
 )
+# section_rows' tagged output: pool rows, then persistence rows (px, py, wet, pp)
+SECTION_SCHEMA = "is_pool boolean, " + POOLS_SCHEMA + ", px int, py int, wet long, pp double"
+POOLS_COLUMNS, SECTION_COLUMNS = ([c.split(" ", 1)[0] for c in schema.split(", ")]
+                                  for schema in (POOLS_SCHEMA, SECTION_SCHEMA))
 
 
 def empty_rows(schema: str) -> pd.DataFrame:
@@ -58,35 +66,74 @@ def clip_offsets(reaches: list[dict], grid: dict) -> dict[str, tuple[int, int, i
     return out
 
 
-def pool_rows(water_joined: DataFrame, reaches: list[dict], grid: dict,
-              min_pool_size: int = 2) -> DataFrame:
-    """water_joined: (scene, ds, section, px, py) -> per-pool rows."""
-    offsets = clip_offsets(reaches, grid)
-    pixel_size = grid["ps"]
+def pool_records(scene: str, section: str, ds: str, clip: np.ndarray, c0: int, r0: int,
+                 min_pool_size: int, grid: dict) -> list[dict]:
+    """One (scene, section, date) clip -> its POOLS_SCHEMA rows, the
+    path in global pixel coordinates and the centroid in CRS units."""
+    gx0, gy0, ps = grid["gx0"], grid["gy0"], grid["ps"]
+    out = []
+    for row in blocks.summarize_clip(clip, min_pool_size, ps):
+        path = row.pop("path")
+        if path is None or path.shape[0] == 0:
+            ppy, ppx = [], []
+        else:
+            ppy = (path[:, 0] + r0).astype(int).tolist()
+            ppx = (path[:, 1] + c0).astype(int).tolist()
+        # true pool-pixel centroid, clip frame -> CRS (pixel centers)
+        cy, cx = row.pop("centroid_py"), row.pop("centroid_px")
+        row["centroid_x"] = gx0 + (cx + c0 + 0.5) * ps
+        row["centroid_y"] = gy0 - (cy + r0 + 0.5) * ps
+        out.append(dict(scene=scene, ds=ds, section=section, path_py=ppy, path_px=ppx, **row))
+    return out
 
+
+def section_rows(water: DataFrame, reaches: list[dict], grid: dict,
+                 min_pool_size: int = 2) -> DataFrame:
+    """water: (scene, ds, px, py, section, n_kept) -> SECTION_SCHEMA rows.
+
+    ``section`` is a cover candidate (the cell join); the kernel keeps
+    a row only if the pixel is a member of the section
+    (``zonal.member_all_touched``, evaluated once per group over the
+    clip window). Pool rows are tagged ``is_pool``; the others are the
+    per-pixel persistence rows of ever-wet pixels.
+    """
+    offsets = clip_offsets(reaches, grid)
+    by_section = {r["section"]: r for r in reaches}
     gx0, gy0, ps = grid["gx0"], grid["gy0"], grid["ps"]
 
     def kernel(key, pdf):
-        scene, section, ds = key
-        c0, r0, ncols, nrows = offsets[section]
-        if ncols == 0 or nrows == 0:
-            return empty_rows(POOLS_SCHEMA)
+        scene, section = key
+        c0, r0, ncols, nrows = offsets[section]  # (0, 0, 0, 0): nothing is kept
+        PX, PY = np.meshgrid(np.arange(c0, c0 + ncols), np.arange(r0, r0 + nrows))
+        member = zonal.member_all_touched(gx0 + (PX + 0.5) * ps, gy0 - (PY + 0.5) * ps,
+                                          by_section[section], ps)
+        y = pdf["py"].to_numpy(dtype=np.int64) - r0
+        x = pdf["px"].to_numpy(dtype=np.int64) - c0
+        keep = (y >= 0) & (y < nrows) & (x >= 0) & (x < ncols)
+        keep[keep] = member[y[keep], x[keep]]
+        if not keep.any():
+            return empty_rows(SECTION_SCHEMA)
+        y, x, ds = y[keep], x[keep], pdf["ds"].to_numpy()[keep]
+        # one clip, reused date by date: no (date, y, x) cube
         clip = np.zeros((nrows, ncols), dtype=np.int8)
-        clip[pdf["py"].to_numpy() - r0, pdf["px"].to_numpy() - c0] = 1
-        rows = blocks.summarize_clip(clip, min_pool_size, pixel_size)
-        out = []
-        for row in rows:
-            path = row.pop("path")
-            if path is None or path.shape[0] == 0:
-                ppy, ppx = [], []
-            else:
-                ppy = (path[:, 0] + r0).astype(int).tolist()
-                ppx = (path[:, 1] + c0).astype(int).tolist()
-            # true pool-pixel centroid, clip frame -> CRS (pixel centers)
-            cy, cx = row.pop("centroid_py"), row.pop("centroid_px")
-            row["centroid_x"] = gx0 + (cx + c0 + 0.5) * ps
-            row["centroid_y"] = gy0 - (cy + r0 + 0.5) * ps
-            out.append(dict(scene=scene, ds=ds, section=section, path_py=ppy, path_px=ppx, **row))
-        return pd.DataFrame(out)
+        order = np.argsort(ds, kind="stable")
+        dates, starts = np.unique(ds[order], return_index=True)
+        pools = []
+        for d, rows in zip(dates, np.split(order, starts[1:])):
+            clip[:] = 0
+            clip[y[rows], x[rows]] = 1
+            pools.extend(pool_records(scene, section, d, clip, c0, r0, min_pool_size, grid))
+        wet = np.bincount(y * ncols + x, minlength=nrows * ncols)
+        ever = np.nonzero(wet)[0]
+        persist = pd.DataFrame({
+            "is_pool": False, "scene": scene, "ds": None, "section": section,
+            "path_py": None, "path_px": None,
+            "px": (ever % ncols + c0).astype(np.int32),
+            "py": (ever // ncols + r0).astype(np.int32),
+            "wet": wet[ever],
+            "pp": wet[ever] / int(pdf["n_kept"].iloc[0]),
+        })
+        return pd.concat([pd.DataFrame(pools).assign(is_pool=True), persist],
+                         ignore_index=True)[SECTION_COLUMNS]
 
-    return water_joined.groupBy("scene", "section", "ds").applyInPandas(kernel, POOLS_SCHEMA)
+    return water.groupBy("scene", "section").applyInPandas(kernel, SECTION_SCHEMA)

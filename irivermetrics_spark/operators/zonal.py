@@ -92,43 +92,16 @@ def corridor_cover_df(spark: SparkSession, reaches: list[dict], res: int = 9) ->
     return df
 
 
-def _refine_factory(reaches: list[dict], grid: dict, all_touched: bool):
-    """Build a pandas UDF testing exact membership of pixels in a section.
-
-    Closure captures the (tiny) ring arrays; executed vectorized per
-    Arrow batch, grouped by section inside the batch.
-    """
-    ps = grid["ps"]
-    gx0 = grid["gx0"]
-    gy0 = grid["gy0"]
-    by_section = {
-        r["section"]: (
-            np.asarray(r["ring_x"]),
-            np.asarray(r["ring_y"]),
-            (r["xmin"], r["xmax"], r["ymin"], r["ymax"]),
-        )
-        for r in reaches
-    }
-
-    @F.pandas_udf(T.BooleanType())
-    def refine(section: pd.Series, px: pd.Series, py: pd.Series) -> pd.Series:
-        out = np.zeros(len(section), dtype=bool)
-        pxv = px.to_numpy()
-        pyv = py.to_numpy()
-        cx = gx0 + (pxv + 0.5) * ps
-        cy = gy0 - (pyv + 0.5) * ps
-        for sec in section.unique():
-            ring_x, ring_y, (xmin, xmax, ymin, ymax) = by_section[sec]
-            m = (section == sec).to_numpy()
-            member = geometry.point_in_polygon(cx[m], cy[m], ring_x, ring_y)
-            if all_touched:
-                member |= geometry.segments_touch_squares(cx[m], cy[m], ps / 2.0, ring_x, ring_y)
-                # bbox clip rule: pixel center within polygon bounds
-                member &= (cx[m] >= xmin) & (cx[m] <= xmax) & (cy[m] >= ymin) & (cy[m] <= ymax)
-            out[np.nonzero(m)[0]] = member
-        return pd.Series(out)
-
-    return refine
+def member_all_touched(cx: np.ndarray, cy: np.ndarray, reach: dict, ps: float) -> np.ndarray:
+    """Exact section membership of pixels by their float64 centers:
+    GDAL-style all_touched (center in polygon OR the pixel square
+    touched by a boundary segment) intersected with the reference's
+    bbox clip (center within polygon bounds)."""
+    ring_x, ring_y = np.asarray(reach["ring_x"]), np.asarray(reach["ring_y"])
+    member = geometry.point_in_polygon(cx, cy, ring_x, ring_y)
+    member |= geometry.segments_touch_squares(cx, cy, ps / 2.0, ring_x, ring_y)
+    member &= (cx >= reach["xmin"]) & (cx <= reach["xmax"]) & (cy >= reach["ymin"]) & (cy <= reach["ymax"])
+    return member
 
 
 def _corridor_refine_factory(reaches: list[dict], grid: dict):
@@ -158,8 +131,20 @@ def zonal_join(points: DataFrame, cover: DataFrame, reaches: list[dict], grid: d
     overlapping sections (one row each), mirroring the reference's
     independent per-feature processing.
     """
+    ps, gx0, gy0 = grid["ps"], grid["gx0"], grid["gy0"]
+    by_section = {r["section"]: r for r in reaches}
+
+    @F.pandas_udf(T.BooleanType())
+    def refine(section: pd.Series, px: pd.Series, py: pd.Series) -> pd.Series:
+        out = np.zeros(len(section), dtype=bool)
+        cx = gx0 + (px.to_numpy() + 0.5) * ps
+        cy = gy0 - (py.to_numpy() + 0.5) * ps
+        for sec in section.unique():  # vectorized per section within the batch
+            m = (section == sec).to_numpy()
+            out[m] = member_all_touched(cx[m], cy[m], by_section[sec], ps)
+        return pd.Series(out)
+
     joined = points.join(F.broadcast(cover), "cell")
-    refine = _refine_factory(reaches, grid, all_touched=True)
     # split so the (vectorized-Python) refine only ever sees boundary-cell
     # points — full-cell points pass through JVM-only
     full_rows = joined.filter("full").drop("full")

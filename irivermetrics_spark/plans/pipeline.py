@@ -7,26 +7,31 @@ Spark-first restatement of the reference's calculate_metrics lifecycle
            (decode + NDWI + hex tiling + in-corridor invalid counts)
          --groupBy(scene,date)--> >= 70 % validity filter (F6): the
            kept (scene, date) dimension
-         --applyInPandas(scene, fill_cell)--> temporal fill + binarize
-         --broadcast cell join + refine--> per-section assignment (J1)
-         --groupBy(scene,section,px,py)/(scene,section)--> persistence
-         --applyInPandas(scene,section,date)--> per-pool morphology
+         --applyInPandas(scene, fill_cell)--> temporal fill + binarize;
+           the kernel names each output row's date itself
+         --broadcast cell join--> the candidate sections of each pixel
+         --applyInPandas(scene, section)--> exact zonal membership (J1),
+           per-date pool morphology and per-pixel persistence: one
+           tagged, persisted output
          --hash aggregate + dimension right-join--> metrics fold (A7)
          --orderBy--> final table
 
 Shuffle inventory (by design, data shrinks monotonically):
  1. per-(scene, date) aggregate of the mask rows (kept dimension,
  date-pruning list and validity probe: one scan, one small collect),
- 2. fill groupBy (scene, fill_cell), 3. persistence groupBy,
- 4. morphology groupBy, 5. fold aggregate, 6. final orderBy. With
- export_PP, ``api.calculate_metrics`` adds 7. groupBy(scene) of the
- per-pixel persistence: the GeoTIFF writer re-emits its rows into the
- parquet sink, so both persistence sinks are one action, run beside
- the metrics CSV. The spatial joins (zonal, and the corridor join of
- the presence-only validity fallback) are broadcast — the point side
- never shuffles for them. At 10^12-image scale the same plan holds:
- the polygon/cover side stays O(polygons), fill cells partition the
- corridor uniformly, and AQE's skew-join/coalesce handles dense cells.
+ 2. fill groupBy (scene, fill_cell), 3. section groupBy (scene,
+ section), 4. the fold's pool aggregate and the per-section
+ persistence aggregate, both over the small section output, 5. final
+ orderBy. With export_PP, ``api.calculate_metrics`` adds 6.
+ groupBy(scene) of the per-pixel persistence rows: the GeoTIFF writer
+ re-emits them into the parquet sink, so both persistence sinks are
+ one action, run beside the metrics CSV. The spatial joins (the cover
+ join, and the corridor join of the presence-only validity fallback)
+ are broadcast — the point side never shuffles for them. At
+ 10^12-image scale the same plan holds: the polygon/cover side stays
+ O(polygons), fill cells partition the corridor uniformly, and AQE's
+ skew-join/coalesce handles dense cells. One section group holds that
+ section's water rows for every kept date of one scene.
 
 The intermediate mask-point table can be persisted (module-1 sink K1)
 so module 2 reads parquet instead of re-decoding — mirroring the
@@ -112,7 +117,7 @@ def _kept_stats(kept: DataFrame):
 def _kept_from_mask_table(mask_rows: DataFrame, points: DataFrame, corridor_cover: DataFrame,
                           reaches: list[dict], grid: dict, corridor_total: int,
                           invalid_offset: int):
-    """F6 on a points-only input: (persisted kept frame, driver stats).
+    """F6 on a points-only input: (kept frame, driver stats, the frame it persisted).
 
     One persisted per-(scene, date) aggregate of the mask rows serves
     the date dimension, the >= 70 % kept flag, the counted/presence
@@ -163,7 +168,7 @@ def _kept_from_mask_table(mask_rows: DataFrame, points: DataFrame, corridor_cove
                 f"mask table: {stats['n_unsummarized']} (scene, date) group(s) have mask "
                 "points but no summary row — their in-corridor invalid count is unknown; "
                 "re-run module 1 for those images")
-        return by_date.filter("kept").select("scene", "date"), stats
+        return by_date.filter("kept").select("scene", "date"), stats, by_date
     # presence-only masks (module 1 ran without reaches), or no summary
     # rows at all (an external hand-built table): re-derive kept via
     # the corridor join over the same date dimension
@@ -171,7 +176,7 @@ def _kept_from_mask_table(mask_rows: DataFrame, points: DataFrame, corridor_cove
                              grid, corridor_total, invalid_offset=invalid_offset).persist()
     stats = _kept_stats(kept)
     by_date.unpersist()
-    return kept, stats
+    return kept, stats, kept
 
 
 def run(
@@ -304,13 +309,14 @@ def run(
     # mask-write path those come from the write job's Observation —
     # zero extra actions; otherwise from one small collect.
     if images is None:
-        kept, stats = _kept_from_mask_table(mask_rows, points, corridor_cover, reaches, grid,
-                                            corridor_total, invalid_offset)
+        kept, stats, kept_cache = _kept_from_mask_table(mask_rows, points, corridor_cover, reaches,
+                                                        grid, corridor_total, invalid_offset)
     else:
         dates = decode.with_scene_date(images.select("image_id")).select("scene", "date").distinct()
         summaries = mask_rows.filter(F.col("value") == decode.SUMMARY_MARKER)
         kept = fillop.keep_dates_fused(summaries, dates, corridor_total,
                                        invalid_offset=invalid_offset).persist()
+        kept_cache = kept
         if obs is not None:
             stats = obs.get
             # overlap (guide §2.6): the downstream fill/zonal/fold plan
@@ -364,37 +370,37 @@ def run(
     # as the fold dims): an unconditional hint would re-materialize the
     # whole (scene, date) dimension on the driver + every executor —
     # exactly the ceiling the de-drivering removed (ADVICE r3)
-    kept_cols = kept_idx.select("scene", "date", "t_idx", "n_t")
     if n_kept_rows <= 2_000_000:
-        kept_cols = F.broadcast(kept_cols)
-    points_kept = points.join(kept_cols, ["scene", "date"])
+        kept_idx = F.broadcast(kept_idx)
+    points_kept = points.join(kept_idx.select("scene", "date", "t_idx", "n_t"), ["scene", "date"])
     # the fill kernel attaches the res-`res` cell key in-kernel
-    # (out_cell_res): the fill stage grouped on the finer fill_res key,
-    # and re-keying via a separate hex_cell_udf stage paid a second
-    # ArrowEvalPython round-trip of the whole water table (r8)
-    water = fillop.filled_water(points_kept, kept_idx, reaches, grid,
-                                fill_nodata=fill_nodata,
-                                broadcast_kept=n_kept_rows <= 2_000_000,
+    # (out_cell_res): the fill stage grouped on the coarser fill_res
+    # key, and the zonal cover join below keys on `res` cells
+    water = fillop.filled_water(points_kept, reaches, grid, fill_nodata=fill_nodata,
                                 out_cell_res=res)
     if checkpoint_dir:
         water = lineage.run_stage(spark, water, checkpoint_dir, "water_filled")
 
     cover = zonal.cover_df(spark, reaches, res)
-    water_keyed = water
-    # persisted: persistence, morphology and the exports all branch off
-    # this subtree — without a persist Spark recomputes fill+join per branch
-    water_joined = zonal.zonal_join(water_keyed, cover, reaches, grid).persist()
-
-    # per-scene kept-date counts as a distributed dim (broadcast inside)
-    nd_df = kept.groupBy("scene").agg(F.count("*").alias("n_kept"))
-    pers = metrics.persistence(water_joined, nd_df, grid["ps"])
-    pools = morphology.pool_rows(water_joined, reaches, grid, min_pool_size=min_pool_size)
+    # zonal membership, persistence and morphology in one grouped map
+    # per (scene, section): the cover join only names candidate
+    # sections (JVM, no refine UDF); each group's scene axis length
+    # comes from the same kept dimension the fill joined
+    candidates = (water.join(F.broadcast(cover.select("cell", "section")), "cell").drop("cell")
+                  .join(kept_idx.select("scene", "ds", F.col("n_t").alias("n_kept")),
+                        ["scene", "ds"]))
+    # persisted: the pools, the persistence table and the fold all
+    # branch off this small output
+    sections = morphology.section_rows(candidates, reaches, grid,
+                                       min_pool_size=min_pool_size).persist()
+    pools = sections.filter("is_pool").select(*morphology.POOLS_COLUMNS)
+    persistence_px = sections.filter("NOT is_pool").select("scene", "section", "px", "py", "wet", "pp")
+    pers = metrics.persistence(persistence_px, grid["ps"])
     grid_df = metrics.dimension_grid(kept, reaches)
     # broadcast the fold's dim sides only while the keyspace is bounded
     n_groups = n_kept_rows * max(len(reaches), 1)
     final = metrics.fold(pools, grid_df, pers, section_length=section_length,
                          broadcast_dims=n_groups <= 2_000_000)
-
     from ..operators import exports as exports_op
 
     # export plans build on first access: each is ~0.1 s of py4j
@@ -404,18 +410,22 @@ def run(
         mask_points=points,
         kept=kept,
         water=water,
-        water_joined=water_joined,
         persistence=pers,
         pools=pools,
+        persistence_px=persistence_px,
         metrics=final,
         corridor_total=corridor_total,
         single_scene=single_scene,
     )
+    # the exact per-row zonal join is off the metrics path: vector
+    # exports and row-level checks read it, unpersisted
+    out.add_factory("water_joined", lambda: zonal.zonal_join(water, cover, reaches, grid))
     out.add_factory("polygons", lambda: exports_op.pool_polygons(
-        water_joined, reaches, grid, min_pool_size))
+        out["water_joined"], reaches, grid, min_pool_size))
     out.add_factory("lines", lambda: exports_op.pool_lines(pools, grid))
     out.add_factory("points", lambda: exports_op.line_points(out["lines"]))
-    out.add_factory("persistence_px", lambda: metrics.pixel_persistence_px(water_joined, nd_df))
+    # what this call persisted, for api.calculate_metrics to release
+    out.persisted = [df for df in (mask_rows, kept_cache, sections) if df.is_cached]
     return out
 
 

@@ -3,6 +3,7 @@ bit-identical to the old separate hex_cell_udf stage (r8 — removes an
 ArrowEvalPython round-trip of the whole water table from the flagship
 metrics job)."""
 
+import numpy as np
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -20,20 +21,18 @@ def fill_inputs(spark):
     kept = res["kept"]
     kept_idx = kept.select(
         "scene", "date",
-        F.date_format("date", "yyyy-MM-dd").alias("ds"),
         (F.row_number().over(Window.partitionBy("scene").orderBy("date")) - 1).alias("t_idx"),
         F.count("*").over(Window.partitionBy("scene")).alias("n_t"),
     )
-    points_kept = res["mask_points"].join(
-        F.broadcast(kept_idx.select("scene", "date", "t_idx", "n_t")), ["scene", "date"])
-    return fx, grid, points_kept, kept_idx
+    points_kept = res["mask_points"].join(F.broadcast(kept_idx), ["scene", "date"])
+    return fx, grid, points_kept
 
 
 def test_out_cell_res_matches_udf_stage(fill_inputs):
-    fx, grid, points_kept, kept_idx = fill_inputs
-    old = fillop.filled_water(points_kept, kept_idx, fx.reaches, grid) \
+    fx, grid, points_kept = fill_inputs
+    old = fillop.filled_water(points_kept, fx.reaches, grid) \
         .withColumn("cell", fillop.hex_cell_udf(9, grid)("px", "py"))
-    new = fillop.filled_water(points_kept, kept_idx, fx.reaches, grid, out_cell_res=9)
+    new = fillop.filled_water(points_kept, fx.reaches, grid, out_cell_res=9)
     assert old.schema == new.schema
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
@@ -41,6 +40,13 @@ def test_out_cell_res_matches_udf_stage(fill_inputs):
 
 
 def test_default_output_has_no_cell(fill_inputs):
-    fx, grid, points_kept, kept_idx = fill_inputs
-    out = fillop.filled_water(points_kept, kept_idx, fx.reaches, grid)
+    fx, grid, points_kept = fill_inputs
+    out = fillop.filled_water(points_kept, fx.reaches, grid)
     assert out.columns == ["scene", "ds", "px", "py"]
+
+
+def test_rings_digest_follows_in_place_edits():
+    rings = [(np.array([0.0, 1.0, 1.0]), np.array([0.0, 0.0, 1.0]))]
+    before = fillop._rings_digest(rings)
+    rings[0][0][1] = 2.0
+    assert fillop._rings_digest(rings) != before

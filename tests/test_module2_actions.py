@@ -3,6 +3,7 @@ budget, labelled sink jobs, a persistence sink that runs beside the
 metrics CSV and fails loudly, and no silent date loss in the kept-date
 aggregate."""
 
+import shutil
 import threading
 
 import pytest
@@ -13,9 +14,10 @@ from irivermetrics_spark.operators import decode
 from irivermetrics_spark.plans import pipeline
 
 # jobs of one warm calculate_metrics(export_PP=True, outdir=...) call on
-# the fixture below; the parent design ran 43. A change that adds jobs
-# must re-pin this on purpose.
-JOB_BUDGET = 29
+# the fixture below; the design before the per-(scene, section) kernel
+# ran 29, and the one before that 43. A change that adds jobs must
+# re-pin this on purpose.
+JOB_BUDGET = 23
 CSV_JOBS = "calculate_metrics: metrics CSV"
 SINK_JOBS = "calculate_metrics: persistence parquet + GeoTIFFs"
 
@@ -79,6 +81,38 @@ def test_persistence_sink_failure_raises_in_caller(spark, mask_table, tmp_path):
                               export_PP=True, outdir=str(outdir))
     assert (outdir / "irm_metrics.csv").exists()
     assert not _sink_threads()
+
+
+def test_rewritten_mask_table_is_not_served_from_cache(spark, mask_table, tmp_path):
+    """Spark matches caches by plan, not by file contents: after a call
+    with ``outdir``, a second call on the same path, rewritten behind
+    Spark's back (another writer, so no cache refresh) in the same
+    session, reads the new table."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    fx, grid, path = mask_table
+    moved = tmp_path / "mask_table"
+
+    def rewrite(df):
+        if moved.exists():
+            shutil.rmtree(moved)
+        moved.mkdir()
+        pq.write_table(pa.Table.from_pandas(df.toPandas(), preserve_index=False),
+                       moved / "part-0.parquet")
+
+    def wet_area(outdir):
+        api.calculate_metrics(spark, spark.read.parquet(str(moved)), fx.reaches, grid=grid,
+                              outdir=str(outdir))
+        return pd.read_csv(outdir / "irm_metrics.csv", index_col=0)["wet_area_km2"]
+
+    rewrite(spark.read.parquet(path))
+    assert wet_area(tmp_path / "first").sum() > 0
+    # the same table with every water point dropped: all dates stay kept, all dry
+    rewrite(spark.read.parquet(path).where(F.col("value") != 1))
+    second = wet_area(tmp_path / "second")
+    assert len(second) > 0 and (second == 0).all()
 
 
 def test_points_without_summary_row_fail_loudly(spark, mask_table):

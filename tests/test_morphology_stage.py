@@ -35,11 +35,13 @@ def mask_table(spark, tmp_path_factory):
 
 
 def test_degenerate_reach_yields_no_pool_rows(spark):
-    # the bbox lies between two pixel-center columns: an empty clip
-    thin = dict(section="thin", xmin=6.0, xmax=14.0, ymin=0.0, ymax=100.0)
+    # the bbox lies between two pixel-center columns: an empty clip, so
+    # the section kernel emits neither pool nor persistence rows
+    thin = dict(section="thin", ring_x=[6.0, 14.0, 14.0, 6.0, 6.0],
+                ring_y=[0.0, 0.0, 100.0, 100.0, 0.0], xmin=6.0, xmax=14.0, ymin=0.0, ymax=100.0)
     assert morphology.clip_offsets([thin], GRID)["thin"] == (0, 0, 0, 0)
-    water = _water(spark, "thin", [(0, 3), (1, 3), (1, 4)])
-    assert morphology.pool_rows(water, [thin], GRID).collect() == []
+    water = _water(spark, "thin", [(0, 3), (1, 3), (1, 4)]).selectExpr("*", "1L AS n_kept")
+    assert morphology.section_rows(water, [thin], GRID).collect() == []
 
 
 def test_pools_below_min_size_yield_no_polygons(spark):

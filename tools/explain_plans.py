@@ -1,7 +1,9 @@
 """Dump formatted physical plans of the key pipeline stages.
 
 Run to verify the plans the engine is designed around:
-- the zonal join is a BroadcastHashJoin (never a sort-merge on points)
+- the section kernel's input joins the broadcast cover on ``cell``
+  (a BroadcastHashJoin, never a sort-merge on points) and feeds one
+  FlatMapGroupsInPandas per (scene, section)
 - parquet scans show PushedFilters / pruned ReadSchema
 - whole-stage codegen spans cover the relational stages
 - AQE is active on the aggregate shuffles
@@ -21,7 +23,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from irivermetrics_spark import synth
-    from irivermetrics_spark.operators import fillop, zonal
     from irivermetrics_spark.plans import pipeline
     from irivermetrics_spark.session import get_spark
 
@@ -31,9 +32,9 @@ def main() -> None:
     images = pipeline.images_df(spark, fx.images)
     res = pipeline.run(spark, images, fx.reaches, grid)
 
-    print("=" * 30, "zonal join (water x cover)", "=" * 30)
-    res["water_joined"].explain("formatted")
-    print("=" * 30, "metrics fold", "=" * 30)
+    print("=" * 30, "section kernel output (pool rows)", "=" * 30)
+    res["pools"].explain("formatted")
+    print("=" * 30, "metrics plan", "=" * 30)
     res["metrics"].explain("formatted")
 
     # parquet pushdown check on the sf tables
