@@ -338,13 +338,15 @@ def calculate_metrics(
                 exports.write_metrics_csv(result["metrics"], f"{outdir}/irm_metrics.csv")
             if export_shp:
                 with _job_description(spark, "calculate_metrics: vector exports"):
-                    result["polygons"].write.mode("overwrite").parquet(f"{outdir}/irm_Polygons.parquet")
-                    result["lines"].write.mode("overwrite").parquet(f"{outdir}/irm_Lines.parquet")
-                    result["points"].write.mode("overwrite").parquet(f"{outdir}/irm_Points.parquet")
+                    layers = []
+                    for name in ("Polygons", "Lines", "Points"):
+                        path = f"{outdir}/irm_{name}.parquet"
+                        result[name.lower()].write.mode("overwrite").parquet(path)
+                        layers.append(spark.read.parquet(path))
                     # the reference's actual file format (irm_*.shp,
-                    # irm_main.py:217-226) via the from-scratch writer
-                    exports.write_vector_shapefiles(result["polygons"], result["lines"],
-                                                    result["points"], outdir)
+                    # irm_main.py:217-226) via the from-scratch writer,
+                    # fed from the parquet sinks: each frame computes once
+                    exports.write_vector_shapefiles(*layers, outdir)
         finally:
             try:
                 if sink is not None:

@@ -32,6 +32,19 @@ import numpy as np
 from . import cellindex
 
 
+def coords_digest(pairs) -> str:
+    """Content digest of a list of (x, y) coordinate-array pairs (rings
+    or lines). Hashed on every call: an identity-keyed memo returned a
+    stale digest after an in-place edit of the same list."""
+    import hashlib
+
+    h = hashlib.sha1()
+    for x, y in pairs:
+        h.update(np.ascontiguousarray(x, dtype=np.float64).tobytes())
+        h.update(np.ascontiguousarray(y, dtype=np.float64).tobytes())
+    return h.hexdigest()
+
+
 def polygon_area_m2(ring_x: np.ndarray, ring_y: np.ndarray) -> float:
     """Shoelace area (absolute) of a closed or open ring.
 

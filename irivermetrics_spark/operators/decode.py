@@ -111,7 +111,6 @@ def _scene_date_py(image_id):
 # per-point path. Gated to 4M-pixel grids (4 MB bitmap + bounded temp
 # rows); larger rasters keep the per-point path.
 _BITMAP_PIXEL_GATE = 4_000_000
-_RINGS_DIGEST_MEMO: dict[int, tuple] = {}  # id -> (rings ref, digest)
 _CORRIDOR_BITMAPS: dict[tuple, np.ndarray] = {}
 
 
@@ -119,25 +118,8 @@ def _corridor_bitmap(corridor_rings: list, gx0: float, gy0: float, ps: float,
                      h: int, w: int) -> np.ndarray:
     from ..functions import geometry
 
-    # the memo holds a REFERENCE to the rings object next to its digest
-    # and re-checks identity: keying on a bare id() would alias a
-    # recycled address (freed list of a previous job in a reused python
-    # worker) to the old digest and silently reuse the WRONG bitmap
-    memo = _RINGS_DIGEST_MEMO.get(id(corridor_rings))
-    if memo is not None and memo[0] is corridor_rings:
-        digest = memo[1]
-    else:
-        import hashlib
-
-        hsh = hashlib.sha1()
-        for rx, ry in corridor_rings:
-            hsh.update(np.ascontiguousarray(rx, dtype=np.float64).tobytes())
-            hsh.update(np.ascontiguousarray(ry, dtype=np.float64).tobytes())
-        digest = hsh.hexdigest()
-        if len(_RINGS_DIGEST_MEMO) > 64:
-            _RINGS_DIGEST_MEMO.clear()
-        _RINGS_DIGEST_MEMO[id(corridor_rings)] = (corridor_rings, digest)
-    key = (digest, float(gx0), float(gy0), float(ps), int(h), int(w))
+    key = (geometry.coords_digest(corridor_rings), float(gx0), float(gy0), float(ps),
+           int(h), int(w))
     bm = _CORRIDOR_BITMAPS.get(key)
     if bm is not None:
         return bm

@@ -78,9 +78,6 @@ def persistence_raster(pp: DataFrame, grid: dict, scene: str) -> np.ndarray:
 # per-worker memo for the K1 export's out-of-AOI raster: a pure
 # function of (AOI lines, buffer, grid) that was recomputed inside
 # every (scene, date) group — the dominant cost of a many-date export.
-# Same reference-identity + content-digest pattern as
-# decode._RINGS_DIGEST_MEMO (bare id() could alias a recycled address).
-_AOI_RASTER_MEMO: dict[int, tuple] = {}
 _AOI_RASTERS: dict[tuple, np.ndarray] = {}
 
 
@@ -88,21 +85,8 @@ def _aoi_outside_raster(aoi_lines: list, aoi_buffer: float, gx0: float,
                         gy0: float, ps: float, h: int, w: int) -> np.ndarray:
     from ..functions import geometry
 
-    memo = _AOI_RASTER_MEMO.get(id(aoi_lines))
-    if memo is not None and memo[0] is aoi_lines:
-        digest = memo[1]
-    else:
-        import hashlib
-
-        hsh = hashlib.sha1()
-        for lx, ly in aoi_lines:
-            hsh.update(np.ascontiguousarray(lx, dtype=np.float64).tobytes())
-            hsh.update(np.ascontiguousarray(ly, dtype=np.float64).tobytes())
-        digest = hsh.hexdigest()
-        if len(_AOI_RASTER_MEMO) > 64:
-            _AOI_RASTER_MEMO.clear()
-        _AOI_RASTER_MEMO[id(aoi_lines)] = (aoi_lines, digest)
-    key = (digest, float(aoi_buffer), float(gx0), float(gy0), float(ps), h, w)
+    key = (geometry.coords_digest(aoi_lines), float(aoi_buffer), float(gx0), float(gy0),
+           float(ps), h, w)
     out = _AOI_RASTERS.get(key)
     if out is None:
         yy, xx = np.mgrid[0:h, 0:w]

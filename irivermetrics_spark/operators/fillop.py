@@ -44,19 +44,6 @@ _UNIVERSE_MEMO: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
 _UNIVERSE_MEMO_CAP = 65536
 
 
-def _rings_digest(rings: list) -> str:
-    """Content digest of a rings list (hashed on every call: an
-    identity-keyed memo returned a stale digest after an in-place edit
-    of the same list)."""
-    import hashlib
-
-    h = hashlib.sha1()
-    for rx, ry in rings:
-        h.update(np.ascontiguousarray(rx, dtype=np.float64).tobytes())
-        h.update(np.ascontiguousarray(ry, dtype=np.float64).tobytes())
-    return h.hexdigest()
-
-
 def _cell_universe(cell: int, rings: list, grid: dict) -> tuple[np.ndarray, np.ndarray]:
     """All corridor pixels whose center falls in this hex cell.
 
@@ -66,7 +53,7 @@ def _cell_universe(cell: int, rings: list, grid: dict) -> tuple[np.ndarray, np.n
     GROUP, so every scene sharing a corridor re-derived the same cell's
     pixel set (32x duplicate meshgrid+PIP work at bench shape).
     """
-    key = (int(cell), _rings_digest(rings),
+    key = (int(cell), geometry.coords_digest(rings),
            tuple(sorted((k, float(v)) for k, v in grid.items())))
     hit = _UNIVERSE_MEMO.get(key)
     if hit is not None:
@@ -137,15 +124,7 @@ def corridor_pixel_count(spark: SparkSession, corridor_cover: DataFrame, reaches
     rio.clip makes them nodata before validation); the caller derives
     that constant offset as full_count - aoi_count.
     """
-    aoi_key = None
-    if aoi is not None:
-        import hashlib
-
-        h = hashlib.sha1()
-        for lx, ly in aoi[0]:
-            h.update(np.ascontiguousarray(lx, dtype=np.float64).tobytes())
-            h.update(np.ascontiguousarray(ly, dtype=np.float64).tobytes())
-        aoi_key = (h.hexdigest(), float(aoi[1]))
+    aoi_key = None if aoi is None else (geometry.coords_digest(aoi[0]), float(aoi[1]))
     key = (rings_content_key(reaches), tuple(sorted(grid.items())), res, aoi_key)
     if key in _CORRIDOR_COUNT_CACHE:
         return _CORRIDOR_COUNT_CACHE[key]

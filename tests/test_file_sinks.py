@@ -165,6 +165,49 @@ def test_geotiff_scene_bytes_decode_like_raw16(spark):
     assert set(map(tuple, got.itertuples(index=False))) == set(map(tuple, want.itertuples(index=False)))
 
 
+# shapefile layer -> (geometry columns, [(attribute column, dbf decimals;
+# None for a text field)]), as exports.write_vector_shapefiles lays them out
+_SHP_LAYERS = {
+    "Polygons": (("ring_x", "ring_y"), [("Date", None), ("Section", None), ("Type", None),
+                                        ("area_m2", 4), ("area_km2", 8)]),
+    "Lines": (("line_x", "line_y"), [("date", None), ("section", None), ("label", 0),
+                                     ("length_km", 6)]),
+    "Points": (("x", "y"), [("Date", None), ("section", None), ("line", 0), ("Type", None)]),
+}
+
+
+def _shp_records(outdir, layer) -> set:
+    """{(geometry, dbf record)} of one written shapefile layer."""
+    _, shapes, records = shpk.read_shapefile(open(f"{outdir}/irm_{layer}.shp", "rb").read(),
+                                             open(f"{outdir}/irm_{layer}.dbf", "rb").read())
+    geoms = [tuple(map(float, s)) if layer == "Points"
+             else tuple(tuple(map(float, a)) for part in s for a in part) for s in shapes]
+    return set(zip(geoms, records))
+
+
+def _parquet_records(rows, geom, fields) -> set:
+    """The same set from a parquet layer, formatted as the dbf stores it
+    (a polygon ring closed, as the .shp stores it)."""
+    def fmt(v, dec):
+        if dec is None:
+            return str(v).strip()
+        return f"{float(v):.{dec}f}" if dec else str(int(v))
+
+    out = set()
+    for r in rows.itertuples(index=False):
+        r = r._asdict()
+        x, y = r[geom[0]], r[geom[1]]
+        if np.ndim(x) == 0:
+            g = (float(x), float(y))
+        else:
+            x, y = list(map(float, x)), list(map(float, y))
+            if geom[0] == "ring_x" and (x[0], y[0]) != (x[-1], y[-1]):
+                x, y = x + x[:1], y + y[:1]
+            g = (tuple(x), tuple(y))
+        out.add((g, tuple(fmt(r[c], dec) for c, dec in fields)))
+    return out
+
+
 def test_api_outdir_writes_reference_file_formats(spark):
     """calculate_metrics(outdir, export_shp, export_PP) must produce the
     reference's artifact set — irm_metrics.csv, irm_*.shp/.shx/.dbf,
@@ -193,6 +236,11 @@ def test_api_outdir_writes_reference_file_formats(spark):
     got_areas = sorted(float(r[3]) for r in records)
     want_areas = sorted(round(a, 4) for a in poly.area_m2)
     assert np.allclose(got_areas, want_areas)
+    # every layer's .shp/.dbf records equal its parquet sink's rows
+    for layer, spec in _SHP_LAYERS.items():
+        rows = spark.read.parquet(f"{outdir}/irm_{layer}.parquet").toPandas()
+        got = _shp_records(outdir, layer)
+        assert got == _parquet_records(rows, *spec) and len(got) == len(rows) > 0, layer
 
     # geotiff == persistence_raster reassembly, georeferencing intact
     from irivermetrics_spark.operators import exports

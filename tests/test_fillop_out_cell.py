@@ -9,6 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from irivermetrics_spark import synth
+from irivermetrics_spark.functions import geometry
 from irivermetrics_spark.operators import fillop
 from irivermetrics_spark.plans import pipeline
 
@@ -47,6 +48,6 @@ def test_default_output_has_no_cell(fill_inputs):
 
 def test_rings_digest_follows_in_place_edits():
     rings = [(np.array([0.0, 1.0, 1.0]), np.array([0.0, 0.0, 1.0]))]
-    before = fillop._rings_digest(rings)
+    before = geometry.coords_digest(rings)
     rings[0][0][1] = 2.0
-    assert fillop._rings_digest(rings) != before
+    assert geometry.coords_digest(rings) != before

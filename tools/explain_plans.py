@@ -1,5 +1,10 @@
 """Dump formatted physical plans of the key pipeline stages.
 
+Runs the flagship the way bench.py does (an image table plus a
+``mask_path`` sink), so the dump shows the single kept-date path every
+input takes: the mask table read back, one persisted per-(scene, date)
+aggregate with its time axis, broadcast into the fill and section joins.
+
 Run to verify the plans the engine is designed around:
 - the section kernel's input joins the broadcast cover on ``cell``
   (a BroadcastHashJoin, never a sort-merge on points) and feeds one
@@ -15,6 +20,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -30,12 +36,14 @@ def main() -> None:
     fx = synth.make_fixture(w=80, h=40, n_dates=6, n_sections=3, seed=42)
     grid = dict(gx0=fx.gx0, gy0=fx.gy0, ps=fx.pixel_size, w=fx.w, h=fx.h)
     images = pipeline.images_df(spark, fx.images)
-    res = pipeline.run(spark, images, fx.reaches, grid)
-
-    print("=" * 30, "section kernel output (pool rows)", "=" * 30)
-    res["pools"].explain("formatted")
-    print("=" * 30, "metrics plan", "=" * 30)
-    res["metrics"].explain("formatted")
+    with tempfile.TemporaryDirectory(prefix="explain_mask_") as mask_path:
+        res = pipeline.run(spark, images, fx.reaches, grid, mask_path=mask_path)
+        print("=" * 30, "kept-date dimension (persisted, read by both joins)", "=" * 30)
+        res["kept"].explain("formatted")
+        print("=" * 30, "section kernel output (pool rows)", "=" * 30)
+        res["pools"].explain("formatted")
+        print("=" * 30, "metrics plan", "=" * 30)
+        res["metrics"].explain("formatted")
 
     # parquet pushdown check on the sf tables
     sf = "/root/testdata/sf0.01"
