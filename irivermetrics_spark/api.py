@@ -144,6 +144,12 @@ def waterdetect_batch(
 
     ``mask_path``: the K1 sink — write the mask table to parquet and
     return the parquet-backed frame (the reference's export_tif analog).
+    The decode tasks write the files themselves
+    (:func:`decode.write_mask_table`): an existing table at the path is
+    replaced only once every task has succeeded, and the path must be
+    one pyarrow can open (a local path, ``file:``, ``s3:``, ``gs:``...)
+    — another scheme raises before any job runs. The rows and the
+    inferred schema are those of ``decode_points(...).write.parquet``.
 
     ``water_rule``: "threshold" (default) or "cluster" — the latter is
     the engine's DWImageClustering analog (src/utils/wd_batch.py:
@@ -161,11 +167,12 @@ def waterdetect_batch(
     if reaches is not None:
         rings = [(np.asarray(r["ring_x"]), np.asarray(r["ring_y"])) for r in reaches]
 
-    pts = decode.decode_points(input_img, grid, threshold=threshold,
-                               corridor_rings=rings, aoi=aoi, water_rule=water_rule)
+    decode_kwargs = dict(threshold=threshold, corridor_rings=rings, aoi=aoi,
+                         water_rule=water_rule)
     if mask_path:
-        pts.write.mode("overwrite").parquet(mask_path)
-        pts = decode.read_mask_sink(spark, mask_path, pts)
+        pts = decode.write_mask_table(input_img, mask_path, grid, **decode_kwargs)
+    else:
+        pts = decode.decode_points(input_img, grid, **decode_kwargs)
     if export_tif:
         # K1 file sink: one YYYY-MM-DD.tif LZW per (scene, date), the
         # reference's export_tif branch (src/utils/wd_batch.py:584-588);

@@ -14,6 +14,13 @@ grid size. The scene/date columns are computed per image inside the
 kernel (reference C1 date-from-filename parity,
 src/utils/wd_batch.py:345-360).
 
+The kernel emits ``image_id`` and ``scene`` as dictionary columns (a
+few KB of text per batch instead of one string per point row). Two
+consumers run it: :func:`decode_points` decodes them to plain utf8 for
+Spark, and the mask-table sink :func:`write_mask_table` writes the
+batches to parquet from the tasks themselves, so no per-row text
+crosses into the JVM at all.
+
 Scale notes: the stage is embarrassingly parallel per image row;
 emitting point rows (not tiles) makes every downstream stage an
 ordinary relational op. ``spark.sql.execution.arrow.maxRecordsPerBatch``
@@ -22,8 +29,13 @@ bounds Arrow batch memory for wide binary rows.
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -43,6 +55,20 @@ POINTS_SCHEMA = "image_id string, px int, py int, value tinyint, cell long"
 # regex). Same C1 semantics as with_scene_date, pinned by
 # tests/test_decode_scene_date_parity.py.
 POINTS_DATED_SCHEMA = POINTS_SCHEMA + ", date date, scene string"
+
+# the decode kernel's record batches: POINTS_DATED_SCHEMA with the two
+# text columns as dictionaries over each batch's distinct values
+_TEXT = pa.dictionary(pa.int32(), pa.string())
+MASK_ARROW_SCHEMA = pa.schema([
+    ("image_id", _TEXT), ("px", pa.int32()), ("py", pa.int32()), ("value", pa.int8()),
+    ("cell", pa.int64()), ("date", pa.date32()), ("scene", _TEXT)])
+
+# the mask table (K1) as parquet footer inference reads it back
+MASK_TABLE_SCHEMA = T.StructType([
+    T.StructField("image_id", T.StringType()), T.StructField("px", T.IntegerType()),
+    T.StructField("py", T.IntegerType()), T.StructField("value", T.ByteType()),
+    T.StructField("cell", T.LongType()), T.StructField("date", T.DateType()),
+    T.StructField("scene", T.StringType())])
 
 
 # hex resolution of the mask table's ``cell`` column. Cell ids pack the
@@ -220,20 +246,27 @@ def emit_mask_rows(image_id: str, mask: np.ndarray, gx0: float, gy0: float,
     return out
 
 
-def decode_points(images: DataFrame, grid: dict, res: int = CELL_RES,
-                  threshold: float = water.NDWI_THRESHOLD,
-                  corridor_rings: list | None = None,
-                  aoi: tuple[list, float] | None = None,
-                  min_bands: int = 4,
-                  reproject: bool = False,
-                  resample_method: str = "nearest",
-                  plane_origin: tuple[float, float] = (-18.0, 120.0),
-                  water_rule: str = "threshold",
-                  warp_frame: str = "tangent",
-                  utm_zone: int | None = None,
-                  utm_south: bool = True,
-                  on_undecodable: str = "raise") -> DataFrame:
-    """images -> sparse mask points with hex cell keys + scene/date cols.
+def mask_kernel(images: DataFrame, grid: dict, res: int = CELL_RES,
+                threshold: float = water.NDWI_THRESHOLD,
+                corridor_rings: list | None = None,
+                aoi: tuple[list, float] | None = None,
+                min_bands: int = 4,
+                reproject: bool = False,
+                resample_method: str = "nearest",
+                plane_origin: tuple[float, float] = (-18.0, 120.0),
+                water_rule: str = "threshold",
+                warp_frame: str = "tangent",
+                utm_zone: int | None = None,
+                utm_south: bool = True,
+                on_undecodable: str = "raise") -> tuple[DataFrame, Callable]:
+    """images -> (the kernel's input frame, the decode kernel): the
+    module-1 stage that :func:`decode_points` and
+    :func:`write_mask_table` run through ``mapInArrow``.
+
+    The kernel maps Arrow batches of image rows to record batches of
+    sparse mask points with hex cell keys + scene/date columns, in
+    :data:`MASK_ARROW_SCHEMA` order; ``image_id`` and ``scene`` are
+    dictionary arrays over the batch's distinct values.
 
     ``grid``: dict(gx0, gy0, ps) — uniform georeferencing (the kernel
     asserts every image against it, map-side).
@@ -301,8 +334,6 @@ def decode_points(images: DataFrame, grid: dict, res: int = CELL_RES,
         aoi_buffer = float(aoi[1])
 
     def kernel(batches):
-        import pyarrow as pa
-
         from ..kernels import resample as resamplek
 
         epoch_ord = 719163  # datetime.date(1970, 1, 1).toordinal()
@@ -323,9 +354,9 @@ def decode_points(images: DataFrame, grid: dict, res: int = CELL_RES,
                 src_grids = list(zip(cols_in["gx0"].to_pylist(),
                                      cols_in["gy0"].to_pylist(),
                                      cols_in["ps"].to_pylist(), crs_list))
-            # per-frame accumulators: numpy point columns + the frame's
-            # (image_id, scene, date, n_rows) — one record batch is
-            # assembled per input batch with no intermediate pandas
+            # per-image accumulators: numpy point columns + each
+            # image's (image_id, scene, date, n_rows) — one record batch
+            # is assembled per input batch with no intermediate pandas
             # frames (the old per-image pd.DataFrame build + concat +
             # serializer conversion was ~half the kernel's CPU;
             # guide §4.2 — hand whole batches to vectorized code)
@@ -383,34 +414,29 @@ def decode_points(images: DataFrame, grid: dict, res: int = CELL_RES,
                 px, py, vals, cells, summary_cell = _emit_mask_arrays(
                     mask, gx0, gy0, ps, res, corridor_rings,
                     aoi_lines=aoi_lines, aoi_buffer=aoi_buffer)
-                n_frames = 0
                 if px.size:
                     xs_l.append(px)
                     ys_l.append(py)
                     val_l.append(vals)
                     cell_l.append(cells)
-                    f_len.append(px.size)
-                    n_frames = 1
                 xs_l.append(neg1_i32)
                 ys_l.append(neg1_i32)
                 val_l.append(summary_val)
                 cell_l.append(np.full(1, summary_cell, dtype=np.int64))
-                f_len.append(1)
-                return n_frames + 1
+                return px.size + 1
 
             for i, (image_id, buf) in enumerate(zip(ids, bufs)):
                 if not quarantine:
-                    n_frames = decode_one(i, image_id, buf)
+                    n_rows = decode_one(i, image_id, buf)
                 else:
                     try:
-                        n_frames = decode_one(i, image_id, buf)
+                        n_rows = decode_one(i, image_id, buf)
                     except Exception:
                         xs_l.append(neg1_i32)
                         ys_l.append(neg1_i32)
                         val_l.append(quarantine_val)
                         cell_l.append(neg1_i64)
-                        f_len.append(1)
-                        n_frames = 1
+                        n_rows = 1
                 # scene/date computed per IMAGE in Python (2 regex
                 # matches + one date parse each — ~2k evaluations at
                 # bench scale): cheaper than both the per-point-row JVM
@@ -420,35 +446,28 @@ def decode_points(images: DataFrame, grid: dict, res: int = CELL_RES,
                 # the quarantine catch: a malformed date in the id
                 # fails loudly on both sides (ANSI to_date parity).
                 scene, date = _scene_date_py(image_id)
-                f_id.extend([image_id] * n_frames)
-                f_scene.extend([scene] * n_frames)
-                f_date.extend([date] * n_frames)
+                f_id.append(image_id)
+                f_scene.append(scene)
+                f_date.append(date)
+                f_len.append(n_rows)
 
             if not f_len:
                 continue
             lens_a = np.asarray(f_len, dtype=np.int64)
-            n_rows = int(lens_a.sum())
 
-            def rep_utf8(strs: list) -> "pa.Array":
-                # plain utf8 built from raw buffers: per-frame bytes
-                # tiled C-side + cumsum offsets — no per-row Python
-                # objects. (dictionary<utf8> converts 30x faster still
-                # but Spark's ArrowColumnVector cannot read dictionary
-                # vectors from a Python worker — getUTF8String throws —
-                # so plain utf8 is the efficient encoding that works.)
-                if any(s is None for s in strs):
-                    # null ids (quarantined null-id rows): rare, object path
-                    return pa.array(np.repeat(np.array(strs, dtype=object), lens_a),
-                                    type=pa.string())
-                bs = [s.encode("utf-8") for s in strs]
-                widths = np.fromiter((len(b) for b in bs), dtype=np.int64,
-                                     count=len(bs))
-                data = b"".join(b * int(n) for b, n in zip(bs, lens_a))
-                offsets = np.empty(n_rows + 1, dtype=np.int32)
-                offsets[0] = 0
-                np.cumsum(np.repeat(widths, lens_a), out=offsets[1:])
-                return pa.StringArray.from_buffers(
-                    n_rows, pa.py_buffer(memoryview(offsets)), pa.py_buffer(data))
+            def rep_dict(strs: list) -> "pa.DictionaryArray":
+                # one dictionary entry per distinct value of the batch
+                # and int32 indices repeated per image: the text never
+                # exists per row. The parquet sink writes it as is; the
+                # Spark path decodes it (see decode_points).
+                codes: dict = {}
+                idx = np.fromiter((-1 if v is None else codes.setdefault(v, len(codes))
+                                   for v in strs), dtype=np.int32, count=len(strs))
+                rows = np.repeat(idx, lens_a)
+                # null ids (quarantined null-id rows) become null indices
+                indices = pa.array(rows, mask=rows < 0) if (idx < 0).any() else pa.array(rows)
+                return pa.DictionaryArray.from_arrays(
+                    indices, pa.array(list(codes), type=pa.string()))
 
             if any(d is None for d in f_date):
                 date_arr = pa.array(np.repeat(np.array(f_date, dtype=object), lens_a),
@@ -458,34 +477,165 @@ def decode_points(images: DataFrame, grid: dict, res: int = CELL_RES,
                                    dtype=np.int32, count=len(f_date))
                 date_arr = pa.array(np.repeat(days, lens_a), type=pa.date32())
             yield pa.record_batch(
-                [rep_utf8(f_id),
+                [rep_dict(f_id),
                  pa.array(np.concatenate(xs_l)),
                  pa.array(np.concatenate(ys_l)),
                  pa.array(np.concatenate(val_l)),
                  pa.array(np.concatenate(cell_l)),
                  date_arr,
-                 rep_utf8(f_scene)],
-                names=["image_id", "px", "py", "value", "cell", "date", "scene"])
+                 rep_dict(f_scene)],
+                schema=MASK_ARROW_SCHEMA)
 
     cols = ["image_id", "bytes"] + (["gx0", "gy0", "ps"] if reproject else [])
     if reproject and "crs" in images.columns:
         cols.append("crs")
-    # scene/date ride out of the kernel (see POINTS_DATED_SCHEMA) —
-    # no dim join, no per-point-row regex. mapInArrow, not
-    # mapInPandas: the output columns are assembled zero-copy from the
-    # kernel's numpy arrays (the pandas serializer re-expands
-    # Categoricals and converts object columns per-element; measured
-    # ~0.3 s/decode-job slower at bench scale, r8).
-    return images.select(*cols).mapInArrow(kernel, schema=POINTS_DATED_SCHEMA)
+    return images.select(*cols), kernel
 
 
-def read_mask_sink(spark, path: str, written: DataFrame) -> DataFrame:
-    """Read back the mask table just written from ``written``, with its
-    schema made all-nullable: exactly what parquet footer inference
-    returns for it, without the inference job (measured 70-82 ms
-    inferred vs 17-26 ms explicit on the critical path)."""
-    schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in written.schema])
-    return spark.read.schema(schema).parquet(path)
+def decode_points(images: DataFrame, grid: dict, **decode_kwargs) -> DataFrame:
+    """images -> sparse mask points with hex cell keys + scene/date cols
+    (POINTS_DATED_SCHEMA); ``decode_kwargs`` as for :func:`mask_kernel`.
+
+    scene/date ride out of the kernel (see POINTS_DATED_SCHEMA) — no
+    dim join, no per-point-row regex. mapInArrow, not mapInPandas: the
+    output columns are assembled zero-copy from the kernel's numpy
+    arrays (the pandas serializer re-expands Categoricals and converts
+    object columns per-element; measured ~0.3 s/decode-job slower at
+    bench scale, r8). Spark's ArrowColumnVector cannot read dictionary
+    vectors, so the two text columns are decoded to plain utf8 before
+    they cross into the JVM; :func:`write_mask_table` skips that.
+    """
+    frame, kernel = mask_kernel(images, grid, **decode_kwargs)
+
+    def plain(batches):
+        for rb in kernel(batches):
+            yield rb.set_column(0, "image_id", rb.column(0).dictionary_decode()) \
+                    .set_column(6, "scene", rb.column(6).dictionary_decode())
+
+    return frame.mapInArrow(plain, schema=POINTS_DATED_SCHEMA)
+
+
+_SCHEME_RE = __import__("re").compile(r"^[A-Za-z][A-Za-z0-9+.\-]*://")
+
+
+def _qualified_uri(spark, path: str) -> str:
+    """``path`` as a URI: as given when it names a scheme, else as Spark
+    resolves it (default file system, working directory)."""
+    if _SCHEME_RE.match(path):
+        return path
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs.makeQualified(jpath).toString()
+
+
+def _manifest_frame(images: DataFrame, stage_uri: str, grid: dict,
+                    **decode_kwargs) -> DataFrame:
+    """The sink job: every task runs the decode kernel and writes its
+    record batches to one parquet file in ``stage_uri``, named by its
+    partition and attempt; it returns one manifest row (file, rows), or
+    none when its partition held no image."""
+    frame, kernel = mask_kernel(images, grid, **decode_kwargs)
+
+    def write(batches):
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId():05d}-{ctx.attemptNumber()}.parquet"
+        fs, stage = pafs.FileSystem.from_uri(stage_uri)
+        rows = 0
+        writer = None
+        try:
+            for rb in kernel(batches):
+                if writer is None:
+                    writer = pq.ParquetWriter(f"{stage}/{name}", MASK_ARROW_SCHEMA,
+                                              filesystem=fs)
+                writer.write_batch(rb)
+                rows += rb.num_rows
+        finally:
+            if writer is not None:
+                writer.close()
+        if writer is not None:
+            yield pa.record_batch([pa.array([name]), pa.array([rows], type=pa.int64())],
+                                  names=["file", "rows"])
+
+    return frame.mapInArrow(write, schema="file string, rows long")
+
+
+def _commit(fs, root: str, stage: str, files: list[str]) -> None:
+    """Replace the table at ``root`` with exactly the staged ``files``,
+    then mark it complete with ``_SUCCESS``. Other staged files (a
+    failed task attempt's) are never moved."""
+    for info in fs.get_file_info(pafs.FileSelector(root)):
+        if info.base_name == "_temporary":
+            continue
+        if info.type == pafs.FileType.Directory:
+            fs.delete_dir(info.path)
+        else:
+            fs.delete_file(info.path)
+    for name in files:
+        fs.move(f"{stage}/{name}", f"{root}/{name}")
+    with fs.open_output_stream(f"{root}/_SUCCESS"):
+        pass
+
+
+def write_mask_table(images: DataFrame, path: str, grid: dict, **decode_kwargs) -> DataFrame:
+    """Decode ``images`` into the mask table at ``path`` (overwriting
+    it) and return the table read back; ``decode_kwargs`` as for
+    :func:`mask_kernel`.
+
+    The same rows and parquet schema as ``decode_points(...).write
+    .parquet(path)``, without that writer's cost: each decode task
+    writes its own record batches with pyarrow, ``image_id`` and
+    ``scene`` as dictionary columns, so no per-row text crosses into
+    the JVM (the text was 33-40 MB of the 384-image benchmark's
+    1.4-1.7M rows, which Spark's writer converted row by row and then
+    dictionary-encoded back to a few KB). Tasks stage files under
+    ``<path>/_temporary/<job id>/`` and return only a manifest row;
+    the driver then moves exactly the listed files into ``path``,
+    writes ``_SUCCESS`` and removes ``_temporary``, also when the job
+    fails — a failed write leaves the previous table as it was.
+
+    ``path`` resolves as Spark resolves it; a file system pyarrow
+    cannot open raises before any job runs.
+    """
+    import uuid
+
+    spark = images.sparkSession
+    uri = _qualified_uri(spark, path).rstrip("/")
+    fs, root = pafs.FileSystem.from_uri(uri)
+    existed = fs.get_file_info(root).type != pafs.FileType.NotFound
+    job = uuid.uuid4().hex
+    stage = f"{root}/_temporary/{job}"
+    fs.create_dir(stage)
+    committed = False
+    try:
+        manifest = _manifest_frame(images, f"{uri}/_temporary/{job}", grid,
+                                   **decode_kwargs).collect()
+        files = [r["file"] for r in manifest]
+        if not files:
+            # every partition was empty: one empty file keeps the table
+            # readable with its schema, as Spark's writer does
+            pq.write_table(MASK_ARROW_SCHEMA.empty_table(), f"{stage}/part-00000-0.parquet",
+                           filesystem=fs)
+            files = ["part-00000-0.parquet"]
+        _commit(fs, root, stage, files)
+        committed = True
+    finally:
+        fs.delete_dir(f"{root}/_temporary")
+        if not committed and not existed:
+            fs.delete_dir(root)
+    # as Spark's writer does: a cached plan over this path (which the
+    # read-back below would match) re-reads the new files
+    spark.catalog.refreshByPath(path)
+    return read_mask_sink(spark, path)
+
+
+def read_mask_sink(spark, path: str) -> DataFrame:
+    """Read back a mask table with the all-nullable K1 schema: exactly
+    what parquet footer inference returns for it, without the
+    inference job (measured 70-82 ms inferred vs 17-26 ms explicit on
+    the critical path)."""
+    return spark.read.schema(MASK_TABLE_SCHEMA).parquet(path)
 
 
 def quarantined(points: DataFrame) -> DataFrame:

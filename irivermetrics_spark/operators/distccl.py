@@ -190,7 +190,7 @@ def label_components(points: DataFrame, tile: int = 256,
     out_schema = ", ".join([f"{k} string" for k in key_cols]) + \
         ", px int, py int, glabel long, is_edge boolean"
 
-    def local_label(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def local_label(key, pdf):
         from ..kernels import ccl
 
         tx, ty = int(key[-2]), int(key[-1])

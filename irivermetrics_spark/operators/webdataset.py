@@ -77,7 +77,7 @@ def write_webdataset(samples: DataFrame, outdir: str, n_shards: int,
         cols.append(F.col(c).cast("binary").alias(c))
     slim = assigned.select(*cols).repartition(n_shards, "shard")
 
-    def emit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def emit(key, pdf):
         shard = int(key[0])
         pdf = pdf.sort_values("shard_pos", kind="mergesort")
         keys = pdf["wds_key"].tolist()

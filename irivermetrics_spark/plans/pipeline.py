@@ -5,8 +5,9 @@ Spark-first restatement of the reference's calculate_metrics lifecycle
 
   images --mapInArrow--> mask points + per-image summary rows
            (decode + NDWI + hex tiling + in-corridor invalid counts)
-         --sink--> the mask table: a lineage stage, a parquet write
-           read back, or a persist(); a mask-table input starts here
+         --sink--> the mask table: a lineage stage, parquet files the
+           decode tasks write themselves (decode.write_mask_table) read
+           back, or a persist(); a mask-table input starts here
          --groupBy(scene,date)--> >= 70 % validity filter (F6): the
            kept (scene, date) dimension and its time axis, persisted
          --applyInPandas(scene, fill_cell)--> temporal fill + binarize;
@@ -171,9 +172,11 @@ def run(
     kept date; it picks the flat persistence file name).
 
     images: the image table. Module 1 decodes it into the sink the
-    caller picked — the ``checkpoint_dir`` lineage stage, a parquet
-    write to ``mask_path`` read back, or else a ``persist()`` — and
-    module 2 then reads that sink back like any other mask table.
+    caller picked — the ``checkpoint_dir`` lineage stage, the parquet
+    table at ``mask_path`` (its files written by the decode tasks
+    themselves, :func:`decode.write_mask_table`) read back, or else a
+    ``persist()`` — and module 2 then reads that sink back like any
+    other mask table.
 
     checkpoint_dir: enable per-stage lineage checkpointing (P8) — a
     rerun with the same dir resumes after the last completed stage.
@@ -222,20 +225,20 @@ def run(
         # emitted points agree with the constant invalid_offset above
         # (ADVICE r2: clipping only in the offset double-counted
         # out-of-AOI nodata and leaked out-of-AOI pixels downstream).
-        points = decode.decode_points(images, grid, res=res, corridor_rings=rings, aoi=aoi)
+        decode_kwargs = dict(res=res, corridor_rings=rings, aoi=aoi)
         if checkpoint_dir:
             # module-1 sink (K1) as a lineage stage: decode runs once ever
-            points = lineage.run_stage(spark, points, checkpoint_dir, "mask_points",
-                                       partition_by=["date"])
+            points = lineage.run_stage(spark, decode.decode_points(images, grid, **decode_kwargs),
+                                       checkpoint_dir, "mask_points", partition_by=["date"])
         elif mask_path:
-            # plain (unpartitioned) parquet: at local scale a per-date
-            # dynamic-partition write costs more in small-file commits than
-            # pruning saves; a cluster deployment with years of history
-            # would partitionBy("date") here (see lineage path)
-            points.write.mode("overwrite").parquet(mask_path)
-            points = decode.read_mask_sink(spark, mask_path, points)
+            # plain (unpartitioned) parquet, written by the decode tasks
+            # themselves: at local scale a per-date dynamic-partition
+            # write costs more in small-file commits than pruning saves;
+            # a cluster deployment with years of history would partition
+            # by date here (see lineage path)
+            points = decode.write_mask_table(images, mask_path, grid, **decode_kwargs)
         else:
-            points = points.persist()
+            points = decode.decode_points(images, grid, **decode_kwargs).persist()
 
     # fused summary rows carry per-image in-corridor invalid counts;
     # real mask points are everything else (quarantine rows from a

@@ -1,5 +1,6 @@
-"""Edge paths of the mapInArrow decode emit (r8): the zero-copy utf8
-builder's null fallback, empty input partitions, and dtype exactness.
+"""Edge paths of the mapInArrow decode emit (r8): null ids in the
+dictionary-encoded text columns, empty input partitions, and dtype
+exactness.
 
 The main-path bit-parity with the previous mapInPandas kernel was
 proven at bench scale (7,461,145 rows, exceptAll 0 both directions,
@@ -27,8 +28,8 @@ def _grid_images(spark, n_dates=2):
 
 def test_null_image_id_quarantines_with_null_scene_date(spark):
     """A null id + undecodable payload must emit one quarantine row with
-    NULL image_id/scene/date (the rep_utf8 object-path fallback), not
-    kill the task."""
+    NULL image_id/scene/date (a null dictionary index, decoded to a
+    null string), not kill the task."""
     fx, grid, rings = _grid_images(spark)
     pdf = fx.images.head(3).copy()
     n_clean = len(pdf)

@@ -300,3 +300,24 @@ def test_stream_webdataset_ingests_old_mtimes(spark, tmp_path):
     q.awaitTermination(120)
     keys = sorted(r.key for r in spark.read.parquet(sink).collect())
     assert keys == ["new", "old"]  # the 60-day-old backfill is NOT skipped
+
+
+def test_grouped_map_kernels_raise_no_type_hint_warning(spark, tmp_path):
+    """``webdataset.emit`` and ``distccl.local_label`` carry no partial
+    type hints: Spark would warn once per call that it cannot infer the
+    grouped map's eval type from them."""
+    import warnings
+
+    import pandas as pd
+
+    from irivermetrics_spark.operators import distccl
+    from irivermetrics_spark.operators import webdataset as wds
+
+    pts = spark.createDataFrame(pd.DataFrame(dict(
+        scene="s", ds="d", px=np.arange(40, dtype="int32"), py=np.zeros(40, dtype="int32"))))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        wds.write_webdataset(_sample_frame(spark, n=4), str(tmp_path / "shards"), n_shards=2,
+                             payload_cols=["jpg", "txt"]).collect()
+        assert distccl.label_components(pts, tile=16).select("component").distinct().count() == 1
+    assert not [w for w in caught if "type hints" in str(w.message)]

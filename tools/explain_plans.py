@@ -6,6 +6,9 @@ input takes: the mask table read back, one persisted per-(scene, date)
 aggregate with its time axis, broadcast into the fill and section joins.
 
 Run to verify the plans the engine is designed around:
+- the mask sink is one PythonMapInArrow (decode + each task's own
+  parquet write) whose output is the small (file, rows) manifest the
+  driver collects: no WriteFiles over point rows
 - the section kernel's input joins the broadcast cover on ``cell``
   (a BroadcastHashJoin, never a sort-merge on points) and feeds one
   FlatMapGroupsInPandas per (scene, section)
@@ -26,9 +29,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    import numpy as np
     from pyspark.sql import functions as F
 
     from irivermetrics_spark import synth
+    from irivermetrics_spark.operators import decode
     from irivermetrics_spark.plans import pipeline
     from irivermetrics_spark.session import get_spark
 
@@ -36,7 +41,12 @@ def main() -> None:
     fx = synth.make_fixture(w=80, h=40, n_dates=6, n_sections=3, seed=42)
     grid = dict(gx0=fx.gx0, gy0=fx.gy0, ps=fx.pixel_size, w=fx.w, h=fx.h)
     images = pipeline.images_df(spark, fx.images)
+    rings = [(np.asarray(r["ring_x"]), np.asarray(r["ring_y"])) for r in fx.reaches]
     with tempfile.TemporaryDirectory(prefix="explain_mask_") as mask_path:
+        print("=" * 30, "mask sink (tasks write parquet; the driver collects the manifest)",
+              "=" * 30)
+        decode._manifest_frame(images, f"{mask_path}/_temporary/explain", grid,
+                               corridor_rings=rings).explain("formatted")
         res = pipeline.run(spark, images, fx.reaches, grid, mask_path=mask_path)
         print("=" * 30, "kept-date dimension (persisted, read by both joins)", "=" * 30)
         res["kept"].explain("formatted")
