@@ -20,45 +20,47 @@ CLEAR, EOI, FIRST = 256, 257, 258
 
 
 def compress(data: bytes) -> bytes:
-    """bytes -> TIFF-LZW code stream (MSB-first, early-change widths)."""
-    out = bytearray()
-    acc = 0
-    nbits = 0
+    """bytes -> TIFF-LZW code stream (MSB-first, early-change widths).
 
-    def put(code: int, width: int):
-        nonlocal acc, nbits
-        acc = (acc << width) | code
+    The string table maps ``(prefix code << 8) | byte`` to a code: an
+    int key per step instead of a concatenated ``bytes`` key, so no
+    string is built or hashed per input byte."""
+    out = bytearray()
+    table: dict[int, int] = {}
+    next_code = FIRST
+    width = 9
+    # pending output bits, MSB first: the last nbits bits of acc
+    acc, nbits = CLEAR, width
+    w = data[0] if data else -1  # code of the current match
+    for b in data[1:]:
+        key = (w << 8) | b
+        code = table.get(key)
+        if code is not None:
+            w = code
+            continue
+        # emit w; drained bits are dropped, so shifts stay O(1)
+        acc = (acc << width) | w
         nbits += width
         while nbits >= 8:
             nbits -= 8
             out.append((acc >> nbits) & 0xFF)
-        acc &= (1 << nbits) - 1  # drop drained bits: unbounded acc => O(n) shifts
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
-    next_code = FIRST
-    width = 9
-    put(CLEAR, width)
-    w = b""
-    for b in data:
-        wc = w + bytes([b])
-        if wc in table:
-            w = wc
-            continue
-        put(table[w], width)
-        table[wc] = next_code
+        acc &= (1 << nbits) - 1
+        table[key] = next_code
         next_code += 1
         # early change: width bumps when the NEXT code to emit would
         # not fit, i.e. at 511/1023/2047 table entries minus one
         if next_code == (1 << width) - 1 and width < 12:
             width += 1
         if next_code == 4094:  # table full: reset
-            put(CLEAR, width)
-            table = {bytes([i]): i for i in range(256)}
+            acc = (acc << width) | CLEAR
+            nbits += width
+            table.clear()
             next_code = FIRST
             width = 9
-        w = bytes([b])
-    if w:
-        put(table[w], width)
+        w = b
+    if w >= 0:
+        acc = (acc << width) | w
+        nbits += width
         # the decoder, on processing this FINAL code, appends one more
         # table entry than the encoder ever allocated (the encoder only
         # adds on mismatches, and the last code has no successor), which
@@ -66,7 +68,11 @@ def compress(data: bytes) -> bytes:
         # widen before writing EOI, as libtiff's LZWPostEncode does
         if next_code == (1 << width) - 2 and width < 12:
             width += 1
-    put(EOI, width)
+    acc = (acc << width) | EOI
+    nbits += width
+    while nbits >= 8:
+        nbits -= 8
+        out.append((acc >> nbits) & 0xFF)
     if nbits:
         out.append((acc << (8 - nbits)) & 0xFF)
     return bytes(out)

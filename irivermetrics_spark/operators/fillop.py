@@ -262,19 +262,21 @@ def filled_water(points: DataFrame, reaches: list[dict], grid: dict,
     just binarizes (nodata pixels stay dry).
     out_cell_res: when set, each output row also carries its hex cell
     id at THIS res, computed in-kernel with the exact hex_cell_udf
-    arithmetic (float64 center from int px/py). The fill kernel is
-    already a Python stage over every output row, so attaching the
-    key here removes the separate ArrowEvalPython round-trip the
-    caller otherwise pays to re-key the whole water table (guide §4.1:
-    one boundary crossing instead of two).
-    Output: (scene, date string 'ds', px, py[, cell]) water pixels
-    after fill.
+    arithmetic (float64 center from int px/py), and its scene's axis
+    length ``n_t`` as ``n_kept``. The fill kernel is already a Python
+    stage over every output row, so attaching both here removes the
+    separate ArrowEvalPython round-trip the caller otherwise pays to
+    re-key the whole water table (guide §4.1: one boundary crossing
+    instead of two), and the section kernel's second join against the
+    kept dimension.
+    Output: (scene, date string 'ds', px, py[, cell, n_kept]) water
+    pixels after fill.
     """
     rings = [(np.asarray(r["ring_x"]), np.asarray(r["ring_y"])) for r in reaches]
     ps, gx0, gy0 = grid["ps"], grid["gx0"], grid["gy0"]
     out_schema = "scene string, ds string, px int, py int"
     if out_cell_res is not None:
-        out_schema += ", cell long"
+        out_schema += ", cell long, n_kept long"
 
     def kernel(key, pdf):
         scene, cell = key[0], int(key[1])
@@ -322,6 +324,7 @@ def filled_water(points: DataFrame, reaches: list[dict], grid: dict,
             ox = gx0 + (ux[pi].astype(np.float64) + 0.5) * ps
             oy = gy0 - (uy[pi].astype(np.float64) + 0.5) * ps
             cols["cell"] = cellindex.hex_cell(ox, oy, out_cell_res)
+            cols["n_kept"] = np.full(ti.shape[0], n_t, dtype=np.int64)
         return pd.DataFrame(cols)
 
     cell_of = hex_cell_udf(fill_res, grid)

@@ -1,10 +1,9 @@
-"""Persistence metrics (A1-A3) and the per-(date, section) fold (A7).
+"""The per-(date, section) metric fold (A7) over the section kernel's
+pre-folded rows.
 
-Everything here is built-in Catalyst aggregates — the reference's
-pandas groupby().apply(process_metrics)
-(src/irm_main.py:198-201, src/utils/calc_metrics.py:225-293) dissolves
-into hash aggregates with partial/final phases; every weighted metric
-is a sum-of-products over pool rows:
+The reference's pandas groupby().apply(process_metrics)
+(src/irm_main.py:198-201, src/utils/calc_metrics.py:225-293) is a set
+of sums-of-products over pool rows, divided at the end:
 
   AWMSI = sum(0.25*perim/sqrt(area) * area) / sum(area)
   AWMPA = sum(area^2) / sum(area);  AWMPL/AWMPW analogous with area wts
@@ -14,17 +13,16 @@ is a sum-of-products over pool rows:
   APSEC = sum(area)/section_area*100;  LPSEC = sum(length)/L*100 with
           the NaN-propagation quirk (:273)
 
-Zero-pool (date, section) pairs — absent groups or label-0 rows —
-reproduce the reference's zero branch (:236-256) via a right join
-against the (scene x kept-date x section) dimension grid.
+The section kernel holds every pool row of its (scene, section), so it
+emits the sums itself, one row per (scene, ds, section) with pools
+(``morphology.fold_sums``), and the per-section persistence summary
+(pp_mean, ra_area; A1-A3, ``morphology.persistence_summary``). The
+fold here joins both onto the dimension grid and divides: no aggregate
+runs after the kernel.
 
-Pixel persistence (A1-A3, src/utils/calc_metrics.py:295-304, 655-667):
-pp = wet-count/n_dates per pixel (only ever-wet pixels materialize —
-zeros are implicit and fall below both thresholds);
-pp_mean = avg(pp | pp > 0.1) (NaN when empty), ra_area =
-sum(pp | pp > 0.9) * pixel_area_km2 (0 when empty) — per section over
-the all_touched-masked clip. The per-pixel table is the section
-kernel's output (``morphology.section_rows``); ``persistence`` folds it.
+Zero-pool (date, section) pairs — absent sums rows or label-0 rows —
+reproduce the reference's zero branch (:236-256) through the left join
+from the (scene x kept-date x section) dimension grid.
 """
 
 from __future__ import annotations
@@ -35,19 +33,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 NAN = float("nan")
-
-
-def persistence(persistence_px: DataFrame, pixel_size: float) -> DataFrame:
-    """(scene, section, pp_mean, ra_area) from the per-pixel persistence
-    table (scene, section, px, py, wet, pp).
-
-    SQL-string expressions (same exact forms as the r1-r5 Column trees)
-    — part of the r6 py4j plan-floor sweep; see metrics.fold."""
-    px_area_km2 = pixel_size**2 / 1e6
-    return persistence_px.groupBy("scene", "section").agg(
-        F.expr("avg(CASE WHEN pp > 0.1D THEN pp END) AS pp_mean"),
-        F.expr(f"COALESCE(sum(CASE WHEN pp > 0.9D THEN pp END), 0.0D) * {px_area_km2!r}D AS ra_area"),
-    )
 
 
 def dimension_grid(kept_dates: DataFrame, reaches: list[dict]) -> DataFrame:
@@ -71,14 +56,15 @@ def _sql_str(value) -> str:
     return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def fold(pools: DataFrame, grid_df: DataFrame, persistence_df: DataFrame,
+def fold(sums: DataFrame, grid_df: DataFrame, persistence_df: DataFrame,
          section_length: float = NAN, broadcast_dims: bool = True) -> DataFrame:
-    """A7: pool rows -> final metrics table (one row per scene/date/section).
+    """A7: the section kernel's per-(scene, ds, section) sums and
+    per-(scene, section) persistence rows -> the final metrics table
+    (one row per scene/date/section of the grid).
 
-    broadcast_dims: hint the per-(scene,date,section) aggregate and the
-    per-(scene,section) persistence table as broadcast sides. Correct
-    whenever the keyspace is bounded (the fixture/bench regime); at
-    10^12-image scale the aggregate is NOT bounded — the caller gates
+    broadcast_dims: hint both pre-folded tables as broadcast sides.
+    Correct whenever the keyspace is bounded (the fixture/bench regime);
+    at 10^12-image scale the sums are NOT bounded — the caller gates
     the hint on the estimated group count and lets AQE pick the join
     strategy beyond it (r1 VERDICT: an unconditional hint there would
     OOM the driver)."""
@@ -88,24 +74,10 @@ def fold(pools: DataFrame, grid_df: DataFrame, persistence_df: DataFrame,
     # Every expression is the exact SQL form of the r1-r5 Column tree —
     # same operator order, same double literals — so a7_fold and the
     # numpy-parity suite stay value-identical.
-    safe = "CASE WHEN area_km2 > 0 THEN {} ELSE 0.0D END"
-    agg = pools.groupBy("scene", "ds", "section").agg(
-        F.expr("count(*) AS n_rows"),
-        F.expr(f"sum({safe.format('area_km2')}) AS sum_area"),
-        F.expr(f"sum({safe.format('length_km')}) AS sum_len"),
-        F.expr(f"sum({safe.format('perimeter_km')}) AS sum_perim"),
-        F.expr(f"sum({safe.format('0.25D * perimeter_km / sqrt(area_km2) * area_km2')}) AS awmsi_num"),
-        F.expr(f"sum({safe.format('area_km2 * area_km2')}) AS awmpa_num"),
-        F.expr(f"sum({safe.format(f'nanvl(2.0D * sqrt(area_km2) / {math.pi!r}D / length_km * area_km2, 0.0D)')}) AS awre_num"),
-        F.expr(f"sum({safe.format('length_km * area_km2')}) AS awmpl_num"),
-        F.expr(f"sum({safe.format('width_km * area_km2')}) AS awmpw_num"),
-    )
-    # both right sides are per-(scene,date,section) / per-(scene,section)
-    # aggregates — tiny relative to pool rows in the bounded regime
-    agg_side = F.broadcast(agg) if broadcast_dims else agg
+    sums_side = F.broadcast(sums) if broadcast_dims else sums
     pers_side = F.broadcast(persistence_df) if broadcast_dims else persistence_df
     j = (
-        grid_df.join(agg_side, ["scene", "ds", "section"], "left")
+        grid_df.join(sums_side, ["scene", "ds", "section"], "left")
         .join(pers_side, ["scene", "section"], "left")
     )
     nz = "(sum_area IS NOT NULL AND sum_area > 0)"

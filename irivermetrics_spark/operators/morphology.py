@@ -1,5 +1,6 @@
 """Per-(scene, section) kernel: zonal membership, pool morphology
-(M1-M6, J3) and pixel persistence (A1) in one grouped map.
+(M1-M6, J3), pixel persistence (A1-A3) and the metric fold's sums (A7)
+in one grouped map.
 
 The reference clips each feature into a dense block and runs
 CCL/skeleton/EDT per clip layer (src/utils/calc_metrics.py:669-722,
@@ -11,13 +12,22 @@ One group holds the section's water rows for every kept date of one
 scene, one int8 clip and one wet count per clip pixel — never a
 (date, y, x) cube.
 
+The group already holds every pool row and every persistence pixel of
+its (scene, section), so it also pre-aggregates them: per date the
+nine sums ``metrics.fold`` divides, per section ``pp_mean`` and
+``ra_area`` (A1-A3, src/utils/calc_metrics.py:295-304, 655-667). The
+sums are Spark's SQL aggregates, evaluated as Spark evaluates them for
+one group in one task (:func:`fold_sums`), so the fold is a join.
+
 Output pool rows keep the path as global pixel coordinate arrays for
 the line/point exports. Dates on which a section has no member water
-emit no pool row — the metrics fold right-joins the full dimension grid
-and applies the reference's zero-pool branch there.
+emit no pool or sums row — the metrics fold left-joins them onto the
+full dimension grid and applies the reference's zero-pool branch there.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -32,10 +42,22 @@ POOLS_SCHEMA = (
     "centroid_x double, centroid_y double, "
     "path_py array<int>, path_px array<int>"
 )
-# section_rows' tagged output: pool rows, then persistence rows (px, py, wet, pp)
-SECTION_SCHEMA = "is_pool boolean, " + POOLS_SCHEMA + ", px int, py int, wet long, pp double"
-POOLS_COLUMNS, SECTION_COLUMNS = ([c.split(" ", 1)[0] for c in schema.split(", ")]
-                                  for schema in (POOLS_SCHEMA, SECTION_SCHEMA))
+# metrics.fold's nine per-(scene, ds, section) sums over pool rows
+SUMS_SCHEMA = (
+    "n_rows long, sum_area double, sum_len double, sum_perim double, awmsi_num double, "
+    "awmpa_num double, awre_num double, awmpl_num double, awmpw_num double"
+)
+# section_rows' output, one tagged row kind each:
+#   POOL: a POOLS_SCHEMA row;
+#   PIXEL: (scene, section, px, py, wet, pp) of an ever-wet pixel;
+#   SUMS: (scene, ds, section) + SUMS_SCHEMA, one per date with pool rows;
+#   PERSISTENCE: (scene, section, pp_mean, ra_area), one per group.
+POOL, PIXEL, SUMS, PERSISTENCE = range(4)
+SECTION_SCHEMA = (f"kind tinyint, {POOLS_SCHEMA}, px int, py int, wet long, pp double, "
+                  f"{SUMS_SCHEMA}, pp_mean double, ra_area double")
+POOLS_COLUMNS, SUMS_COLUMNS, SECTION_COLUMNS = (
+    [c.split(" ", 1)[0] for c in schema.split(", ")]
+    for schema in (POOLS_SCHEMA, SUMS_SCHEMA, SECTION_SCHEMA))
 
 
 def empty_rows(schema: str) -> pd.DataFrame:
@@ -87,6 +109,57 @@ def pool_records(scene: str, section: str, ds: str, clip: np.ndarray, c0: int, r
     return out
 
 
+def _sql_sum(values) -> float | None:
+    """Spark's double ``sum`` of one group in one task: NULLs (None)
+    skipped, left to right from 0.0 (not numpy's pairwise ``np.sum``),
+    NULL when no value is left."""
+    acc = None
+    for v in values:
+        if v is not None:
+            acc = (0.0 if acc is None else acc) + v
+    return acc
+
+
+def _fold_terms(row: dict) -> tuple:
+    """One pool row's eight ``CASE WHEN area_km2 > 0 THEN ... ELSE 0.0D
+    END`` summands of ``metrics.fold``, in its expression order.
+
+    A pandas NaN crosses the Arrow boundary as SQL NULL, so a NaN area
+    (a skeleton component without an area row) fails ``> 0`` and NULL
+    operands give NULL. A zero length under a positive area raises
+    ZeroDivisionError where ANSI Spark raises DIVIDE_BY_ZERO."""
+    a, l, p, w = (None if v != v else float(v) for v in
+                  (row["area_km2"], row["length_km"], row["perimeter_km"], row["width_km"]))
+    if a is None or not a > 0:
+        return (0.0,) * 8
+    r = math.sqrt(a)
+    awre = None if l is None else 2.0 * r / math.pi / l * a
+    return (a, l, p,
+            None if p is None else 0.25 * p / r * a,
+            a * a,
+            None if awre is None else (0.0 if awre != awre else awre),  # nanvl
+            None if l is None else l * a,
+            None if w is None else w * a)
+
+
+def fold_sums(pools: list[dict]) -> dict:
+    """SUMS_SCHEMA over one (scene, ds, section)'s pool rows, in their
+    output order: bit for bit what Spark's SQL aggregate of the same
+    rows returns (tests/fold_oracle.py)."""
+    sums = [_sql_sum(col) for col in zip(*map(_fold_terms, pools))]
+    return dict(zip(SUMS_COLUMNS, [len(pools), *sums]))
+
+
+def persistence_summary(pp: np.ndarray, pixel_size: float) -> dict:
+    """(pp_mean, ra_area) of one (scene, section)'s per-pixel pp, in
+    output order: ``avg(CASE WHEN pp > 0.1D THEN pp END)`` (NaN, i.e.
+    NULL in Spark, when empty) and ``COALESCE(sum(CASE WHEN pp > 0.9D
+    THEN pp END), 0.0D) * pixel_area_km2``."""
+    mid, high = pp[pp > 0.1].tolist(), pp[pp > 0.9].tolist()
+    return dict(pp_mean=_sql_sum(mid) / len(mid) if mid else math.nan,
+                ra_area=(_sql_sum(high) if high else 0.0) * (pixel_size**2 / 1e6))
+
+
 def section_rows(water: DataFrame, reaches: list[dict], grid: dict,
                  min_pool_size: int = 2) -> DataFrame:
     """water: (scene, ds, px, py, section, n_kept) -> SECTION_SCHEMA rows.
@@ -94,8 +167,8 @@ def section_rows(water: DataFrame, reaches: list[dict], grid: dict,
     ``section`` is a cover candidate (the cell join); the kernel keeps
     a row only if the pixel is a member of the section
     (``zonal.member_all_touched``, evaluated once per group over the
-    clip window). Pool rows are tagged ``is_pool``; the others are the
-    per-pixel persistence rows of ever-wet pixels.
+    clip window). ``n_kept`` is the scene's kept-date count, the
+    denominator of pp. The row kinds are listed at SECTION_SCHEMA.
     """
     offsets = clip_offsets(reaches, grid)
     by_section = {r["section"]: r for r in reaches}
@@ -118,22 +191,30 @@ def section_rows(water: DataFrame, reaches: list[dict], grid: dict,
         clip = np.zeros((nrows, ncols), dtype=np.int8)
         order = np.argsort(ds, kind="stable")
         dates, starts = np.unique(ds[order], return_index=True)
-        pools = []
+        pools, sums = [], []
         for d, rows in zip(dates, np.split(order, starts[1:])):
             clip[:] = 0
             clip[y[rows], x[rows]] = 1
-            pools.extend(pool_records(scene, section, d, clip, c0, r0, min_pool_size, grid))
+            recs = pool_records(scene, section, d, clip, c0, r0, min_pool_size, grid)
+            pools.extend(recs)
+            sums.append(dict(kind=SUMS, scene=scene, ds=d, section=section,
+                             path_py=None, path_px=None, **fold_sums(recs)))
         wet = np.bincount(y * ncols + x, minlength=nrows * ncols)
         ever = np.nonzero(wet)[0]
+        pp = wet[ever] / int(pdf["n_kept"].iloc[0])
         persist = pd.DataFrame({
-            "is_pool": False, "scene": scene, "ds": None, "section": section,
+            "kind": PIXEL, "scene": scene, "ds": None, "section": section,
             "path_py": None, "path_px": None,
             "px": (ever % ncols + c0).astype(np.int32),
             "py": (ever // ncols + r0).astype(np.int32),
             "wet": wet[ever],
-            "pp": wet[ever] / int(pdf["n_kept"].iloc[0]),
+            "pp": pp,
         })
-        return pd.concat([pd.DataFrame(pools).assign(is_pool=True), persist],
+        # the array converter takes None, not NaN, for a missing path
+        summary = dict(kind=PERSISTENCE, scene=scene, section=section, path_py=None,
+                       path_px=None, **persistence_summary(pp, ps))
+        return pd.concat([pd.DataFrame(pools).assign(kind=POOL), pd.DataFrame(sums),
+                          persist, pd.DataFrame([summary])],
                          ignore_index=True)[SECTION_COLUMNS]
 
     return water.groupBy("scene", "section").applyInPandas(kernel, SECTION_SCHEMA)

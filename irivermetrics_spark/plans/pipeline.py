@@ -11,12 +11,14 @@ Spark-first restatement of the reference's calculate_metrics lifecycle
          --groupBy(scene,date)--> >= 70 % validity filter (F6): the
            kept (scene, date) dimension and its time axis, persisted
          --applyInPandas(scene, fill_cell)--> temporal fill + binarize;
-           the kernel names each output row's date itself
+           the kernel names each output row's date and carries its
+           scene's kept-date count
          --broadcast cell join--> the candidate sections of each pixel
          --applyInPandas(scene, section)--> exact zonal membership (J1),
-           per-date pool morphology and per-pixel persistence: one
-           tagged, persisted output
-         --hash aggregate + dimension right-join--> metrics fold (A7)
+           per-date pool morphology, per-pixel persistence, and the
+           fold's per-date sums and per-section persistence summary:
+           one tagged, persisted output
+         --left joins from the dimension grid--> metrics fold (A7)
          --orderBy--> final table
 
 Shuffle inventory (by design, data shrinks monotonically):
@@ -24,9 +26,9 @@ Shuffle inventory (by design, data shrinks monotonically):
  by scene (kept dimension with its time axis, date-pruning list and
  validity probe: one scan, one persist, one small collect),
  2. fill groupBy (scene, fill_cell), 3. section groupBy (scene,
- section), 4. the fold's pool aggregate and the per-section
- persistence aggregate, both over the small section output, 5. final
- orderBy. With export_PP, ``api.calculate_metrics`` adds 6.
+ section), 4. final orderBy. No aggregate runs after the section
+ kernel: the fold broadcasts its pre-folded rows onto the dimension
+ grid. With export_PP, ``api.calculate_metrics`` adds 5.
  groupBy(scene) of the per-pixel persistence rows: the GeoTIFF writer
  re-emits them into the parquet sink, so both persistence sinks are
  one action, run beside the metrics CSV. The spatial joins (the cover
@@ -79,12 +81,11 @@ def _kept_stats(df: DataFrame, kept: str, *more: str):
 
 def _with_time_axis(dates: DataFrame, kept: str) -> DataFrame:
     """Adds the scene-local time axis of the rows where ``kept`` holds:
-    ``ds``, the ordinal ``t_idx`` and the scene's axis length ``n_t``.
-    Computed once, ahead of the persist that both the fill join and the
-    section kernel's ``n_kept`` join read."""
+    the ordinal ``t_idx`` and the scene's axis length ``n_t``. Computed
+    once, ahead of the persist that the fill join reads."""
     one = f"CASE WHEN {kept} THEN 1 ELSE 0 END"
     return dates.selectExpr(
-        "*", "date_format(date, 'yyyy-MM-dd') AS ds",
+        "*",
         f"CAST(sum({one}) OVER (PARTITION BY scene ORDER BY date "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1 AS INT) AS t_idx",
         f"sum({one}) OVER (PARTITION BY scene) AS n_t")
@@ -96,7 +97,7 @@ def _kept_from_mask_table(mask_rows: DataFrame, points: DataFrame, corridor_cove
     """F6: (kept frame, driver stats, the frame it persisted).
 
     The kept frame holds one row per kept (scene, date) with its time
-    axis (``ds``, ``t_idx``, ``n_t``). One persisted per-(scene, date)
+    axis (``t_idx``, ``n_t``). One persisted per-(scene, date)
     aggregate of the mask rows serves the date dimension, the >= 70 %
     kept flag, the time axis, the counted/presence probe and the stats,
     in one scan of the mask table and one collect. Every mask row, not
@@ -140,7 +141,7 @@ def _kept_from_mask_table(mask_rows: DataFrame, points: DataFrame, corridor_cove
                 f"mask table: {stats['n_unsummarized']} (scene, date) group(s) have mask "
                 "points but no summary row — their in-corridor invalid count is unknown; "
                 "re-run module 1 for those images")
-        return by_date.filter("kept").select("scene", "date", "ds", "t_idx", "n_t"), stats, by_date
+        return by_date.filter("kept").select("scene", "date", "t_idx", "n_t"), stats, by_date
     # presence-only masks (module 1 ran without reaches), or no summary
     # rows at all (an external hand-built table): re-derive kept via
     # the corridor join over the same date dimension
@@ -291,27 +292,33 @@ def run(
         water = lineage.run_stage(spark, water, checkpoint_dir, "water_filled")
 
     cover = zonal.cover_df(spark, reaches, res)
-    # zonal membership, persistence and morphology in one grouped map
-    # per (scene, section): the cover join only names candidate
-    # sections (JVM, no refine UDF); each group's scene axis length
-    # comes from the same kept dimension the fill joined
-    candidates = (water.join(F.broadcast(cover.select("cell", "section")), "cell").drop("cell")
-                  .join(kept_dim.select("scene", "ds", F.col("n_t").alias("n_kept")),
-                        ["scene", "ds"]))
-    # persisted: the pools, the persistence table and the fold all
-    # branch off this small output
+    # zonal membership, morphology, persistence and the fold's sums in
+    # one grouped map per (scene, section): the cover join only names
+    # candidate sections (JVM, no refine UDF); each row carries its
+    # scene's axis length from the fill
+    candidates = water.join(F.broadcast(cover.select("cell", "section")), "cell").drop("cell")
+    # persisted: pools, persistence and the fold all branch off this
+    # small output
     sections = morphology.section_rows(candidates, reaches, grid,
                                        min_pool_size=min_pool_size).persist()
-    pools = sections.filter("is_pool").select(*morphology.POOLS_COLUMNS)
-    persistence_px = sections.filter("NOT is_pool").select("scene", "section", "px", "py", "wet", "pp")
-    pers = metrics.persistence(persistence_px, grid["ps"])
+
+    def kind(k: int, *cols: str) -> DataFrame:
+        return sections.filter(f"kind = {k}").select(*cols)
+
+    pools = kind(morphology.POOL, *morphology.POOLS_COLUMNS)
+    persistence_px = kind(morphology.PIXEL, "scene", "section", "px", "py", "wet", "pp")
+    pers = kind(morphology.PERSISTENCE, "scene", "section", "pp_mean", "ra_area")
     kept = kept.select("scene", "date")
     grid_df = metrics.dimension_grid(kept, reaches)
     # broadcast the fold's dim sides only while the keyspace is bounded
     n_groups = n_kept_rows * max(len(reaches), 1)
-    final = metrics.fold(pools, grid_df, pers, section_length=section_length,
+    final = metrics.fold(kind(morphology.SUMS, "scene", "ds", "section", *morphology.SUMS_COLUMNS),
+                         grid_df, pers, section_length=section_length,
                          broadcast_dims=n_groups <= 2_000_000)
     from ..operators import exports as exports_op
+
+    # the fill's documented columns, without the section kernel's n_kept
+    water = water.drop("n_kept")
 
     # the exact per-row zonal join is off the metrics path: vector
     # exports and row-level checks read it, unpersisted

@@ -3,8 +3,6 @@ reproduce the pipeline goldens end-to-end (VERDICT r1 item 2), enforce
 the band contract, apply the buffered-AOI clip, and round-trip the
 vector reach layer (S4)."""
 
-import tempfile
-
 import numpy as np
 import pandas as pd
 import pytest
@@ -28,7 +26,7 @@ def _metrics_pdf(res):
     return pdf.drop(columns=["section_length_km"])  # NaN-only col
 
 
-def test_api_two_module_flow_matches_pipeline(spark):
+def test_api_two_module_flow_matches_pipeline(spark, tmp_path):
     """waterdetect_batch -> parquet -> calculate_metrics == pipeline.run,
     both with fused summaries (reaches passed to module 1) and with the
     fallback validity re-scan (no summaries in the mask table)."""
@@ -42,7 +40,7 @@ def test_api_two_module_flow_matches_pipeline(spark):
     # module 1 WITH fused summaries, K1 parquet sink
     masks = api.waterdetect_batch(
         spark, images, r_lines=lines, grid=grid, buffer=buffer_m,
-        reaches=fx.reaches, mask_path=tempfile.mkdtemp(prefix="api_mask_"),
+        reaches=fx.reaches, mask_path=str(tmp_path / "api_mask"),
     )
     via_api = _metrics_pdf(api.calculate_metrics(spark, masks, fx.reaches, grid=grid))
     pd.testing.assert_frame_equal(via_api, direct)

@@ -34,10 +34,23 @@ def test_out_cell_res_matches_udf_stage(fill_inputs):
     old = fillop.filled_water(points_kept, fx.reaches, grid) \
         .withColumn("cell", fillop.hex_cell_udf(9, grid)("px", "py"))
     new = fillop.filled_water(points_kept, fx.reaches, grid, out_cell_res=9)
-    assert old.schema == new.schema
-    assert new.exceptAll(old).count() == 0
-    assert old.exceptAll(new).count() == 0
+    assert [f.simpleString() for f in new.schema.fields] == [
+        "scene:string", "ds:string", "px:int", "py:int", "cell:bigint", "n_kept:bigint"]
+    new_cells = new.drop("n_kept")
+    assert old.schema == new_cells.schema
+    assert new_cells.exceptAll(old).count() == 0
+    assert old.exceptAll(new_cells).count() == 0
     assert new.count() > 0
+
+
+def test_out_cell_res_rows_carry_the_scene_axis_length(fill_inputs):
+    """n_kept is the scene's kept-date count: the section kernel's
+    persistence denominator, with no second join to the kept dates."""
+    fx, grid, points_kept = fill_inputs
+    new = fillop.filled_water(points_kept, fx.reaches, grid, out_cell_res=9)
+    got = {tuple(r) for r in new.select("scene", "n_kept").distinct().collect()}
+    want = {tuple(r) for r in points_kept.select("scene", "n_t").distinct().collect()}
+    assert got == want and len(got) > 0
 
 
 def test_default_output_has_no_cell(fill_inputs):

@@ -14,10 +14,12 @@ from irivermetrics_spark.operators import decode
 from irivermetrics_spark.plans import pipeline
 
 # jobs of one warm calculate_metrics(export_PP=True, outdir=...) call on
-# the fixture below; with a kept-date time axis windowed per broadcast
-# it ran 23, before the per-(scene, section) kernel 29, and before that
-# 43. A change that adds jobs must re-pin this on purpose.
-JOB_BUDGET = 22
+# the fixture below; before the section kernel pre-folded the metric
+# sums and the persistence summary it ran 22, with a kept-date time
+# axis windowed per broadcast 23, before the per-(scene, section)
+# kernel 29, and before that 43. A change that adds jobs must re-pin
+# this on purpose.
+JOB_BUDGET = 19
 CSV_JOBS = "calculate_metrics: metrics CSV"
 SINK_JOBS = "calculate_metrics: persistence parquet + GeoTIFFs"
 
@@ -67,6 +69,52 @@ def test_job_budget_and_labels(spark, mask_table, tmp_path):
     assert sc.getLocalProperty("spark.job.description") is None
     assert (tmp_path / "counted" / "pixel_persistence.parquet" / "_SUCCESS").exists()
     assert not _sink_threads()
+
+
+def _children(node) -> list:
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _first(node, name: str, above=()):
+    """(the topmost ``name`` node of a JVM plan tree, its ancestors' names)."""
+    if node.nodeName() == name:
+        return node, above
+    for kid in _children(node):
+        hit = _first(kid, name, above + (node.nodeName(),))
+        if hit is not None:
+            return hit
+    return None
+
+
+def _names(node, stop: str | None = None) -> list[str]:
+    """Node names of a JVM plan subtree, not entering below ``stop`` nodes."""
+    out = [node.nodeName()]
+    if out[0] != stop:
+        for kid in _children(node):
+            out += _names(kid, stop)
+    return out
+
+
+def test_no_aggregate_runs_after_the_section_kernel(spark, mask_table):
+    """The fold is a join of the section kernel's pre-folded rows: no
+    Aggregate sits above the kernel in the metrics plan, none runs on
+    its cached output, and the kernel's input joins only the cover (its
+    pp denominator comes from the fill, not from the kept dates)."""
+    fx, grid, path = mask_table
+    res = api.calculate_metrics(spark, spark.read.parquet(path), fx.reaches, grid=grid)
+    kernel, above = _first(res["metrics"]._jdf.queryExecution().analyzed(),
+                           "FlatMapGroupsInPandas")
+    assert "Aggregate" not in above
+    # down to the fill kernel: the cover join alone
+    below = [n for kid in _children(kernel) for n in _names(kid, stop="FlatMapGroupsInPandas")]
+    assert "FlatMapGroupsInPandas" in below and below.count("Join") == 1, below
+    # the optimized plan reads the persisted section output and
+    # aggregates nothing on top of the cached frames
+    optimized = _names(res["metrics"]._jdf.queryExecution().optimizedPlan())
+    assert "InMemoryRelation" in optimized and "Aggregate" not in optimized
+    for df in res.persisted:
+        df.unpersist()
 
 
 def test_persistence_sink_failure_raises_in_caller(spark, mask_table, tmp_path):

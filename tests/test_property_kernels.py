@@ -143,6 +143,69 @@ def test_lzw_roundtrip_property(data):
     assert lzw.decompress(lzw.compress(data)) == data
 
 
+def _lzw_end_state(data: bytes) -> tuple[int, int]:
+    """(table size when the input ends, table resets) of a TIFF-LZW
+    encode of ``data``: a replay of the string table alone."""
+    table, size, resets, w = set(), 258, 0, b""
+    for b in data:
+        wc = w + bytes([b])
+        if len(wc) == 1 or wc in table:
+            w = wc
+            continue
+        table.add(wc)
+        size += 1
+        if size == 4094:
+            table.clear()
+            size, resets = 258, resets + 1
+        w = bytes([b])
+    return size, resets
+
+
+# high-entropy bytes add about one table entry per input byte: these
+# lengths of the seed-0 bytes below end a stream exactly on each early
+# change (510/1022/2046 entries), and the last one just past the
+# 4094-entry reset
+_LZW_EDGES = {510: 254, 1022: 769, 2046: 1811}
+_LZW_RESET_AT = 3950
+
+
+@st.composite
+def _lzw_inputs(draw):
+    centers = sorted(_LZW_EDGES.values()) + [_LZW_RESET_AT]
+    n = draw(st.one_of(st.integers(0, 64), st.sampled_from(centers).flatmap(
+        lambda c: st.integers(c - 48, c + 48))))
+    alphabet = draw(st.sampled_from([2, 16, 256]))
+    seed = draw(st.integers(0, 2**32 - 1))
+    return np.random.default_rng(seed).integers(0, alphabet, n, dtype=np.uint8).tobytes()
+
+
+@given(_lzw_inputs())
+@settings(max_examples=150, deadline=None)
+def test_lzw_compress_matches_bytes_keyed_oracle(data):
+    from lzw_oracle import compress_bytes_keyed
+
+    from irivermetrics_spark.kernels import lzw
+
+    assert lzw.compress(data) == compress_bytes_keyed(data)
+
+
+def test_lzw_compress_matches_oracle_at_every_edge():
+    """The empty input, streams that end exactly on each early change
+    (the final-code widen before EOI) and one that crosses the table
+    reset."""
+    from lzw_oracle import compress_bytes_keyed
+
+    from irivermetrics_spark.kernels import lzw
+
+    assert lzw.compress(b"") == compress_bytes_keyed(b"")
+    data = np.random.default_rng(0).integers(0, 256, _LZW_RESET_AT, dtype=np.uint8).tobytes()
+    for size, n in _LZW_EDGES.items():
+        assert _lzw_end_state(data[:n]) == (size, 0)
+        assert lzw.compress(data[:n]) == compress_bytes_keyed(data[:n]), n
+    assert _lzw_end_state(data)[1] == 1
+    assert lzw.compress(data) == compress_bytes_keyed(data)
+
+
 @given(
     st.integers(1, 6), st.integers(1, 9), st.integers(1, 9),
     st.sampled_from([1, 2]), st.booleans(),

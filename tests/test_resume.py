@@ -47,7 +47,9 @@ def test_checkpointed_rerun_identical_and_skips(spark):
     assert os.path.exists(succ)
 
 
-def test_resume_rebuilds_a_checkpoint_with_an_older_schema(spark):
+def _rebuilds_an_older_water_stage(spark, dropped: list[str]) -> None:
+    """A complete water_filled stage written without the ``dropped``
+    columns is rebuilt on resume, and the metrics come out unchanged."""
     fx = synth.make_fixture(w=50, h=25, n_dates=6, n_sections=2, seed=5)
     grid = dict(gx0=fx.gx0, gy0=fx.gy0, ps=fx.pixel_size, w=fx.w, h=fx.h)
     images = pipeline.images_df(spark, fx.images)
@@ -56,18 +58,29 @@ def test_resume_rebuilds_a_checkpoint_with_an_older_schema(spark):
     m1 = (pipeline.run(spark, images, fx.reaches, grid, checkpoint_dir=ckpt)["metrics"]
           .toPandas().sort_values(keys).reset_index(drop=True))
 
-    # a complete water_filled stage as written before the fill kernel
-    # attached the zonal cell key: (scene, ds, px, py) only
     stage = os.path.join(ckpt, "water_filled")
-    old = spark.read.parquet(stage).drop("cell").toPandas()
+    full = spark.read.parquet(stage).columns
+    old = spark.read.parquet(stage).drop(*dropped).toPandas()
     spark.createDataFrame(old).write.mode("overwrite").parquet(stage)
-    assert sorted(spark.read.parquet(stage).columns) == ["ds", "px", "py", "scene"]
+    assert sorted(spark.read.parquet(stage).columns) == sorted(set(full) - set(dropped))
 
     m2 = (pipeline.run(spark, images, fx.reaches, grid, checkpoint_dir=ckpt)["metrics"]
           .toPandas().sort_values(keys).reset_index(drop=True))
-    assert "cell" in spark.read.parquet(stage).columns
+    assert spark.read.parquet(stage).columns == full
     # the rebuilt stage's lineage record replaced the old one
     assert lineage.verify_stage(spark, spark.read.parquet(stage), ckpt, "water_filled")
     assert m1["date"].tolist() == m2["date"].tolist()
     for col in ["npools", "wet_area_km2", "AWMSI", "pp_mean_%"]:
         np.testing.assert_array_equal(m1[col].to_numpy(dtype=float), m2[col].to_numpy(dtype=float))
+
+
+def test_resume_rebuilds_a_checkpoint_with_an_older_schema(spark):
+    # written before the fill kernel attached the zonal cell key and
+    # the scene axis length: (scene, ds, px, py) only
+    _rebuilds_an_older_water_stage(spark, ["cell", "n_kept"])
+
+
+def test_resume_rebuilds_a_checkpoint_without_n_kept(spark):
+    # written before the fill kernel emitted the scene axis length: a
+    # section kernel reading it would find no pp denominator
+    _rebuilds_an_older_water_stage(spark, ["n_kept"])
