@@ -260,15 +260,17 @@ def filled_water(points: DataFrame, reaches: list[dict], grid: dict,
     fill_nodata: the reference's calculate_metrics(fill_nodata=...)
     switch (src/irm_main.py:126) — False skips the temporal fill and
     just binarizes (nodata pixels stay dry).
-    out_cell_res: when set, each output row also carries its hex cell
-    id at THIS res, computed in-kernel with the exact hex_cell_udf
-    arithmetic (float64 center from int px/py), and its scene's axis
-    length ``n_t`` as ``n_kept``. The fill kernel is already a Python
-    stage over every output row, so attaching both here removes the
-    separate ArrowEvalPython round-trip the caller otherwise pays to
-    re-key the whole water table (guide §4.1: one boundary crossing
-    instead of two), and the section kernel's second join against the
-    kept dimension.
+    out_cell_res: set when the output feeds the section kernel
+    (``morphology.section_rows``); each row then also carries what
+    that kernel needs beyond the pixel: the hex cell id at THIS res, computed in-kernel with
+    the exact hex_cell_udf arithmetic (float64 center from int px/py),
+    for the cover join, and the scene's axis length ``n_t`` as
+    ``n_kept``, the persistence denominator. The fill kernel is
+    already a Python stage over every output row, so attaching both
+    here removes the separate ArrowEvalPython round-trip the caller
+    otherwise pays to re-key the whole water table (guide §4.1: one
+    boundary crossing instead of two), and the section kernel's second
+    join against the kept dimension.
     Output: (scene, date string 'ds', px, py[, cell, n_kept]) water
     pixels after fill.
     """

@@ -17,8 +17,10 @@ The section kernel holds every pool row of its (scene, section), so it
 emits the sums itself, one row per (scene, ds, section) with pools
 (``morphology.fold_sums``), and the per-section persistence summary
 (pp_mean, ra_area; A1-A3, ``morphology.persistence_summary``). The
-fold here joins both onto the dimension grid and divides: no aggregate
-runs after the kernel.
+fold here joins both onto the dimension grid and divides: nothing is
+summed after the kernel. (Each side passes through a key-only ``first``
+aggregate that only tells the optimizer its keys are unique; see
+``_one_row_per_key``.)
 
 Zero-pool (date, section) pairs — absent sums rows or label-0 rows —
 reproduce the reference's zero branch (:236-256) through the left join
@@ -56,13 +58,28 @@ def _sql_str(value) -> str:
     return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def _one_row_per_key(df: DataFrame, keys: list[str], broadcast: bool) -> DataFrame:
+    """``df``, which already holds one row per ``keys``, as a key-only
+    aggregate (``first`` of a one-row group is that row).
+
+    The optimizer then knows the keys are unique, so a plan that reads
+    only the grid's side of the fold's left joins (``count()``) drops
+    the joins and every Python node under them. A broadcast side is
+    read in one task first, so the aggregate needs no Exchange."""
+    one = df.coalesce(1) if broadcast else df
+    out = one.groupBy(*keys).agg(*(F.expr(f"first({c}) AS {c}")
+                                   for c in df.columns if c not in keys))
+    return F.broadcast(out) if broadcast else out
+
+
 def fold(sums: DataFrame, grid_df: DataFrame, persistence_df: DataFrame,
          section_length: float = NAN, broadcast_dims: bool = True) -> DataFrame:
     """A7: the section kernel's per-(scene, ds, section) sums and
     per-(scene, section) persistence rows -> the final metrics table
     (one row per scene/date/section of the grid).
 
-    broadcast_dims: hint both pre-folded tables as broadcast sides.
+    broadcast_dims: hint both pre-folded tables as broadcast sides,
+    each read in one task.
     Correct whenever the keyspace is bounded (the fixture/bench regime);
     at 10^12-image scale the sums are NOT bounded — the caller gates
     the hint on the estimated group count and lets AQE pick the join
@@ -74,12 +91,9 @@ def fold(sums: DataFrame, grid_df: DataFrame, persistence_df: DataFrame,
     # Every expression is the exact SQL form of the r1-r5 Column tree —
     # same operator order, same double literals — so a7_fold and the
     # numpy-parity suite stay value-identical.
-    sums_side = F.broadcast(sums) if broadcast_dims else sums
-    pers_side = F.broadcast(persistence_df) if broadcast_dims else persistence_df
-    j = (
-        grid_df.join(sums_side, ["scene", "ds", "section"], "left")
-        .join(pers_side, ["scene", "section"], "left")
-    )
+    j = grid_df
+    for side, keys in ((sums, ["scene", "ds", "section"]), (persistence_df, ["scene", "section"])):
+        j = j.join(_one_row_per_key(side, keys, broadcast_dims), keys, "left")
     nz = "(sum_area IS NOT NULL AND sum_area > 0)"
     L = "double('NaN')" if math.isnan(section_length) else f"{float(section_length)!r}D"
     out = j.selectExpr(

@@ -26,9 +26,10 @@ Shuffle inventory (by design, data shrinks monotonically):
  by scene (kept dimension with its time axis, date-pruning list and
  validity probe: one scan, one persist, one small collect),
  2. fill groupBy (scene, fill_cell), 3. section groupBy (scene,
- section), 4. final orderBy. No aggregate runs after the section
+ section), 4. final orderBy. Nothing is summed after the section
  kernel: the fold broadcasts its pre-folded rows onto the dimension
- grid. With export_PP, ``api.calculate_metrics`` adds 5.
+ grid, each side through a key-only aggregate in one task (no
+ shuffle). With export_PP, ``api.calculate_metrics`` adds 5.
  groupBy(scene) of the per-pixel persistence rows: the GeoTIFF writer
  re-emits them into the parquet sink, so both persistence sinks are
  one action, run beside the metrics CSV. The spatial joins (the cover

@@ -12,8 +12,9 @@ Run to verify the plans the engine is designed around:
 - the section kernel's input joins only the broadcast cover on
   ``cell`` (a BroadcastHashJoin, never a sort-merge on points) and
   feeds one FlatMapGroupsInPandas per (scene, section)
-- the metrics plan aggregates nothing after the section kernel: it
-  broadcast-joins the kernel's pre-folded rows onto the grid
+- the metrics plan sums nothing after the section kernel: it
+  broadcast-joins the kernel's pre-folded rows onto the grid, each
+  side through a key-only ``first`` aggregate with no Exchange
 - parquet scans show PushedFilters / pruned ReadSchema
 - whole-stage codegen spans cover the relational stages
 - AQE is active on the aggregate shuffles
