@@ -174,8 +174,8 @@ def sniff_format(buf: bytes) -> str:
         return "flac"
     if b[:3] == b"ID3" and len(b) > 9 and b[3] != 0xFF and b[4] != 0xFF:
         # ID3v2-tagged audio — almost always mp3 (an id3-prefixed flac
-        # resolves precisely in probe_audio_info, which sees past the
-        # tag; either way the payload diverts out of the image path)
+        # is tagged mp3 too; either way the payload diverts out of the
+        # image path)
         return "mp3"
     if len(b) >= 4 and b[0] == 0xFF and (b[1] & 0xE0) == 0xE0:
         from .kernels.audioprobe import _parse_mp3_header
@@ -210,19 +210,10 @@ def sniff_format(buf: bytes) -> str:
 # r6 closed gif (kernels/gif.py: GIF-variant LZW, interlace, local
 # palettes) and bmp (kernels/bmp.py: 8/24/32-bit BI_RGB) — the last
 # diverted web-image formats. Audio ('wav') stays out: it is not an
-# image and routes to audio_features instead
+# image
 DECODABLE_DETAILS = frozenset(
     {FMT_RAW16, FMT_QLOSSY, "tiff", "jpeg", "png", "gif", "bmp",
      "webp-vp8l", "webp-vp8", "webp-vp8x", "webp-vp8x-anim"})
-
-
-def psnr(a: np.ndarray, b: np.ndarray, peak: float = float(REFLECTANCE_MAX)) -> float:
-    """Peak signal-to-noise ratio in dB; inf when identical."""
-    diff = a.astype(np.float64) - b.astype(np.float64)
-    mse = float(np.mean(diff * diff))
-    if mse == 0.0:
-        return float("inf")
-    return 10.0 * np.log10(peak * peak / mse)
 
 
 def phash64(arr: np.ndarray) -> int:

@@ -1,15 +1,11 @@
-"""From-scratch spatial cell indexes (H3-style hex, S2-style quadtree).
+"""From-scratch spatial cell index (H3-style hex).
 
 The sandbox has no h3/s2 libraries, and the engine's zonal join needs a
-discrete-grid key to turn "point in polygon" into an equi-join. Two
-families are provided, both pure vectorized numpy over planar
-(projected-meter) coordinates:
-
-- **hex** (H3-style): pointy-top hexagons in axial (q, r) coordinates,
-  resolutions 7..11 with edge lengths halving per resolution. Supports
-  point->cell, cell->center, k-ring neighborhoods, parent/child.
-- **quad** (S2-style): Z-order (Morton) quadtree cells over a fixed
-  world box, levels 0..26.
+discrete-grid key to turn "point in polygon" into an equi-join. The
+cells are pointy-top hexagons in axial (q, r) coordinates, resolutions
+7..11 with edge lengths halving per resolution, in pure vectorized numpy
+over planar (projected-meter) coordinates. Supports point->cell,
+cell->center, k-ring neighborhoods, parent/child.
 
 Cell ids pack (kind, res, q, r) into a signed int64 so they flow
 through Spark as LongType join keys.
@@ -36,7 +32,6 @@ def hex_edge(res: int) -> float:
 _SQRT3 = np.sqrt(3.0)
 _OFFSET = 1 << 26  # axial coords offset to stay non-negative in packing
 _KIND_HEX = 0
-_KIND_QUAD = 1
 
 
 def _pack(kind: int, res: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -129,50 +124,3 @@ def _kring_offsets(k: int) -> np.ndarray:
         for dr in range(max(-k, -dq - k), min(k, -dq + k) + 1):
             out.append((dq, dr))
     return np.asarray(out, dtype=np.int64)
-
-
-def hex_distance(cell_a: np.ndarray, cell_b: np.ndarray) -> np.ndarray:
-    """Hex grid distance between same-resolution cells."""
-    _, _, qa, ra = _unpack(cell_a)
-    _, _, qb, rb = _unpack(cell_b)
-    dq = qa - qb
-    dr = ra - rb
-    return (np.abs(dq) + np.abs(dr) + np.abs(dq + dr)) // 2
-
-
-def quad_cell(x: np.ndarray, y: np.ndarray, level: int,
-              x0: float = -2.0e7, y0: float = -2.0e7, extent: float = 4.0e7) -> np.ndarray:
-    """S2-style Morton quadtree cell over a fixed world box (vectorized)."""
-    n = 1 << level
-    xi = np.clip(((np.asarray(x, dtype=np.float64) - x0) / extent * n).astype(np.int64), 0, n - 1)
-    yi = np.clip(((np.asarray(y, dtype=np.float64) - y0) / extent * n).astype(np.int64), 0, n - 1)
-    return (
-        (np.int64(_KIND_QUAD) << 61)
-        | (np.int64(level) << 56)
-        | _morton(xi, yi)
-    )
-
-
-def quad_parent(cell: np.ndarray, parent_level: int) -> np.ndarray:
-    cell = np.asarray(cell, dtype=np.int64)
-    level = (cell >> 56) & np.int64(0x1F)
-    code = cell & np.int64((1 << 56) - 1)
-    shift = 2 * (level - parent_level)
-    return (
-        (np.int64(_KIND_QUAD) << 61)
-        | (np.int64(parent_level) << 56)
-        | (code >> shift)
-    )
-
-
-def _morton(xi: np.ndarray, yi: np.ndarray) -> np.ndarray:
-    """Interleave bits of two int64 arrays (<=28 bits each)."""
-    def spread(v: np.ndarray) -> np.ndarray:
-        v = v.astype(np.uint64)
-        v = (v | (v << 16)) & np.uint64(0x0000FFFF0000FFFF)
-        v = (v | (v << 8)) & np.uint64(0x00FF00FF00FF00FF)
-        v = (v | (v << 4)) & np.uint64(0x0F0F0F0F0F0F0F0F)
-        v = (v | (v << 2)) & np.uint64(0x3333333333333333)
-        v = (v | (v << 1)) & np.uint64(0x5555555555555555)
-        return v
-    return (spread(xi) | (spread(yi) << 1)).astype(np.int64)

@@ -1,29 +1,12 @@
-"""Header-only compressed-audio probes — mp3 (frame-header walk +
-Xing/Info VBR tag) and FLAC (STREAMINFO block), unified with the WAV
-probe behind ``probe_audio_info`` (VERDICT r6 missing #4: a 100 TB
-multimodal inventory meets mp3/flac, and they previously landed in
-quarantine instead of being counted).
+"""MPEG audio frame-header parser, used by ``codecs.sniff_format`` to
+tell an mp3 payload (no ID3 tag) from an image whose bytes happen to
+start with an 0xFF sync byte: a JPEG's ``FF D8 FF E0`` must not be
+taken for an mp3 frame.
 
-Contract (same as codecs.probe_image_info / wav.probe_wav_info):
-header-only — a fixed number of bytes parsed per file, NEVER
-O(payload); never raises — corrupt/alien payloads return
-fmt_detail-only rows with null fields.
-
-``n_frames`` always means SAMPLE frames (inter-channel samples), the
-same unit the WAV probe reports, so ``duration_s = n_frames /
-sample_rate`` holds across formats: FLAC's STREAMINFO stores it
-directly, mp3 converts tag frame counts via samples-per-frame.
-Formats from their public specs: FLAC format documents (streaminfo
-bit layout), ISO/IEC 11172-3 / 13818-3 frame headers, the de-facto
-Xing/Info VBR tag layout.
+Layout from ISO/IEC 11172-3 / 13818-3 (MPEG-1/2/2.5, layers I-III).
 """
 
 from __future__ import annotations
-
-_EMPTY = dict(fmt_detail="unknown", sample_rate=None, channels=None,
-              bits=None, n_frames=None, duration_s=None)
-
-# ---------------------------------------------------------------- mp3
 
 # bitrate tables in kbps, index 1..14 (0 = free, 15 = bad)
 _BR_V1_L1 = (0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448)
@@ -35,17 +18,6 @@ _BR_V2_L23 = (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160)
 _SR_V1 = (44100, 48000, 32000)
 _SR_V2 = (22050, 24000, 16000)
 _SR_V25 = (11025, 12000, 8000)
-
-_MAX_SYNC_SCAN = 65536  # bounded sync search — header-only contract
-
-
-def _id3v2_size(b: bytes) -> int:
-    """Bytes to skip for a leading ID3v2 tag (0 if none)."""
-    if len(b) >= 10 and b[:3] == b"ID3" and b[3] != 0xFF and b[4] != 0xFF:
-        size = ((b[6] & 0x7F) << 21) | ((b[7] & 0x7F) << 14) | \
-               ((b[8] & 0x7F) << 7) | (b[9] & 0x7F)
-        return 10 + size + (10 if b[5] & 0x10 else 0)
-    return 0
 
 
 def _parse_mp3_header(b: bytes, i: int) -> dict | None:
@@ -84,113 +56,3 @@ def _parse_mp3_header(b: bytes, i: int) -> dict | None:
     side = (17 if mode == 3 else 32) if v1 else (9 if mode == 3 else 17)
     return dict(rate=rate, channels=1 if mode == 3 else 2, spf=spf,
                 bitrate=bitrate, frame_size=frame_size, crc=crc, side=side)
-
-
-def probe_mp3_info(buf) -> dict:
-    """mp3 metadata from the first valid frame header (+ the Xing/Info
-    VBR tag when present, which carries the exact frame count). CBR
-    files without a tag estimate duration from the first frame's
-    bitrate — the standard player behavior. Sync search and tag parse
-    are bounded; the payload is never walked."""
-    out = dict(_EMPTY)
-    try:
-        b = bytes(buf) if buf is not None else b""
-        start = _id3v2_size(b)
-        if start >= len(b):
-            return out
-        limit = min(len(b) - 3, start + _MAX_SYNC_SCAN)
-        h = None
-        i = start
-        while i < limit:
-            j = b.find(b"\xff", i, limit)
-            if j < 0:
-                return out
-            h = _parse_mp3_header(b, j)
-            if h is not None:
-                # confirm: the next frame (when sizable and inside the
-                # buffer) must also start with a valid header — kills
-                # false syncs inside arbitrary binary
-                if h["frame_size"] and j + h["frame_size"] + 4 <= len(b) \
-                        and _parse_mp3_header(b, j + h["frame_size"]) is None:
-                    h = None
-                else:
-                    i = j
-                    break
-            i = j + 1
-        if h is None:
-            return out
-        out.update(fmt_detail="mp3", sample_rate=h["rate"],
-                   channels=h["channels"])
-        # Xing/Info tag right after the side info (writers disagree on
-        # whether the 2 CRC bytes count — accept either position)
-        n_mp3_frames = None
-        for extra in ((2, 0) if h["crc"] else (0,)):
-            p = i + 4 + extra + h["side"]
-            if b[p:p + 4] in (b"Xing", b"Info") and len(b) >= p + 12:
-                flags = int.from_bytes(b[p + 4:p + 8], "big")
-                if flags & 1:
-                    n_mp3_frames = int.from_bytes(b[p + 8:p + 12], "big")
-                break
-        if n_mp3_frames is None and h["bitrate"]:
-            n_mp3_frames = max(0, (len(b) - i)) // h["frame_size"]
-        if n_mp3_frames is not None:
-            n = n_mp3_frames * h["spf"]
-            out.update(n_frames=int(n), duration_s=float(n / h["rate"]))
-    except Exception:
-        pass
-    return out
-
-
-# --------------------------------------------------------------- flac
-
-def probe_flac_info(buf) -> dict:
-    """FLAC metadata from the mandatory STREAMINFO block (always the
-    first metadata block after the 'fLaC' marker). total_samples == 0
-    means 'unknown' per spec and yields null frames/duration."""
-    out = dict(_EMPTY)
-    try:
-        b = bytes(buf) if buf is not None else b""
-        start = _id3v2_size(b)  # id3-prefixed flac exists in the wild
-        if b[start:start + 4] != b"fLaC":
-            return out
-        out["fmt_detail"] = "flac"
-        hdr = start + 4
-        if len(b) < hdr + 4 or (b[hdr] & 0x7F) != 0:  # STREAMINFO type 0
-            return out
-        si = b[hdr + 4:hdr + 4 + 34]
-        if len(si) < 18:
-            return out
-        u = int.from_bytes(si[10:18], "big")
-        rate = u >> 44
-        channels = ((u >> 41) & 0x7) + 1
-        bits = ((u >> 36) & 0x1F) + 1
-        total = u & ((1 << 36) - 1)
-        if rate == 0:
-            return out
-        out.update(sample_rate=int(rate), channels=int(channels),
-                   bits=int(bits))
-        if total:
-            out.update(n_frames=int(total),
-                       duration_s=float(total / rate))
-    except Exception:
-        pass
-    return out
-
-
-# ------------------------------------------------------------ dispatch
-
-def probe_audio_info(buf) -> dict:
-    """Unified header-only audio probe: WAV -> FLAC -> mp3 -> unknown.
-    Never raises."""
-    from . import wav as wavk
-
-    try:
-        b = bytes(buf) if buf is not None else b""
-    except Exception:
-        return dict(_EMPTY)
-    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-        return wavk.probe_wav_info(b)
-    start = _id3v2_size(b)
-    if b[start:start + 4] == b"fLaC":
-        return probe_flac_info(b)
-    return probe_mp3_info(b)

@@ -1,5 +1,5 @@
-"""From-scratch Windows BMP (DIB) codec — read 8-bit palette / 24-bit
-BGR / 32-bit BGRA uncompressed (BI_RGB) bitmaps, write 24-bit.
+"""From-scratch Windows BMP (DIB) decoder — 8-bit palette / 24-bit
+BGR / 32-bit BGRA uncompressed (BI_RGB) bitmaps and 8-bit BI_RLE8.
 
 The reference engine has no BMP surface (GeoTIFF/NetCDF only); BMP
 rows show up in web-crawl image tables, and until r6 they diverted to
@@ -111,27 +111,3 @@ def _decode_rle8(data: bytes, w: int, h: int) -> np.ndarray:
         if y > h:
             break
     return out
-
-
-def encode_bmp(arr: np.ndarray) -> bytes:
-    """(3, h, w) or (1, h, w)/(h, w) values 0-255 -> 24-bit BI_RGB."""
-    a = np.asarray(arr)
-    if a.ndim == 2:
-        a = a[None]
-    if a.ndim != 3 or a.shape[0] not in (1, 3):
-        raise ValueError(f"expected (1|3, h, w), got {a.shape}")
-    if a.shape[0] == 1:
-        a = np.repeat(a, 3, axis=0)
-    if a.max(initial=0) > 255:
-        raise ValueError("BMP encodes 8-bit samples (0-255)")
-    _, h, w = a.shape
-    bgr = a[[2, 1, 0]].transpose(1, 2, 0).astype(np.uint8)[::-1]  # bottom-up
-    stride = (w * 3 + 3) & ~3
-    rows = np.zeros((h, stride), dtype=np.uint8)
-    rows[:, :w * 3] = bgr.reshape(h, w * 3)
-    data = rows.tobytes()
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data),
-                       2835, 2835, 0, 0)
-    off = 14 + 40
-    head = b"BM" + struct.pack("<IHHI", off + len(data), 0, 0, off)
-    return head + info + data

@@ -16,7 +16,7 @@ Still consumers get frame 0; ``count_images`` counts image
 descriptors (a GIF89a animation's frame count). Animation compositing
 follows player semantics: transparent pixels show the underlying
 canvas through, disposal methods restore background / the pre-frame
-canvas (see ``iter_frames``). Returns (3, h, w) uint16 with native
+canvas (see ``_composite``). Returns (3, h, w) uint16 with native
 0-255 values.
 """
 from __future__ import annotations
@@ -222,20 +222,6 @@ def _composite(buf: bytes):
 
 def _to_planes(canvas: np.ndarray) -> np.ndarray:
     return np.ascontiguousarray(canvas.transpose(2, 0, 1)).astype(np.uint16)
-
-
-def iter_frames(buf: bytes):
-    """Yield every COMPOSITED frame — GIF89a player semantics, the
-    same idea as kernels/webpanim for animated WebP: each image
-    descriptor paints onto the persistent logical-screen canvas at
-    (left, top), the preceding Graphic Control Extension supplies the
-    transparent index (those pixels show the underlying canvas
-    through) and the disposal method applied AFTER the frame shows
-    (1/0 keep, 2 restore background in the frame rect, 3 restore the
-    pre-frame canvas). Every yield is an independent (3, h, w) uint16
-    copy."""
-    for _, canvas in _composite(buf):
-        yield _to_planes(canvas)
 
 
 def sample_frames(buf: bytes, every_k: int = 1):

@@ -1,13 +1,12 @@
-"""From-scratch POSIX ustar (tar) kernel — deterministic writer +
-bounds-checked reader for WebDataset-style training shards.
+"""From-scratch POSIX ustar (tar) writer for WebDataset-style training
+shards.
 
 Why tar at 100 TB: the standard container for multimodal training data
 is the WebDataset shard — a plain tar whose members group into samples
 by basename ("000017.jpg" + "000017.txt" + "000017.json"). Trainers
 stream shards sequentially (tar has no index to seek), so the engine
-must WRITE deterministic, byte-stable shards (re-runs produce
-bit-identical artifacts → cacheable, diffable) and READ arbitrary tars
-defensively (crawl-sourced archives are hostile input).
+must write deterministic, byte-stable shards (re-runs produce
+bit-identical artifacts → cacheable, diffable).
 
 Format (public POSIX.1-1988/2001 ustar layout, reimplemented):
 512-byte header blocks — name(100) mode(8) uid(8) gid(8) size(12)
@@ -15,10 +14,7 @@ mtime(12) chksum(8) typeflag(1) linkname(100) magic(6)="ustar\\0"
 version(2)="00" uname(32) gname(32) devmajor(8) devminor(8)
 prefix(155) — then the payload padded to a 512 multiple; the archive
 ends with two zero blocks. The checksum is the byte sum of the header
-with the chksum field as 8 spaces. The reader additionally accepts two
-common extensions the writer never emits: GNU base-256 size fields
-(high bit set — members > 8 GiB) and GNU 'L' longname records, so
-stdlib/GNU-produced tars parse too.
+with the chksum field as 8 spaces.
 
 Writer determinism: mode 0644, uid=gid=0, mtime=0, empty uname/gname —
 the bytes are a pure function of the (name, payload) list.
@@ -80,89 +76,3 @@ def write_tar(members: list[tuple[str, bytes]]) -> bytes:
         out += b"\x00" * pad
     out += b"\x00" * (2 * BLOCK)
     return bytes(out)
-
-
-def _field_int(raw: bytes) -> int:
-    """Numeric header field: octal (possibly space/NUL padded) or GNU
-    base-256 (first byte has the high bit set)."""
-    if raw and raw[0] & 0x80:
-        n = raw[0] & 0x7F
-        for b in raw[1:]:
-            n = (n << 8) | b
-        return n
-    s = raw.split(b"\x00", 1)[0].strip()
-    return int(s, 8) if s else 0
-
-
-def iter_tar(blob: bytes):
-    """Yield ``(name, payload_bytes)`` for every regular file in the
-    archive. Raises ValueError on structural corruption (bad checksum,
-    truncated payload, runaway longname) — callers in the Spark layer
-    catch and dead-letter. Directories/links are skipped; GNU 'L'
-    longname records apply to the following member."""
-    blob = bytes(blob)
-    off = 0
-    pending_name: str | None = None
-    while off + BLOCK <= len(blob):
-        h = blob[off:off + BLOCK]
-        if h == b"\x00" * BLOCK:
-            return  # end-of-archive marker
-        stored = h[148:156].split(b"\x00", 1)[0].strip()
-        calc = sum(h[:148]) + sum(h[156:]) + 8 * 0x20
-        # historic writers summed SIGNED chars; accept both (as stdlib does)
-        calc_signed = calc - 256 * sum(1 for b in h[:148] if b > 127) \
-            - 256 * sum(1 for b in h[156:] if b > 127)
-        try:
-            ok = int(stored, 8) in (calc, calc_signed)
-        except ValueError:
-            ok = False
-        if not ok:
-            raise ValueError(f"tar header checksum mismatch at offset {off}")
-        size = _field_int(h[124:136])
-        if size < 0 or off + BLOCK + size > len(blob):
-            raise ValueError(f"tar member at {off} truncated (size {size})")
-        typeflag = h[156:157]
-        data_off = off + BLOCK
-        off = data_off + size + (-size % BLOCK)
-        if typeflag == b"L":  # GNU longname: payload = next member's name
-            if size > 1 << 16:
-                raise ValueError("tar longname record too large")
-            pending_name = blob[data_off:data_off + size].split(b"\x00", 1)[0] \
-                .decode("utf-8", "replace")
-            continue
-        if typeflag == b"x":  # pax extended header: records are
-            # "<len> <key>=<value>\n" where <len> counts the whole
-            # record; 'path' overrides the NEXT member's name (stdlib
-            # tarfile's DEFAULT format stores long names this way)
-            if size > 1 << 20:
-                raise ValueError("tar pax header too large")
-            data = blob[data_off:data_off + size]
-            j = 0
-            while j < len(data):
-                sp = data.find(b" ", j)
-                if sp < 0:
-                    break
-                try:
-                    rl = int(data[j:sp])
-                except ValueError:
-                    break
-                if rl <= sp - j or j + rl > len(data):
-                    break
-                key, eq, value = data[sp + 1:j + rl - 1].partition(b"=")
-                if eq and key == b"path":
-                    pending_name = value.decode("utf-8", "replace")
-                j += rl
-            continue
-        if typeflag not in (b"0", b"\x00"):
-            pending_name = None
-            continue  # dir/link/device/'g' global pax: skip payload
-        if pending_name is not None:
-            name = pending_name
-            pending_name = None
-        else:
-            base = h[0:100].split(b"\x00", 1)[0].decode("utf-8", "replace")
-            prefix = h[345:500].split(b"\x00", 1)[0].decode("utf-8", "replace")
-            name = f"{prefix}/{base}" if prefix else base
-        yield name, blob[data_off:data_off + size]
-    if off < len(blob):
-        raise ValueError("tar archive ends mid-header")

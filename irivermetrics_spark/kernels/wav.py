@@ -1,4 +1,4 @@
-"""From-scratch RIFF/WAVE PCM codec (read + write, no libraries).
+"""From-scratch RIFF/WAVE PCM writer (no libraries).
 
 The reference engine has no audio surface at all (its formats are
 GeoTIFF/NetCDF — src/utils/wd_batch.py writes tif); this kernel serves
@@ -7,17 +7,14 @@ audio arrives as WAV payloads in a binary column.
 
 Public format, implemented from the RIFF/WAVE layout: ``RIFF`` size
 ``WAVE`` header, then word-aligned chunks — ``fmt `` (format tag
-1=integer PCM, 3=IEEE float, 0xFFFE=WAVE_FORMAT_EXTENSIBLE with the
-real tag in the first two bytes of the SubFormat GUID) and ``data``
-(interleaved frames). Unknown chunks (LIST/fact/cue/bext/...) are
-skipped; odd-sized chunk payloads carry one pad byte. Everything is
+1=integer PCM, 3=IEEE float) and ``data`` (interleaved frames);
+odd-sized chunk payloads carry one pad byte. Everything is
 little-endian.
 
 Supported sample layouts: unsigned 8-bit (offset binary, per spec),
 signed 16/24/32-bit PCM, float32/float64. 24-bit frames are
-sign-extended into int32 on read and truncated back to 3 bytes on
-write. The stdlib ``wave`` module is used in tests as an independent
-conformance oracle — never here.
+truncated to 3 bytes. The stdlib ``wave`` module is used in tests as an
+independent conformance oracle — never here.
 """
 from __future__ import annotations
 
@@ -27,7 +24,6 @@ import numpy as np
 
 _TAG_PCM = 1
 _TAG_FLOAT = 3
-_TAG_EXTENSIBLE = 0xFFFE
 
 
 def write_wav(samples: np.ndarray, rate: int, bits: int | None = None) -> bytes:
@@ -43,7 +39,7 @@ def write_wav(samples: np.ndarray, rate: int, bits: int | None = None) -> bytes:
     n, ch = a.shape
     if ch < 1:
         # fail at the producer: a channels=0 header is invalid WAV and
-        # every reader (including read_wav) rejects it far from the bug
+        # every reader rejects it far from the bug
         raise ValueError("samples must have at least one channel")
     if a.dtype == np.uint8:
         tag, width = _TAG_PCM, 1
@@ -82,151 +78,3 @@ def write_wav(samples: np.ndarray, rate: int, bits: int | None = None) -> bytes:
     if len(payload) & 1:
         chunks += b"\x00"
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def read_wav(buf: bytes) -> tuple[np.ndarray, int, int]:
-    """Decode WAV bytes → ``(samples, rate, bits)``. ``samples`` is
-    always 2-D (frames, channels) in the native dtype: uint8 / int16 /
-    int32 (24-bit sign-extended) / float32 / float64. A data chunk
-    whose declared size overruns the buffer (truncated crawl payload)
-    is clamped to whole frames rather than rejected."""
-    b = bytes(buf)
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos, end = 12, len(b)
-    tag = ch = rate = width_bits = None
-    data = None
-    while pos + 8 <= end:
-        cid = b[pos:pos + 4]
-        (size,) = struct.unpack_from("<I", b, pos + 4)
-        body = b[pos + 8:pos + 8 + size]
-        if cid == b"fmt ":
-            if len(body) < 16:
-                raise ValueError("fmt chunk too short")
-            tag, ch, rate, _br, _ba, width_bits = struct.unpack_from("<HHIIHH", body, 0)
-            if tag == _TAG_EXTENSIBLE:
-                if len(body) < 26:
-                    raise ValueError("extensible fmt chunk too short")
-                # actual tag = first two bytes of the SubFormat GUID
-                (tag,) = struct.unpack_from("<H", body, 24)
-        elif cid == b"data":
-            if size == 0 and pos + 8 < end:
-                # unfinalized streaming-encoder file: the size field was
-                # never patched. Convention (ffmpeg does the same):
-                # everything to EOF is sample data. Without this the
-                # walker would misread PCM bytes as chunk headers and
-                # return 0 frames silently.
-                data = b[pos + 8:]
-                break
-            data = body  # may be shorter than `size` (truncated payload)
-        pos += 8 + size + (size & 1)
-    if tag is None or data is None:
-        raise ValueError("missing fmt or data chunk")
-    if ch is None or ch < 1 or rate is None or rate < 1:
-        raise ValueError(f"bad fmt fields: channels={ch} rate={rate}")
-    if not width_bits or width_bits % 8:
-        # 12/20-bit PCM rides a 2/4-byte container (block align tells);
-        # parsing the nominal bit count as a byte width would silently
-        # shred frames — reject rather than misread
-        raise ValueError(f"unsupported wav sample width: {width_bits} bits")
-    width = width_bits // 8
-    if _ba and _ba != width * ch:
-        raise ValueError(
-            f"block align {_ba} inconsistent with {width_bits}-bit x {ch}ch frames")
-    if tag == _TAG_PCM and width in (1, 2, 3, 4):
-        dt = {1: "<u1", 2: "<i2", 4: "<i4"}.get(width)
-    elif tag == _TAG_FLOAT and width in (4, 8):
-        dt = {4: "<f4", 8: "<f8"}[width]
-    else:
-        raise ValueError(f"unsupported wav format tag={tag} bits={width_bits}")
-    frame_bytes = width * ch
-    n = len(data) // frame_bytes  # clamp to whole frames
-    data = data[:n * frame_bytes]
-    if width == 3:
-        raw = np.frombuffer(data, dtype=np.uint8).reshape(n * ch, 3)
-        out = (raw[:, 0].astype(np.int32)
-               | (raw[:, 1].astype(np.int32) << 8)
-               | (raw[:, 2].astype(np.int8).astype(np.int32) << 16))
-        return out.reshape(n, ch), int(rate), 24
-    out = np.frombuffer(data, dtype=dt).reshape(n, ch)
-    return out, int(rate), width * 8
-
-
-def to_float(samples: np.ndarray, bits: int) -> np.ndarray:
-    """Normalize native-domain samples to float64 in [-1, 1): offset
-    binary for 8-bit, two's complement full scale for 16/24/32, floats
-    pass through. The one normalization every level feature (rms, peak,
-    silence ratio) is defined over, so clips compare across bit depths."""
-    a = np.asarray(samples)
-    if a.dtype.kind == "f":
-        return a.astype(np.float64, copy=False)
-    if bits == 8:
-        return (a.astype(np.float64) - 128.0) / 128.0
-    return a.astype(np.float64) / float(1 << (bits - 1))
-
-
-def resample(samples: np.ndarray, rate_in: int, rate_out: int) -> np.ndarray:
-    """Linear-interpolation resampling, per channel — the cheap
-    deterministic rate normalization run before batch feature
-    extraction (a real deployment swaps in a windowed-sinc kernel at
-    this seam). Output length = round(n * rate_out / rate_in);
-    endpoints map exactly (first sample preserved). Integer inputs
-    round back to their native dtype."""
-    a = np.asarray(samples)
-    if a.ndim == 1:
-        a = a[:, None]
-    if rate_in < 1 or rate_out < 1:
-        raise ValueError("rates must be >= 1")
-    n, ch = a.shape
-    if n == 0 or rate_in == rate_out:
-        return a.copy()
-    m = max(1, int(round(n * rate_out / rate_in)))
-    # sample positions in input time: preserve t=0, spacing rate_in/rate_out
-    pos = np.arange(m) * (rate_in / rate_out)
-    pos = np.clip(pos, 0, n - 1)
-    lo = np.floor(pos).astype(np.int64)
-    hi = np.minimum(lo + 1, n - 1)
-    frac = (pos - lo)[:, None]
-    x = a.astype(np.float64)
-    out = x[lo] * (1.0 - frac) + x[hi] * frac
-    if a.dtype.kind in "iu":
-        return np.round(out).astype(a.dtype)
-    return out.astype(a.dtype)
-
-
-def probe_wav_info(buf: bytes) -> dict:
-    """Header-only WAV metadata — rate / channels / bits / frame count
-    / duration without touching the sample data (the audio analog of
-    codecs.probe_image_info: inventory and duration filters run
-    scan-bound BEFORE any decode). Never raises; unknown or corrupt
-    payloads return fmt_detail-only rows with null fields."""
-    out = dict(fmt_detail="unknown", sample_rate=None, channels=None,
-               bits=None, n_frames=None, duration_s=None)
-    try:
-        b = bytes(buf) if buf is not None else b""
-        if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-            return out
-        out["fmt_detail"] = "wav"
-        pos, end = 12, len(b)
-        ch = rate = wbits = None
-        data_len = None
-        while pos + 8 <= end:
-            cid = b[pos:pos + 4]
-            (size,) = struct.unpack_from("<I", b, pos + 4)
-            if cid == b"fmt " and pos + 8 + 16 <= end:
-                _t, ch, rate, _br, _ba, wbits = struct.unpack_from(
-                    "<HHIIHH", b, pos + 8)
-            elif cid == b"data":
-                avail = end - (pos + 8)
-                data_len = avail if size == 0 else min(size, avail)
-                break  # header fields precede data in practice
-            pos += 8 + size + (size & 1)
-        if ch and rate and wbits and wbits % 8 == 0 and data_len is not None:
-            frame = (wbits // 8) * ch
-            n = data_len // frame
-            out.update(sample_rate=int(rate), channels=int(ch),
-                       bits=int(wbits), n_frames=int(n),
-                       duration_s=float(n / rate))
-    except Exception:
-        pass
-    return out

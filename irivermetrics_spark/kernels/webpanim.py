@@ -25,13 +25,6 @@ all — this closes the engine's last quarantined image subformat so a
 web-crawl image table's animated rows decode (first frame for still
 consumers, every frame for the frame-sampling operator) instead of
 diverting to the dead-letter sink.
-
-``encode_webp_anim`` assembles a spec-conforming animation from VP8L
-frames produced by the engine's own lossless encoder; it exists so
-round-trip and cross-codec tests can pin every decoder path (the
-embedded per-frame bitstreams are additionally verified against the
-system libwebp in tests/test_webp_anim.py) and doubles as a sink for
-the frame-sampling operator's inverse.
 """
 
 from __future__ import annotations
@@ -73,12 +66,6 @@ class AnimInfo:
 
 def _u24(b: bytes, off: int) -> int:
     return b[off] | (b[off + 1] << 8) | (b[off + 2] << 16)
-
-
-def _p24(v: int) -> bytes:
-    if not 0 <= v < 1 << 24:
-        raise ValueError(f"value {v} out of 24-bit range")
-    return bytes((v & 0xFF, (v >> 8) & 0xFF, (v >> 16) & 0xFF))
 
 
 def iter_chunks(buf: bytes, start: int = 12):
@@ -263,67 +250,5 @@ def decode_webp_anim_first(buf: bytes,
     return canvas
 
 
-def _still_vp8l_payload(frame_argb: np.ndarray, **enc_opts) -> bytes:
-    """Encode (4,h,w) ARGB with the engine's VP8L encoder and return the
-    bare VP8L chunk payload for embedding into an ANMF chunk."""
-    from . import webp as _webp
-
-    still = _webp.encode_vp8l(frame_argb, **enc_opts)
-    for tag, body in iter_chunks(still):
-        if tag == b"VP8L":
-            return body
-    raise AssertionError("encoder produced no VP8L chunk")
-
-
 def _chunk(tag: bytes, body: bytes) -> bytes:
     return tag + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-
-def encode_webp_anim(
-    frames,
-    durations_ms,
-    offsets=None,
-    blend=None,
-    dispose=None,
-    canvas_wh: tuple[int, int] | None = None,
-    loop_count: int = 0,
-    bgcolor_bgra: tuple[int, int, int, int] = (0, 0, 0, 0),
-    **enc_opts,
-) -> bytes:
-    """Assemble an animated .webp from (4,h,w) uint8 ARGB frames.
-
-    ``offsets`` are (x, y) per frame and must be even (the container
-    stores them halved); ``blend[i]`` True = alpha-blend (flag bit
-    clear), ``dispose[i]`` True = dispose-to-background.  Frames are
-    VP8L-encoded losslessly by the engine's own encoder, so
-    decode(encode(...)) is exact.
-    """
-    n = len(frames)
-    if len(durations_ms) != n:
-        raise ValueError("durations length mismatch")
-    offsets = offsets or [(0, 0)] * n
-    blend = [True] * n if blend is None else list(blend)
-    dispose = [False] * n if dispose is None else list(dispose)
-    if canvas_wh is None:
-        cw = max(off[0] + f.shape[2] for off, f in zip(offsets, frames))
-        ch = max(off[1] + f.shape[1] for off, f in zip(offsets, frames))
-    else:
-        cw, ch = canvas_wh
-    has_alpha = any((np.asarray(f)[0] != 255).any() for f in frames)
-    anmfs = []
-    for f, (x, y), bl, dsp, dur in zip(frames, offsets, blend, dispose, durations_ms):
-        f = np.ascontiguousarray(np.asarray(f, dtype=np.uint8))
-        _, fh, fw = f.shape
-        if x % 2 or y % 2:
-            raise ValueError("frame offsets must be even")
-        if x + fw > cw or y + fh > ch:
-            raise ValueError("frame exceeds canvas")
-        head = (_p24(x // 2) + _p24(y // 2) + _p24(fw - 1) + _p24(fh - 1)
-                + _p24(int(dur)) + bytes([(0 if bl else 2) | (1 if dsp else 0)]))
-        body = head + _chunk(b"VP8L", _still_vp8l_payload(f, **enc_opts))
-        anmfs.append(_chunk(b"ANMF", body))
-    flags = 0x02 | (0x10 if has_alpha else 0)
-    vp8x = bytes([flags, 0, 0, 0]) + _p24(cw - 1) + _p24(ch - 1)
-    anim = bytes(bgcolor_bgra) + struct.pack("<H", loop_count)
-    riff = b"WEBP" + _chunk(b"VP8X", vp8x) + _chunk(b"ANIM", anim) + b"".join(anmfs)
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff

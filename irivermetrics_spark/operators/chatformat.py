@@ -109,14 +109,3 @@ def format_chat(docs: DataFrame, messages_col: str = "messages",
             .withColumn(out_col, F.when(valid, folded["text"]))
             .withColumn(spans_col, F.when(valid, folded["spans"]))
             .withColumn("n_turns", F.when(valid, F.size(msgs)).cast("int")))
-
-
-def parse_chat_json(docs: DataFrame, json_col: str = "messages_json",
-                    messages_col: str = "messages") -> DataFrame:
-    """JSONL-style ``[{"role": ..., "content": ...}, ...]`` strings →
-    the typed message array ``format_chat`` consumes (JVM from_json;
-    unparseable rows get NULL, same dead-letter convention)."""
-    return docs.withColumn(
-        messages_col,
-        F.from_json(F.col(json_col),
-                    "array<struct<role:string,content:string>>"))

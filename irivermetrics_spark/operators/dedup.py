@@ -73,15 +73,6 @@ def _minhash_params(n_hashes: int, seed: int = 7) -> tuple[np.ndarray, np.ndarra
     return a, b
 
 
-def _mod_mersenne61(x: np.ndarray) -> np.ndarray:
-    """x mod (2^61 - 1) via shift-fold (2^61 === 1), exactly equal to
-    ``x % _MERSENNE`` but ~3 ops instead of a hardware division — the
-    signature UDF is the dominant cost of the whole dedup operator."""
-    x = (x & _MERSENNE) + (x >> 61)   # < 2^61 + 7
-    x = (x & _MERSENNE) + (x >> 61)   # < 2^61 + 1
-    return np.where(x >= _MERSENNE, x - _MERSENNE, x)
-
-
 def minhash_signatures(docs: DataFrame, text_col: str = "text", n_hashes: int = 64,
                        shingle_k: int = 5) -> DataFrame:
     """doc -> array<bigint> of n_hashes minhash values.
@@ -109,9 +100,9 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text", n_hashes: int = 
             for t in texts:
                 sh = _shingles(t, shingle_k, unique=False)
                 # (a*x + b) wraps mod 2^64 (the engine hash definition),
-                # then reduces mod 2^61-1; min over shingles. Same
-                # values as _mod_mersenne61, written with in-place ops
-                # so the (64, n) hot matrix allocates once, not 6x.
+                # then reduces mod 2^61-1 by an exact shift-fold; min
+                # over shingles. In-place ops so the (64, n) hot matrix
+                # allocates once, not 6x.
                 m = sh[None, :] * a_col
                 m += b_col
                 hi = m >> 61
@@ -190,13 +181,11 @@ def lsh_candidates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 
 
 def _banded(with_sig: DataFrame, id_col: str, n_hashes: int, bands: int) -> DataFrame:
-    """(id, minhash, band, bucket) — THE banding expression. One copy:
-    the incremental path bucket-joins new rows against an index built
-    by a previous call, so the bucket hash must be bit-identical across
-    every caller forever. Built as ONE parsed SQL string: the Column-
-    API form (bands x (xxhash64 + slice) + array + posexplode) cost
-    ~50 py4j round trips ≈ 0.1 s of serial driver time per call (r8
-    profile); the parsed expression tree is identical."""
+    """(id, minhash, band, bucket) — THE banding expression. Built as
+    ONE parsed SQL string: the Column-API form (bands x (xxhash64 +
+    slice) + array + posexplode) cost ~50 py4j round trips ≈ 0.1 s of
+    serial driver time per call (r8 profile); the parsed expression
+    tree is identical."""
     rows = n_hashes // bands
     arr = ", ".join(
         f"xxhash64({i}, slice(minhash, {i * rows + 1}, {rows}))" for i in range(bands))
@@ -219,57 +208,6 @@ def _with_est_jaccard(pairs_ids: DataFrame, sig1: DataFrame, n_hashes: int) -> D
         "id_a", "id_b",
         "CAST(aggregate(zip_with(mh_a, mh_b, (x, y) -> CAST((x = y) AS INT)), "
         f"0, (acc, v) -> acc + v) / {int(n_hashes)} AS DOUBLE) AS est_jaccard")
-
-
-def lsh_candidates_incremental(new_docs: DataFrame, banded_index: DataFrame,
-                               id_col: str = "doc_id", text_col: str = "text",
-                               n_hashes: int = 64, bands: int = 16,
-                               shingle_k: int = 5) -> tuple[DataFrame, DataFrame]:
-    """Incremental MinHash-LSH: dedup a NEW batch against an existing
-    corpus index without touching old documents' text.
-
-    The growing-crawl shape at 10^12-doc scale: signatures are computed
-    once per document ever; each ingest batch only (a) hashes its own
-    docs, (b) bucket-joins its banded rows against the persisted index
-    (new-vs-old) and itself (new-vs-new). Old-vs-old pairs were emitted
-    by earlier batches, so
-    ``full_corpus_pairs == old_batch_pairs UNION incremental_pairs``
-    exactly (pinned by tests/test_textops_dedup.py).
-
-    ``banded_index``: a prior ``lsh_candidates``/this function's banded
-    frame — (id, minhash, band, bucket) with the SAME (n_hashes, bands,
-    shingle_k); parquet round-trips fine.
-
-    Returns ``(pairs, new_banded)``: candidate pairs involving at least
-    one new doc (id_a < id_b, with est_jaccard), and the new batch's
-    banded rows — append them to the index table for the next batch.
-    """
-    with_sig = minhash_signatures(new_docs.select(id_col, text_col),
-                                  text_col, n_hashes, shingle_k)
-    new_banded = _banded(with_sig, id_col, n_hashes, bands).persist()
-    new_lite = new_banded.select("band", "bucket", "id")
-    old_lite = banded_index.select("band", "bucket", "id")
-    # new-vs-old: each new row probes the index buckets (an equi-join on
-    # (band, bucket) — the index side is bucket-partitioned at scale);
-    # pair order normalizes to id_a < id_b since old ids can be larger
-    cross = (
-        new_lite.alias("n").join(old_lite.alias("o"), ["band", "bucket"])
-        .where(F.col("n.id") != F.col("o.id"))
-        .select(F.least("n.id", "o.id").alias("id_a"),
-                F.greatest("n.id", "o.id").alias("id_b"))
-    )
-    within = (
-        new_lite.alias("l").join(new_lite.alias("r"), ["band", "bucket"])
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-    )
-    pairs_ids = cross.unionByName(within).dropDuplicates(["id_a", "id_b"])
-    sig1 = (
-        new_banded.filter(F.col("band") == 0).select("id", "minhash")
-        .unionByName(banded_index.filter(F.col("band") == 0).select("id", "minhash"))
-        .dropDuplicates(["id"])
-    )
-    return _with_est_jaccard(pairs_ids, sig1, n_hashes), new_banded
 
 
 def exact_jaccard_pairs(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
@@ -521,21 +459,6 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     return docs.select(F.col(id_col).alias("id"), sh(text_col).alias("simhash"))
 
 
-def simhash_n_blocks(n_docs: int, max_hamming: int = 3, target_bucket: int = 16) -> int:
-    """Scale the block split with corpus size (Manku et al., WWW'07):
-    with k blocks and any (k - max_hamming)-block combination as the
-    candidate key, the key is 64*(k-max_hamming)/k bits wide — pick the
-    smallest k whose expected bucket occupancy n/2^key_bits stays under
-    ``target_bucket``. k = max_hamming+1 (the minimum) gives 16-bit keys
-    — fine to ~10^6 docs; 10^9 docs at h=3 needs k=6 (20 combos of
-    ~32-bit keys)."""
-    for k in range(max_hamming + 1, 64):
-        key_bits = 64 * (k - max_hamming) // k
-        if n_docs / 2.0 ** key_bits <= target_bucket or key_bits >= 62:
-            return k
-    return 64
-
-
 def hamming_band_keys(hash_col: str, max_hamming: int = 3,
                       n_blocks: int | None = None) -> list:
     """The pigeonhole candidate keys of a 64-bit hash column, as one
@@ -579,7 +502,7 @@ def hamming_candidates(hashed: DataFrame, hash_col: str, id_col: str = "id",
     the shuffles).
 
     n_blocks defaults to max_hamming + 1 (one block per band, 16-bit
-    keys at h=3) — use ``simhash_n_blocks(corpus_size)`` at scale: 10^9
+    keys at h=3, fine to ~10^6 docs) — raise it with corpus size: 10^9
     docs need k=6 (32-bit keys) or the bucket join degenerates toward
     all-pairs.
 
@@ -625,79 +548,6 @@ def hamming_candidates(hashed: DataFrame, hash_col: str, id_col: str = "id",
     )
     hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     return pairs.select("id_a", "id_b", hamming.alias("hamming")).where(F.col("hamming") <= max_hamming)
-
-
-def hamming_candidates_incremental(new_hashed: DataFrame, banded_index: DataFrame,
-                                   hash_col: str = "h64", id_col: str = "id",
-                                   max_hamming: int = 3,
-                                   n_blocks: int | None = None,
-                                   bucket_cap: int | None = None) -> tuple[DataFrame, DataFrame]:
-    """Incremental Hamming near-dup: a NEW batch of 64-bit hashes
-    against a persisted banded index — the pigeonhole analog of
-    ``lsh_candidates_incremental`` (same growing-crawl contract:
-    ``full_corpus_pairs == old_batch_pairs UNION incremental_pairs``,
-    old payloads never re-hashed).
-
-    ``banded_index``: a prior batch's ``new_banded`` output — (id, h64,
-    combo, bucket) with the SAME (max_hamming, n_blocks); parquet
-    round-trips fine (bucket-partition it at scale so each new row
-    probes only its buckets). Works for any id type (simhash's long
-    doc ids, phash's string image ids — least/greatest order both).
-
-    Returns ``(pairs, new_banded)``: (id_a, id_b, hamming) pairs
-    involving at least one new row, and the new banded rows to append
-    to the index.
-    """
-    import logging
-
-    key_exprs = hamming_band_keys("h64", max_hamming, n_blocks)
-    d = new_hashed.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h64"))
-    new_banded = d.select(
-        "id", "h64", F.posexplode(F.array(*key_exprs)).alias("combo", "bucket")).persist()
-    old = banded_index.select("combo", "bucket", "id", "h64")
-    if bucket_cap is not None:
-        # the INDEX side accumulates across a growing crawl, so hot
-        # buckets concentrate there — cap by combined (index + new)
-        # bucket size, same never-silent WARNING contract as the batch
-        # path (the probe join against an uncapped hot index bucket is
-        # quadratic per ingest batch otherwise)
-        counts = (old.select("combo", "bucket")
-                  .unionByName(new_banded.select("combo", "bucket"))
-                  .groupBy("combo", "bucket").agg(F.count("*").alias("n_in_bucket")))
-        hot = counts.filter(F.col("n_in_bucket") > bucket_cap).persist()
-        stats = hot.agg(F.count("*").alias("n_buckets"),
-                        F.coalesce(F.sum("n_in_bucket"), F.lit(0)).alias("n_rows")).collect()[0]
-        if stats["n_buckets"]:
-            logging.getLogger(__name__).warning(
-                "hamming_candidates_incremental: skipping %d hot buckets covering "
-                "%d banded rows (bucket_cap=%d)",
-                stats["n_buckets"], stats["n_rows"], bucket_cap)
-        hot_keys = F.broadcast(hot.select("combo", "bucket"))
-        old = old.join(hot_keys, ["combo", "bucket"], "left_anti")
-        probe = new_banded.join(hot_keys, ["combo", "bucket"], "left_anti")
-        hot.unpersist()
-    else:
-        probe = new_banded
-    hamming = F.bit_count(F.col("l.h64").bitwiseXOR(F.col("r.h64")))
-    cross = (
-        probe.alias("l").join(old.alias("r"), ["combo", "bucket"])
-        .where(F.col("l.id") != F.col("r.id"))
-        .select(F.least("l.id", "r.id").alias("id_a"),
-                F.greatest("l.id", "r.id").alias("id_b"),
-                hamming.alias("hamming"))
-    )
-    within = (
-        probe.alias("l").join(probe.alias("r"), ["combo", "bucket"])
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
-                hamming.alias("hamming"))
-    )
-    pairs = (
-        cross.unionByName(within)
-        .where(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return pairs, new_banded
 
 
 def simhash_candidates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",

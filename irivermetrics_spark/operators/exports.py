@@ -53,26 +53,9 @@ def write_metrics_csv(metrics: DataFrame, path: str) -> None:
 def write_pixel_persistence(pp: DataFrame, path: str) -> None:
     """K2 sink: per-pixel persistence table -> parquet, scene-partitioned
     (the reference writes Pixel_Persistence.tif, src/irm_main.py:228-233;
-    the engine's raster container is the parquet point table plus
-    ``persistence_raster`` for dense reassembly)."""
+    the engine's raster container is the parquet point table, densified
+    per scene by ``write_persistence_geotiffs``)."""
     pp.write.mode("overwrite").partitionBy("scene").parquet(path)
-
-
-def persistence_raster(pp: DataFrame, grid: dict, scene: str) -> np.ndarray:
-    """Collect one scene's per-pixel persistence into a dense (h, w)
-    float64 raster — 0.0 for never-wet pixels, like the reference's
-    GeoTIFF (src/utils/calc_metrics.py:295-304). Driver-side by design:
-    a dense raster is only useful at single-scene size; the distributed
-    artifact is the parquet table."""
-    pdf = (
-        pp.where(F.col("scene") == scene)
-        .groupBy("px", "py").agg(F.max("pp").alias("pp"))  # section overlap -> one value
-        .toPandas()
-    )
-    out = np.zeros((grid["h"], grid["w"]), dtype=np.float64)
-    if len(pdf):
-        out[pdf["py"].to_numpy(), pdf["px"].to_numpy()] = pdf["pp"].to_numpy()
-    return out
 
 
 # per-worker memo for the K1 export's out-of-AOI raster: a pure
@@ -177,7 +160,7 @@ def write_persistence_geotiffs(pp: DataFrame, grid: dict, outdir: str,
 
     Per-pixel value = max(pp) over overlapping sections, densified
     executor-side into the (h, w) float32 raster with 0.0 never-wet
-    fill — the exact expression ``persistence_raster`` uses (pinned by
+    fill (pinned against a driver-side densify of the table by
     tests/test_file_sinks.py). ``flat=True`` names the file
     ``Pixel_Persistence.tif`` (the reference's single-scene layout);
     default None auto-selects flat iff one scene (one distinct-count
@@ -213,8 +196,7 @@ def persistence_geotiff_rows(pp: DataFrame, grid: dict, outdir: str, flat: bool)
 
     def emit(key, pdf):
         (scene,) = key
-        # section overlap -> one value per pixel (max), like
-        # persistence_raster's groupBy(px, py).max(pp)
+        # section overlap -> one value per pixel (max)
         ded = pdf.groupby(["px", "py"], as_index=False)["pp"].max()
         dense = np.zeros((h, w), dtype=np.float64)
         if len(ded):

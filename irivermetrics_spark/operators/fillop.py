@@ -1,10 +1,15 @@
 """Preprocess operators: validity filter (F6) + temporal fill (J6/W1).
 
 F6 — drop dates with < 70 % valid in-corridor pixels (reference:
-src/utils/calc_metrics.py:499-517): nodata points are corridor-joined
-(broadcast cover + exact center-rule refine), counted per (scene,
-date), and the date dimension is filtered by ratio — the semi-join
-formulation of the reference's boolean time mask.
+src/utils/calc_metrics.py:499-517). A counted mask table (module 1 ran
+with the corridor polygons) already carries each image's in-corridor
+invalid count in its summary rows, and ``pipeline._kept_from_mask_table``
+decides F6 from those counts. ``keep_dates`` is the presence-only
+fallback (module 1 ran without polygons, or the table has no summary
+rows): nodata points are corridor-joined (broadcast cover + exact
+center-rule refine), counted per (scene, date), and the date dimension
+is filtered by ratio — the semi-join formulation of the reference's
+boolean time mask.
 
 Fill — the reference's sequential reflect-padded nodata fill
 (src/utils/calc_metrics.py:522-590) is per-pixel along time, so the
@@ -36,6 +41,7 @@ from pyspark.sql import functions as F
 from ..functions import cellindex, geometry
 from ..kernels import fill as fillk
 from . import morphology, zonal
+from .decode import CELL_RES
 
 FILL_RES_DEFAULT = 8
 
@@ -171,9 +177,13 @@ def hex_cell_udf(res: int, grid: dict):
 
 
 def keep_dates_fused(summaries: DataFrame, dates: DataFrame, corridor_total: int,
-                     threshold: float = 0.7, invalid_offset: int = 0) -> DataFrame:
+                     invalid_offset: int = 0) -> DataFrame:
     """F6 from decode-fused per-image summary rows (cell = n invalid
     in corridor): no second pass over the point table.
+
+    No ``pipeline.run`` path calls it: a counted table's F6 is
+    ``pipeline._kept_from_mask_table``'s SQL of the same expression.
+    It remains only as the ``kept`` span of ``perfbench``.
 
     Presence-only summary rows (cell == -1, emitted when module 1 ran
     without corridor polygons) are excluded from the count.
@@ -190,14 +200,14 @@ def keep_dates_fused(summaries: DataFrame, dates: DataFrame, corridor_total: int
         dates.join(invalid, ["scene", "date"], "left")
         .withColumn("n_invalid", F.coalesce("n_invalid", F.lit(0)) + F.lit(int(invalid_offset)))
         .withColumn("ratio", (F.lit(corridor_total) - F.col("n_invalid")) / F.lit(corridor_total))
-        .filter(F.col("ratio") >= threshold)
+        .filter(F.col("ratio") >= 0.7)
         .select("scene", "date")
     )
 
 
 def keep_dates(points: DataFrame, dates: DataFrame, corridor_cover: DataFrame,
                reaches: list[dict], grid: dict, corridor_total: int,
-               threshold: float = 0.7, invalid_offset: int = 0) -> DataFrame:
+               invalid_offset: int = 0) -> DataFrame:
     """F6: (scene, date) rows passing the >= 70 % in-corridor validity bar.
 
     ``dates`` is the full (scene, date) dimension from the image table
@@ -211,7 +221,7 @@ def keep_dates(points: DataFrame, dates: DataFrame, corridor_cover: DataFrame,
         dates.join(invalid, ["scene", "date"], "left")
         .withColumn("n_invalid", F.coalesce("n_invalid", F.lit(0)) + F.lit(int(invalid_offset)))
         .withColumn("ratio", (F.lit(corridor_total) - F.col("n_invalid")) / F.lit(corridor_total))
-        .filter(F.col("ratio") >= threshold)
+        .filter(F.col("ratio") >= 0.7)
         .select("scene", "date")
     )
 
@@ -241,8 +251,7 @@ def drop_low_postfill(points: DataFrame, keys: list[str] | tuple[str, ...] = ("s
 
 
 def filled_water(points: DataFrame, reaches: list[dict], grid: dict,
-                 fill_res: int = FILL_RES_DEFAULT, fill_nodata: bool = True,
-                 out_cell_res: int | None = None) -> DataFrame:
+                 fill_nodata: bool = True) -> DataFrame:
     """Temporal fill + binarize -> water point rows (value==1 only).
 
     points: decode output (scene, date, px, py, value in {1,-1}) already
@@ -252,33 +261,27 @@ def filled_water(points: DataFrame, reaches: list[dict], grid: dict,
     the old scene->dates dict collected the FULL kept dimension onto
     the driver, GBs at 10^6 scenes x years of dates).
 
-    One group per (scene, fill_res cell) holds an (n_t, cell pixels)
-    int8 matrix; the fill is per pixel, so the cell size sets only the
-    group count. The fill rewrites only fillable nodata, so each output
+    One group per (scene, FILL_RES_DEFAULT cell) holds an (n_t, cell
+    pixels) int8 matrix; the fill is per pixel, so the cell size sets
+    only the group count. The fill rewrites only fillable nodata, so each output
     (t, pixel) had an input row at t in its group: that row's ``date``
     names the output's ``ds``.
     fill_nodata: the reference's calculate_metrics(fill_nodata=...)
     switch (src/irm_main.py:126) — False skips the temporal fill and
     just binarizes (nodata pixels stay dry).
-    out_cell_res: set when the output feeds the section kernel
-    (``morphology.section_rows``); each row then also carries what
-    that kernel needs beyond the pixel: the hex cell id at THIS res, computed in-kernel with
-    the exact hex_cell_udf arithmetic (float64 center from int px/py),
-    for the cover join, and the scene's axis length ``n_t`` as
-    ``n_kept``, the persistence denominator. The fill kernel is
+    Output: (scene, date string 'ds', px, py, cell, n_kept) water
+    pixels after fill. ``cell`` is the pixel's hex cell at
+    ``decode.CELL_RES``, the key of the section kernel's cover join,
+    computed in-kernel with the exact ``hex_cell_udf`` arithmetic
+    (float64 center from int px/py); ``n_kept`` is the scene's axis
+    length ``n_t``, the persistence denominator. The fill kernel is
     already a Python stage over every output row, so attaching both
-    here removes the separate ArrowEvalPython round-trip the caller
-    otherwise pays to re-key the whole water table (guide §4.1: one
-    boundary crossing instead of two), and the section kernel's second
-    join against the kept dimension.
-    Output: (scene, date string 'ds', px, py[, cell, n_kept]) water
-    pixels after fill.
+    here saves an ArrowEvalPython round trip over the whole water table
+    and the section kernel's second join against the kept dimension.
     """
     rings = [(np.asarray(r["ring_x"]), np.asarray(r["ring_y"])) for r in reaches]
     ps, gx0, gy0 = grid["ps"], grid["gx0"], grid["gy0"]
-    out_schema = "scene string, ds string, px int, py int"
-    if out_cell_res is not None:
-        out_schema += ", cell long, n_kept long"
+    out_schema = "scene string, ds string, px int, py int, cell long, n_kept long"
 
     def kernel(key, pdf):
         scene, cell = key[0], int(key[1])
@@ -321,15 +324,14 @@ def filled_water(points: DataFrame, reaches: list[dict], grid: dict,
             "px": ux[pi].astype(np.int32),
             "py": uy[pi].astype(np.int32),
         }
-        if out_cell_res is not None:
-            # same float64 arithmetic as hex_cell_udf (bit-identical)
-            ox = gx0 + (ux[pi].astype(np.float64) + 0.5) * ps
-            oy = gy0 - (uy[pi].astype(np.float64) + 0.5) * ps
-            cols["cell"] = cellindex.hex_cell(ox, oy, out_cell_res)
-            cols["n_kept"] = np.full(ti.shape[0], n_t, dtype=np.int64)
+        # same float64 arithmetic as hex_cell_udf (bit-identical)
+        ox = gx0 + (ux[pi].astype(np.float64) + 0.5) * ps
+        oy = gy0 - (uy[pi].astype(np.float64) + 0.5) * ps
+        cols["cell"] = cellindex.hex_cell(ox, oy, CELL_RES)
+        cols["n_kept"] = np.full(ti.shape[0], n_t, dtype=np.int64)
         return pd.DataFrame(cols)
 
-    cell_of = hex_cell_udf(fill_res, grid)
+    cell_of = hex_cell_udf(FILL_RES_DEFAULT, grid)
     # only the columns the kernel reads cross into Python
     prepared = (points.select("scene", "date", "px", "py", "value", "t_idx", "n_t")
                 .withColumn("fill_cell", cell_of("px", "py")))

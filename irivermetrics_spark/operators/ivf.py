@@ -84,61 +84,6 @@ def ivf_assign(embeddings: DataFrame, C: np.ndarray, id_col: str = "vec_id",
     ).withColumn("list_id", F.element_at(assign("vec"), 1))
 
 
-def save_ann_index(path: str, C: np.ndarray, index: DataFrame,
-                   books: np.ndarray | None = None) -> None:
-    """Persist an ANN index as parquet: the per-vector table (either
-    ``ivf_assign`` output or ``pq.ivf_pq_index`` codes) PARTITIONED BY
-    ``list_id``, plus small model sidecars (centroids, optional PQ
-    codebooks).
-
-    The list_id partitioning is the point: a probe of ``nprobe`` lists
-    against the reloaded table is a broadcast/semi join on the
-    partition column, so dynamic partition pruning reads ~nprobe /
-    n_lists of the index from storage instead of scanning all of it —
-    the on-disk form of "the assigned table IS the index". Model
-    sidecars are one row per centroid / per (m, k) codeword: KB-scale,
-    re-broadcast on load.
-    """
-    spark = index.sparkSession
-    index.write.partitionBy("list_id").mode("overwrite").parquet(f"{path}/vectors")
-    cpdf = pd.DataFrame({"list_id": np.arange(C.shape[0], dtype=np.int64),
-                         "centroid": [row.tolist() for row in np.asarray(C, dtype=np.float64)]})
-    spark.createDataFrame(cpdf).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    if books is not None:
-        m, k, dsub = books.shape
-        bpdf = pd.DataFrame({
-            "m": np.repeat(np.arange(m, dtype=np.int64), k),
-            "k": np.tile(np.arange(k, dtype=np.int64), m),
-            "codeword": [books[i, j].astype(np.float64).tolist()
-                         for i in range(m) for j in range(k)],
-        })
-        spark.createDataFrame(bpdf).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-
-
-def load_ann_index(spark, path: str):
-    """(C, index, books|None) back from :func:`save_ann_index`.
-
-    ``index`` is the lazily-read partitioned parquet frame — filters on
-    ``list_id`` (the probe joins in ivf_topk / pq.ivf_pq_topk) prune
-    partitions at the scan. Centroids/codebooks are tiny and collected
-    eagerly into the numpy model arrays every executor needs anyway.
-    """
-    cpdf = spark.read.parquet(f"{path}/centroids").toPandas().sort_values("list_id")
-    C = np.stack([np.asarray(v, dtype=np.float64) for v in cpdf["centroid"]])
-    index = spark.read.parquet(f"{path}/vectors")
-    books = None
-    try:
-        bpdf = spark.read.parquet(f"{path}/codebooks").toPandas()
-    except Exception:
-        bpdf = None
-    if bpdf is not None and len(bpdf):
-        bpdf = bpdf.sort_values(["m", "k"])
-        m = int(bpdf["m"].max()) + 1
-        k = int(bpdf["k"].max()) + 1
-        books = np.stack([np.asarray(v, dtype=np.float64) for v in bpdf["codeword"]]).reshape(m, k, -1)
-    return C, index, books
-
-
 def ivf_topk(embeddings: DataFrame, queries: DataFrame, C: np.ndarray, k: int = 5,
              nprobe: int = 4, id_col: str = "vec_id", vec_col: str = "embedding",
              assigned: DataFrame | None = None, round_to: int | None = None) -> DataFrame:

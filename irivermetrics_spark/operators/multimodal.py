@@ -1,18 +1,17 @@
 """Multimodal binary-column operators: decode / resize / frame-sample /
 feature-extract over opaque ``binary`` payloads.
 
-Images, audio and video are carried as BinaryType columns with typed
+Images and video are carried as BinaryType columns with typed
 metadata; all processing is batched Arrow ``mapInPandas`` — the Spark
 plumbing (schemas, partitioning, batch shapes) is real and tested.
 Every format decodes for real with zero external libraries: the
 engine's own raster formats (codecs.py), JPEG (kernels/jpeg.py), PNG
 (kernels/png.py), WebP — lossless VP8L (kernels/webp.py), lossy VP8
 keyframes with alpha (kernels/vp8.py), animated (kernels/webpanim.py)
-— GIF incl. composited animations (kernels/gif.py), BMP incl. RLE8
-(kernels/bmp.py) and WAV audio (kernels/wav.py) are all from-scratch
-codecs; video payloads use the engine raster container (concatenated
-frames), and the single swap-in point for any further external codec
-(mp4 etc.) is ``_decode_any``.
+— GIF incl. composited animations (kernels/gif.py) and BMP incl. RLE8
+(kernels/bmp.py) are all from-scratch codecs; video payloads use the
+engine raster container (concatenated frames), and the single swap-in
+point for any further external codec (mp4 etc.) is ``_decode_any``.
 
 - resize: real nearest-neighbor + block-mean downsample (pure numpy)
 - frame_sample: video = concatenated raster frames; every k-th frame
@@ -74,24 +73,6 @@ def _decode_any(buf: bytes, fmt: str) -> np.ndarray:
 
         return bmp.decode_bmp(bytes(buf))
     raise ValueError(f"unknown fmt {fmt!r}")
-
-
-def with_format_detail(images: DataFrame, bytes_col: str = "bytes") -> DataFrame:
-    """Adds ``fmt_detail`` (magic-byte subformat, e.g. 'webp-vp8l' vs
-    lossy 'webp-vp8' from the RIFF chunk tag) and ``decodable``
-    (whether the engine's codecs handle it) — the router a web-crawl
-    table filters on BEFORE the decode stage, so unsupported payloads
-    divert to a quarantine sink instead of failing tasks. Header peek
-    only (16 bytes), vectorized pandas UDF."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("string")
-    def sniff(bufs: pd.Series) -> pd.Series:
-        return pd.Series([codecs.sniff_format(b) for b in bufs])
-
-    out = images.withColumn("fmt_detail", sniff(bytes_col))
-    dec = F.col("fmt_detail").isin(*sorted(codecs.DECODABLE_DETAILS))
-    return out.withColumn("decodable", dec)
 
 
 IMAGE_INFO_SCHEMA = ("fmt_detail string, width int, height int, nbands int, "
@@ -177,34 +158,6 @@ def with_exif(images: DataFrame, bytes_col: str = "bytes") -> DataFrame:
                   "gps_lat", "gps_lon", "exif_error"):
         out = out.withColumn(field, F.col("_exif")[field])
     return out.drop("_exif")
-
-
-DEFAULT_AR_BUCKETS = ((1, 1), (4, 3), (3, 4), (16, 9), (9, 16), (2, 1),
-                      (1, 2))
-
-
-def with_ar_bucket(images: DataFrame, buckets=DEFAULT_AR_BUCKETS,
-                   width_col: str = "width",
-                   height_col: str = "height") -> DataFrame:
-    """Adds ``ar_bucket`` (e.g. '16:9') — the nearest aspect-ratio
-    bucket by |log(w/h) − log(bw/bh)|, the assignment image-training
-    batchers use so one batch shares a crop/resize geometry (mixing
-    portrait and landscape in a batch wastes pixels on padding).
-    Consumes the header-only probe's width/height columns
-    (``with_image_info``) — no decode; pure JVM expressions (a literal
-    least() chain over the bucket list — known at plan time), zero
-    Python, zero shuffle. NULL/non-positive dims → NULL bucket."""
-    import math
-
-    w, h = F.col(width_col), F.col(height_col)
-    log_ar = F.log(w.cast("double") / h.cast("double"))
-    pairs = [(f"{bw}:{bh}", math.log(bw / bh)) for bw, bh in buckets]
-    best = F.array_sort(F.array(*[
-        F.struct(F.abs(log_ar - F.lit(ref)).alias("d"),
-                 F.lit(label).alias("label"))
-        for label, ref in pairs]))[0]["label"]
-    valid = w.isNotNull() & h.isNotNull() & (w > 0) & (h > 0)
-    return images.withColumn("ar_bucket", F.when(valid, best))
 
 
 def resize_image(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
@@ -360,8 +313,6 @@ def frame_sample(videos: DataFrame, every_k: int = 5,
                     length = 10 + int(nbands) * int(w) * int(h) * 2
                     if i % every_k == 0:
                         # header-only slice: consumers decode on demand
-                        # (a pixel decode here doubled per-frame cost on
-                        # the prune_static_frames hot path)
                         frame = buf[off : off + length]
                         rows.append(dict(video_id=rec.video_id, frame_idx=i, bytes=frame,
                                          w=int(w), h=int(h), fmt=codecs.FMT_RAW16))
@@ -370,65 +321,6 @@ def frame_sample(videos: DataFrame, every_k: int = 5,
                 {c.split()[0]: [] for c in FRAMES_SCHEMA.split(", ")})
 
     return videos.select("video_id", "bytes").mapInPandas(kernel, FRAMES_SCHEMA)
-
-
-def prune_static_frames(videos: DataFrame, every_k: int = 1,
-                        max_hamming: int = 2) -> DataFrame:
-    """Within-video near-duplicate frame pruning: sample frames
-    (``frame_sample``), keep a frame only when its phash differs from
-    the PREVIOUS KEPT frame by more than ``max_hamming`` bits — the
-    static-scene/slideshow collapse step video curation runs before
-    any per-frame model cost (a 10-minute talking-head clip yields a
-    handful of frames, not thousands).
-
-    Plan shape: one ``mapInPandas`` (decode + phash per frame, fused —
-    frames of one video stay in one pass), then a per-video
-    ``applyInPandas`` running the sequential keep-chain — inherently
-    order-dependent, so it is per-group state, not a window (the
-    chain's keep decision depends on the last KEPT frame, which a
-    lag() window cannot express). Shuffle = one Exchange on video_id;
-    state = one phash per group. The first frame is always kept.
-
-    Returns the frame rows (FRAMES_SCHEMA) of kept frames plus
-    ``phash`` and ``hamming_prev`` (distance to the previously kept
-    frame; null for the first).
-    """
-    frames = frame_sample(videos, every_k=every_k)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            phs = [codecs.phash64(_decode_any(bytes(b), f))
-                   for b, f in zip(pdf["bytes"], pdf["fmt"])]
-            out = pdf.copy()
-            out["phash"] = pd.array(phs, dtype="int64")
-            yield out
-
-    hashed = frames.mapInPandas(kernel, FRAMES_SCHEMA + ", phash long")
-
-    out_schema = FRAMES_SCHEMA + ", phash long, hamming_prev int"
-
-    def keep_chain(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("frame_idx", kind="mergesort")
-        kept_rows, last, dists = [], None, []
-        for i, ph in zip(pdf.index, pdf["phash"]):
-            ph = int(ph)
-            if last is None:
-                kept_rows.append(i)
-                dists.append(None)
-                last = ph
-                continue
-            d = int(bin((ph ^ last) & 0xFFFFFFFFFFFFFFFF).count("1"))
-            if d > max_hamming:
-                kept_rows.append(i)
-                dists.append(d)
-                last = ph
-        out = pdf.loc[kept_rows].copy()
-        out["hamming_prev"] = pd.array(dists, dtype="Int32")
-        return out
-
-    return hashed.groupBy("video_id").applyInPandas(keep_chain, out_schema)
 
 
 def embed_images(images: DataFrame, pool_h: int = 4, pool_w: int = 6,
@@ -445,8 +337,7 @@ def embed_images(images: DataFrame, pool_h: int = 4, pool_w: int = 6,
     encoder in at the same (id, embedding) seam.
 
     ``on_error="quarantine"``: undecodable payloads get no embedding
-    row (near-dup/ANN consumers key on image_id; route the originals
-    via with_format_detail for the dead-letter side).
+    row (near-dup/ANN consumers key on image_id).
     """
     if on_error not in ("raise", "quarantine"):
         raise ValueError(f"on_error {on_error!r} (raise|quarantine)")
@@ -640,10 +531,10 @@ def phash_neardup(images: DataFrame, max_hamming: int = 3, n_blocks: int | None 
     The image-side analog of text SimHash dedup: one decode+hash pass
     (phash_images), then the SAME Manku pigeonhole block join
     (dedup.hamming_candidates) — a bucket equi-join, never all-pairs,
-    with the same n_blocks scale rule (dedup.simhash_n_blocks) and
-    hot-bucket cap. Catches byte-level re-encodes (jpeg<->png<->webp of
-    the same artwork) and light quantization; pair with
-    ``embed_images`` + cosine near-dup for heavier edits.
+    with the same n_blocks scale rule and hot-bucket cap. Catches
+    byte-level re-encodes (jpeg<->png<->webp of the same artwork) and
+    light quantization; pair with ``embed_images`` + cosine near-dup
+    for heavier edits.
 
     ``on_error="quarantine"`` drops undecodable payloads from the pair
     scan (they can never match) instead of failing the task; recover
@@ -656,164 +547,3 @@ def phash_neardup(images: DataFrame, max_hamming: int = 3, n_blocks: int | None 
         hashed = hashed.where(F.col("phash").isNotNull()).select("image_id", "phash")
     return hamming_candidates(hashed, "phash", "image_id", max_hamming, n_blocks,
                               bucket_cap, persisted_out, _caller="phash_neardup")
-
-
-def phash_neardup_incremental(new_images: DataFrame, banded_index: DataFrame,
-                              max_hamming: int = 3, n_blocks: int | None = None,
-                              bucket_cap: int | None = None,
-                              on_error: str = "raise") -> tuple:
-    """Incremental perceptual near-dup: a NEW image batch against a
-    persisted banded phash index — old images are never re-decoded.
-    Returns ``(pairs, new_banded)``; append ``new_banded`` to the index
-    for the next batch (see dedup.hamming_candidates_incremental for
-    the exact union contract). Bootstrap with an empty index frame
-    (``combo int, bucket bigint, id string, h64 long``)."""
-    from .dedup import hamming_candidates_incremental
-
-    hashed = phash_images(new_images, on_error=on_error)
-    if on_error == "quarantine":
-        hashed = hashed.where(F.col("phash").isNotNull()).select("image_id", "phash")
-    return hamming_candidates_incremental(hashed, banded_index, "phash", "image_id",
-                                          max_hamming, n_blocks, bucket_cap=bucket_cap)
-
-
-AUDIO_FEATURES_SCHEMA = ("audio_id string, n_samples long, channels int, "
-                         "sample_rate int, duration_s double, rms double, "
-                         "peak double, zero_crossings long, silence_ratio double, "
-                         "spectral_centroid_hz double")
-
-
-def audio_features(audio: DataFrame, raw_rate: int = 16_000,
-                   silence_floor: float = 0.01,
-                   max_fft: int = 1 << 16,
-                   on_error: str = "raise") -> DataFrame:
-    """Audio feature extraction over a binary column: RIFF/WAVE payloads
-    decode through the from-scratch codec (kernels/wav.py — u8/i16/i24/
-    i32 PCM and float32/64, multi-channel); headerless payloads keep the
-    r1 contract (raw little-endian int16 mono at ``raw_rate``).
-
-    Level features (rms, peak, silence_ratio) are defined over the
-    normalized [-1, 1) domain (kernels.wav.to_float) so clips compare
-    across bit depths; zero_crossings and the spectral centroid run on
-    the mono mixdown. The centroid FFT is bounded to the first
-    ``max_fft`` frames — per-clip O(max_fft log max_fft) keeps task
-    cost flat no matter how long a crawl clip claims to be.
-
-    ``on_error="quarantine"``: payloads the codec rejects (ADPCM /
-    mu-law tags, truncated fmt chunks, 12/20-bit PCM) get no feature
-    row instead of failing the task — same divert-don't-fail contract
-    as embed_images/resize_images (route originals via
-    with_format_detail for the dead-letter side)."""
-    from ..kernels import wav as wavk
-
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error {on_error!r} (raise|quarantine)")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                try:
-                    buf = b"" if rec.bytes is None else bytes(rec.bytes)
-                    if codecs.sniff_format(buf) == "wav":
-                        samples, rate, bits = wavk.read_wav(buf)
-                    else:
-                        samples = np.frombuffer(
-                            buf[:len(buf) & ~1], dtype="<i2")[:, None]
-                        rate, bits = int(raw_rate), 16
-                except Exception:
-                    if on_error == "quarantine":
-                        continue
-                    raise
-                x = wavk.to_float(samples, bits)
-                n, ch = x.shape
-                mono = x.mean(axis=1) if ch > 1 else x[:, 0]
-                if n:
-                    rms = float(np.sqrt(np.mean(mono * mono)))
-                    peak = float(np.max(np.abs(x)))
-                    silence = float(np.mean(np.abs(mono) < silence_floor))
-                else:
-                    rms = peak = silence = 0.0
-                zc = int(np.count_nonzero(np.diff(np.signbit(mono)))) if n > 1 else 0
-                head = mono[:max_fft]
-                if head.size > 1:
-                    spec = np.abs(np.fft.rfft(head)) ** 2
-                    spec[0] = 0.0  # DC is not pitch
-                    tot = float(spec.sum())
-                    freqs = np.fft.rfftfreq(head.size, d=1.0 / rate)
-                    centroid = float((freqs * spec).sum() / tot) if tot > 0 else 0.0
-                else:
-                    centroid = 0.0
-                rows.append(dict(
-                    audio_id=rec.audio_id, n_samples=int(n), channels=int(ch),
-                    sample_rate=int(rate), duration_s=float(n / rate),
-                    rms=rms, peak=peak, zero_crossings=zc,
-                    silence_ratio=silence, spectral_centroid_hz=centroid))
-            cols = ("audio_id n_samples channels sample_rate duration_s rms "
-                    "peak zero_crossings silence_ratio spectral_centroid_hz").split()
-            yield (pd.DataFrame(rows)[cols] if rows
-                   else pd.DataFrame({c: [] for c in cols}))
-
-    return audio.select("audio_id", "bytes").mapInPandas(
-        kernel, AUDIO_FEATURES_SCHEMA)
-
-
-AUDIO_INFO_SCHEMA = ("fmt_detail string, sample_rate int, channels int, "
-                     "bits int, n_frames bigint, duration_s double")
-
-
-def with_audio_info(audio: DataFrame, bytes_col: str = "bytes") -> DataFrame:
-    """Header-only audio metadata columns (rate/channels/bits/frames/
-    duration) via kernels.audioprobe.probe_audio_info (WAV + FLAC
-    STREAMINFO + mp3 frame-header/Xing walk) — the duration/rate
-    inventory an audio table filters on BEFORE paying feature-extract
-    cost (e.g. ``duration_s BETWEEN 1 AND 30``). Scan-bound: tens of
-    header bytes per row, never the payload; corrupt headers yield
-    null fields, never task failures."""
-    from ..kernels import audioprobe
-
-    @F.pandas_udf(f"struct<{AUDIO_INFO_SCHEMA}>")
-    def probe(bufs: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame([audioprobe.probe_audio_info(b) for b in bufs])
-
-    out = audio.withColumn("_ainfo", probe(bytes_col))
-    for field in ("fmt_detail", "sample_rate", "channels", "bits",
-                  "n_frames", "duration_s"):
-        out = out.withColumn(field, F.col("_ainfo")[field])
-    return out.drop("_ainfo")
-
-
-AUDIO_TAGS_SCHEMA = ("title string, artist string, album string, "
-                     "year string, genre string, track string, "
-                     "id3_version string, id3_error string")
-
-
-def with_audio_tags(audio: DataFrame, bytes_col: str = "bytes") -> DataFrame:
-    """Adds ID3v2 text-tag columns (``title``/``artist``/``album``/
-    ``year``/``genre``/``track`` + ``id3_version``/``id3_error``) via
-    the header-only kernels/id3.py walk — the audio analog of
-    ``with_exif``: creator/title metadata drives dedup windows (the
-    same recording re-encoded) and the attribution/PII inventory a
-    published corpus needs. O(tag) per row, never O(payload); rows
-    without a tag get all-NULL fields; malformed tags set
-    ``id3_error`` instead of failing the task."""
-    from ..kernels import id3 as id3k
-
-    @F.pandas_udf(f"struct<{AUDIO_TAGS_SCHEMA}>")
-    def probe(bufs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in bufs:
-            d = id3k.parse_id3(b)
-            rows.append(dict(
-                title=d.get("title"), artist=d.get("artist"),
-                album=d.get("album"), year=d.get("year"),
-                genre=d.get("genre"), track=d.get("track"),
-                id3_version=d.get("id3_version"),
-                id3_error=d.get("error")))
-        return pd.DataFrame(rows)
-
-    out = audio.withColumn("_atags", probe(bytes_col))
-    for field in ("title", "artist", "album", "year", "genre", "track",
-                  "id3_version", "id3_error"):
-        out = out.withColumn(field, F.col("_atags")[field])
-    return out.drop("_atags")

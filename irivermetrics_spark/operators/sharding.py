@@ -1,7 +1,6 @@
-"""Deterministic global shuffle + sharded dataset writer — the last
-step of a training-data pipeline (after curation/dedup/packing, data
-is globally shuffled and written as N stable shards the trainer
-streams).
+"""Deterministic sharded dataset writer — the last step of a
+training-data pipeline (after curation/dedup/packing, data is globally
+shuffled and written as N stable shards the trainer streams).
 
 ``DataFrame.orderBy(rand())`` is neither reproducible across re-runs
 nor stable under input repartitioning; the standard trick (FineWeb /
@@ -17,50 +16,30 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _order_key(docs: DataFrame, id_col: str, seed: int,
+def _order_key(id_col: str, seed: int,
                extra_order_cols: list[str] | None = None) -> tuple[Column, list]:
     """The deterministic shuffle key shared by every function here:
-    ``xxhash64(id[, repeat_idx], seed)`` plus the (id[, repeat_idx]
-    [, extras]) hash-collision tiebreaks that keep the order TOTAL.
-    When the frame carries ``mix_corpora``'s ``repeat_idx`` the copy
-    index joins the hash input — otherwise every epoch copy of a doc
-    would share one key (non-total order: arbitrary tie-breaks, and
-    all copies land in the same shard at consecutive positions,
-    defeating the shuffle for upsampled corpora). Pass
-    ``extra_order_cols`` when ``id_col`` itself repeats (e.g. sharding
-    packed docs on pack_id with doc_id as the within-pack order)."""
-    cols = [F.col(id_col).cast("string")]
+    ``xxhash64(id, seed)`` plus the (id[, extras]) hash-collision
+    tiebreaks that keep the order TOTAL. Pass ``extra_order_cols`` when
+    ``id_col`` itself repeats (e.g. sharding packed docs on pack_id
+    with doc_id as the within-pack order)."""
     ties = [F.col(id_col).asc()]
-    if "repeat_idx" in docs.columns:
-        cols.append(F.col("repeat_idx"))
-        ties.append(F.col("repeat_idx").asc())
     for c in extra_order_cols or []:
         ties.append(F.col(c).asc())
-    return F.xxhash64(*cols, F.lit(int(seed))), ties
-
-
-def global_shuffle(docs: DataFrame, seed: int = 0,
-                   id_col: str = "doc_id",
-                   extra_order_cols: list[str] | None = None) -> DataFrame:
-    """Deterministic pseudo-random total order: sort by
-    ``(xxhash64(id[, repeat_idx], seed), id[, repeat_idx])`` — the
-    tiebreaks keep the order total even under hash collisions. One
-    range-partitioned sort (Spark samples split points), no Python."""
-    h, ties = _order_key(docs, id_col, seed, extra_order_cols)
-    return docs.orderBy(h.asc(), *ties)
+    return F.xxhash64(F.col(id_col).cast("string"), F.lit(int(seed))), ties
 
 
 def shard_assignments(docs: DataFrame, n_shards: int, seed: int = 0,
                       id_col: str = "doc_id",
                       extra_order_cols: list[str] | None = None) -> DataFrame:
     """Adds ``shard`` (pmod of the seeded hash) and ``shard_pos``
-    — deterministic position inside the shard under the same
-    (hash, id[, repeat_idx]) order ``global_shuffle`` uses."""
+    — deterministic position inside the shard under the (hash, id)
+    order."""
     from pyspark.sql import Window
 
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
-    h, ties = _order_key(docs, id_col, seed, extra_order_cols)
+    h, ties = _order_key(id_col, seed, extra_order_cols)
     out = docs.withColumn("shard", F.pmod(h, F.lit(int(n_shards))).cast("int"))
     w = Window.partitionBy("shard").orderBy(h.asc(), *ties)
     return out.withColumn("shard_pos", (F.row_number().over(w) - 1).cast("bigint"))
@@ -88,7 +67,7 @@ def write_shards(docs: DataFrame, path: str, n_shards: int, seed: int = 0,
 
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
-    h, ties = _order_key(docs, id_col, seed, extra_order_cols)
+    h, ties = _order_key(id_col, seed, extra_order_cols)
     out = (docs.withColumn("shard", F.pmod(h, F.lit(int(n_shards))).cast("int"))
            .repartition(int(n_shards), F.col("shard")))
     w = Window.partitionBy("shard").orderBy(h.asc(), *ties)
@@ -98,61 +77,3 @@ def write_shards(docs: DataFrame, path: str, n_shards: int, seed: int = 0,
     return (spark.read.parquet(path)
             .groupBy("shard").agg(F.count(F.lit(1)).alias("n_rows"))
             .orderBy("shard"))
-
-
-def mix_corpora(docs: DataFrame, weights: dict[str, float],
-                key_col: str = "source", id_col: str = "doc_id",
-                total_rows: int | None = None, seed: int = 0,
-                max_repeat: int = 100) -> DataFrame:
-    """Deterministic corpus mixing — resample so each key's share of
-    the output matches ``weights`` (the Dolma / RedPajama / Pile
-    source-weighting step between curation and shuffling). A key's
-    sampling rate may exceed 1: whole epochs duplicate every row
-    (``repeat_idx`` marks the copy) and the fractional remainder is a
-    seeded-hash thin, so the result is a pure function of
-    (id, seed) — identical across runs, machines and partitionings.
-    Keys absent from ``weights`` are dropped.
-
-    ``total_rows`` sets the target output size (default: the summed
-    row count of the weighted keys, i.e. same-size remix). The only
-    driver action is one tiny groupBy(key).count() collect — bounded
-    by the number of corpora, not rows; selection itself is a narrow
-    explode + filter, no extra shuffle."""
-    if not weights:
-        raise ValueError("weights must name at least one corpus key")
-    if any(w < 0 for w in weights.values()) or sum(weights.values()) <= 0:
-        raise ValueError("weights must be non-negative and sum > 0")
-    counts = {
-        r["k"]: r["n"]
-        for r in (docs.where(F.col(key_col).isin(list(weights)))
-                  .groupBy(F.col(key_col).alias("k"))
-                  .agg(F.count(F.lit(1)).alias("n")).collect())}
-    missing = [k for k in weights if k not in counts]
-    if missing:
-        raise ValueError(f"weighted keys absent from the corpus: {missing}")
-    wsum = float(sum(weights.values()))
-    total = int(total_rows) if total_rows is not None else sum(counts.values())
-    rates = {k: (weights[k] / wsum * total) / counts[k] for k in weights}
-    too_hot = {k: r for k, r in rates.items() if r > max_repeat}
-    if too_hot:
-        raise ValueError(
-            f"repeat factor over max_repeat={max_repeat} for {too_hot}; "
-            "raise max_repeat explicitly if many epochs are intended")
-    # per-key (whole epochs, fractional remainder in millionths)
-    n_rep = F.create_map(*[
-        x for k, r in rates.items() for x in (F.lit(k), F.lit(int(r)))])
-    frac_ppm = F.create_map(*[
-        x for k, r in rates.items()
-        for x in (F.lit(k), F.lit(int(round((r - int(r)) * 1_000_000))))])
-    from .textops import seeded_hash_ppm
-
-    h = seeded_hash_ppm(id_col, seed)
-    out = (docs.where(F.col(key_col).isin(list(weights)))
-           .withColumn("__nrep", n_rep[F.col(key_col)])
-           .withColumn("__frac", frac_ppm[F.col(key_col)])
-           .withColumn("repeat_idx",
-                       F.explode(F.sequence(F.lit(0), F.col("__nrep"))))
-           .where((F.col("repeat_idx") < F.col("__nrep"))
-                  | (h < F.col("__frac")))
-           .drop("__nrep", "__frac"))
-    return out

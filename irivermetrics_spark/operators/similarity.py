@@ -1,14 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
-- brute-force cosine top-k: JVM-side array expressions
-  (zip_with/aggregate) — no Python in the hot path; the candidate
-  cross join is bounded by broadcasting the (small) query side.
-- LSH-bucketed variant (scale path): signed-random-projection bits ->
-  band buckets -> equi-join, exact re-rank inside buckets only. At
-  10^9+ rows the bucket join replaces the full cross product; recall
-  is tunable via (n_bits, bands, band kring... here: multi-probe by
-  repeating tables).
-- embedding-cosine near-dup: same machinery, threshold instead of k.
+- cosine as a JVM-side array expression (zip_with/aggregate) — no
+  Python in the hot path.
+- embedding-cosine near-dup: signed-random-projection bits -> bucket
+  equi-join, exact cosine inside buckets only. At 10^9+ rows the
+  bucket join replaces the full cross product; recall is tunable via
+  (n_bits, n_tables: multi-probe by repeating tables).
 """
 
 from __future__ import annotations
@@ -29,29 +26,6 @@ def cosine_expr(a: str, b: str):
     nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x.cast("double") * x.cast("double")),
                             F.lit(0.0), lambda acc, v: acc + v))
     return dot / (na * nb)
-
-
-def brute_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-               id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact cosine top-k per query vector (broadcast the query side).
-
-    Returns (query_id, neighbor_id, cosine, rank), ties broken by
-    neighbor id for determinism.
-    """
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    base = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec"))
-    scored = (
-        base.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine_expr("qvec", "nvec"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
 
 
 def srp_buckets(embeddings: DataFrame, n_bits: int = 16, n_tables: int = 4,
@@ -94,49 +68,13 @@ def srp_buckets(embeddings: DataFrame, n_bits: int = 16, n_tables: int = 4,
     )
 
 
-def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5, n_bits: int = 16,
-             n_tables: int = 8, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """Approximate top-k: SRP bucket equi-join + exact cosine re-rank.
-
-    The scale path: candidates come from bucket collisions only, so the
-    join is an equi-join on (table, bucket) instead of a cross product.
-
-    Defaults are sized for large corpora: 16 bits = 65k buckets/table
-    keeps expected bucket occupancy ~n/65k (r1 defaulted to 8 bits =
-    256 buckets — near-all-pairs at 10^9 rows). Small corpora should
-    LOWER n_bits (e.g. 8) or recall collapses: expected collisions per
-    genuine neighbor scale with n_tables * P(collide) and P(collide)
-    shrinks exponentially in n_bits.
-    """
-    base = srp_buckets(embeddings, n_bits, n_tables, None, id_col, vec_col)
-    q = srp_buckets(queries, n_bits, n_tables, None, id_col, vec_col).select(
-        F.col("id").alias("query_id"), F.col("vec").alias("qvec"), "table", "bucket"
-    )
-    cand = (
-        base.join(q, ["table", "bucket"])
-        .where(F.col("id") != F.col("query_id"))
-        .select("query_id", "qvec", F.col("id").alias("neighbor_id"), F.col("vec").alias("nvec"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("cosine", cosine_expr("qvec", "nvec"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.95, n_bits: int = 16,
                          n_tables: int = 8, id_col: str = "vec_id",
                          vec_col: str = "embedding", round_to: int | None = None,
                          persisted_out: list | None = None) -> DataFrame:
     """Embedding near-duplicate pairs (cosine >= threshold) via SRP-LSH.
 
-    16-bit buckets by default (see lsh_topk): near-dups at >=0.95
+    16-bit buckets by default: near-dups at >=0.95
     cosine collide with high probability even at 16 bits (each
     hyperplane flips with prob acos(0.95)/pi ~ 0.10, and 8 tables
     multi-probe), while the self-join stays O(n^2 / 65k) per table

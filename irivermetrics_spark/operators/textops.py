@@ -34,36 +34,6 @@ def bpe_like_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_LIKE_PATTERN), 0)).cast("bigint")
 
 
-# per-language marker lexicons for argmax language-ID (n-gram heuristic)
-LANG_MARKERS = {
-    "en": [" the ", " and ", " of ", " a "],
-    "de": [" der ", " und ", " die ", " ist "],
-    "fr": [" le ", " et ", " les ", " est "],
-    "es": [" el ", " y ", " los ", " es "],
-}
-
-
-def langid_argmax(text: Column, markers: dict[str, list[str]] | None = None) -> Column:
-    """Best-scoring language among the marker lexicons (ties break by
-    language-code order, deterministic). A 4-way greatest() over pure
-    SQL expressions — no UDF, pushes through codegen.
-
-    ROLE (r7): this is the oracle-checkable DEMO of the argmax shape —
-    text without any marker ties at 0 and returns the alphabetically
-    first language, so it is NOT a curation signal."""
-    markers = markers or LANG_MARKERS
-    langs = sorted(markers)
-    scores = [marker_score(text, markers[lg]) for lg in langs]
-    pairs = [F.struct(s.alias("score"), F.lit(lg).alias("lang")) for lg, s in zip(langs, scores)]
-    # greatest on struct compares score first, then lang — ties pick the
-    # LAST lang alphabetically; invert by comparing on (score, neg-rank)
-    ranked = [
-        F.struct(s.alias("score"), F.lit(-i).alias("rank"), F.lit(lg).alias("lang"))
-        for i, (lg, s) in enumerate(zip(langs, scores))
-    ]
-    return F.greatest(*ranked)["lang"] if len(ranked) > 1 else pairs[0]["lang"]
-
-
 def punct_ratio(text: Column) -> Column:
     """Fraction of punctuation characters."""
     stripped = F.regexp_replace(text, r"[^\w\s]", "")
@@ -109,16 +79,6 @@ with np.errstate(over="ignore"):  # uint64 wraparound is the hash definition
     for _i in range(1, _FP_BLOCK + 1):
         _FP_POW[_i] = _FP_POW[_i - 1] * FP_BASE
     del _i
-
-
-def fingerprint_ref(data: bytes) -> int:
-    """Per-byte reference definition of the document fingerprint:
-    h = sum(b_i * B^(n-1-i)) mod 2^64 — kept as the oracle the
-    vectorized path is property-tested against."""
-    h = 0
-    for b in data:
-        h = (h * int(FP_BASE) + b) & 0xFFFFFFFFFFFFFFFF
-    return h
 
 
 def fingerprint_series(texts: pd.Series) -> pd.Series:
@@ -267,35 +227,6 @@ def with_repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFram
     t = F.col(text_col)
     return docs.withColumn("dup_line_frac", F.round(dup_line_fraction(t), 6)) \
                .withColumn("top_bigram_frac", F.round(top_ngram_fraction(t, 2), 6))
-
-
-def with_compression_ratio(docs: DataFrame, text_col: str = "text",
-                           level: int = 6) -> DataFrame:
-    """Adds ``compression_ratio`` = deflate(text) bytes / utf-8 bytes —
-    the classic one-number redundancy signal (boilerplate, keyword
-    stuffing and template spam compress far below prose; Dolma/
-    RefinedWeb-style pipelines gate on it next to the Gopher
-    repetition fractions, and it catches cross-LINE redundancy the
-    dup-line/bigram fractions structurally miss). Ratio ~1 =
-    incompressible (random/already-compressed), English prose ~0.3-0.4,
-    pathological repetition -> 0. One Arrow kernel (zlib is C-speed;
-    there is no JVM-side expression for this); NULL/empty text -> NULL
-    ratio."""
-    import zlib
-
-    @F.pandas_udf("double")
-    def ratio(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None or t == "":
-                out.append(None)
-                continue
-            raw = t.encode("utf-8")
-            out.append(len(zlib.compress(raw, level)) / len(raw))
-        return pd.Series(out, dtype="float64")
-
-    return docs.withColumn("compression_ratio",
-                           F.round(ratio(F.col(text_col)), 6))
 
 
 # ---- CCNet-style perplexity filter (char-trigram LM) ----------------
@@ -450,39 +381,12 @@ def cap_per_key(docs: DataFrame, key_col: str = "source", cap: int = 100,
 
 
 def seeded_hash_ppm(id_col: str, seed: int) -> Column:
-    """The one seeded keep/drop hash the sampling family shares:
+    """The seeded keep/drop hash ``split_by_hash`` compares against:
     pmod(xxhash64(cast(id as string), seed), 10^6) — a uniform integer
-    in [0, 1e6) that is a pure function of (id, seed). rate_per_key,
-    split_by_hash and sharding.mix_corpora all compare against this
-    same expression, so "same (id, seed), same decision" holds across
-    operators; change the recipe HERE or nowhere."""
+    in [0, 1e6) that is a pure function of (id, seed), so the same
+    (id, seed) gets the same decision on every run."""
     return F.pmod(F.xxhash64(F.col(id_col).cast("string"), F.lit(int(seed))),
                   F.lit(1_000_000))
-
-
-def rate_per_key(docs: DataFrame, rate: float, id_col: str = "doc_id",
-                 seed: int = 0, key_col: str | None = None,
-                 keys: list | None = None) -> DataFrame:
-    """Approximate deterministic thinning: keep ~``rate`` of rows by
-    hash threshold — no shuffle at all (pure filter, survives any
-    partitioning), the scale-path companion to ``cap_per_key``. The
-    same (id, seed) always makes the same keep/drop decision, so the
-    sample is stable across runs and machines.
-
-    With ``key_col`` + ``keys``, thinning applies ONLY to rows whose
-    key is in ``keys`` (the identified hot domains); everything else
-    passes through untouched — the pre-thin-the-hot-keys step
-    cap_per_key's docstring describes. Without them the whole frame
-    thins at one global rate."""
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError(f"rate {rate} outside [0, 1]")
-    if (key_col is None) != (keys is None):
-        raise ValueError("key_col and keys must be passed together")
-    h = seeded_hash_ppm(id_col, seed)
-    keep = h < int(rate * 1_000_000)
-    if key_col is not None:
-        keep = (~F.col(key_col).isin(list(keys))) | keep
-    return docs.where(keep)
 
 
 def split_by_hash(docs: DataFrame, weights: dict[str, float] | None = None,
@@ -659,135 +563,3 @@ def chunk_documents(docs: DataFrame, max_tokens: int, overlap: int = 0,
         F.least(F.lit(max_tokens),
                 F.col("__nw") - F.col("chunk_idx") * step).cast("int"))
         .drop("__nw"))
-
-
-def decompress_payloads(docs: DataFrame, bytes_col: str = "payload",
-                        max_ratio: int = 1000,
-                        max_bytes: int = 64 * 1024 * 1024,
-                        encoding: str = "utf-8") -> DataFrame:
-    """Transparent per-row decompression of crawl payloads: gzip
-    (1F 8B), bz2 (``BZh`` + level digit), xz (FD '7zXZ' 00), zlib
-    (78 ..) and raw text pass through one Arrow kernel that sniffs the
-    magic bytes and emits ``text`` plus the detected ``compression``.
-    Real crawl tables (WARC-derived) carry gzip'd bodies per ROW —
-    file-level ``.gz`` handling in the Spark reader does not help
-    there. (Legacy raw ``.lzma`` is NOT sniffed: its 3-byte 5D 00 00
-    prefix collides with ordinary binary — same reasoning as the zlib
-    fletcher fallback below.)
-
-    Zip-bomb guarded: decompression stops at ``max_ratio`` x input
-    size or ``max_bytes``, whichever is smaller, and such rows (plus
-    corrupt streams and undecodable bytes) divert to the
-    ``decomp_error`` column instead of failing the task — the same
-    dead-letter contract as the image quarantine router. stdlib
-    zlib/bz2/lzma only; no external codecs."""
-    import bz2
-    import lzma
-    import zlib
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    clash = {"text", "compression", "decomp_error"} & {
-        f.name for f in docs.schema.fields if f.name != bytes_col}
-    if clash:
-        raise ValueError(
-            f"docs already carries output column(s) {sorted(clash)}; "
-            "rename them before decompress_payloads")
-
-    def _inflate(raw: bytes, wbits: int, cap: int, multi: bool) -> bytes:
-        """Full-stream inflate with eof/CRC verification, the bomb cap,
-        and (gzip) concatenated-member support — WARC bodies routinely
-        carry several members back-to-back."""
-        parts, buf = [], raw
-        total = 0
-        while True:
-            d = zlib.decompressobj(wbits=wbits)
-            chunk = d.decompress(buf, cap - total + 1)
-            total += len(chunk)
-            if total > cap or d.unconsumed_tail:
-                raise ValueError(f"decompressed past the {cap}-byte bomb guard")
-            if not d.eof:
-                # stdlib verifies the gzip CRC only at end-of-stream;
-                # partial output here means a truncated crawl body
-                raise ValueError("truncated or incomplete compressed stream")
-            parts.append(chunk)
-            buf = d.unused_data
-            if not multi or not buf.strip(b"\x00"):
-                break
-        return b"".join(parts)
-
-    def _drain(dcls, raw: bytes, cap: int) -> bytes:
-        """bz2/lzma analog of ``_inflate``: incremental decompressor
-        with the bomb cap enforced via ``max_length`` (never
-        materializes past cap+1 bytes), eof check for truncation, and
-        unused_data loop for concatenated members (both formats allow
-        back-to-back streams)."""
-        parts, buf, total = [], raw, 0
-        while True:
-            d = dcls()
-            chunk = d.decompress(buf, cap - total + 1)
-            total += len(chunk)
-            parts.append(chunk)
-            while not d.eof and not d.needs_input and total <= cap:
-                chunk = d.decompress(b"", cap - total + 1)
-                total += len(chunk)
-                parts.append(chunk)
-            if total > cap:
-                raise ValueError(f"decompressed past the {cap}-byte bomb guard")
-            if not d.eof:
-                raise ValueError("truncated or incomplete compressed stream")
-            buf = d.unused_data
-            if not buf.strip(b"\x00"):
-                return b"".join(parts)
-
-    def kernel(batches):
-        for pdf in batches:
-            texts, comps, errs = [], [], []
-            for buf in pdf[bytes_col]:
-                raw = None if buf is None else bytes(buf)
-                text = comp = err = None
-                try:
-                    if raw is None:
-                        raise ValueError("NULL payload")
-                    cap = min(int(max_ratio) * max(len(raw), 1), int(max_bytes))
-                    if raw[:2] == b"\x1f\x8b":
-                        comp = "gzip"
-                        data = _inflate(raw, 31, cap, multi=True)
-                    elif (raw[:3] == b"BZh" and len(raw) >= 4
-                          and 0x31 <= raw[3] <= 0x39):
-                        comp = "bz2"
-                        data = _drain(bz2.BZ2Decompressor, raw, cap)
-                    elif raw[:6] == b"\xfd7zXZ\x00":
-                        comp = "xz"
-                        data = _drain(lzma.LZMADecompressor, raw, cap)
-                    elif (len(raw) >= 2 and (raw[0] & 0x0F) == 8
-                          and ((raw[0] << 8) | raw[1]) % 31 == 0):
-                        # deflate CM + fletcher check: plain text can
-                        # collide (e.g. "x " passes) — fall back to raw
-                        # below rather than dead-lettering good rows
-                        try:
-                            data = _inflate(raw, 15, cap, multi=False)
-                            comp = "zlib"
-                        except Exception:
-                            comp = "none"
-                            data = raw
-                    else:
-                        comp = "none"
-                        data = raw
-                    text = data.decode(encoding)
-                except Exception as e:  # divert, never fail the task
-                    text, err = None, f"{type(e).__name__}: {e}"
-                texts.append(text)
-                comps.append(comp)
-                errs.append(err)
-            out = pdf.drop(columns=[bytes_col])
-            out["text"] = pd.array(texts, dtype="string")
-            out["compression"] = pd.array(comps, dtype="string")
-            out["decomp_error"] = pd.array(errs, dtype="string")
-            yield out
-
-    keep = [f for f in docs.schema.fields if f.name != bytes_col]
-    schema = StructType(keep + [StructField("text", StringType()),
-                                StructField("compression", StringType()),
-                                StructField("decomp_error", StringType())])
-    return docs.select(*[f.name for f in keep], bytes_col).mapInPandas(kernel, schema)

@@ -38,8 +38,18 @@ from ..functions import geometry
 # ~1.6 s of driver->JVM row serialization PER pipeline run (the r5
 # serial-floor profile: more than half the non-compute flagship time).
 # Keyed by applicationId so a restarted session never reuses dead
-# DataFrame handles.
+# DataFrame handles. Bounded: every entry holds a live DataFrame handle.
 _COVER_CACHE: dict[tuple, DataFrame] = {}
+_COVER_CACHE_CAP = 64
+
+
+def _remember(key: tuple, df: DataFrame) -> DataFrame:
+    """The one insert into ``_COVER_CACHE``: drops the oldest entries
+    (insertion order) so it never holds more than the cap."""
+    while len(_COVER_CACHE) >= _COVER_CACHE_CAP:
+        _COVER_CACHE.pop(next(iter(_COVER_CACHE)))
+    _COVER_CACHE[key] = df
+    return df
 
 
 def _cover_key(spark: SparkSession, reaches: list[dict], res: int) -> tuple:
@@ -73,11 +83,7 @@ def cover_df(spark: SparkSession, reaches: list[dict], res: int = 9) -> DataFram
         "full": np.concatenate(full_l) if full_l else np.zeros(0, dtype=bool),
     })
     # Arrow path (pandas input) instead of per-row pickling
-    df = spark.createDataFrame(pdf, schema)
-    if len(_COVER_CACHE) >= 64:  # bound: drop oldest (insertion order)
-        _COVER_CACHE.pop(next(iter(_COVER_CACHE)))
-    _COVER_CACHE[key] = df
-    return df
+    return _remember(key, spark.createDataFrame(pdf, schema))
 
 
 def corridor_cover_df(spark: SparkSession, reaches: list[dict], res: int = 9) -> DataFrame:
@@ -87,9 +93,7 @@ def corridor_cover_df(spark: SparkSession, reaches: list[dict], res: int = 9) ->
     if cached is not None:
         return cached
     per = cover_df(spark, reaches, res)
-    df = per.groupBy("cell").agg(F.max("full").alias("full"))
-    _COVER_CACHE[key] = df
-    return df
+    return _remember(key, per.groupBy("cell").agg(F.max("full").alias("full")))
 
 
 def member_all_touched(cx: np.ndarray, cy: np.ndarray, reach: dict, ps: float) -> np.ndarray:

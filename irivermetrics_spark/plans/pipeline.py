@@ -284,11 +284,10 @@ def run(
     # the de-drivering removed (ADVICE r3)
     kept_dim = F.broadcast(kept) if n_kept_rows <= 2_000_000 else kept
     points_kept = points.join(kept_dim.select("scene", "date", "t_idx", "n_t"), ["scene", "date"])
-    # the fill kernel attaches the res-`res` cell key in-kernel
-    # (out_cell_res): the fill stage grouped on the coarser fill_res
-    # key, and the zonal cover join below keys on `res` cells
-    water = fillop.filled_water(points_kept, reaches, grid, fill_nodata=fill_nodata,
-                                out_cell_res=res)
+    # the fill kernel attaches the res-`res` cell key in-kernel: the
+    # fill stage grouped on the coarser FILL_RES_DEFAULT key, and the
+    # zonal cover join below keys on `res` cells
+    water = fillop.filled_water(points_kept, reaches, grid, fill_nodata=fill_nodata)
     if checkpoint_dir:
         water = lineage.run_stage(spark, water, checkpoint_dir, "water_filled")
 

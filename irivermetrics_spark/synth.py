@@ -227,36 +227,3 @@ def encode_images(fx: Fixture, seed: int = 42) -> pd.DataFrame:
                 )
             )
     return pd.DataFrame(rows)
-
-
-def reaches_df(fx: Fixture) -> pd.DataFrame:
-    """Reach polygons as a (small, broadcastable) pandas frame."""
-    rows = []
-    for r in fx.reaches:
-        rows.append(
-            dict(
-                section=r["section"],
-                ring_x=r["ring_x"].tolist(),
-                ring_y=r["ring_y"].tolist(),
-                area_m2=r["area_m2"],
-                xmin=r["xmin"],
-                xmax=r["xmax"],
-                ymin=r["ymin"],
-                ymax=r["ymax"],
-            )
-        )
-    return pd.DataFrame(rows)
-
-
-def river_lines(fx: Fixture, seed: int = 42, n_pts: int = 60) -> list[dict]:
-    """The channel centerline as a river-line layer (CRS coords) — the
-    module-1 ``r_lines`` input for api.waterdetect_batch. Recomputes the
-    scene-0 meander parameters exactly as make_fixture does (same rng
-    stream), so the line threads the center of every reach polygon."""
-    srng0 = np.random.default_rng(seed)
-    amp = fx.h * 0.18
-    lam = fx.w / (2.0 + srng0.uniform(0, 1.5))
-    phase = srng0.uniform(0, 2 * np.pi)
-    xs = np.linspace(0.0, float(fx.w), n_pts)
-    ycs = fx.h / 2.0 + amp * np.sin(2 * np.pi * xs / lam + phase)
-    return [dict(name="river", x=fx.gx0 + xs * fx.pixel_size, y=fx.gy0 - ycs * fx.pixel_size)]

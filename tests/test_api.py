@@ -14,6 +14,8 @@ from irivermetrics_spark.operators import decode
 from irivermetrics_spark.plans import pipeline
 from tests.conftest import kept_map
 
+from fixture_refs import persistence_raster, river_lines
+
 
 def _fx():
     fx = synth.make_fixture(w=80, h=40, n_dates=10, n_sections=3, seed=42)
@@ -34,7 +36,7 @@ def test_api_two_module_flow_matches_pipeline(spark, tmp_path):
     images = pipeline.images_df(spark, fx.images)
     direct = _metrics_pdf(pipeline.run(spark, images, fx.reaches, grid))
 
-    lines = synth.river_lines(fx)
+    lines = river_lines(fx)
     buffer_m = 25 * fx.pixel_size  # covers the reach corridor entirely
 
     # module 1 WITH fused summaries, K1 parquet sink
@@ -90,7 +92,7 @@ def test_aoi_buffer_clips_points(spark):
     buffer drops off-channel pond pixels a wide one keeps."""
     fx, grid = _fx()
     images = pipeline.images_df(spark, fx.images)
-    lines = synth.river_lines(fx)
+    lines = river_lines(fx)
     tight = api.waterdetect_batch(spark, images, r_lines=lines, grid=grid,
                                   buffer=5 * fx.pixel_size)
     wide = api.waterdetect_batch(spark, images, r_lines=lines, grid=grid,
@@ -162,7 +164,7 @@ def test_pixel_persistence_export(spark, tmp_path):
     np.testing.assert_allclose(merged.pp.to_numpy(), merged.pp_o.to_numpy())
 
     # dense raster reassembly
-    ras = exports.persistence_raster(res["persistence_px"], grid, "scene0")
+    ras = persistence_raster(res["persistence_px"], grid, "scene0")
     assert ras.shape == (grid["h"], grid["w"])
     best = pp.groupby(["px", "py"]).pp.max()
     for (px, py), v in best.items():
@@ -208,7 +210,7 @@ def test_aoi_clip_f6_counts_clipped_corridor_as_invalid(spark):
     from irivermetrics_spark.functions import geometry
 
     fx, grid = _fx()
-    lines = synth.river_lines(fx)
+    lines = river_lines(fx)
     buffer_m = 6 * fx.pixel_size  # tight: clips real corridor area
     images = pipeline.images_df(spark, fx.images)
 

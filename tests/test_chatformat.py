@@ -1,8 +1,6 @@
 """Chat/SFT formatting (operators/chatformat.py): Python-reference
 parity on text + span offsets, unicode, custom templates, dead-letter
-rows, JSON parsing, and a zero-Python zero-Exchange plan."""
-
-import json
+rows, and a zero-Python zero-Exchange plan."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,9 +36,9 @@ CONVOS = [
 
 
 def test_parity_with_python_reference(spark):
-    rows = [(i, json.dumps(c)) for i, c in enumerate(CONVOS)]
-    df = cf.parse_chat_json(
-        spark.createDataFrame(rows, "doc_id int, messages_json string"))
+    rows = [(i, [(m["role"], m["content"]) for m in c]) for i, c in enumerate(CONVOS)]
+    df = spark.createDataFrame(
+        rows, "doc_id int, messages array<struct<role:string,content:string>>")
     out = {r.doc_id: r for r in cf.format_chat(df).collect()}
     for i, c in enumerate(CONVOS):
         text, spans = _py_reference(c, cf.DEFAULT_TEMPLATE)
@@ -74,10 +72,6 @@ def test_dead_letter_rows(spark):
     for bad in (1, 2, 3):
         assert out[bad].text is None and out[bad].assistant_spans is None
     assert out[4].text is not None and len(out[4].assistant_spans) == 1
-    # unparseable JSON -> NULL messages -> dead-letter
-    j = cf.parse_chat_json(spark.createDataFrame(
-        [(1, "not json")], "doc_id int, messages_json string"))
-    assert cf.format_chat(j).collect()[0].text is None
 
 
 def test_plan_is_jvm_only(spark):

@@ -11,8 +11,7 @@ import pytest
 
 from irivermetrics_spark import codecs
 from irivermetrics_spark.kernels import (bmp, geotiff, gif, jpeg, lzw,
-                                          netcdf, png, vp8, wav, webp,
-                                          webpanim)
+                                          netcdf, png, vp8, webp, webpanim)
 
 # lossy-VP8 fuzz prefix: valid keyframe tag (first_part_size=64, so the
 # random tail is long enough to be "the partition"), start code, and
@@ -35,7 +34,6 @@ _PREFIX = {
     # block walk, sub-block chains and the LZW decoder itself
     "gif": b"GIF89a\x10\x00\x10\x00\x80\x00\x00",
     "bmp": b"BM",
-    "wav": b"RIFF\x40\x00\x00\x00WAVE",
     "codecs": b"",
 }
 _DECODE = {
@@ -48,7 +46,6 @@ _DECODE = {
     "jpeg": jpeg.decode_baseline,
     "gif": gif.decode_gif,
     "bmp": bmp.decode_bmp,
-    "wav": wav.read_wav,
     "codecs": codecs.decode_image,
 }
 

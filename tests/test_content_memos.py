@@ -33,3 +33,19 @@ def test_aoi_raster_follows_in_place_line_edits():
                                         g["h"], g["w"])
     assert (~before).any() and not np.array_equal(after, before)
     assert np.array_equal(after, fresh)
+
+
+def test_cover_cache_stays_bounded_over_many_layers(spark):
+    """Each new reaches layer's corridor cover inserts two entries (the
+    per-section cover and the dissolved one); the cache must evict on
+    both inserts, not grow one entry past the cap per layer."""
+    from irivermetrics_spark.operators import zonal
+
+    ring_x = np.array([0.0, 400.0, 400.0, 0.0, 0.0])
+    ring_y = np.array([0.0, 0.0, 400.0, 400.0, 0.0])
+    for i in range(zonal._COVER_CACHE_CAP + 6):
+        shift = 1000.0 * i
+        reach = dict(section=f"s{i}", ring_x=ring_x + shift, ring_y=ring_y,
+                     xmin=shift, xmax=shift + 400.0, ymin=0.0, ymax=400.0)
+        zonal.corridor_cover_df(spark, [reach])
+        assert len(zonal._COVER_CACHE) <= zonal._COVER_CACHE_CAP

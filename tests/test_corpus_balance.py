@@ -1,6 +1,5 @@
-"""Corpus balancing (cap_per_key / rate_per_key): DuckDB parity for
-the exact cap, determinism across partitionings, and the no-shuffle
-plan claim for the rate pass."""
+"""Corpus balancing (cap_per_key, split_by_hash): DuckDB parity for
+the exact cap and determinism across partitionings."""
 
 import duckdb
 import pandas as pd
@@ -58,22 +57,6 @@ def test_cap_per_key_matches_duckdb(spark, docs_pdf):
         == want["doc_id"].tolist()
 
 
-def test_rate_per_key(spark, docs_pdf):
-    df = spark.createDataFrame(docs_pdf)
-    kept = textops.rate_per_key(df, 0.5)
-    n = kept.count()
-    assert 0 < n < len(docs_pdf)
-    # stable across partitionings and runs
-    assert n == textops.rate_per_key(df.repartition(5), 0.5).count()
-    assert textops.rate_per_key(df, 0.0).count() == 0
-    assert textops.rate_per_key(df, 1.0).count() == len(docs_pdf)
-    with pytest.raises(ValueError):
-        textops.rate_per_key(df, 1.5)
-    # pure filter: no Exchange in the plan
-    plan = kept._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
 def test_split_by_hash(spark, docs_pdf):
     df = spark.createDataFrame(docs_pdf)
     out = textops.split_by_hash(df, {"train": 0.8, "val": 0.1, "test": 0.1})
@@ -100,22 +83,6 @@ def test_split_by_hash(spark, docs_pdf):
     # no shuffle
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "BatchEvalPython" not in plan
-
-
-def test_rate_per_key_scoped_to_hot_keys(spark, docs_pdf):
-    df = spark.createDataFrame(docs_pdf)
-    out = textops.rate_per_key(df, 0.3, key_col="source", keys=["domain5"])
-    counts = {r["source"]: r["n"] for r in
-              out.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    before = docs_pdf.groupby("source").size().to_dict()
-    # untouched keys pass through whole; only the hot key thins
-    for k, n in before.items():
-        if k == "domain5":
-            assert counts[k] < n
-        else:
-            assert counts[k] == n
-    with pytest.raises(ValueError):
-        textops.rate_per_key(df, 0.3, keys=["domain5"])  # key_col missing
 
 
 def test_cap_per_key_auto_thin_hot_key_exact(spark):

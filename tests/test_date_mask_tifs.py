@@ -18,6 +18,8 @@ from irivermetrics_spark import api, synth
 from irivermetrics_spark.kernels import geotiff
 from irivermetrics_spark.plans import pipeline
 
+from fixture_refs import river_lines
+
 
 def _fx():
     fx = synth.make_fixture(w=80, h=40, n_dates=10, n_sections=3, seed=42)
@@ -67,7 +69,7 @@ def test_date_mask_tif_roundtrip_and_reingest(spark):
 def test_date_mask_tif_aoi_clip_semantics(spark):
     fx, grid = _fx()
     images = pipeline.images_df(spark, fx.images)
-    lines = synth.river_lines(fx)
+    lines = river_lines(fx)
     buffer_m = 6 * fx.pixel_size  # tight buffer: some pixels fall outside
 
     outdir = tempfile.mkdtemp(prefix="k1_tifs_aoi_")

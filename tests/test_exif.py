@@ -13,6 +13,8 @@ from irivermetrics_spark import codecs
 from irivermetrics_spark.kernels import exif as exifk
 from irivermetrics_spark.kernels import jpeg as jpegk
 
+from fixture_codecs import psnr
+
 
 def test_writer_parser_round_trip():
     blob = exifk.build_tiff_exif(
@@ -146,11 +148,11 @@ def test_resize_orient_restores_upright(spark):
     out = multimodal.resize_images(df, out_w=16, out_h=12, orient=True).first()
     assert (out.w, out.h) == (16, 12)
     dec = codecs.decode_image(bytes(out.bytes)).astype(np.float64)
-    assert codecs.psnr(dec, upright.astype(np.float64), peak=255.0) > 30
+    assert psnr(dec, upright.astype(np.float64), peak=255.0) > 30
     # without orient the stored (rotated) geometry comes back instead
     out2 = multimodal.resize_images(df, out_w=16, out_h=12, orient=False).first()
     dec2 = codecs.decode_image(bytes(out2.bytes)).astype(np.float64)
-    assert codecs.psnr(dec2, upright.astype(np.float64), peak=255.0) < 20
+    assert psnr(dec2, upright.astype(np.float64), peak=255.0) < 20
 
 
 def test_with_exif_hostile_types_dead_letter(spark):

@@ -10,6 +10,8 @@ import pytest
 
 from irivermetrics_spark.kernels import geotiff, shapefile as shpk
 
+from fixture_refs import persistence_raster
+
 
 def test_geotiff_roundtrip_all_dtypes():
     rng = np.random.default_rng(2)
@@ -246,7 +248,7 @@ def test_api_outdir_writes_reference_file_formats(spark):
     from irivermetrics_spark.operators import exports
 
     arr, g, nd = geotiff.read_geotiff(open(f"{outdir}/Pixel_Persistence.tif", "rb").read())
-    truth = exports.persistence_raster(res["persistence_px"], grid, "scene0")
+    truth = persistence_raster(res["persistence_px"], grid, "scene0")
     assert arr.shape == (1, grid["h"], grid["w"])
     assert np.allclose(arr[0], truth.astype(np.float32))
     assert np.isclose(g["gx0"], grid["gx0"]) and g["ps"] == grid["ps"] and nd == 0.0
@@ -300,7 +302,7 @@ def test_persistence_geotiffs_distributed_multi_scene(spark):
 
     def check(path, sc):
         arr, g, nd = geotiff.read_geotiff(open(path, "rb").read())
-        truth = exports.persistence_raster(pp, grid, sc)
+        truth = persistence_raster(pp, grid, sc)
         assert np.allclose(arr[0], truth.astype(np.float32)) and nd == 0.0
         assert np.isclose(g["gx0"], grid["gx0"]) and g["ps"] == grid["ps"]
 

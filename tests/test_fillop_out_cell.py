@@ -1,7 +1,6 @@
-"""filled_water(out_cell_res=...) parity: the in-kernel cell key must be
-bit-identical to the old separate hex_cell_udf stage (r8 — removes an
-ArrowEvalPython round-trip of the whole water table from the flagship
-metrics job)."""
+"""filled_water's in-kernel cell key must be bit-identical to the
+separate hex_cell_udf stage it replaced (r8 — removes an ArrowEvalPython
+round-trip of the whole water table from the flagship metrics job)."""
 
 import numpy as np
 import pytest
@@ -10,7 +9,7 @@ from pyspark.sql import functions as F
 
 from irivermetrics_spark import synth
 from irivermetrics_spark.functions import geometry
-from irivermetrics_spark.operators import fillop
+from irivermetrics_spark.operators import decode, fillop
 from irivermetrics_spark.plans import pipeline
 
 
@@ -31,32 +30,25 @@ def fill_inputs(spark):
 
 def test_out_cell_res_matches_udf_stage(fill_inputs):
     fx, grid, points_kept = fill_inputs
-    old = fillop.filled_water(points_kept, fx.reaches, grid) \
-        .withColumn("cell", fillop.hex_cell_udf(9, grid)("px", "py"))
-    new = fillop.filled_water(points_kept, fx.reaches, grid, out_cell_res=9)
-    assert [f.simpleString() for f in new.schema.fields] == [
+    out = fillop.filled_water(points_kept, fx.reaches, grid)
+    assert [f.simpleString() for f in out.schema.fields] == [
         "scene:string", "ds:string", "px:int", "py:int", "cell:bigint", "n_kept:bigint"]
-    new_cells = new.drop("n_kept")
-    assert old.schema == new_cells.schema
-    assert new_cells.exceptAll(old).count() == 0
-    assert old.exceptAll(new_cells).count() == 0
-    assert new.count() > 0
+    # the kernel's cell equals the UDF applied to the same rows' px/py
+    udf_cell = fillop.hex_cell_udf(decode.CELL_RES, grid)("px", "py")
+    checked = out.select("cell", udf_cell.alias("udf_cell")).persist()
+    assert checked.count() > 0
+    assert checked.where("cell <> udf_cell").count() == 0
+    checked.unpersist()
 
 
 def test_out_cell_res_rows_carry_the_scene_axis_length(fill_inputs):
     """n_kept is the scene's kept-date count: the section kernel's
     persistence denominator, with no second join to the kept dates."""
     fx, grid, points_kept = fill_inputs
-    new = fillop.filled_water(points_kept, fx.reaches, grid, out_cell_res=9)
-    got = {tuple(r) for r in new.select("scene", "n_kept").distinct().collect()}
+    out = fillop.filled_water(points_kept, fx.reaches, grid)
+    got = {tuple(r) for r in out.select("scene", "n_kept").distinct().collect()}
     want = {tuple(r) for r in points_kept.select("scene", "n_t").distinct().collect()}
     assert got == want and len(got) > 0
-
-
-def test_default_output_has_no_cell(fill_inputs):
-    fx, grid, points_kept = fill_inputs
-    out = fillop.filled_water(points_kept, fx.reaches, grid)
-    assert out.columns == ["scene", "ds", "px", "py"]
 
 
 def test_rings_digest_follows_in_place_edits():

@@ -7,6 +7,9 @@ from irivermetrics_spark import codecs, synth
 from irivermetrics_spark.kernels import water
 from irivermetrics_spark.oracle import numpy_oracle
 
+from fixture_codecs import psnr
+from fixture_refs import reaches_df
+
 
 @pytest.fixture(scope="module")
 def fx():
@@ -26,7 +29,7 @@ def test_images_decode_to_truth_masks(fx):
             # re-encode truth bands and check psnr against decoded
             rng = np.random.default_rng(42 + 7 * i + 1)
             truth = synth.bands_for_mask(fx.masks[0, i], rng)
-            assert codecs.psnr(truth, decoded) >= 40.0
+            assert psnr(truth, decoded) >= 40.0
         assert row.caption.startswith("river reach composite scene 0")
 
 
@@ -39,7 +42,7 @@ def test_fixture_has_interesting_content(fx):
 
 
 def test_reaches_cover_channel(fx):
-    df = synth.reaches_df(fx)
+    df = reaches_df(fx)
     assert len(df) == 3
     assert (df.area_m2 > 0).all()
 

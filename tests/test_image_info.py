@@ -10,8 +10,10 @@ import pandas as pd
 import pytest
 
 from irivermetrics_spark import codecs
-from irivermetrics_spark.kernels import geotiff, jpeg, png, webp, webpanim
+from irivermetrics_spark.kernels import geotiff, jpeg, png, webp
 from irivermetrics_spark.operators import multimodal
+
+from fixture_codecs import encode_webp_anim
 
 
 def _probe(buf):
@@ -54,7 +56,7 @@ def test_probe_webp_all_flavours():
     assert (v["fmt_detail"], v["width"], v["height"], v["nbands"]) == ("webp-vp8", w, h, 3)
 
     frames = [np.full((4, 6, 8), 40 * (i + 1), np.uint8) for i in range(3)]
-    anim = webpanim.encode_webp_anim(frames, [10, 20, 30])
+    anim = encode_webp_anim(frames, [10, 20, 30])
     a = _probe(anim)
     assert a["fmt_detail"] == "webp-vp8x-anim"
     assert (a["width"], a["height"], a["n_frames"], a["nbands"]) == (8, 6, 3, 4)

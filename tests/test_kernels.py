@@ -7,6 +7,8 @@ from irivermetrics_spark import codecs
 from irivermetrics_spark.functions import cellindex, geometry
 from irivermetrics_spark.kernels import blocks, ccl, crofton, edt, fill, graphpath, skeleton, water
 
+from fixture_codecs import psnr
+
 
 # ------------------------------------------------------------------- codecs
 
@@ -16,14 +18,14 @@ def test_raw16_roundtrip():
     buf = codecs.encode_image(arr, codecs.FMT_RAW16)
     out = codecs.decode_image(buf)
     assert np.array_equal(arr, out)
-    assert codecs.psnr(arr, out) == float("inf")
+    assert psnr(arr, out) == float("inf")
 
 
 def test_qlossy_psnr_gate():
     rng = np.random.default_rng(1)
     arr = rng.integers(0, 20000, size=(4, 50, 60), dtype=np.uint16)
     out = codecs.decode_image(codecs.encode_image(arr, codecs.FMT_QLOSSY))
-    assert codecs.psnr(arr, out) >= 40.0
+    assert psnr(arr, out) >= 40.0
     # zeros survive quantization exactly (nodata contract)
     arr[3, :10, :10] = 0
     out = codecs.decode_image(codecs.encode_image(arr, codecs.FMT_QLOSSY))
@@ -60,17 +62,11 @@ def test_hex_kring_counts_and_distance():
         ring = cellindex.hex_kring(cell, k)
         assert ring.shape == (1, 3 * k * (k + 1) + 1)
         assert len(np.unique(ring)) == ring.shape[1]
-        d = cellindex.hex_distance(ring[0], np.repeat(cell, ring.shape[1]))
-        assert d.max() == k
-
-
-def test_quad_cells_nest():
-    rng = np.random.default_rng(4)
-    x = rng.uniform(-1e6, 1e6, 200)
-    y = rng.uniform(-1e6, 1e6, 200)
-    c20 = cellindex.quad_cell(x, y, 20)
-    c14 = cellindex.quad_cell(x, y, 14)
-    assert np.array_equal(cellindex.quad_parent(c20, 14), c14)
+        # axial hex distance of every ring cell from the center
+        _, _, q, r = cellindex._unpack(ring[0])
+        _, _, q0, r0 = cellindex._unpack(cell)
+        dq, dr = q - q0, r - r0
+        assert ((np.abs(dq) + np.abs(dr) + np.abs(dq + dr)) // 2).max() == k
 
 
 # ------------------------------------------------------------------ geometry

@@ -1,6 +1,6 @@
-"""Multimodal binary-column plumbing: resize, frame sampling, audio
-features — real Spark schemas/batches, engine-format decode for real,
-external codecs stubbed."""
+"""Multimodal binary-column plumbing: resize and frame sampling — real
+Spark schemas/batches, engine-format decode for real, external codecs
+stubbed."""
 
 import numpy as np
 import pandas as pd
@@ -62,18 +62,6 @@ def test_frame_sample_spark(spark):
     assert np.array_equal(got, frames[5])
 
 
-def test_audio_features_spark(spark):
-    t = np.arange(8000)
-    pcm = (1000 * np.sin(2 * np.pi * t / 50)).astype("<i2")
-    df = spark.createDataFrame(pd.DataFrame([dict(audio_id="a0", bytes=pcm.tobytes())]))
-    out = multimodal.audio_features(df).toPandas()
-    assert out.iloc[0].n_samples == 8000
-    # levels are normalized to [-1, 1) across bit depths (r6)
-    assert out.iloc[0].rms == pytest.approx(1000 / 32768 / np.sqrt(2), rel=0.01)
-    assert out.iloc[0].zero_crossings > 100
-    assert out.iloc[0].channels == 1 and out.iloc[0].sample_rate == 16000
-
-
 def test_image_embedding_neardup_detects_reencodes(spark):
     """embed_images bridges the binary column to the ANN stack: a qlossy
     re-encode of an image must be an embedding near-duplicate of its
@@ -125,22 +113,3 @@ def test_resize_preserves_caption_and_phash(spark):
         assert out.loc[iid, "caption"] == src.loc[iid, "caption"]
         assert int(out.loc[iid, "phash"]) == int(src.loc[iid, "phash"])
     assert (out.w == 10).all() and (out.h == 8).all()
-
-
-def test_ar_bucket_assignment(spark):
-    """Aspect-ratio bucketing from probe dims: truth table, log-space
-    nearest (1920x1080 is 16:9, 1000x1000 is 1:1, 640x1136 is 9:16),
-    NULL/degenerate dims, and a pure-JVM plan."""
-    from irivermetrics_spark.operators import multimodal
-
-    rows = [(1, 1920, 1080), (2, 1000, 1000), (3, 640, 1136),
-            (4, 800, 600), (5, 599, 800), (6, None, 100), (7, 100, 0)]
-    df = spark.createDataFrame(rows, "image_id int, width int, height int")
-    out = multimodal.with_ar_bucket(df)
-    got = {r.image_id: r.ar_bucket for r in out.collect()}
-    assert got[1] == "16:9" and got[2] == "1:1" and got[3] == "9:16"
-    assert got[4] == "4:3" and got[5] == "3:4"
-    assert got[6] is None and got[7] is None
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Python" not in plan \
-        and "MapInPandas" not in plan

@@ -12,6 +12,8 @@ from irivermetrics_spark import api, synth
 from irivermetrics_spark.plans import pipeline
 from tests.conftest import kept_map
 
+from fixture_refs import river_lines
+
 
 def _fx():
     fx = synth.make_fixture(w=60, h=30, n_dates=6, n_sections=2, seed=21)
@@ -25,7 +27,7 @@ def test_aoi_image_path_equals_two_module_path(spark):
     same kept dates, same metric rows (the decode path now applies the
     aoi clip itself instead of only the constant offset)."""
     fx, grid = _fx()
-    lines = synth.river_lines(fx)
+    lines = river_lines(fx)
     buffer_m = 6 * fx.pixel_size
     images = pipeline.images_df(spark, fx.images)
 

@@ -8,6 +8,8 @@ from hypothesis import strategies as st
 from irivermetrics_spark.functions import cellindex, geometry
 from irivermetrics_spark.kernels import ccl, edt, fill
 
+from fixture_codecs import encode_webp_anim
+
 arrays = st.integers(2, 12).flatmap(
     lambda h: st.integers(2, 12).flatmap(
         lambda w: st.lists(st.integers(0, 1), min_size=h * w, max_size=h * w).map(
@@ -449,9 +451,9 @@ def test_webp_anim_property_roundtrip_and_composite(spec, seed):
         offsets.append((2 * x2, 2 * y2))
         blend.append(bl)
         dispose.append(dsp)
-    buf = webpanim.encode_webp_anim(frames, list(range(n)), offsets=offsets,
-                                    blend=blend, dispose=dispose,
-                                    canvas_wh=(cw, ch))
+    buf = encode_webp_anim(frames, list(range(n)), offsets=offsets,
+                           blend=blend, dispose=dispose,
+                           canvas_wh=(cw, ch))
     got, durs, info = webpanim.decode_webp_anim(buf)
     assert durs == list(range(n)) and (info.canvas_w, info.canvas_h) == (cw, ch)
     # payload round-trip: each embedded frame decodes back exactly

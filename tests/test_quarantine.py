@@ -7,6 +7,7 @@ import os
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from irivermetrics_spark import codecs, synth
 from irivermetrics_spark.operators import decode, multimodal
@@ -57,22 +58,6 @@ def test_sniff_format_magic_bytes():
     assert "unknown" not in codecs.DECODABLE_DETAILS
 
 
-def test_with_format_detail_column(spark):
-    rows = [
-        ("a", codecs.encode_image(np.ones((4, 3, 3), dtype=np.uint16)), "raw16"),
-        ("b", _lossy_vp8_bytes(), "webp"),
-        ("c", b"junkjunkjunkjunk", "???"),
-    ]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
-    got = {r["image_id"]: (r["fmt_detail"], r["decodable"])
-           for r in multimodal.with_format_detail(df).collect()}
-    # the sniff is a header peek: the structurally-broken vp8 stub is
-    # CLAIMED decodable (its subformat is), and the decode stage's
-    # exception catch is what actually quarantines it (tests below)
-    assert got == {"a": ("raw16", True), "b": ("webp-vp8", True),
-                   "c": ("unknown", False)}
-
-
 def _mixed_images(fx, n_good=3):
     pdf = fx.images.iloc[:n_good].copy()
     bad = pd.DataFrame([
@@ -95,7 +80,7 @@ def test_batch_decode_quarantine_vs_raise(spark):
         decode.decode_points(mixed, grid).count()
 
     pts = decode.decode_points(mixed, grid, on_undecodable="quarantine")
-    bad = decode.quarantined(pts).toPandas()
+    bad = pts.where(F.col("value") == decode.QUARANTINE_MARKER).toPandas()
     assert sorted(bad.image_id) == ["scene0_2099-01-01_bad1", "scene0_2099-01-02_bad2"]
     assert (bad.px == -1).all() and (bad.value == decode.QUARANTINE_MARKER).all()
     # date/scene parse still applies to quarantine rows (dead-letter keys)
@@ -104,7 +89,8 @@ def test_batch_decode_quarantine_vs_raise(spark):
     # the clean side equals a plain decode of only the good rows
     good_only = pipeline.images_df(spark, fx.images.iloc[:3])
     key = ["image_id", "px", "py", "value", "cell"]
-    got = decode.drop_quarantined(pts).select(*key).toPandas().sort_values(key).reset_index(drop=True)
+    got = (pts.where(F.col("value") != decode.QUARANTINE_MARKER).select(*key).toPandas()
+           .sort_values(key).reset_index(drop=True))
     want = decode.decode_points(good_only, grid).select(*key).toPandas().sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want)
 
@@ -154,7 +140,7 @@ def test_quarantine_handles_null_payload_and_config_typo(spark):
     assert "scene0_2099-01-03_null" in set(errs.image_id)
     assert set(errs[errs.image_id == "scene0_2099-01-03_null"].fmt) == {"unknown"}
     pts = decode.decode_points(mixed, grid, on_undecodable="quarantine")
-    assert decode.quarantined(pts).count() == 3  # vp8, garbage, null
+    assert pts.where(F.col("value") == decode.QUARANTINE_MARKER).count() == 3  # vp8, garbage, null
 
     # config typos must fail LOUDLY even in quarantine mode (a kernel-side
     # catch would quarantine 100% of rows and "succeed" empty)

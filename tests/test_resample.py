@@ -10,6 +10,8 @@ from irivermetrics_spark import codecs, synth
 from irivermetrics_spark.kernels import resample
 from irivermetrics_spark.operators import decode
 
+from fixture_codecs import psnr
+
 
 def test_resample_identity_shortcircuit():
     arr = np.arange(2 * 4 * 6, dtype=np.uint16).reshape(2, 4, 6)
@@ -53,7 +55,7 @@ def test_bilinear_psnr_gate():
     dx = dst["gx0"] + (np.arange(dst["w"]) + 0.5) * dst["ps"]
     dy = dst["gy0"] - (np.arange(dst["h"]) + 0.5) * dst["ps"]
     truth = field(dx[None, :], dy[:, None])[None, :, :]
-    assert codecs.psnr(got, truth) >= 40.0
+    assert psnr(got, truth) >= 40.0
 
 
 def test_nonuniform_grid_rejected_in_kernel(spark):

@@ -7,7 +7,9 @@ import tempfile
 import numpy as np
 
 from irivermetrics_spark import synth
-from irivermetrics_spark.plans import lineage, pipeline
+from irivermetrics_spark.plans import pipeline
+
+from fixture_refs import verify_stage
 
 
 def test_checkpointed_rerun_identical_and_skips(spark):
@@ -68,7 +70,7 @@ def _rebuilds_an_older_water_stage(spark, dropped: list[str]) -> None:
           .toPandas().sort_values(keys).reset_index(drop=True))
     assert spark.read.parquet(stage).columns == full
     # the rebuilt stage's lineage record replaced the old one
-    assert lineage.verify_stage(spark, spark.read.parquet(stage), ckpt, "water_filled")
+    assert verify_stage(spark, spark.read.parquet(stage), ckpt, "water_filled")
     assert m1["date"].tolist() == m2["date"].tolist()
     for col in ["npools", "wet_area_km2", "AWMSI", "pp_mean_%"]:
         np.testing.assert_array_equal(m1[col].to_numpy(dtype=float), m2[col].to_numpy(dtype=float))

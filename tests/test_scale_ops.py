@@ -6,7 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from irivermetrics_spark.functions import geometry
-from irivermetrics_spark.operators import dedup, knn, similarity
+from irivermetrics_spark.operators import dedup, knn
+
+from fixture_refs import brute_topk
 
 
 # ------------------------------------------------------------------ kNN
@@ -78,25 +80,7 @@ def test_simhash_neardups(spark):
     assert {(0, 1), (2, 3), (4, 5)} <= found
 
 
-# ---------------------------------------------------------- SRP-LSH ANN
-
-def test_lsh_ann_recall_vs_brute(spark):
-    rng = np.random.default_rng(10)
-    # clustered vectors so near neighbors are meaningful
-    centers = rng.standard_normal((8, 32))
-    vecs = np.concatenate([c + 0.15 * rng.standard_normal((25, 32)) for c in centers])
-    pdf = pd.DataFrame({"vec_id": np.arange(len(vecs)), "embedding": [v.astype(np.float32).tolist() for v in vecs]})
-    em = spark.createDataFrame(pdf)
-    q = em.filter(F.col("vec_id") < 5)
-    brute = similarity.brute_topk(em, q, k=5).toPandas()
-    approx = similarity.lsh_topk(em, q, k=5, n_bits=8, n_tables=8).toPandas()
-    recall_hits = 0
-    for qid in range(5):
-        b = set(brute[brute.query_id == qid].neighbor_id)
-        a = set(approx[approx.query_id == qid].neighbor_id)
-        recall_hits += len(a & b)
-    assert recall_hits / 25 >= 0.6  # clustered data, generous LSH params
-
+# ------------------------------------------------------------ ANN recall
 
 def test_pq_ann_recall_vs_brute(spark):
     from irivermetrics_spark.operators import pq
@@ -110,7 +94,7 @@ def test_pq_ann_recall_vs_brute(spark):
     q = em.filter(F.col("vec_id") < 5)
     books = pq.train_pq(em, m=8, k=32, sample=256, iters=6)
     assert books.shape == (8, 32, 4)
-    brute = similarity.brute_topk(em, q, k=5).toPandas()
+    brute = brute_topk(em, q, k=5).toPandas()
     approx = pq.pq_topk(em, q, books, topk=5, shortlist=6).toPandas()
     hits = 0
     for qid in range(5):
@@ -148,7 +132,7 @@ def test_ivf_ann_recall_vs_brute(spark):
     q = em.filter(F.col("vec_id") < 5)
     C = ivf.train_centroids(em, n_lists=8, sample=256, iters=6)
     assert C.shape == (8, 32)
-    brute = similarity.brute_topk(em, q, k=5).toPandas()
+    brute = brute_topk(em, q, k=5).toPandas()
     approx = ivf.ivf_topk(em, q, C, k=5, nprobe=3).toPandas()
     hits = 0
     for qid in range(5):
@@ -284,7 +268,7 @@ def test_ivf_pq_recall_at_partial_probe(spark):
     q = em.filter(F.col("vec_id") < 5)
     C = ivf.train_centroids(em, n_lists=6, sample=256, iters=6)
     books = pq.train_pq(em, m=8, k=32, sample=256, iters=6)
-    brute = similarity.brute_topk(em, q, k=5).toPandas()
+    brute = brute_topk(em, q, k=5).toPandas()
     approx = pq.ivf_pq_topk(em, q, C, books, topk=5, nprobe=2, shortlist=8).toPandas()
     hits = 0
     for qid in range(5):
@@ -394,52 +378,6 @@ def test_pip_retired_entry_still_matches_duckdb(spark):
     assert got.inside.tolist() == want.inside.tolist()
     assert got.n_points.tolist() == want.n_points.tolist()
     assert np.allclose(got.sum_x.to_numpy(), want.sum_x.to_numpy(), atol=1e-4)
-
-
-def test_ann_index_save_load_roundtrip_and_pruning(spark, tmp_path):
-    """save_ann_index/load_ann_index: model arrays round-trip exactly,
-    the reloaded list_id-partitioned table is value-transparent through
-    ivf_topk AND pq.ivf_pq_topk, and a list_id probe prunes partitions
-    at the parquet scan (the on-disk nprobe/n_lists read saving)."""
-    from irivermetrics_spark.operators import ivf, pq
-
-    rng = np.random.default_rng(33)
-    vecs = rng.standard_normal((150, 16))
-    pdf = pd.DataFrame({"vec_id": np.arange(len(vecs)),
-                        "embedding": [v.astype(np.float32).tolist() for v in vecs]})
-    em = spark.createDataFrame(pdf)
-    q = em.filter(F.col("vec_id") < 4)
-    C = ivf.train_centroids(em, n_lists=4, sample=128, iters=4)
-    books = pq.train_pq(em, m=4, k=16, sample=128, iters=4)
-    index = pq.ivf_pq_index(em, C, books)
-    ivf.save_ann_index(str(tmp_path / "idx"), C, index, books)
-    C2, index2, books2 = ivf.load_ann_index(spark, str(tmp_path / "idx"))
-    assert np.array_equal(C, C2) and np.array_equal(books, books2)
-
-    got = pq.ivf_pq_topk(em, q, C2, books2, topk=3, nprobe=4, shortlist=24,
-                         index=index2, round_to=6).toPandas()
-    want = pq.ivf_pq_topk(em, q, C, books, topk=3, nprobe=4, shortlist=24,
-                          round_to=6).toPandas()
-    key = ["query_id", "rank"]
-    got, want = (d.sort_values(key).reset_index(drop=True) for d in (got, want))
-    assert got.neighbor_id.tolist() == want.neighbor_id.tolist()
-    assert np.allclose(got.cosine, want.cosine)
-
-    # assigned-style index (vectors kept) round-trips through ivf_topk
-    assigned = ivf.ivf_assign(em, C)
-    ivf.save_ann_index(str(tmp_path / "idx2"), C, assigned)
-    C3, assigned2, none_books = ivf.load_ann_index(spark, str(tmp_path / "idx2"))
-    assert none_books is None
-    via_disk = ivf.ivf_topk(em, q, C3, k=3, nprobe=4, assigned=assigned2,
-                            round_to=6).toPandas().sort_values(key).reset_index(drop=True)
-    direct = ivf.ivf_topk(em, q, C, k=3, nprobe=4,
-                          round_to=6).toPandas().sort_values(key).reset_index(drop=True)
-    assert via_disk.neighbor_id.tolist() == direct.neighbor_id.tolist()
-
-    # partition pruning: a probe filter reaches the scan as a
-    # PartitionFilter, not a post-scan Filter
-    plan = index2.where(F.col("list_id") == 2)._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "list_id" in plan.split("PartitionFilters: [", 1)[1][:120]
 
 
 def test_u1_retired_entry_still_matches_duckdb(spark):

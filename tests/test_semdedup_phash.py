@@ -203,73 +203,3 @@ def test_cluster_duplicates_string_empty_pairs(spark):
 
     empty = spark.createDataFrame([], "id_a string, id_b string")
     assert dedup.cluster_duplicates(empty).count() == 0
-
-
-def test_phash_incremental_equals_full_corpus(spark):
-    """The incremental union contract on the image side: full-corpus
-    pairs == old-batch pairs UNION incremental (new-vs-old + new-vs-new)
-    pairs, with old images never re-decoded."""
-    from irivermetrics_spark.operators import dedup
-
-    # two artwork families re-encoded across codecs, split old/new so
-    # near-dup pairs straddle the batches
-    rows = []
-    for fam in (0, 1):
-        for name, (buf, fmt) in _encode_variants(_artwork(fam)).items():
-            rows.append(dict(image_id=f"f{fam}_{name}", bytes=buf, fmt=fmt))
-    pdf = pd.DataFrame(rows)
-    full = spark.createDataFrame(pdf)
-    old = spark.createDataFrame(pdf.iloc[::2])   # raw16/png of each family
-    new = spark.createDataFrame(pdf.iloc[1::2])  # jpeg/webp of each family
-
-    key = ["id_a", "id_b"]
-    want = multimodal.phash_neardup(full, max_hamming=6).toPandas()
-
-    old_per: list = []
-    old_hashed = multimodal.phash_images(old)
-    old_pairs = dedup.hamming_candidates(old_hashed, "phash", "image_id",
-                                         max_hamming=6, persisted_out=old_per).toPandas()
-    banded_index = old_per[0]
-    inc_pairs_df, new_banded = multimodal.phash_neardup_incremental(
-        new, banded_index, max_hamming=6)
-    inc = inc_pairs_df.toPandas()
-
-    got = pd.concat([old_pairs, inc], ignore_index=True).drop_duplicates(key)
-    w = want.sort_values(key).reset_index(drop=True)
-    g = got.sort_values(key).reset_index(drop=True)
-    assert w[key].values.tolist() == g[key].values.tolist()
-    assert w.hamming.tolist() == g.hamming.tolist()
-    # every cross-batch near-dup came from the incremental call alone
-    straddle = {(a, b) for a, b in w[key].values
-                if (a.split("_")[1] in ("raw16", "png")) != (b.split("_")[1] in ("raw16", "png"))}
-    assert straddle and straddle <= set(map(tuple, inc[key].values))
-    assert set(new_banded.columns) == {"id", "h64", "combo", "bucket"}
-    for p in old_per + [new_banded]:
-        p.unpersist()
-
-
-def test_hamming_incremental_bucket_cap(spark, caplog):
-    """A hot (combo,bucket) in index+new combined is skipped with a
-    WARNING; pairs through cold buckets survive."""
-    import logging
-
-    from irivermetrics_spark.operators import dedup
-
-    # 20 hashes identical (hot in every bucket) + 2 distinct neighbors
-    rows = [(f"hot{i}", 0) for i in range(20)]
-    rows += [("a", 1 << 40), ("b", (1 << 40) | 1)]
-    old = spark.createDataFrame(pd.DataFrame(rows[:11], columns=["id", "h64"]))
-    new = spark.createDataFrame(pd.DataFrame(rows[11:], columns=["id", "h64"]))
-    per = []
-    dedup.hamming_candidates(old, "h64", "id", max_hamming=3,
-                             persisted_out=per).collect()
-    with caplog.at_level(logging.WARNING,
-                         logger="irivermetrics_spark.operators.dedup"):
-        pairs, nb = dedup.hamming_candidates_incremental(
-            new, per[0], max_hamming=3, bucket_cap=8)
-        got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert ("a", "b") in got                       # cold bucket survives
-    assert not any("hot" in a or "hot" in b for a, b in got)  # hot skipped
-    assert any("hot buckets" in r.message for r in caplog.records)
-    for p in per + [nb]:
-        p.unpersist()

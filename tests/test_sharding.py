@@ -1,6 +1,5 @@
-"""Deterministic shuffle + sharded writer (operators/sharding.py):
-permutation stability across runs/partitionings, DuckDB parity of the
-shard assignment, write/read round-trip, and plan shape."""
+"""Sharded writer (operators/sharding.py): append stability, DuckDB
+parity of the shard assignment, write/read round-trip, and plan shape."""
 import duckdb
 import pandas as pd
 import pytest
@@ -17,24 +16,15 @@ def docs(spark):
     return spark.createDataFrame(pdf)
 
 
-def test_global_shuffle_deterministic_and_permutes(spark, docs):
-    a = [r.doc_id for r in sharding.global_shuffle(docs, seed=7).collect()]
-    b = [r.doc_id for r in sharding.global_shuffle(docs.repartition(13), seed=7).collect()]
-    assert a == b, "order must not depend on input partitioning"
-    assert sorted(a) == sorted(r.doc_id for r in docs.collect())
-    assert a != sorted(a), "seeded hash order should not be identity"
-    c = [r.doc_id for r in sharding.global_shuffle(docs, seed=8).collect()]
-    assert c != a, "different seed, different permutation"
-
-
 def test_append_stability(spark, docs):
     """The property randomSplit/rand() lacks: adding rows never
     reorders existing rows relative to each other."""
-    half = docs.where("doc_id < 'd100'")
-    order_half = [r.doc_id for r in sharding.global_shuffle(half, seed=3).collect()]
-    order_full = [r.doc_id for r in sharding.global_shuffle(docs, seed=3).collect()]
-    kept = [d for d in order_full if d < "d100"]
-    assert kept == order_half
+    def order(df):
+        out = sharding.shard_assignments(df, 4, seed=3).orderBy("shard", "shard_pos")
+        return [r.doc_id for r in out.collect()]
+
+    kept = [d for d in order(docs) if d < "d100"]
+    assert kept == order(docs.where("doc_id < 'd100'"))
 
 
 def test_shard_assignment_matches_duckdb(spark, docs):
@@ -80,112 +70,14 @@ def test_write_shards_roundtrip(spark, docs, tmp_path):
 
 
 def test_no_python_nodes(spark, docs):
-    plan = (sharding.global_shuffle(docs, seed=0)
+    plan = (sharding.shard_assignments(docs, 8)
             ._jdf.queryExecution().executedPlan().toString())
     assert "BatchEvalPython" not in plan
-    plan2 = (sharding.shard_assignments(docs, 8)
-             ._jdf.queryExecution().executedPlan().toString())
-    assert "BatchEvalPython" not in plan2
 
 
 def test_bad_args(spark, docs):
     with pytest.raises(ValueError):
         sharding.shard_assignments(docs, 0)
-
-
-def test_mix_corpora_exact_parity_and_proportions(spark):
-    """Selection is a pure function of (id, seed): replicate it in
-    Python from Spark's own hash values and require the exact multiset
-    of (doc_id, repeat_idx); proportions land near the weights."""
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    weights = {"src0": 3.0, "src1": 1.0}
-    out = sharding.mix_corpora(docs, weights, seed=11)
-    got = sorted((r.doc_id, r.repeat_idx) for r in out.collect())
-
-    base = docs.where(F.col("source").isin(list(weights))).select(
-        "doc_id", "source",
-        F.pmod(F.xxhash64(F.col("doc_id").cast("string"), F.lit(11)),
-               F.lit(1_000_000)).alias("h")).collect()
-    counts = {}
-    for r in base:
-        counts[r.source] = counts.get(r.source, 0) + 1
-    total = sum(counts.values())
-    rates = {k: (w / 4.0 * total) / counts[k] for k, w in weights.items()}
-    expect = []
-    for r in base:
-        rate = rates[r.source]
-        nrep, frac = int(rate), int(round((rate - int(rate)) * 1_000_000))
-        for j in range(nrep + 1):
-            if j < nrep or r.h < frac:
-                expect.append((r.doc_id, j))
-    assert got == sorted(expect)
-    # proportions: engine per-source counts equal the reference's
-    # exactly (at 25 docs/source the binomial thin noise is large, so
-    # pin the exact counts, not a statistical ratio); the EXPECTED
-    # rates themselves encode the 3:1 target
-    by_src = out.groupBy("source").count().toPandas().set_index("source")["count"]
-    src_of = {r.doc_id: r.source for r in base}
-    want_counts = pd.Series([src_of[d] for d, _ in expect]).value_counts()
-    assert by_src["src0"] == want_counts["src0"]
-    assert by_src["src1"] == want_counts["src1"]
-    assert rates["src0"] == pytest.approx(3 * rates["src1"])
-
-
-def test_mix_corpora_upsampling_epochs(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = sharding.mix_corpora(docs, {"src2": 1.0}, total_rows=60, seed=3)
-    pdf = out.toPandas()
-    n_src2 = 25
-    # rate 60/25 = 2.4: every row twice, ~40% a third time
-    per_doc = pdf.groupby("doc_id").size()
-    assert set(per_doc) <= {2, 3}
-    assert (per_doc >= 2).all() and len(per_doc) == n_src2
-    assert 50 <= len(pdf) <= 70
-    again = sharding.mix_corpora(docs.repartition(7), {"src2": 1.0},
-                                 total_rows=60, seed=3).toPandas()
-    assert sorted(zip(again.doc_id, again.repeat_idx)) == \
-        sorted(zip(pdf.doc_id, pdf.repeat_idx))
-
-
-def test_mix_corpora_plan_and_errors(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = sharding.mix_corpora(docs, {"src0": 1.0}, seed=0)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "Exchange" not in plan, "selection must be a narrow explode+filter"
-    with pytest.raises(ValueError):
-        sharding.mix_corpora(docs, {})
-    with pytest.raises(ValueError):
-        sharding.mix_corpora(docs, {"src0": -1.0})
-    with pytest.raises(ValueError):
-        sharding.mix_corpora(docs, {"no_such_source": 1.0})
-    with pytest.raises(ValueError, match="max_repeat"):
-        sharding.mix_corpora(docs, {"src0": 1.0}, total_rows=10_000_000)
-
-
-def test_upsampled_copies_spread_and_stay_deterministic(spark):
-    """mix_corpora output (duplicate doc_ids distinguished by
-    repeat_idx) must still get a TOTAL deterministic order: copies of
-    one doc hash independently (so epochs spread across shards instead
-    of sitting back-to-back in one), and two runs agree exactly
-    (review find: the id-only key made copy order arbitrary)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    mixed = sharding.mix_corpora(docs, {"src3": 1.0}, total_rows=100, seed=5)
-    a = sharding.shard_assignments(mixed, n_shards=4, seed=9).toPandas()
-    b = sharding.shard_assignments(mixed.repartition(11), n_shards=4, seed=9).toPandas()
-    key = ["doc_id", "repeat_idx"]
-    pd.testing.assert_frame_equal(
-        a.sort_values(key).reset_index(drop=True),
-        b.sort_values(key).reset_index(drop=True))
-    # copies of the same doc land in >1 shard overall (4 copies each
-    # of 25 docs over 4 shards: all-in-one-shard means the copy index
-    # is not in the hash)
-    spread = a.groupby("doc_id")["shard"].nunique()
-    assert spread.max() > 1
-    # order is total: no (shard, shard_pos) collisions
-    assert not a.duplicated(["shard", "shard_pos"]).any()
 
 
 def test_write_shards_with_repeated_id_and_tiebreak(spark, tmp_path):

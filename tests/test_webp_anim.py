@@ -20,6 +20,8 @@ import pytest
 from irivermetrics_spark import codecs
 from irivermetrics_spark.kernels import vp8, webp, webpanim
 
+from fixture_codecs import _p24, encode_webp_anim
+
 DATA = os.path.join(os.path.dirname(__file__), "data")
 rng = np.random.default_rng(20260817)
 
@@ -33,8 +35,8 @@ def _rand_frame(h, w, opaque=False):
 
 def test_full_canvas_overwrite_roundtrip_exact():
     frames = [_rand_frame(13, 21) for _ in range(4)]
-    buf = webpanim.encode_webp_anim(frames, [40, 50, 60, 70],
-                                    blend=[False] * 4, loop_count=3)
+    buf = encode_webp_anim(frames, [40, 50, 60, 70],
+                           blend=[False] * 4, loop_count=3)
     assert codecs.sniff_format(buf) == "webp-vp8x-anim"
     out, durs, info = webpanim.decode_webp_anim(buf)
     assert out.shape == (4, 4, 13, 21)
@@ -78,9 +80,9 @@ def test_subrect_blend_dispose_vs_scalar_reference():
     offsets = [(0, 0), (4, 2), (10, 8), (0, 0)]
     blend = [False, True, True, True]
     dispose = [False, True, False, False]
-    buf = webpanim.encode_webp_anim(frames, [10] * 4, offsets=offsets,
-                                    blend=blend, dispose=dispose,
-                                    canvas_wh=(cw, ch))
+    buf = encode_webp_anim(frames, [10] * 4, offsets=offsets,
+                           blend=blend, dispose=dispose,
+                           canvas_wh=(cw, ch))
     got, _, _ = webpanim.decode_webp_anim(buf)
     want = _reference_composite(frames, offsets, blend, dispose, cw, ch)
     for i, (g, w_) in enumerate(zip(got, want)):
@@ -94,7 +96,7 @@ def test_embedded_frames_decode_identically_in_libwebp():
     lib = ctypes.CDLL(lib_path)
     lib.WebPDecodeRGBA.restype = ctypes.POINTER(ctypes.c_uint8)
     frames = [_rand_frame(9, 12), _rand_frame(9, 12, opaque=True)]
-    buf = webpanim.encode_webp_anim(frames, [33, 44], blend=[False, False])
+    buf = encode_webp_anim(frames, [33, 44], blend=[False, False])
     info = webpanim.parse_webp_anim(buf)
     assert [f.tag for f in info.frames] == [b"VP8L", b"VP8L"]
     for f, want in zip(info.frames, frames):
@@ -122,7 +124,7 @@ def test_lossy_vp8_frame_inside_anmf():
     payload = dict(webpanim.iter_chunks(still))[b"VP8 "]
     Y, U, V = vp8.decode_vp8(payload)
     h, w = Y.shape
-    p24 = webpanim._p24
+    p24 = _p24
     head = (b"\x00" * 6 + p24(w - 1) + p24(h - 1)
             + b"\x64\x00\x00" + b"\x02")  # duration 100, no-blend
     chunk = payload + (b"\x00" if len(payload) & 1 else b"")
@@ -148,10 +150,10 @@ def test_every_k_sampling_matches_full_walk():
     offsets = [(0, 0), (2, 2), (0, 4), (4, 0), (2, 0), (0, 0), (4, 4)]
     fr_small = [f[:, :4, :4] for f in frames[1:]]
     use = [frames[0]] + fr_small
-    buf = webpanim.encode_webp_anim(use, list(range(7)), offsets=offsets,
-                                    canvas_wh=(8, 8),
-                                    blend=[False] + [True] * 6,
-                                    dispose=[False, True] * 3 + [False])
+    buf = encode_webp_anim(use, list(range(7)), offsets=offsets,
+                           canvas_wh=(8, 8),
+                           blend=[False] + [True] * 6,
+                           dispose=[False, True] * 3 + [False])
     full, _, _ = webpanim.decode_webp_anim(buf, every_k=1)
     samp, durs, _ = webpanim.decode_webp_anim(buf, every_k=3)
     np.testing.assert_array_equal(samp, full[::3])
@@ -160,16 +162,16 @@ def test_every_k_sampling_matches_full_walk():
 
 def test_adversarial_headers_bounded():
     f = _rand_frame(4, 4)
-    buf = webpanim.encode_webp_anim([f], [10])
+    buf = encode_webp_anim([f], [10])
     with pytest.raises(ValueError, match="max_pixels"):
         webpanim.decode_webp_anim(buf, max_pixels=8)
     with pytest.raises(ValueError, match="frames exceeds"):
         webpanim.decode_webp_anim(buf, max_frames=0)
     with pytest.raises(ValueError, match="even"):
-        webpanim.encode_webp_anim([f, f], [1, 2], offsets=[(0, 0), (1, 0)])
+        encode_webp_anim([f, f], [1, 2], offsets=[(0, 0), (1, 0)])
     with pytest.raises(ValueError, match="canvas"):
-        webpanim.encode_webp_anim([f, f], [1, 2], offsets=[(0, 0), (2, 0)],
-                                  canvas_wh=(4, 4))
+        encode_webp_anim([f, f], [1, 2], offsets=[(0, 0), (2, 0)],
+                         canvas_wh=(4, 4))
     # frame rect escaping the declared canvas must not write OOB
     bad = bytearray(buf)
     i = bad.find(b"VP8X") + 8 + 4
@@ -193,7 +195,7 @@ def test_frame_sample_animated_webp_spark(spark):
     from irivermetrics_spark.operators import multimodal
 
     frames = [_rand_frame(6, 10) for _ in range(5)]
-    buf = webpanim.encode_webp_anim(frames, [10] * 5, blend=[False] * 5)
+    buf = encode_webp_anim(frames, [10] * 5, blend=[False] * 5)
     # engine-container video in the SAME table: both paths must coexist
     vid = rng.integers(0, 20000, (4, 3, 6, 10), dtype=np.uint16)
     rows = [dict(video_id="anim0", bytes=buf),
@@ -219,7 +221,7 @@ def test_resize_and_embed_accept_animations(spark):
     from irivermetrics_spark.operators import multimodal
 
     frames = [_rand_frame(8, 12, opaque=True) for _ in range(3)]
-    buf = webpanim.encode_webp_anim(frames, [10] * 3, blend=[False] * 3)
+    buf = encode_webp_anim(frames, [10] * 3, blend=[False] * 3)
     df = spark.createDataFrame(pd.DataFrame(
         [dict(image_id="anim", bytes=buf, w=12, h=8, fmt="webp")]))
     out = multimodal.resize_images(df, 6, 4, on_error="quarantine").toPandas()
