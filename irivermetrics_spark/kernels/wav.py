@@ -1,4 +1,5 @@
-"""From-scratch RIFF/WAVE PCM writer (no libraries).
+"""From-scratch RIFF/WAVE PCM writer (no libraries), plus the sample
+normalization (``to_float``) and rate conversion (``resample``) helpers.
 
 The reference engine has no audio surface at all (its formats are
 GeoTIFF/NetCDF — src/utils/wd_batch.py writes tif); this kernel serves
@@ -78,3 +79,45 @@ def write_wav(samples: np.ndarray, rate: int, bits: int | None = None) -> bytes:
     if len(payload) & 1:
         chunks += b"\x00"
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+
+def to_float(samples: np.ndarray, bits: int) -> np.ndarray:
+    """Normalize native-domain samples to float64 in [-1, 1): offset
+    binary for 8-bit, two's complement full scale for 16/24/32, floats
+    pass through. The one normalization every level feature (rms, peak,
+    silence ratio) is defined over, so clips compare across bit depths."""
+    a = np.asarray(samples)
+    if a.dtype.kind == "f":
+        return a.astype(np.float64, copy=False)
+    if bits == 8:
+        return (a.astype(np.float64) - 128.0) / 128.0
+    return a.astype(np.float64) / float(1 << (bits - 1))
+
+
+def resample(samples: np.ndarray, rate_in: int, rate_out: int) -> np.ndarray:
+    """Linear-interpolation resampling, per channel — the cheap
+    deterministic rate normalization run before batch feature
+    extraction (a real deployment swaps in a windowed-sinc kernel at
+    this seam). Output length = round(n * rate_out / rate_in);
+    endpoints map exactly (first sample preserved). Integer inputs
+    round back to their native dtype."""
+    a = np.asarray(samples)
+    if a.ndim == 1:
+        a = a[:, None]
+    if rate_in < 1 or rate_out < 1:
+        raise ValueError("rates must be >= 1")
+    n, ch = a.shape
+    if n == 0 or rate_in == rate_out:
+        return a.copy()
+    m = max(1, int(round(n * rate_out / rate_in)))
+    # sample positions in input time: preserve t=0, spacing rate_in/rate_out
+    pos = np.arange(m) * (rate_in / rate_out)
+    pos = np.clip(pos, 0, n - 1)
+    lo = np.floor(pos).astype(np.int64)
+    hi = np.minimum(lo + 1, n - 1)
+    frac = (pos - lo)[:, None]
+    x = a.astype(np.float64)
+    out = x[lo] * (1.0 - frac) + x[hi] * frac
+    if a.dtype.kind in "iu":
+        return np.round(out).astype(a.dtype)
+    return out.astype(a.dtype)

@@ -30,8 +30,8 @@ merge ``i`` creates token id ``256 + i``, so any unicode text
 round-trips exactly and there is no OOV. The pre-tokenizer uses the
 same segment classes as ``bpe_like_token_count`` — letter runs /
 single digits / single punctuation / whitespace runs — which
-PARTITION the text (every char falls in exactly one class), so the
-tokens' bytes concatenate back to the text for arbitrary input.
+PARTITION the text (every char falls in exactly one class), so
+``decode(encode(text)) == text`` holds for arbitrary input.
 
 Reference parity: the reference engine has no tokenizer surface; this
 lives on the LLM side (SURVEY §2.12 L33).
@@ -52,8 +52,7 @@ from pyspark.sql import functions as F
 # Python merge kernel (encode) disagree on e.g. NBSP. With the
 # explicit class, Java, Python and RE2 segment identically, and the
 # four classes still partition any string (class 3 and 4 are exact
-# complements over the ASCII-ws set), so the tokens' bytes concatenate
-# back to x.
+# complements over the ASCII-ws set), so decode(encode(x)) == x.
 BPE_PRETOKEN_PATTERN = (
     r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\t\n\x0B\f\r ]|[\t\n\x0B\f\r ]+")
 
@@ -109,7 +108,8 @@ def train_bpe(docs: DataFrame, vocab_size: int, text_col: str = "text",
     smallest ``(left_id, right_id)`` — a pure function of the
     word-frequency table, which is itself a pure function of the
     corpus. Returns ``{"merges": [(a, b), ...], "pattern": str,
-    "vocab_size": int}`` — feed to :func:`with_bpe_tokens`.
+    "vocab_size": int}`` — feed to :func:`with_bpe_tokens` /
+    :func:`encode_text` / :func:`decode_ids`.
     """
     if vocab_size <= 256:
         raise ValueError("vocab_size must exceed the 256 base bytes")
@@ -160,6 +160,14 @@ def merge_ranks(model: dict) -> dict[tuple[int, int], int]:
     return {tuple(p): i for i, p in enumerate(model["merges"])}
 
 
+def vocab_bytes(model: dict) -> dict[int, bytes]:
+    """Token id -> byte string (merge i defines id 256 + i)."""
+    vocab = {i: bytes([i]) for i in range(256)}
+    for i, (a, b) in enumerate(model["merges"]):
+        vocab[256 + i] = vocab[a] + vocab[b]
+    return vocab
+
+
 def _encode_word(word: str, ranks: dict[tuple[int, int], int]) -> list[int]:
     """GPT-2 merge loop: repeatedly merge ALL occurrences of the
     lowest-rank adjacent pair (id of merge r is 256 + r)."""
@@ -176,6 +184,25 @@ def _encode_word(word: str, ranks: dict[tuple[int, int], int]) -> list[int]:
             break
         sym = _merge_word(sym, best[0], best[1], 256 + best_rank)
     return sym
+
+
+def encode_text(text: str, model: dict,
+                _ranks: dict | None = None) -> list[int]:
+    """Driver-side encode of one string (the per-row kernel the Spark
+    path vectorizes). Pre-tokenize with the model's pattern, then run
+    the merge loop per word."""
+    import re
+
+    ranks = _ranks if _ranks is not None else merge_ranks(model)
+    ids: list[int] = []
+    for word in re.findall(model["pattern"], text):
+        ids.extend(_encode_word(word, ranks))
+    return ids
+
+
+def decode_ids(ids, model: dict, _vocab: dict | None = None) -> str:
+    vocab = _vocab if _vocab is not None else vocab_bytes(model)
+    return b"".join(vocab[int(i)] for i in ids).decode("utf-8")
 
 
 def with_bpe_tokens(docs: DataFrame, model: dict, text_col: str = "text",
@@ -227,3 +254,21 @@ def with_bpe_tokens(docs: DataFrame, model: dict, text_col: str = "text",
             yield out
 
     return docs.mapInPandas(kernel, out_schema)
+
+
+def bpe_to_json(model: dict) -> str:
+    """Checkpoint-friendly serialization (merges + pattern only — the
+    vocab is derived)."""
+    import json
+
+    return json.dumps({"merges": [list(p) for p in model["merges"]],
+                       "pattern": model["pattern"],
+                       "vocab_size": model["vocab_size"]})
+
+
+def bpe_from_json(s: str) -> dict:
+    import json
+
+    d = json.loads(s)
+    return {"merges": [tuple(p) for p in d["merges"]],
+            "pattern": d["pattern"], "vocab_size": d["vocab_size"]}

@@ -73,6 +73,15 @@ def _minhash_params(n_hashes: int, seed: int = 7) -> tuple[np.ndarray, np.ndarra
     return a, b
 
 
+def _mod_mersenne61(x: np.ndarray) -> np.ndarray:
+    """x mod (2^61 - 1) via shift-fold (2^61 === 1), exactly equal to
+    ``x % _MERSENNE`` but ~3 ops instead of a hardware division — the
+    signature UDF is the dominant cost of the whole dedup operator."""
+    x = (x & _MERSENNE) + (x >> 61)   # < 2^61 + 7
+    x = (x & _MERSENNE) + (x >> 61)   # < 2^61 + 1
+    return np.where(x >= _MERSENNE, x - _MERSENNE, x)
+
+
 def minhash_signatures(docs: DataFrame, text_col: str = "text", n_hashes: int = 64,
                        shingle_k: int = 5) -> DataFrame:
     """doc -> array<bigint> of n_hashes minhash values.
@@ -100,9 +109,9 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text", n_hashes: int = 
             for t in texts:
                 sh = _shingles(t, shingle_k, unique=False)
                 # (a*x + b) wraps mod 2^64 (the engine hash definition),
-                # then reduces mod 2^61-1 by an exact shift-fold; min
-                # over shingles. In-place ops so the (64, n) hot matrix
-                # allocates once, not 6x.
+                # then reduces mod 2^61-1; min over shingles. Same
+                # values as _mod_mersenne61, written with in-place ops
+                # so the (64, n) hot matrix allocates once, not 6x.
                 m = sh[None, :] * a_col
                 m += b_col
                 hi = m >> 61
@@ -459,6 +468,21 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     return docs.select(F.col(id_col).alias("id"), sh(text_col).alias("simhash"))
 
 
+def simhash_n_blocks(n_docs: int, max_hamming: int = 3, target_bucket: int = 16) -> int:
+    """Scale the block split with corpus size (Manku et al., WWW'07):
+    with k blocks and any (k - max_hamming)-block combination as the
+    candidate key, the key is 64*(k-max_hamming)/k bits wide — pick the
+    smallest k whose expected bucket occupancy n/2^key_bits stays under
+    ``target_bucket``. k = max_hamming+1 (the minimum) gives 16-bit keys
+    — fine to ~10^6 docs; 10^9 docs at h=3 needs k=6 (20 combos of
+    ~32-bit keys)."""
+    for k in range(max_hamming + 1, 64):
+        key_bits = 64 * (k - max_hamming) // k
+        if n_docs / 2.0 ** key_bits <= target_bucket or key_bits >= 62:
+            return k
+    return 64
+
+
 def hamming_band_keys(hash_col: str, max_hamming: int = 3,
                       n_blocks: int | None = None) -> list:
     """The pigeonhole candidate keys of a 64-bit hash column, as one
@@ -502,7 +526,7 @@ def hamming_candidates(hashed: DataFrame, hash_col: str, id_col: str = "id",
     the shuffles).
 
     n_blocks defaults to max_hamming + 1 (one block per band, 16-bit
-    keys at h=3, fine to ~10^6 docs) — raise it with corpus size: 10^9
+    keys at h=3) — use ``simhash_n_blocks(corpus_size)`` at scale: 10^9
     docs need k=6 (32-bit keys) or the bucket join degenerates toward
     all-pairs.
 

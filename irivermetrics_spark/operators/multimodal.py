@@ -75,6 +75,24 @@ def _decode_any(buf: bytes, fmt: str) -> np.ndarray:
     raise ValueError(f"unknown fmt {fmt!r}")
 
 
+def with_format_detail(images: DataFrame, bytes_col: str = "bytes") -> DataFrame:
+    """Adds ``fmt_detail`` (magic-byte subformat, e.g. 'webp-vp8l' vs
+    lossy 'webp-vp8' from the RIFF chunk tag) and ``decodable``
+    (whether the engine's codecs handle it) — the router a web-crawl
+    table filters on BEFORE the decode stage, so unsupported payloads
+    divert to a quarantine sink instead of failing tasks. Header peek
+    only (16 bytes), vectorized pandas UDF."""
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("string")
+    def sniff(bufs: pd.Series) -> pd.Series:
+        return pd.Series([codecs.sniff_format(b) for b in bufs])
+
+    out = images.withColumn("fmt_detail", sniff(bytes_col))
+    dec = F.col("fmt_detail").isin(*sorted(codecs.DECODABLE_DETAILS))
+    return out.withColumn("decodable", dec)
+
+
 IMAGE_INFO_SCHEMA = ("fmt_detail string, width int, height int, nbands int, "
                      "n_frames int, decodable boolean")
 
@@ -158,6 +176,34 @@ def with_exif(images: DataFrame, bytes_col: str = "bytes") -> DataFrame:
                   "gps_lat", "gps_lon", "exif_error"):
         out = out.withColumn(field, F.col("_exif")[field])
     return out.drop("_exif")
+
+
+DEFAULT_AR_BUCKETS = ((1, 1), (4, 3), (3, 4), (16, 9), (9, 16), (2, 1),
+                      (1, 2))
+
+
+def with_ar_bucket(images: DataFrame, buckets=DEFAULT_AR_BUCKETS,
+                   width_col: str = "width",
+                   height_col: str = "height") -> DataFrame:
+    """Adds ``ar_bucket`` (e.g. '16:9') — the nearest aspect-ratio
+    bucket by |log(w/h) − log(bw/bh)|, the assignment image-training
+    batchers use so one batch shares a crop/resize geometry (mixing
+    portrait and landscape in a batch wastes pixels on padding).
+    Consumes the header-only probe's width/height columns
+    (``with_image_info``) — no decode; pure JVM expressions (a literal
+    least() chain over the bucket list — known at plan time), zero
+    Python, zero shuffle. NULL/non-positive dims → NULL bucket."""
+    import math
+
+    w, h = F.col(width_col), F.col(height_col)
+    log_ar = F.log(w.cast("double") / h.cast("double"))
+    pairs = [(f"{bw}:{bh}", math.log(bw / bh)) for bw, bh in buckets]
+    best = F.array_sort(F.array(*[
+        F.struct(F.abs(log_ar - F.lit(ref)).alias("d"),
+                 F.lit(label).alias("label"))
+        for label, ref in pairs]))[0]["label"]
+    valid = w.isNotNull() & h.isNotNull() & (w > 0) & (h > 0)
+    return images.withColumn("ar_bucket", F.when(valid, best))
 
 
 def resize_image(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:

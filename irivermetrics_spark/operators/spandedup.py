@@ -1,4 +1,4 @@
-"""Exact duplicated-span detection and removal.
+"""Exact duplicated-span detection/removal and benchmark decontamination.
 
 The ExactSubstr operation of "Deduplicating Training Data Makes
 Language Models Better" (Lee et al., 2022) removes any span of >= k
@@ -26,6 +26,12 @@ the hash-compare rather than hide.
 covered token, merging overlaps per document; text is rebuilt from the
 surviving tokens single-space-joined (token-space semantics — the
 whitespace-normalized analog of the paper's byte cuts).
+
+``contaminated_ids`` is the train/test decontamination sweep: flag
+training docs sharing any k-token window (k=13 after the GPT-3
+report's 13-gram rule) with a benchmark table — a broadcast semi-join
+when the benchmark key set fits the byte budget, a shuffle semi-join
+otherwise.
 """
 
 from __future__ import annotations
@@ -36,6 +42,8 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from .dedup import BROADCAST_BUDGET_BYTES
 
 # two independent polynomial bases (odd -> invertible mod 2^64, so the
 # rolling recurrence loses no state); the token pre-hash for the second
@@ -191,3 +199,29 @@ def remove_duplicate_spans(docs: DataFrame, k: int, min_count: int = 2,
 
     return joined.mapInPandas(
         rebuild, "doc_id string, text string, n_tokens_removed long")
+
+
+def contaminated_ids(train: DataFrame, benchmark: DataFrame, k: int = 13,
+                     id_col: str = "doc_id", text_col: str = "text",
+                     bench_id_col: str = "doc_id",
+                     bench_text_col: str = "text",
+                     broadcast_keys: bool | None = None) -> DataFrame:
+    """Training docs sharing any exact k-token window with a benchmark
+    table: (doc_id, n_contaminated_windows).
+
+    The benchmark key set (distinct double hashes) broadcasts when its
+    estimated size (24 B/key) fits the byte budget — the common case:
+    eval suites are tiny next to a crawl — else a shuffle LEFT SEMI
+    join on the same key.  ``broadcast_keys`` forces either path.
+    """
+    keys = (span_windows(benchmark, k, id_col=bench_id_col,
+                         text_col=bench_text_col)
+            .select("h1", "h2").distinct())
+    if broadcast_keys is None:
+        broadcast_keys = keys.count() * 24 <= BROADCAST_BUDGET_BYTES
+    if broadcast_keys:
+        keys = F.broadcast(keys)
+    wins = span_windows(train, k, id_col=id_col, text_col=text_col)
+    hit = wins.join(keys, ["h1", "h2"], "left_semi")
+    return hit.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_contaminated_windows"))

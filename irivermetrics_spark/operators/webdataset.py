@@ -34,6 +34,14 @@ from irivermetrics_spark.operators import sharding
 _MANIFEST_SCHEMA = "shard int, path string, n_samples bigint, n_bytes bigint"
 
 
+def split_member_name(name: str) -> tuple[str, str]:
+    """WebDataset rule: key = basename up to the FIRST dot; ext = the
+    rest (so 'a/b/0001.seg.png' -> key 'a/b/0001', ext 'seg.png')."""
+    d, _, b = name.rpartition("/")
+    key, dot, ext = b.partition(".")
+    return (f"{d}/{key}" if d else key), (ext if dot else "")
+
+
 def write_webdataset(samples: DataFrame, outdir: str, n_shards: int,
                      payload_cols: list[str], key_col: str = "key",
                      seed: int = 0,

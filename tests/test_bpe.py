@@ -1,10 +1,12 @@
-"""BPE tokenizer: train determinism, hand-computed merge pins, and
-Spark-vs-independent-reference encode parity."""
+"""BPE tokenizer: train determinism, round-trip, hand-computed merge
+pins, and Spark-vs-independent-reference encode parity."""
 
 import re
 from collections import Counter
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from irivermetrics_spark.operators import bpe
 
@@ -76,11 +78,18 @@ def test_hand_computed_merges(spark):
     m = bpe.train_bpe(df, vocab_size=258)
     assert m["merges"] == [(97, 98), (256, 256)]
     # encode: "ab"*n -> [257]*(n//2) + [256]*(n%2)
-    docs = spark.createDataFrame([(n, "ab" * n) for n in range(1, 12)],
-                                 "doc_id int, text string")
-    for r in bpe.with_bpe_tokens(docs, m).collect():
-        n = r["doc_id"]
-        assert list(r["bpe_ids"]) == [257] * (n // 2) + [256] * (n % 2)
+    for n in range(1, 12):
+        ids = bpe.encode_text("ab" * n, m)
+        assert ids == [257] * (n // 2) + [256] * (n % 2)
+    # vocab derivation
+    v = bpe.vocab_bytes(m)
+    assert v[256] == b"ab" and v[257] == b"abab"
+
+
+def test_roundtrip_adversarial(spark):
+    m = bpe.train_bpe(_tiny_corpus_df(spark), vocab_size=320)
+    for t in ADVERSARIAL:
+        assert bpe.decode_ids(bpe.encode_text(t, m), m) == t
 
 
 def test_word_count_matches_local(spark):
@@ -105,12 +114,15 @@ def test_spark_encode_matches_reference(spark):
     assert got[99]["bpe_ids"] is None and got[99]["bpe_n_tokens"] is None
 
 
-def test_with_ids_false(spark):
+def test_with_ids_false_and_json_roundtrip(spark):
     df = _tiny_corpus_df(spark)
     m = bpe.train_bpe(df, vocab_size=280)
     out = bpe.with_bpe_tokens(df.limit(5), m, with_ids=False)
     assert "bpe_ids" not in out.columns
     assert out.where("text = '' and bpe_n_tokens <> 0").count() == 0
+    m2 = bpe.bpe_from_json(bpe.bpe_to_json(m))
+    assert m2["merges"] == m["merges"]
+    assert bpe.encode_text("hello world", m2) == bpe.encode_text("hello world", m)
 
 
 def test_vocab_size_validation(spark):
@@ -118,3 +130,21 @@ def test_vocab_size_validation(spark):
     with pytest.raises(ValueError):
         bpe.train_bpe(df, vocab_size=256)
 
+
+@settings(max_examples=60, deadline=None)
+@given(st.text(min_size=0, max_size=120))
+def test_roundtrip_property(text):
+    # model trained once on the adversarial corpus, cached per session
+    m = _MODEL_CACHE.get("m")
+    if m is None:
+        pytest.skip("spark model not trained yet")
+    assert bpe.decode_ids(bpe.encode_text(text, m), m) == text
+
+
+_MODEL_CACHE = {}
+
+
+@pytest.fixture(autouse=True, scope="module")
+def _train_property_model(spark):
+    _MODEL_CACHE["m"] = bpe.train_bpe(_tiny_corpus_df(spark), vocab_size=300)
+    yield

@@ -13,6 +13,8 @@ from irivermetrics_spark import codecs
 from irivermetrics_spark.kernels import (bmp, geotiff, gif, jpeg, lzw,
                                           netcdf, png, vp8, webp, webpanim)
 
+from fixture_codecs import read_wav
+
 # lossy-VP8 fuzz prefix: valid keyframe tag (first_part_size=64, so the
 # random tail is long enough to be "the partition"), start code, and
 # small 20x20 dims — random bytes then corrupt the header/mode/token
@@ -34,6 +36,7 @@ _PREFIX = {
     # block walk, sub-block chains and the LZW decoder itself
     "gif": b"GIF89a\x10\x00\x10\x00\x80\x00\x00",
     "bmp": b"BM",
+    "wav": b"RIFF\x40\x00\x00\x00WAVE",
     "codecs": b"",
 }
 _DECODE = {
@@ -46,6 +49,7 @@ _DECODE = {
     "jpeg": jpeg.decode_baseline,
     "gif": gif.decode_gif,
     "bmp": bmp.decode_bmp,
+    "wav": read_wav,
     "codecs": codecs.decode_image,
 }
 

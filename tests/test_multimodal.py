@@ -113,3 +113,22 @@ def test_resize_preserves_caption_and_phash(spark):
         assert out.loc[iid, "caption"] == src.loc[iid, "caption"]
         assert int(out.loc[iid, "phash"]) == int(src.loc[iid, "phash"])
     assert (out.w == 10).all() and (out.h == 8).all()
+
+
+def test_ar_bucket_assignment(spark):
+    """Aspect-ratio bucketing from probe dims: truth table, log-space
+    nearest (1920x1080 is 16:9, 1000x1000 is 1:1, 640x1136 is 9:16),
+    NULL/degenerate dims, and a pure-JVM plan."""
+    from irivermetrics_spark.operators import multimodal
+
+    rows = [(1, 1920, 1080), (2, 1000, 1000), (3, 640, 1136),
+            (4, 800, 600), (5, 599, 800), (6, None, 100), (7, 100, 0)]
+    df = spark.createDataFrame(rows, "image_id int, width int, height int")
+    out = multimodal.with_ar_bucket(df)
+    got = {r.image_id: r.ar_bucket for r in out.collect()}
+    assert got[1] == "16:9" and got[2] == "1:1" and got[3] == "9:16"
+    assert got[4] == "4:3" and got[5] == "3:4"
+    assert got[6] is None and got[7] is None
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Python" not in plan \
+        and "MapInPandas" not in plan

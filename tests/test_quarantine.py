@@ -58,6 +58,22 @@ def test_sniff_format_magic_bytes():
     assert "unknown" not in codecs.DECODABLE_DETAILS
 
 
+def test_with_format_detail_column(spark):
+    rows = [
+        ("a", codecs.encode_image(np.ones((4, 3, 3), dtype=np.uint16)), "raw16"),
+        ("b", _lossy_vp8_bytes(), "webp"),
+        ("c", b"junkjunkjunkjunk", "???"),
+    ]
+    df = spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
+    got = {r["image_id"]: (r["fmt_detail"], r["decodable"])
+           for r in multimodal.with_format_detail(df).collect()}
+    # the sniff is a header peek: the structurally-broken vp8 stub is
+    # CLAIMED decodable (its subformat is), and the decode stage's
+    # exception catch is what actually quarantines it (tests below)
+    assert got == {"a": ("raw16", True), "b": ("webp-vp8", True),
+                   "c": ("unknown", False)}
+
+
 def _mixed_images(fx, n_good=3):
     pdf = fx.images.iloc[:n_good].copy()
     bad = pd.DataFrame([

@@ -1,4 +1,4 @@
-"""Exact duplicated-span removal (operators/spandedup).
+"""Exact duplicated-span removal + decontamination (operators/spandedup).
 
 Pinned against deliberately naive scalar references: duplicated windows
 found by grouping the actual token tuples (no hashing — a rolling-hash
@@ -112,6 +112,36 @@ def test_short_docs_and_unicode_whitespace(spark):
     wins = spandedup.span_windows(df, 2).collect()
     n = {r.doc_id: r.n_tokens for r in wins}
     assert n == {"w1": 4}  # w2 is one NBSP-joined token -> no window
+
+
+def test_contaminated_ids_both_join_paths(spark):
+    docs = _corpus(k=K)
+    bench = {"b0": docs["d00"][5 : 5 + K + 3],  # overlaps d00 (and its copy)
+             "b1": ["zulu"] * (K + 1)}          # matches nothing
+    want = {did for did, toks in docs.items()
+            for p in range(len(toks) - K + 1)
+            if tuple(toks[p : p + K]) in _ref_windows(bench, K)}
+    assert want, "benchmark must overlap the corpus"
+    for bc in (True, False):
+        got = spandedup.contaminated_ids(
+            _df(spark, docs), _df(spark, bench), k=K, broadcast_keys=bc)
+        assert {r.doc_id for r in got.collect()} == want
+
+
+def test_contamination_counts_match_reference(spark):
+    docs = _corpus(k=K)
+    bench = {"b0": docs["d02"][0 : K + 4]}
+    ref = _ref_windows(bench, K)
+    want = {}
+    for did, toks in docs.items():
+        c = sum(1 for p in range(len(toks) - K + 1)
+                if tuple(toks[p : p + K]) in ref)
+        if c:
+            want[did] = c
+    got = {r.doc_id: r.n_contaminated_windows
+           for r in spandedup.contaminated_ids(
+               _df(spark, docs), _df(spark, bench), k=K).collect()}
+    assert got == want
 
 
 def test_window_hash_no_positional_aliasing():

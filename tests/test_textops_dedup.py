@@ -78,6 +78,15 @@ def test_fingerprint_normalization_collisions(spark):
 
 # ---------------------------------------------------------- minhash
 
+def test_mod_mersenne61_equals_hardware_mod():
+    rng = np.random.default_rng(31)
+    x = rng.integers(0, np.iinfo(np.uint64).max, 10000, dtype=np.uint64)
+    x = np.concatenate([x, np.array([0, 1, (1 << 61) - 1, 1 << 61, (1 << 61) + 1,
+                                     np.iinfo(np.uint64).max], dtype=np.uint64)])
+    M = np.uint64((1 << 61) - 1)
+    np.testing.assert_array_equal(dedup._mod_mersenne61(x), x % M)
+
+
 def test_minhash_fold_matches_hardware_mod_formula(spark):
     """The shift-fold kernel must emit the same signatures as the plain
     hardware-mod formula."""
@@ -96,6 +105,13 @@ def test_minhash_fold_matches_hardware_mod_formula(spark):
 
 
 # ---------------------------------------------------------- simhash
+
+def test_simhash_n_blocks_scaling():
+    assert dedup.simhash_n_blocks(10**6, max_hamming=3) == 4  # 16-bit keys fine
+    assert dedup.simhash_n_blocks(10**9, max_hamming=3) == 6  # ~32-bit keys
+    k = dedup.simhash_n_blocks(10**12, max_hamming=3)
+    assert 64 * (k - 3) // k >= 36  # key width grows with corpus
+
 
 def test_simhash_wider_blocks_same_pairs(spark):
     """k=6 blocks (the 10^9-doc parameterization) must still satisfy the

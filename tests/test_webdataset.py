@@ -1,9 +1,12 @@
 """kernels/tar.py (from-scratch ustar writer) + operators/webdataset.py:
-cross-validation against stdlib tarfile, determinism, writer input
+cross-validation against stdlib tarfile BOTH directions (the writer
+against its reader, the test-side tar reader against stdlib archives),
+determinism, hostile-input behavior of that reader, writer input
 checks, and the Spark shard write through the real JPEG codec, read
 back with the test-side tar reader."""
 
 import io
+import random
 import tarfile
 
 import numpy as np
@@ -39,12 +42,24 @@ def test_writer_read_by_stdlib_tarfile():
     assert tark.write_tar(MEMBERS) == blob
 
 
+def test_reader_reads_stdlib_ustar_and_gnu():
+    for fmt in (tarfile.USTAR_FORMAT, tarfile.GNU_FORMAT, tarfile.PAX_FORMAT):
+        buf = io.BytesIO()
+        with tarfile.open(fileobj=buf, mode="w", format=fmt) as tf:
+            for name, data in MEMBERS:
+                info = tarfile.TarInfo(name)
+                info.size = len(data)
+                tf.addfile(info, io.BytesIO(data))
+        got = list(iter_tar(buf.getvalue()))
+        assert got == MEMBERS, fmt
+
+
 def test_round_trip_own_kernel():
     blob = tark.write_tar(MEMBERS)
     assert list(iter_tar(blob)) == MEMBERS
 
 
-def test_long_names_prefix_split():
+def test_long_names_prefix_split_and_gnu_longname():
     long_name = "/".join(["component"] * 12) + "/sample-0001.jpg"  # > 100 bytes
     assert len(long_name) > 100
     blob = tark.write_tar([(long_name, b"x")])
@@ -53,6 +68,62 @@ def test_long_names_prefix_split():
     # a name with no splittable '/' in range must be rejected, not mangled
     with pytest.raises(ValueError):
         tark.write_tar([("x" * 200, b"")])
+    # GNU longname record (stdlib GNU format emits type 'L')
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w", format=tarfile.GNU_FORMAT) as tf:
+        info = tarfile.TarInfo("y" * 180)
+        info.size = 2
+        tf.addfile(info, io.BytesIO(b"ab"))
+    assert list(iter_tar(buf.getvalue())) == [("y" * 180, b"ab")]
+
+
+def test_reader_skips_dirs_and_links():
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w", format=tarfile.USTAR_FORMAT) as tf:
+        d = tarfile.TarInfo("adir")
+        d.type = tarfile.DIRTYPE
+        tf.addfile(d)
+        link = tarfile.TarInfo("alink")
+        link.type = tarfile.SYMTYPE
+        link.linkname = "0001.jpg"
+        tf.addfile(link)
+        info = tarfile.TarInfo("0001.jpg")
+        info.size = 3
+        tf.addfile(info, io.BytesIO(b"abc"))
+    assert list(iter_tar(buf.getvalue())) == [("0001.jpg", b"abc")]
+
+
+def test_corruption_raises_value_error():
+    blob = bytearray(tark.write_tar(MEMBERS))
+    blob[130] ^= 0xFF  # size field garbage -> checksum mismatch
+    with pytest.raises(ValueError):
+        list(iter_tar(bytes(blob)))
+    with pytest.raises(ValueError):  # truncated payload
+        list(iter_tar(tark.write_tar(MEMBERS)[: 512 + 7]))
+    with pytest.raises(ValueError):  # trailing partial header
+        list(iter_tar(tark.write_tar([]) [:-1024] + b"\x01" * 100))
+
+
+def test_fuzz_never_hangs_or_crashes_unexpectedly():
+    rng = random.Random(11)
+    base = tark.write_tar(MEMBERS)
+    for _ in range(300):
+        b = bytearray(base)
+        for _ in range(rng.randrange(1, 6)):
+            b[rng.randrange(len(b))] ^= 1 + rng.randrange(255)
+        cut = rng.randrange(len(b) + 1)
+        try:
+            list(iter_tar(bytes(b[:cut])))
+        except ValueError:
+            pass  # the only contracted failure mode
+
+
+def test_split_member_name():
+    from irivermetrics_spark.operators.webdataset import split_member_name
+
+    assert split_member_name("0001.jpg") == ("0001", "jpg")
+    assert split_member_name("a/b/0001.seg.png") == ("a/b/0001", "seg.png")
+    assert split_member_name("noext") == ("noext", "")
 
 
 # ----------------------------------------------------------------- spark
@@ -147,6 +218,26 @@ def test_dotted_keys_rejected(spark, tmp_path):
     with pytest.raises(Exception, match="field separator"):
         wds.write_webdataset(df, str(tmp_path / "d"), n_shards=1,
                              payload_cols=["jpg"])
+
+
+def test_pax_long_names_round_trip():
+    """r7 review find: stdlib tarfile's DEFAULT format is PAX — long
+    names arrive as 'x' extended-header path records, which the reader
+    must apply (not silently yield the truncated ustar name)."""
+    import io
+    import tarfile
+
+    long_name = "x" * 180 + ".jpg"
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w", format=tarfile.PAX_FORMAT) as tf:
+        info = tarfile.TarInfo(long_name)
+        info.size = 3
+        tf.addfile(info, io.BytesIO(b"abc"))
+        short = tarfile.TarInfo("short.txt")
+        short.size = 2
+        tf.addfile(short, io.BytesIO(b"ok"))
+    got = list(iter_tar(buf.getvalue()))
+    assert got == [(long_name, b"abc"), ("short.txt", b"ok")]
 
 
 def test_grouped_map_kernels_raise_no_type_hint_warning(spark, tmp_path):
